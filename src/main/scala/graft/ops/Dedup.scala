@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftCheckpoint, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Deduplication suite over the `documents` table — the operations a
@@ -115,11 +115,21 @@ object Dedup {
       maxBucket: Int = 4096
   ): DataFrame = {
     val rowsPerBand = numHashes / bands
-    val base = shingleBase(spark, dir, shingleSize)
-    val withBands = base
+    // the blocking input, built ONCE per call (eager local checkpoint): the
+    // bucket self-join, both cap counts and both verify re-attach sides read
+    // it. Left lazy, each of the 6 reads re-scans and re-shingles the corpus
+    // (AQE broadcasts those joins, so no exchange is reused), and the
+    // explode's inferred non-empty filter inlines the signature once per
+    // band lane. The empty-set filter runs on the checkpointed rows: placed
+    // before the checkpoint, the optimizer pushes it (and a second
+    // shingling) under the round-robin repartition, into the serial scan.
+    val base = ScanLayout.ensureParallel(docs(spark, dir))
+      .select(col("doc_id"), shingles(col("text"), shingleSize).as("sh"))
       .select(col("doc_id"), col("sh"),
         bandKeys(minhashSignature(col("sh"), numHashes), bands, rowsPerBand).as("bands"))
-    val buckets = withBands.select(col("doc_id"), explode(col("bands")).as("band"))
+      .localCheckpoint(true)
+      .filter(size(col("sh")) > 0)
+    val buckets = base.select(col("doc_id"), explode(col("bands")).as("band"))
     val admitted = capBuckets(buckets, "band", maxBucket)
     // ids-only candidate exchange pinned wide before the verify (the qd4
     // lesson: AQE coalesces on shuffle BYTES and cannot see that each tiny
@@ -130,7 +140,7 @@ object Dedup {
         col("a.band") === col("b.band") && col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .distinct()
-      .repartition(spark.sessionState.conf.numShufflePartitions, col("doc_a"))
+      .repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt, col("doc_a"))
     val sa = base.select(col("doc_id").as("doc_a"), col("sh").as("sh_a"))
     val sb = base.select(col("doc_id").as("doc_b"), col("sh").as("sh_b"))
     // native sorted-merge Jaccard (shingle arrays are distinct+sorted):
@@ -509,7 +519,7 @@ object Dedup {
       blockSizes(base).filter(col("n_in_block") <= maxBucket)
         .drop("n_in_block"),
       Seq("lang", "len_bucket"))
-      .repartition(spark.sessionState.conf.numShufflePartitions,
+      .repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt,
         col("lang"), col("len_bucket"))
     admitted.as("a").join(admitted.as("b"),
         col("a.lang") === col("b.lang") &&
@@ -607,7 +617,7 @@ object Dedup {
     // ids-only candidate exchange pinned wide (qd4's lesson: AQE coalesces
     // on shuffle BYTES and would serialize the per-pair verify compute)
     val cand = ppjoinCandidates(base, threshold, maxToken)
-      .repartition(spark.sessionState.conf.numShufflePartitions, col("doc_a"))
+      .repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt, col("doc_a"))
     val sa = base.select(col("doc_id").as("doc_a"), col("sh").as("sh_a"))
     val sb = base.select(col("doc_id").as("doc_b"), col("sh").as("sh_b"))
     cand.join(sa, "doc_a").join(sb, "doc_b")
@@ -675,12 +685,20 @@ object Dedup {
     * Iterative dataflow MUST materialize per round: a round references the
     * previous labels more than once, so a lazy unrolled plan re-derives the
     * (expensive) edge join 2^rounds times — measured 419 s vs ~5 s for the
-    * same answer. So: the edge list is persisted once, each round's labels
-    * (and the pre-jump propagation result, which the jump self-join reads
-    * twice) are eagerly localCheckpoint'ed — they hold only the CLUSTERED
-    * docs, a tiny fraction of the corpus — and the edge cache is released
-    * before returning. Superseded round blocks are freed by Spark's
-    * ContextCleaner as they go out of scope.
+    * same answer. So: the edge list is checkpointed once, each round's
+    * labels (and the pre-jump propagation result, which the jump self-join
+    * reads twice) are eagerly localCheckpoint'ed — they hold only the
+    * CLUSTERED docs, a tiny fraction of the corpus. Superseded round blocks
+    * are freed by Spark's ContextCleaner as they go out of scope.
+    *
+    * JOBS: every materialization is ONE job that also returns what the loop
+    * needs ([[org.apache.spark.sql.GraftCheckpoint]]) — the edge checkpoint
+    * its row count (for sizing), the propagation checkpoint its
+    * changed-label count (for convergence). Set-up is 2 jobs (edges,
+    * adjacency; more if the feeder's own plan runs adaptive stages), each
+    * non-final round 2 (propagate, jump) and the final round 1, plus one
+    * per broadcast join the planner picks for the label joins (round 1
+    * has none: its step is an aggregate over the adjacency alone).
     *
     * NON-CONVERGENCE IS AN ERROR: if `maxRounds` rounds pass without a
     * fixpoint this throws IllegalStateException rather than returning
@@ -704,15 +722,14 @@ object Dedup {
     // when adj first materializes — measured as a full duplicate feeder run
     // in qd6/qd8/qd10/qd19/qd22 (guide §2.4: reuse one result). The pair
     // list is the small decision table of the dedup pipeline (ids only),
-    // exactly what the guide says to materialize.
-    val e = edges.select(col("doc_a"), col("doc_b")).localCheckpoint(true)
-    // the pair list is already materialized, so this count is a cheap block
-    // scan — it sizes the rounds' shuffle parallelism (IterTuning: derived
-    // from the measured state, not the session constant; the label tables
-    // hold only the CLUSTERED docs, usually orders of magnitude under the
-    // corpus, so the session's corpus-sized partition count was pure
+    // exactly what the guide says to materialize. The same job counts it:
+    // the row count sizes the rounds' shuffle parallelism (IterTuning:
+    // derived from the measured state, not the session constant; the label
+    // tables hold only the CLUSTERED docs, usually orders of magnitude under
+    // the corpus, so the session's corpus-sized partition count was pure
     // scheduling latency per round)
-    val eCount = e.count()
+    val (e, eCount) = GraftCheckpoint.localCheckpointCounting(
+      edges.select(col("doc_a"), col("doc_b")), lit(true))
     // coalesce the mirrored adjacency to the state-derived partition count
     // BEFORE checkpointing: `e` inherits the feeder's layout (qd6's feeder
     // pins a 32-wide repartition for its verify join, so the union carried
@@ -724,34 +741,42 @@ object Dedup {
       .union(e.select(col("doc_b").as("src"), col("doc_a").as("dst")))
       .coalesce(IterTuning.partitionsFor(e.sparkSession, eCount))
       .localCheckpoint(true)
-    try {
-      IterTuning.withStateSized(e.sparkSession, eCount) {
-      var labels = adj.select(col("src").as("doc_id"))
-        .distinct().withColumn("label", col("doc_id"))
-        .localCheckpoint(true)
+    IterTuning.withStateSized(e.sparkSession, eCount) {
+      // one neighbor-min step; `prev` rides along so convergence is counted
+      // on the materialized result, not an extra join against the old labels
+      def propagate(labels: DataFrame): DataFrame = {
+        val nbrMin = adj.join(labels, adj("dst") === labels("doc_id"))
+          .groupBy(col("src")).agg(min(col("label")).as("nbr_label"))
+        labels.join(nbrMin, labels("doc_id") === nbrMin("src"), "left")
+          .select(col("doc_id"), col("label").as("prev"),
+            least(col("label"), coalesce(col("nbr_label"), col("label"))).as("label"))
+      }
+      // round 1 needs no label table: every node starts labelled by its own
+      // id (adj is symmetric, so every node is a src), which makes the first
+      // step a min over the adjacency alone — no initial-labels job, no join
+      var prop0 = adj.groupBy(col("src").as("doc_id")).agg(min(col("dst")).as("nbr"))
+        .select(col("doc_id"), col("doc_id").as("prev"),
+          least(col("doc_id"), col("nbr")).as("label"))
+      var labels: DataFrame = null // set by every round; none throws below
+      // each round's checkpoint job also counts the labels it lowered:
+      // labels are monotone non-increasing, so 0 changed is the fixpoint —
+      // no separate emptiness job per round
+      val changed = col("label") =!= col("prev")
       var converged = false
       var round = 0
       while (!converged && round < maxRounds) {
-        val nbrMin = adj.join(labels, adj("dst") === labels("doc_id"))
-          .groupBy(col("src")).agg(min(col("label")).as("nbr_label"))
-        // `prev` rides along so convergence is a filter on the checkpointed
-        // result, not an extra per-round join against the old labels
-        val prop0 = labels.join(nbrMin, labels("doc_id") === nbrMin("src"), "left")
-          .select(col("doc_id"), col("label").as("prev"),
-            least(col("label"), coalesce(col("nbr_label"), col("label"))).as("label"))
-        val labelsOut = if (pointerJump) {
-          // materialize before the self-join reads prop twice
-          val prop = prop0.localCheckpoint(true)
-          // convergence is decidable on the PRE-jump table: labels are
-          // monotone non-increasing, so prop == prev means the neighbor-min
-          // step is at its fixpoint, which makes labels component-constant
-          // and the pointer jump the identity; and prop < prev anywhere
-          // implies next < prev there too. Equivalent to checking after
-          // the jump, but the FINAL round then skips the jump's join +
-          // checkpoint jobs entirely (r6 — round latency is the cost unit
-          // at small state; results identical at any state).
-          converged = prop.filter(col("label") =!= col("prev")).isEmpty
-          if (converged) prop
+        // materialized before the pointer jump's self-join reads it twice
+        val (prop, nChanged) = GraftCheckpoint.localCheckpointCounting(prop0, changed)
+        converged = nChanged == 0
+        // convergence is decidable on the PRE-jump table: prop == prev means
+        // the neighbor-min step is at its fixpoint, which makes labels
+        // component-constant and the pointer jump the identity; and
+        // prop < prev anywhere implies next < prev there too. Equivalent to
+        // checking after the jump, but the FINAL round then skips the jump's
+        // join + checkpoint job entirely (r6 — round latency is the cost
+        // unit at small state; results identical at any state).
+        val labelsOut =
+          if (converged || !pointerJump) prop
           else {
             val links = prop.select(col("doc_id").as("j_id"), col("label").as("j_label"))
             prop.join(links, prop("label") === links("j_id"), "left")
@@ -759,12 +784,8 @@ object Dedup {
                 least(col("label"), coalesce(col("j_label"), col("label"))).as("label"))
               .localCheckpoint(true)
           }
-        } else {
-          val next = prop0.localCheckpoint(true)
-          converged = next.filter(col("label") =!= col("prev")).isEmpty
-          next
-        }
         labels = labelsOut.select(col("doc_id"), col("label"))
+        prop0 = propagate(labels)
         round += 1
       }
       if (!converged) throw new IllegalStateException(
@@ -773,8 +794,7 @@ object Dedup {
           s"pointerJump=$pointerJump rounds grow as " +
           (if (pointerJump) "log2(diameter)" else "diameter"))
       (labels, round)
-      }
-    } finally adj.unpersist()
+    }
   }
 
   /** Near-duplicate CLUSTERS: connected components over the near-dup pair

@@ -20,7 +20,6 @@ object Relational {
   private def t(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
 
-
   /** Exact decimal sum surfaced as double. */
   private def dsum(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     sum(c.cast("decimal(18,2)")).cast("double")

@@ -227,14 +227,14 @@ object Similarity {
       // AQE coalesces on shuffle BYTES — the (vec_id, bucket) input is tiny
       // — and cannot see the within-bucket quadratic pair expansion behind
       // it, which otherwise runs in one task)
-      .repartition(spark.sessionState.conf.numShufflePartitions, col("bucket"))
+      .repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt, col("bucket"))
     val candIds = buckets.as("a").join(buckets.as("b"),
         col("a.bucket") === col("b.bucket") && col("a.vec_id") < col("b.vec_id"))
       .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"))
       .distinct()
       // ids-only candidate exchange pinned wide before the cosine verify
       // (qd7's rationale: each tiny id pair carries a 64-dim dot product)
-      .repartition(spark.sessionState.conf.numShufflePartitions, col("id_a"))
+      .repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt, col("id_a"))
     val e = embeddings(spark, dir)
     candIds
       .join(e.select(col("vec_id").as("id_a"), col("embedding").as("va")), Seq("id_a"))

@@ -1,6 +1,6 @@
 package graft.spark
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, GraftCheckpoint, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ops.{Dedup, TextAnalysis}
@@ -27,7 +27,10 @@ import graft.ops.{Dedup, TextAnalysis}
   *    That bounds lineage, makes every stage independently resumable and
   *    auditable, and matches how multi-day cleaning jobs actually survive
   *    preemption — the extraction job's MERGE/resume story, applied to
-  *    cleaning.
+  *    cleaning. A stage's row count comes from the footers of the parquet
+  *    files its write produced ([[writtenRows]]), not from a Spark job over
+  *    the re-read table, so the lineage checks still audit what landed on
+  *    disk without paying a read-back per stage.
   */
 object CleanJob {
 
@@ -173,6 +176,34 @@ object CleanJob {
     }
   }
 
+  /** Rows in the parquet table at `path` (a file or a directory of part
+    * files), summed from the file footers on the driver — no Spark job.
+    * Hidden entries (`_SUCCESS`, `.crc`, `_temporary`) are skipped, as the
+    * parquet reader skips them.
+    */
+  private[spark] def writtenRows(spark: SparkSession, path: String): Long = {
+    import org.apache.hadoop.fs.{FileStatus, Path}
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val conf = spark.sparkContext.hadoopConfiguration
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    def visible(p: Path) = !p.getName.startsWith("_") && !p.getName.startsWith(".")
+    def files(st: FileStatus): Seq[FileStatus] =
+      if (!st.isDirectory) Seq(st)
+      else fs.listStatus(st.getPath).toSeq.filter(c => visible(c.getPath)).flatMap(files)
+    files(fs.getFileStatus(root)).map { st =>
+      val r = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+      try r.getRecordCount finally r.close()
+    }.sum
+  }
+
+  /** Overwrite `path` with `df` as parquet; the rows written. */
+  private def writeCounted(df: DataFrame, path: String): Long = {
+    df.write.mode("overwrite").parquet(path)
+    writtenRows(df.sparkSession, path)
+  }
+
   final case class CleanStats(
       nInput: Long,
       urlRemoved: Long,
@@ -245,7 +276,7 @@ object CleanJob {
       }
     }
     val docsIn = spark.read.parquet(s"$corpusDir/documents.parquet")
-    val nInput = docsIn.count()
+    val nInput = writtenRows(spark, s"$corpusDir/documents.parquet")
 
     // stage 0: URL-level dedup — runs BEFORE any text pass, as in a real
     // crawl pipeline (a re-crawled URL never reaches the text stages, so
@@ -264,9 +295,8 @@ object CleanJob {
         val keep = canon
           .groupBy(col("canon_url")).agg(min(col("doc_id")).as("doc_id"))
           .select(col("doc_id"))
-        docsIn.join(keep, Seq("doc_id"))
-          .write.mode("overwrite").parquet(s"$urlDir/documents.parquet")
-        Map("kept" -> spark.read.parquet(s"$urlDir/documents.parquet").count())
+        Map("kept" -> writeCounted(docsIn.join(keep, Seq("doc_id")),
+          s"$urlDir/documents.parquet"))
       }("kept")
 
     // stage 1: exact dedup (keep the smallest doc_id per normalized md5).
@@ -278,9 +308,8 @@ object CleanJob {
         .withColumn("fp", Dedup.fingerprintCol(col("text")))
         .groupBy(col("fp")).agg(min(col("doc_id")).as("doc_id"))
         .select(col("doc_id"))
-      textIn.join(keep, Seq("doc_id"))
-        .write.mode("overwrite").parquet(s"$exactDir/documents.parquet")
-      Map("kept" -> spark.read.parquet(s"$exactDir/documents.parquet").count())
+      Map("kept" -> writeCounted(textIn.join(keep, Seq("doc_id")),
+        s"$exactDir/documents.parquet"))
     }("kept")
 
     // stage 2: near-dup candidate pairs on the exact-deduped corpus —
@@ -289,40 +318,35 @@ object CleanJob {
     // (the most expensive stage's work survives preemption).
     val pairsDir = s"$outDir/stage_pairs"
     val nearPairs = stage("lsh_pairs", exactKept) {
-      Dedup.minhashLshPairs(spark, exactDir,
-          shingleSize = 3, threshold = lshThreshold)
-        .select(col("doc_a"), col("doc_b"))
-        .write.mode("overwrite").parquet(s"$pairsDir/pairs.parquet")
-      Map("pairs" -> spark.read.parquet(s"$pairsDir/pairs.parquet").count())
+      Map("pairs" -> writeCounted(
+        Dedup.minhashLshPairs(spark, exactDir,
+            shingleSize = 3, threshold = lshThreshold)
+          .select(col("doc_a"), col("doc_b")),
+        s"$pairsDir/pairs.parquet"))
     }("pairs")
 
     // stage 3: transitive closure (pointer-jumping CC — throws rather than
     // under-merge) + quality-aware survivorship (qd8's operator)
     val nearDir = s"$outDir/stage_near"
     val ccStats = stage("cc_survivors", exactKept) {
-      val quality = TextAnalysis.qualityScores(spark, exactDir)
-        .select(col("doc_id"), col("quality_score"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val pairs = spark.read.parquet(s"$pairsDir/pairs.parquet")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          val labels = Dedup.connectedComponents(pairs)
-          val sizes = labels.groupBy(col("label").as("cluster_id"))
-            .agg(count(lit(1)).as("cluster_size"))
-          val clusters = labels
-            .select(col("doc_id"), col("label").as("cluster_id"))
-            .join(sizes, Seq("cluster_id"))
-          val survivors = Dedup.survivorsFrom(clusters, quality)
-          val nC = survivors.filter(col("survivor")).count()
-          val dropIds = survivors.filter(!col("survivor")).select(col("doc_id"))
-          spark.read.parquet(s"$exactDir/documents.parquet")
-            .join(dropIds, Seq("doc_id"), "left_anti")
-            .write.mode("overwrite").parquet(s"$nearDir/documents.parquet")
-          Map("clusters" -> nC,
-            "kept" -> spark.read.parquet(s"$nearDir/documents.parquet").count())
-        } finally pairs.unpersist()
-      } finally quality.unpersist()
+      // the pair list is read once: connectedComponents checkpoints it
+      val labels = Dedup.connectedComponents(
+        spark.read.parquet(s"$pairsDir/pairs.parquet"))
+      val sizes = labels.groupBy(col("label").as("cluster_id"))
+        .agg(count(lit(1)).as("cluster_size"))
+      val clusters = labels
+        .select(col("doc_id"), col("label").as("cluster_id"))
+        .join(sizes, Seq("cluster_id"))
+      // survivorship runs once: the job that materializes it also counts
+      // the survivors (one per cluster) the drop list below excludes
+      val (survivors, nC) = GraftCheckpoint.localCheckpointCounting(
+        Dedup.survivorsFrom(clusters, TextAnalysis.qualityScores(spark, exactDir)
+          .select(col("doc_id"), col("quality_score"))),
+        col("survivor"))
+      val dropIds = survivors.filter(!col("survivor")).select(col("doc_id"))
+      Map("clusters" -> nC,
+        "kept" -> writeCounted(spark.read.parquet(s"$exactDir/documents.parquet")
+          .join(dropIds, Seq("doc_id"), "left_anti"), s"$nearDir/documents.parquet"))
     }
     val (nearClusters, nearKept) = (ccStats("clusters"), ccStats("kept"))
 
@@ -334,10 +358,8 @@ object CleanJob {
       val passing = TextAnalysis.qualityScores(spark, nearDir)
         .filter(col("quality_score") >= minQuality)
         .select(col("doc_id"))
-      spark.read.parquet(s"$nearDir/documents.parquet")
-        .join(passing, Seq("doc_id"), "left_semi")
-        .write.mode("overwrite").parquet(s"$outDir/clean/documents.parquet")
-      Map("kept" -> spark.read.parquet(s"$outDir/clean/documents.parquet").count())
+      Map("kept" -> writeCounted(spark.read.parquet(s"$nearDir/documents.parquet")
+        .join(passing, Seq("doc_id"), "left_semi"), s"$outDir/clean/documents.parquet"))
     }("kept")
 
     // stage 5: exact-substring span removal (qd14's operator) — the
@@ -354,15 +376,12 @@ object CleanJob {
         val a = prof.agg(
           coalesce(sum((col("n_spans") > 0).cast("long")), lit(0L)).as("rd"),
           coalesce(sum(col("removed_tokens")), lit(0L)).as("rt")).collect()(0)
-        spark.read.parquet(s"$outDir/clean/documents.parquet")
+        val nOut = writeCounted(spark.read.parquet(s"$outDir/clean/documents.parquet")
           .drop("text", "n_chars")
           .join(prof.select(col("doc_id"), col("clean_text").as("text")),
             Seq("doc_id"))
-          .withColumn("n_chars", length(col("text")).cast("long"))
-          .write.mode("overwrite")
-          .parquet(s"$outDir/final/documents.parquet")
-        val nOut = spark.read.parquet(s"$outDir/final/documents.parquet")
-          .count()
+          .withColumn("n_chars", length(col("text")).cast("long")),
+          s"$outDir/final/documents.parquet")
         require(nOut == nFinal,
           s"substr stage must rewrite, never drop: $nOut != $nFinal")
         Map("rewritten" -> a.getAs[Long]("rd"),
@@ -393,16 +412,13 @@ object CleanJob {
           coalesce(sum(when(col("kept") === 1,
             col("n_rule_dropped") + col("n_dup_dropped")).otherwise(0L)),
             lit(0L)).as("ld")).collect()(0)
-        spark.read.parquet(s"$outDir/final/documents.parquet")
+        val nOut = writeCounted(spark.read.parquet(s"$outDir/final/documents.parquet")
           .drop("text", "n_chars")
           .join(prof.filter(col("kept") === 1)
             .select(col("doc_id"), col("clean_text").as("text")),
             Seq("doc_id"))
-          .withColumn("n_chars", length(col("text")).cast("long"))
-          .write.mode("overwrite")
-          .parquet(s"$outDir/delivered/documents.parquet")
-        val nOut = spark.read.parquet(s"$outDir/delivered/documents.parquet")
-          .count()
+          .withColumn("n_chars", length(col("text")).cast("long")),
+          s"$outDir/delivered/documents.parquet")
         require(nOut == nFinal - a.getAs[Long]("g"),
           s"line stage drops exactly the gated docs: $nOut != " +
             s"$nFinal - ${a.getAs[Long]("g")}")
@@ -427,13 +443,9 @@ object CleanJob {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
         val gated = prof.filter(col("passes_repetition") === 0).count()
-        spark.read.parquet(s"$outDir/delivered/documents.parquet")
+        val nOut = writeCounted(spark.read.parquet(s"$outDir/delivered/documents.parquet")
           .join(prof.filter(col("passes_repetition") === 1).select(col("doc_id")),
-            Seq("doc_id"), "left_semi")
-          .write.mode("overwrite")
-          .parquet(s"$outDir/released/documents.parquet")
-        val nOut = spark.read.parquet(s"$outDir/released/documents.parquet")
-          .count()
+            Seq("doc_id"), "left_semi"), s"$outDir/released/documents.parquet")
         require(nOut == nDeliveredCnt - gated,
           s"repetition stage drops exactly the gated docs: $nOut != " +
             s"$nDeliveredCnt - $gated")

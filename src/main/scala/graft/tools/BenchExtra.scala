@@ -33,6 +33,19 @@ object BenchExtra {
       .map(b => math.max(b.getCollectionTime, 0L)).sum / 1000.0
   }
 
+  /** `SPARK_GRAFT_SET`'s comma-separated `key=value` session-conf
+    * overrides, in order; empty tokens are skipped. A token without `=` or
+    * with an empty key throws IllegalArgumentException naming the token.
+    */
+  def confOverrides(spec: String): Seq[(String, String)] =
+    spec.split(",").toSeq.filter(_.nonEmpty).map { kv =>
+      kv.split("=", 2) match {
+        case Array(k, v) if k.nonEmpty => k -> v
+        case _ => throw new IllegalArgumentException(
+          s"SPARK_GRAFT_SET: expected key=value, got '$kv'")
+      }
+    }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
@@ -45,10 +58,9 @@ object BenchExtra {
     val spark = graft.Bench.newSession(cpus)
     // A/B knob for the optimize loop ONLY (guide §1): comma-separated k=v
     // session-conf overrides, e.g. SPARK_GRAFT_SET=spark.sql.codegen.wholeStage=false
-    sys.env.get("SPARK_GRAFT_SET").foreach(_.split(",").filter(_.nonEmpty)
-      .foreach { kv =>
-        val Array(k, v) = kv.split("=", 2); spark.conf.set(k, v)
-      })
+    sys.env.get("SPARK_GRAFT_SET").foreach(confOverrides(_).foreach {
+      case (k, v) => spark.conf.set(k, v)
+    })
     // per-query job/stage/task telemetry (guide §1.5/§7): distinguishes
     // round-latency-bound queries (many tiny jobs) from data-bound ones
     val jobCount = new java.util.concurrent.atomic.AtomicLong(0)

@@ -912,6 +912,53 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("connected components: one job per materialization on a 2-round graph") {
+    val ss = spark; import ss.implicits._
+    // a 2-edge path (needs the pointer jump) next to a star and a pair:
+    // round 1 lowers labels, round 2 finds the fixpoint
+    val pairs = Seq((3L, 4L), (4L, 5L), (10L, 11L), (10L, 12L), (10L, 13L),
+      (20L, 21L))
+    val edges = pairs.toDF("doc_a", "doc_b")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    org.apache.spark.ListenerBusTestDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    val (labels, rounds) = try {
+      val r = Dedup.ccWithRounds(edges, maxRounds = 16, pointerJump = true)
+      org.apache.spark.ListenerBusTestDrain(spark.sparkContext)
+      r
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(rounds == 2, s"$rounds rounds")
+    // edge checkpoint (+ its count), adjacency, round 1's propagate (+ its
+    // convergence count) and jump, round 2's propagate, plus the label
+    // joins' broadcasts: 8 jobs here. The separate edge count (2 jobs), the
+    // initial-labels checkpoint and the per-round emptiness checks are gone.
+    assert(jobs.get() <= 8, s"${jobs.get()} jobs for a 2-round CC call")
+    // union-find differential (min-id root per component)
+    val parent = scala.collection.mutable.Map[Long, Long]()
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    pairs.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    val expected = pairs.flatMap(p => Seq(p._1, p._2)).distinct
+      .map(v => v -> find(v)).toMap
+    assert(labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap == expected)
+    // a budget of one round cannot reach the fixpoint: the guard throws
+    val e = intercept[IllegalStateException] {
+      Dedup.ccWithRounds(edges, maxRounds = 1, pointerJump = true)
+    }
+    assert(e.getMessage.contains("fixpoint"), e.getMessage)
+  }
+
   test("count-min sketch: full grid, per-lane mass conservation, determinism") {
     val ss = spark; import ss.implicits._
     val cells = TextAnalysis.cmsBigrams(spark, dupDir, depth = 4, width = 32)

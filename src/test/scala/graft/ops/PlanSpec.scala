@@ -145,6 +145,58 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
       l.contains("doc_a") && l.contains("doc_b") && !l.contains("sh#")), plan)
   }
 
+  test("ensureParallel widens a bare scan and rejects a post-shuffle frame") {
+    import org.apache.spark.sql.functions.col
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+    // one sub-128MB file: a single split, widened to the 4 local cores
+    assert(ScanLayout.ensureParallel(docs.select(col("doc_id"), col("text"))
+      .filter(col("doc_id") > 0)).rdd.getNumPartitions == 4)
+    Seq(docs.repartition(2), docs.groupBy(col("lang")).count()).foreach { df =>
+      val e = intercept[IllegalArgumentException](ScanLayout.ensureParallel(df))
+      assert(e.getMessage.contains("ensureParallel needs a bare scan"), e.getMessage)
+    }
+  }
+
+  test("CleanJob's minhash-LSH pairs shingle the corpus in ONE scan branch") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    def nodes(p: SparkPlan): Iterator[SparkPlan] = Iterator(p) ++ (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case _ => p.children.iterator.flatMap(nodes)
+    })
+    def shingles(p: SparkPlan): Boolean = p.expressions.exists(_.exists {
+      case _: graft.functions.WordShingles => true
+      case _ => false
+    })
+    // every plan the call and its consumer execute, the base checkpoint's
+    // included: a branch is a parquet scan under an operator that shingles
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      Dedup.minhashLshPairs(spark, sf, shingleSize = 3, threshold = 0.5)
+        .write.format("noop").mode("overwrite").save()
+      org.apache.spark.ListenerBusTestDrain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    // by identity: the scans of one file in different branches are equal
+    val branches = plans.asScala.toSeq.flatMap { p =>
+      nodes(p).filter(shingles).flatMap(n => nodes(n).collect {
+        case s: FileSourceScanExec => s
+      }).foldLeft(Vector.empty[SparkPlan])((acc, s) =>
+        if (acc.exists(_ eq s)) acc else acc :+ s)
+    }
+    assert(branches.size == 1,
+      s"${branches.size} shingling scan branches:\n${plans.asScala.mkString("\n")}")
+  }
+
   test("embedding-dup LSH path has no cartesian / nested-loop join") {
     val plan = planOf(Similarity.embeddingDupPairsLsh(spark, sf))
     assert(!plan.contains("CartesianProduct"), plan)

@@ -76,6 +76,25 @@ class CleanJobSpec extends AnyFunSuite with BeforeAndAfterAll {
       .write.mode("overwrite").parquet(s"$out/corpus/documents.parquet")
     val stats = CleanJob.run(spark, s"$out/corpus", out)
 
+    // every lineage number, pinned: the seeded corpus is a pure function of
+    // the row index, so any drift here is a changed stage result
+    assert(stats.copy(stageSecs = Map.empty) == CleanJob.CleanStats(
+      nInput = 500, urlRemoved = 50, exactRemoved = 50, nearPairs = 50,
+      nearClusters = 50, nearRemoved = 50, qualityRemoved = 35, nFinal = 315,
+      substrRewritten = 50, substrTokensRemoved = 623, lineGated = 28,
+      lineLinesDropped = 2003, nDelivered = 287, repetitionGated = 36,
+      nReleased = 251, splitTrain = 209, splitVal = 20, splitTest = 22),
+      stats.toString)
+    // stage counts come from the written files' footers: each must equal
+    // what the parquet reader counts in the same table
+    Seq("corpus/documents", "stage_url/documents", "stage_exact/documents",
+        "stage_pairs/pairs", "stage_near/documents", "clean/documents",
+        "final/documents", "delivered/documents", "released/documents",
+        "splits/splits").foreach { t =>
+      val dir = s"$out/$t.parquet"
+      assert(CleanJob.writtenRows(spark, dir) == spark.read.parquet(dir).count(), t)
+    }
+
     assert(stats.nInput == n)
     // stage 0 removes exactly the 50 planted URL re-crawls (id%10==9),
     // whose TEXT is fresh — only the canonical URL collides
@@ -184,6 +203,35 @@ class CleanJobSpec extends AnyFunSuite with BeforeAndAfterAll {
         val (a, b) = (r.getLong(0), r.getLong(1))
         assert(splitOf(a) == splitOf(b), s"LEAK: ($a,$b) straddles splits")
       }
+  }
+
+  test("near-dup recall: CleanJob's XXH64 LSH builder and the portable one " +
+      "recover every planted pair") {
+    import org.apache.spark.sql.functions.col
+    val out = Files.createTempDirectory("graft-clean-recall").toString
+    val n = 2000L
+    CleanJob.DocCorpus.generate(spark, n, partitions = 4)
+      .write.mode("overwrite").parquet(s"$out/corpus/documents.parquet")
+    // (decade base, id%10==8): a 2-word substitution of the base text
+    val planted = (0L until n by 10L).map(b => (b, b + 8)).toSet
+    def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
+      df.select(col("doc_a"), col("doc_b")).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+    // CleanJob's stage-2 builder with CleanJob's parameters (3-word
+    // shingles, 16 bands x 4 rows, t = 0.5)
+    val xxh = pairs(graft.ops.Dedup.minhashLshPairs(spark, s"$out/corpus",
+      shingleSize = 3, threshold = 0.5))
+    assert(planted.subsetOf(xxh), s"missed: ${planted -- xxh}")
+    // the oracled portable builder at the same shingles and threshold needs
+    // all 8 of its affine lanes as single-lane bands to match (collision
+    // probability ~J per lane instead of ~J^4 per band) ...
+    val portable = pairs(graft.ops.Dedup.minhashLshPairsPortable(spark,
+      s"$out/corpus", shingleSize = 3, bands = 8, rowsPerBand = 1, threshold = 0.5))
+    assert(planted.subsetOf(portable), s"missed: ${planted -- portable}")
+    // ... while its 4x2 suite default misses two planted pairs
+    val default = pairs(graft.ops.Dedup.minhashLshPairsPortable(spark,
+      s"$out/corpus"))
+    assert(planted -- default == Set((490L, 498L), (1850L, 1858L)))
   }
 
   test("kill-and-resume: completed stages are skipped, lineage identical") {
