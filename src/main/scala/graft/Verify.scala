@@ -30,9 +30,10 @@ object Verify {
     }
     // Cap-parity status differs by query family: qd4/qd6/qd8's oracles
     // REPLAY the maxBucket cap (parity unconditional — check_cap_parity.py),
-    // but qd7/qd9/qd10's oracles enumerate the band predicate UNCAPPED, so
-    // an over-cap band bucket would break THEIR parity. Surface any firing
-    // cap here so a hash mismatch is immediately attributable.
+    // and so do qd11's (prefix tokens) and qd20's (2x4 bands), but the 4x2
+    // band predicate is replayed UNCAPPED by every other LSH oracle, so an
+    // over-cap band bucket would break THEIR parity. Surface any firing cap
+    // here so a hash mismatch is immediately attributable.
     // diagnostics only — must never prevent the oracle_sql.json write below
     try {
       val oversizeNgram = graft.ops.Dedup.ngramJaccardOversize(spark, sfDir).count()
@@ -40,8 +41,8 @@ object Verify {
       if (oversizeLsh > 0)
         System.err.println(
           s"[verify] WARNING: $oversizeLsh band buckets over the LSH cap at " +
-            s"$sfDir — qd7/qd9/qd10 oracle parity will NOT hold (their " +
-            "oracles replay the band predicate uncapped)")
+            s"$sfDir — qd7/qd9/qd10/qd19/qd21/qd22/qt41 oracle parity will " +
+            "NOT hold (their oracles replay the band predicate uncapped)")
       if (oversizeNgram > 0)
         System.err.println(
           s"[verify] note: $oversizeNgram ngram blocks over the cap at " +

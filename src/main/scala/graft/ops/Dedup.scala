@@ -79,6 +79,70 @@ object Dedup {
         .filter(col("n_in_bucket") <= maxBucket).drop("n_in_bucket"),
       Seq(key))
 
+  /** The blocking and verify input of every Jaccard near-dup path here:
+    * (doc_id, sh) over the documents table, plus `sig` when a signature
+    * expression over `sh` is given.
+    *
+    * Materialized ONCE per call (eager per-invocation local checkpoint, the
+    * r6 rule every multi-referenced proxy table in this object follows):
+    * the bucket explode, the cap count, the self-join and both verify
+    * re-attach sides all read it. Left lazy, each reference re-scans and
+    * re-shingles the corpus (AQE broadcasts the verify joins, so no
+    * exchange is reused; the r6 plan audit counted up to 10 shingling scans
+    * in one query). Unlike a session-level cache the blocks belong to one
+    * invocation and are GC-reclaimed.
+    *
+    * The empty-set filter runs on the checkpointed rows: placed before the
+    * checkpoint, the optimizer pushes it (and a second shingling) under
+    * [[ScanLayout.ensureParallel]]'s round-robin repartition, into the
+    * serial scan task.
+    */
+  private[ops] def signedBase(spark: SparkSession, dir: String, shingleSize: Int,
+      sig: Option[Column] = None): DataFrame = {
+    val base = ScanLayout.ensureParallel(docs(spark, dir))
+      .select(col("doc_id"), shingles(col("text"), shingleSize).as("sh"))
+    sig.fold(base)(base.withColumn("sig", _))
+      .localCheckpoint(true)
+      .filter(size(col("sh")) > 0)
+  }
+
+  /** Candidate (doc_a, doc_b) pairs, doc_a < doc_b, from (doc_id, bkey)
+    * bucket rows: [[capBuckets]], the within-bucket self-join, and a
+    * distinct (a pair sharing several bands collides once per band).
+    */
+  private def bucketPairs(buckets: DataFrame, maxBucket: Int): DataFrame = {
+    val admitted = capBuckets(buckets, "bkey", maxBucket)
+    admitted.as("a").join(admitted.as("b"),
+        col("a.bkey") === col("b.bkey") && col("a.doc_id") < col("b.doc_id"))
+      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+      .distinct()
+  }
+
+  /** Exact-Jaccard verify of candidate (doc_a, doc_b) pairs: doc_a's
+    * shingle set comes from `left`, doc_b's from `right` (both (doc_id, sh)),
+    * pairs are kept on the UNROUNDED Jaccard and output rounded to 6 (the
+    * oracle's float discipline). Output (doc_a, doc_b, jaccard).
+    *
+    * Pin policy: the ids-only candidate exchange is repartitioned on doc_a
+    * to `spark.sql.shuffle.partitions` before the re-attach. That is the
+    * qd4 lesson: AQE coalesces on shuffle BYTES and cannot see that each
+    * tiny id pair carries a two-pointer merge over ~|sh| strings, so a
+    * boilerplate flood that inflates candidates 40x would otherwise verify
+    * in a couple of tasks. Shingle arrays are distinct and sorted, so the
+    * native Jaccard is one pass with no per-pair hash sets.
+    */
+  private[ops] def verified(cand: DataFrame, left: DataFrame, right: DataFrame,
+      threshold: Double): DataFrame =
+    cand
+      .repartition(cand.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt,
+        col("doc_a"))
+      .join(left.select(col("doc_id").as("doc_a"), col("sh").as("sh_a")), "doc_a")
+      .join(right.select(col("doc_id").as("doc_b"), col("sh").as("sh_b")), "doc_b")
+      .withColumn("jaccard",
+        graft.functions.GraftFunctions.jaccardSorted(col("sh_a"), col("sh_b")))
+      .filter(col("jaccard") >= threshold)
+      .select(col("doc_a"), col("doc_b"), round(col("jaccard"), 6).as("jaccard"))
+
   /** MinHash+LSH near-duplicate pairs with exact-Jaccard verification.
     *
     * numHashes=64, bands=16 x rows=4 targets the ~0.5+ Jaccard region: the
@@ -95,9 +159,8 @@ object Dedup {
     * (GraftImpl.minhashSig), restoring the textbook S-curve and cutting the
     * signature pass ~10x.
     *
-    * Pipeline: signature (map-only) -> explode bands -> groupBy band bucket
-    * (shuffle 1) -> pairs within bucket -> distinct -> verify join (shuffle 2)
-    * computing true Jaccard on the shingle sets.
+    * Pipeline: [[signedBase]] with the band keys as its signature
+    * (map-only) -> [[bucketPairs]] (bucket shuffle) -> [[verified]].
     *
     * `maxBucket` bounds the quadratic worst case (see [[capBuckets]]):
     * run [[exactDedupKeepFirst]] FIRST so exact-dup groups never reach the
@@ -114,72 +177,40 @@ object Dedup {
       threshold: Double = 0.5,
       maxBucket: Int = 4096
   ): DataFrame = {
-    val rowsPerBand = numHashes / bands
-    // the blocking input, built ONCE per call (eager local checkpoint): the
-    // bucket self-join, both cap counts and both verify re-attach sides read
-    // it. Left lazy, each of the 6 reads re-scans and re-shingles the corpus
-    // (AQE broadcasts those joins, so no exchange is reused), and the
-    // explode's inferred non-empty filter inlines the signature once per
-    // band lane. The empty-set filter runs on the checkpointed rows: placed
-    // before the checkpoint, the optimizer pushes it (and a second
-    // shingling) under the round-robin repartition, into the serial scan.
-    val base = ScanLayout.ensureParallel(docs(spark, dir))
-      .select(col("doc_id"), shingles(col("text"), shingleSize).as("sh"))
-      .select(col("doc_id"), col("sh"),
-        bandKeys(minhashSignature(col("sh"), numHashes), bands, rowsPerBand).as("bands"))
-      .localCheckpoint(true)
-      .filter(size(col("sh")) > 0)
-    val buckets = base.select(col("doc_id"), explode(col("bands")).as("band"))
-    val admitted = capBuckets(buckets, "band", maxBucket)
-    // ids-only candidate exchange pinned wide before the verify (the qd4
-    // lesson: AQE coalesces on shuffle BYTES and cannot see that each tiny
-    // id pair carries a two-pointer merge over ~|sh| strings — a boilerplate
-    // flood that inflates candidates 40x would otherwise verify in a couple
-    // of tasks)
-    val cand = admitted.as("a").join(admitted.as("b"),
-        col("a.band") === col("b.band") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .distinct()
-      .repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt, col("doc_a"))
-    val sa = base.select(col("doc_id").as("doc_a"), col("sh").as("sh_a"))
-    val sb = base.select(col("doc_id").as("doc_b"), col("sh").as("sh_b"))
-    // native sorted-merge Jaccard (shingle arrays are distinct+sorted):
-    // one pass, no per-pair hash-set allocation like array_intersect/union
-    cand.join(sa, "doc_a").join(sb, "doc_b")
-      .withColumn("jaccard",
-        graft.functions.GraftFunctions.jaccardSorted(col("sh_a"), col("sh_b")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("doc_a"), col("doc_b"), round(col("jaccard"), 6).as("jaccard"))
+    // the band keys are checkpointed with the shingles: derived lazily, the
+    // explode's inferred non-empty filter inlines the signature per band
+    val base = signedBase(spark, dir, shingleSize, Some(bandKeys(
+      minhashSignature(col("sh"), numHashes), bands, numHashes / bands)))
+    val buckets = base.select(col("doc_id"), explode(col("sig")).as("bkey"))
+    verified(bucketPairs(buckets, maxBucket), base, base, threshold)
   }
 
-  /** (doc_id, sh, exploded band key) for the portable banded-minhash schemes:
-    * md5-affine lane signatures over the shingle set, grouped into
-    * `rowsPerBand`-lane band keys "<band>|<sig>|<sig>" — decimal strings of
-    * nonneg longs, so string equality == numeric equality and the oracle can
-    * replay the key as per-lane equalities.
+  /** md5-affine lane signature of `sh` (the [[minhashPortable]] lane
+    * family); `lanes <= 8` keeps the affine multiplier i <= 7 inside int64.
+    * One-pass native expression (graft.functions.MinHashAffine): one md5 per
+    * shingle, all lanes in one traversal — bit-identical to the composed
+    * md5-conv-zip_with form the oracle replays.
     */
-  private def portableBandBuckets(base: DataFrame, bands: Int,
-      rowsPerBand: Int): DataFrame = {
-    val lanes = bands * rowsPerBand
+  private def affineSig(lanes: Int): Column = {
     require(lanes <= 8, s"portable affine lanes need i <= 7, got $lanes lanes")
-    // one-pass native signature (graft.functions.MinHashAffine): one md5 per
-    // shingle, all lanes in one traversal — bit-identical to the composed
-    // md5-conv-zip_with form the oracle replays
+    graft.functions.GraftFunctions.minhashAffine(col("sh"), lanes)
+  }
+
+  /** (doc_id, bkey) exploded band keys for the portable banded-minhash
+    * schemes from a frame carrying an [[affineSig]] `sig`: `rowsPerBand`-lane
+    * band keys "<band>|<sig>|<sig>" — decimal strings of nonneg longs, so
+    * string equality == numeric equality and the oracle can replay the key
+    * as per-lane equalities.
+    */
+  private def portableBandBuckets(signed: DataFrame, bands: Int,
+      rowsPerBand: Int): DataFrame = {
     val bandCols = (0 until bands).map { b =>
       concat_ws("|", lit(b.toString) +:
         (0 until rowsPerBand).map(r =>
           element_at(col("sig"), b * rowsPerBand + r + 1)): _*)
     }
-    base
-      .withColumn("sig",
-        graft.functions.GraftFunctions.minhashAffine(col("sh"), lanes))
-      .select(col("doc_id"), explode(array(bandCols: _*)).as("bkey"))
+    signed.select(col("doc_id"), explode(array(bandCols: _*)).as("bkey"))
   }
-
-  private def shingleBase(spark: SparkSession, dir: String, shingleSize: Int): DataFrame =
-    // parallelize the doc scan feeding the shingle+signature map work
-    // (ScanLayout: no-op whenever the scan already has >= cores splits)
-    shinglesOf(ScanLayout.ensureParallel(docs(spark, dir)), shingleSize)
 
   /** (doc_id, sh) from any documents frame — the preprocessed shingle table
     * the incremental-dedup index persists ([[graft.spark.IncrementalDedupJob]]).
@@ -195,18 +226,20 @@ object Dedup {
     */
   def bandTableOf(shingleDf: DataFrame, bands: Int = 4, rowsPerBand: Int = 2,
       maxBucket: Int = 4096): DataFrame =
-    capBuckets(portableBandBuckets(shingleDf, bands, rowsPerBand), "bkey", maxBucket)
+    capBuckets(portableBandBuckets(shingleDf.withColumn("sig",
+      affineSig(bands * rowsPerBand)), bands, rowsPerBand), "bkey", maxBucket)
 
   /** PORTABLE MinHash-LSH near-dup pairs — the flagship dedup-at-scale shape
     * as a driver-suite entry: banded minhash bucketing -> within-bucket
     * candidates -> exact-Jaccard verify, with every hash replayable in the
     * DuckDB oracle (the [[minhashPortable]] md5-affine lane family;
     * bands*rowsPerBand <= 8 lanes keeps the affine multiplier i <= 7 inside
-    * int64). Same plan shape as [[minhashLshPairs]]: one bucket shuffle, one
-    * verify join, bucket width capped by `maxBucket` ([[capBuckets]];
-    * skipped buckets enumerable via [[minhashLshOversize]] — at the test
-    * scale factors the widest bucket is ~180 docs, far under the cap, so
-    * the oracle's uncapped replay stays exact).
+    * int64). It runs the shared core of [[minhashLshPairs]] with the
+    * portable signer: [[signedBase]] -> [[bucketPairs]] -> [[verified]], so
+    * one bucket shuffle, one verify join, bucket width capped by `maxBucket`
+    * ([[capBuckets]]; skipped buckets enumerable via [[minhashLshOversize]] —
+    * at the test scale factors the widest bucket is ~180 docs, far under the
+    * cap, so the oracle's uncapped replay stays exact).
     *
     * Collision recall is the banded-minhash curve 1-(1-j^rows)^bands (4x2:
     * ~13% at j=0.2, ~99.6% at j=0.8) — the ORACLE REPLAYS THE SAME BAND
@@ -222,25 +255,9 @@ object Dedup {
       threshold: Double = 0.2,
       maxBucket: Int = 4096
   ): DataFrame = {
-    // materialized once per query (r6; eager per-invocation local checkpoint): the band-bucket chain and both verify re-attach sides
-    // read the shingle table — without the cache each reference re-ran the
-    // WordShingles scan (6 parquet scans in the r6 plan audit; the bucket
-    // self-join's ReusedExchange covers only its own two sides)
-    val base = shingleBase(spark, dir, shingleSize)
-      .localCheckpoint(true)
-    val buckets = portableBandBuckets(base, bands, rowsPerBand)
-    val admitted = capBuckets(buckets, "bkey", maxBucket)
-    val cand = admitted.as("a").join(admitted.as("b"),
-        col("a.bkey") === col("b.bkey") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .distinct()
-    val sa = base.select(col("doc_id").as("doc_a"), col("sh").as("sh_a"))
-    val sb = base.select(col("doc_id").as("doc_b"), col("sh").as("sh_b"))
-    cand.join(sa, "doc_a").join(sb, "doc_b")
-      .withColumn("jaccard",
-        graft.functions.GraftFunctions.jaccardSorted(col("sh_a"), col("sh_b")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("doc_a"), col("doc_b"), round(col("jaccard"), 6).as("jaccard"))
+    val base = signedBase(spark, dir, shingleSize, Some(affineSig(bands * rowsPerBand)))
+    verified(bucketPairs(portableBandBuckets(base, bands, rowsPerBand), maxBucket),
+      base, base, threshold)
   }
 
   /** qd21: MinHash SKETCH CALIBRATION — the qs10 evaluation-harness pattern
@@ -258,9 +275,10 @@ object Dedup {
     * the exact Jaccard rounds to 6 (the qd7 discipline); the error is one
     * IEEE subtraction of exact doubles, rounded to 6.
     *
-    * Scale shape: identical to [[minhashLshPairsPortable]] — the signature
-    * is computed ONCE per doc (native one-pass MinHashAffine), band keys
-    * explode from it, one bucket shuffle + one verify join, maxBucket cap.
+    * Scale shape: the candidates come from the shared core exactly as in
+    * [[minhashLshPairsPortable]] ([[signedBase]] -> [[bucketPairs]]); the
+    * signature is computed ONCE per doc and re-attached beside the shingles
+    * for the estimator, in place of [[verified]]'s threshold filter.
     *
     * Output: (doc_a, doc_b, matches, est_jaccard, jaccard, err).
     */
@@ -272,26 +290,8 @@ object Dedup {
       rowsPerBand: Int = 2,
       maxBucket: Int = 4096
   ): DataFrame = {
-    val lanes = bands * rowsPerBand
-    require(lanes <= 8, s"portable affine lanes need i <= 7, got $lanes lanes")
-    // materialized once per query (r6; eager per-invocation local checkpoint): the band explode and both verify sides read the
-    // signature table (the qd7 rationale — one shingle+signature scan)
-    val sigs = shingleBase(spark, dir, shingleSize)
-      .withColumn("sig",
-        graft.functions.GraftFunctions.minhashAffine(col("sh"), lanes))
-      .localCheckpoint(true)
-    val bandCols = (0 until bands).map { b =>
-      concat_ws("|", lit(b.toString) +:
-        (0 until rowsPerBand).map(r =>
-          element_at(col("sig"), b * rowsPerBand + r + 1)): _*)
-    }
-    val buckets = sigs.select(col("doc_id"),
-      explode(array(bandCols: _*)).as("bkey"))
-    val admitted = capBuckets(buckets, "bkey", maxBucket)
-    val cand = admitted.as("a").join(admitted.as("b"),
-        col("a.bkey") === col("b.bkey") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .distinct()
+    val sigs = signedBase(spark, dir, shingleSize, Some(affineSig(bands * rowsPerBand)))
+    val cand = bucketPairs(portableBandBuckets(sigs, bands, rowsPerBand), maxBucket)
     val sa = sigs.select(col("doc_id").as("doc_a"), col("sh").as("sh_a"),
       col("sig").as("sig_a"))
     val sb = sigs.select(col("doc_id").as("doc_b"), col("sh").as("sh_b"),
@@ -301,7 +301,7 @@ object Dedup {
         expr("aggregate(zip_with(sig_a, sig_b, (x, y) -> IF(x = y, 1L, 0L)), " +
           "0L, (acc, v) -> acc + v)"))
       .withColumn("est_jaccard",
-        col("matches").cast("double") / lit(lanes.toDouble))
+        col("matches").cast("double") / lit((bands * rowsPerBand).toDouble))
       .withColumn("jaccard", round(
         graft.functions.GraftFunctions.jaccardSorted(col("sh_a"), col("sh_b")),
         6))
@@ -318,7 +318,10 @@ object Dedup {
     * streaming dedup handles within-stream repeats — this is the third leg:
     * new data against an already-clean store. Here the batch is carved
     * deterministically (doc_id % batchMod == 0) so the oracle can replay
-    * the split; in production it is yesterday's snapshot vs today's ingest.
+    * the split and the band cap runs over the whole corpus before it; in
+    * production it is yesterday's snapshot vs today's ingest
+    * ([[graft.spark.IncrementalDedupJob.admitBatch]]: the same [[admission]]
+    * body, each side capped on its own).
     *
     * Scale shape: the fingerprint check is one hash semi-join; the near
     * check shuffles band keys once on each side and joins — the batch side
@@ -338,37 +341,42 @@ object Dedup {
       maxBucket: Int = 4096
   ): DataFrame = {
     val inBatch = col("doc_id") % batchMod === 0
-    // materialized once per query (r6; eager per-invocation local checkpoint): each table below feeds BOTH sides of a batch-vs-corpus
-    // join (plus the verify re-attach), and every reference re-ran its md5/
-    // shingle/signature scan — 9 corpus scans in the r6 plan audit
+    // checkpointed like [[signedBase]]: each table feeds both sides of a
+    // batch-vs-corpus join (9 corpus scans in the r6 plan audit otherwise)
     val fps = docs(spark, dir)
       .select(col("doc_id"), fingerprintCol(col("text")).as("fp"))
       .localCheckpoint(true)
-    val exactDup = fps.filter(inBatch).as("b")
-      .join(fps.filter(!inBatch).as("c"), col("b.fp") === col("c.fp"),
-        "left_semi")
+    val base = signedBase(spark, dir, shingleSize, Some(affineSig(bands * rowsPerBand)))
+    val admitted = capBuckets(portableBandBuckets(base, bands, rowsPerBand),
+        "bkey", maxBucket)
+      .localCheckpoint(true)
+    admission(fps.filter(inBatch), base.filter(inBatch), admitted.filter(inBatch),
+      fps.filter(!inBatch), base.filter(!inBatch), admitted.filter(!inBatch),
+      threshold)
+  }
+
+  /** The batch-admission body of [[incrementalDedup]] and
+    * [[graft.spark.IncrementalDedupJob.admitBatch]]: batch-side and
+    * corpus-side (doc_id, fp), (doc_id, sh) and cap-admitted (doc_id, bkey)
+    * tables in (each caller places the band cap itself); one row per batch
+    * doc out: (doc_id, exact_dup, n_near, best_jaccard).
+    */
+  private[graft] def admission(batchFp: DataFrame, batchSh: DataFrame,
+      batchBands: DataFrame, corpusFp: DataFrame, corpusSh: DataFrame,
+      corpusBands: DataFrame, threshold: Double): DataFrame = {
+    val exactDup = batchFp.as("b")
+      .join(corpusFp.as("c"), col("b.fp") === col("c.fp"), "left_semi")
       .select(col("doc_id"), lit(1).as("exact_dup"))
-    val base = shingleBase(spark, dir, shingleSize)
-      .localCheckpoint(true)
-    val buckets = portableBandBuckets(base, bands, rowsPerBand)
-    val admitted = capBuckets(buckets, "bkey", maxBucket)
-      .localCheckpoint(true)
-    val cand = admitted.filter(inBatch).as("b")
-      .join(admitted.filter(!inBatch).as("c"), col("b.bkey") === col("c.bkey"))
-      .select(col("b.doc_id").as("batch_id"), col("c.doc_id").as("corpus_id"))
+    val cand = batchBands.as("b")
+      .join(corpusBands.as("c"), col("b.bkey") === col("c.bkey"))
+      .select(col("b.doc_id").as("doc_a"), col("c.doc_id").as("doc_b"))
       .distinct()
-    val near = cand
-      .join(base.select(col("doc_id").as("batch_id"), col("sh").as("sh_b")),
-        "batch_id")
-      .join(base.select(col("doc_id").as("corpus_id"), col("sh").as("sh_c")),
-        "corpus_id")
-      .withColumn("jaccard",
-        graft.functions.GraftFunctions.jaccardSorted(col("sh_b"), col("sh_c")))
-      .filter(col("jaccard") >= threshold)
-      .groupBy(col("batch_id").as("doc_id"))
-      .agg(count(lit(1)).as("n_near"),
-        round(max(col("jaccard")), 6).as("best_jaccard"))
-    docs(spark, dir).filter(inBatch).select(col("doc_id"))
+    // rounding is monotone, so the max of the rounded Jaccards is the
+    // rounded max
+    val near = verified(cand, batchSh, corpusSh, threshold)
+      .groupBy(col("doc_a").as("doc_id"))
+      .agg(count(lit(1)).as("n_near"), max(col("jaccard")).as("best_jaccard"))
+    batchFp.select(col("doc_id"))
       .join(exactDup, Seq("doc_id"), "left")
       .join(near, Seq("doc_id"), "left")
       .select(col("doc_id"),
@@ -383,7 +391,9 @@ object Dedup {
     */
   def minhashLshOversize(spark: SparkSession, dir: String, shingleSize: Int = 2,
       bands: Int = 4, rowsPerBand: Int = 2, maxBucket: Int = 4096): DataFrame =
-    portableBandBuckets(shingleBase(spark, dir, shingleSize), bands, rowsPerBand)
+    portableBandBuckets(
+        signedBase(spark, dir, shingleSize, Some(affineSig(bands * rowsPerBand))),
+        bands, rowsPerBand)
       .groupBy(col("bkey")).agg(count(lit(1)).as("n_in_bucket"))
       .filter(col("n_in_bucket") > maxBucket)
       .withColumn("dropped_pairs",
@@ -455,8 +465,8 @@ object Dedup {
     val keys = for (i <- 0 until nBlocks; j <- i + 1 until nBlocks) yield
       lit((i * nBlocks + j).toLong * (1L << 40)) +
         blockVal(i) * lit(1L << 20) + blockVal(j)
-    // materialized once per query (r6; eager per-invocation local checkpoint): both self-join sides read the keyed table — each re-ran
-    // the SimHash64 text scan + 45-key explode before
+    // checkpointed like [[signedBase]]: both self-join sides read the keyed
+    // table — each re-ran the SimHash64 text scan + 45-key explode before
     val keyed = simhashDocs(spark, dir)
       .select(col("doc_id"), col("simhash"), explode(array(keys: _*)).as("bkey"))
       .localCheckpoint(true)
@@ -497,9 +507,10 @@ object Dedup {
     // on — partitioning is reused, and unlike a broadcast the admitted
     // block list never has to fit on the driver (at web scale it is
     // O(distinct blocks), compact but unbounded)
-    // materialized once per query (r6; eager per-invocation local checkpoint): the block-size aggregate and the admit join both read
-    // the shingle table (the self-join's own two sides were already covered
-    // by the ReusedExchange on the pinned repartition, which still fires)
+    // checkpointed like [[signedBase]]: the block-size aggregate and the
+    // admit join both read the shingle table (the self-join's own two sides
+    // were already covered by the ReusedExchange on the pinned repartition,
+    // which still fires)
     val base = ngramBase(spark, dir, shingleSize, bucketWords)
       .localCheckpoint(true)
     // explicit block-key repartition BEFORE the self-join: it is the same
@@ -604,27 +615,11 @@ object Dedup {
       threshold: Double = 0.8,
       maxToken: Int = 4096
   ): DataFrame = {
-    // materialize the shingle table once: unlike qd4/qd7, ppjoin's branches
-    // shuffle on DIFFERENT keys (token df, prefix token, then doc ids for
-    // the verify), so ReusedExchange never fires and the r6 plan audit
-    // measured the WordShingles scan evaluated 10x in one query (20
-    // shingling expressions, 10 parquet scans — guide §2.4). Eager local
-    // checkpoint of the (doc_id, sh) proxy table: every reference reads the
-    // materialized blocks, and unlike a session-level cache the blocks are
-    // per-invocation (self-contained timing) and GC-reclaimed.
-    val base = shingleBase(spark, dir, shingleSize)
-      .localCheckpoint(true)
-    // ids-only candidate exchange pinned wide (qd4's lesson: AQE coalesces
-    // on shuffle BYTES and would serialize the per-pair verify compute)
-    val cand = ppjoinCandidates(base, threshold, maxToken)
-      .repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt, col("doc_a"))
-    val sa = base.select(col("doc_id").as("doc_a"), col("sh").as("sh_a"))
-    val sb = base.select(col("doc_id").as("doc_b"), col("sh").as("sh_b"))
-    cand.join(sa, "doc_a").join(sb, "doc_b")
-      .withColumn("jaccard",
-        graft.functions.GraftFunctions.jaccardSorted(col("sh_a"), col("sh_b")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("doc_a"), col("doc_b"), round(col("jaccard"), 6).as("jaccard"))
+    // ppjoin's branches shuffle on DIFFERENT keys (token df, prefix token,
+    // then doc ids for the verify), so ReusedExchange never fires: the
+    // shared base is what keeps it to one shingling scan
+    val base = signedBase(spark, dir, shingleSize)
+    verified(ppjoinCandidates(base, threshold, maxToken), base, base, threshold)
   }
 
   /** Candidate (doc_a, doc_b) pairs from the prefix-token join — exposed so
@@ -1071,8 +1066,9 @@ object Dedup {
             array_join(slice(col("words"), i + 1, lit(w)), " ")),
             1, 15), 16, 10).cast("long"))))
       .toDF("doc_id", "pos", "gh")
-      // materialized once per query (r6; eager per-invocation local checkpoint): the duplicate-gram profile and the span join both read
-      // the positional gram table — each re-ran the md5 gram explode before
+      // checkpointed like [[signedBase]]: the duplicate-gram profile and the
+      // span join both read the positional gram table — each re-ran the md5
+      // gram explode before
       .localCheckpoint(true)
 
     val dup = grams.select(col("gh"), col("doc_id")).distinct()
@@ -1175,9 +1171,10 @@ object Dedup {
   def winnowContainment(spark: SparkSession, dir: String, k: Int = 3,
       win: Int = 4, threshold: Double = 0.2,
       maxDocsPerFp: Int = 1024): DataFrame = {
-    // materialized once per query (r6; eager per-invocation local checkpoint): the distinct fingerprint table feeds the hot-fp cap and
-    // the capped table feeds per-doc counts plus BOTH self-join sides —
-    // each reference re-ran the winnowing scan (8 scans in the plan audit)
+    // checkpointed like [[signedBase]]: the distinct fingerprint table feeds
+    // the hot-fp cap and the capped table feeds per-doc counts plus BOTH
+    // self-join sides — each reference re-ran the winnowing scan (8 scans
+    // in the plan audit)
     val fps = winnowFingerprints(spark, dir, k, win)
       .select(col("doc_id"), col("fp")).distinct()
       .localCheckpoint(true)
@@ -1278,9 +1275,9 @@ object Dedup {
   def bucketSplit(spark: SparkSession, dir: String, shingleSize: Int = 2,
       bands: Int = 2, rowsPerBand: Int = 4, maxBucket: Int = 4096,
       maxRounds: Int = 16): DataFrame = {
-    val base = shingleBase(spark, dir, shingleSize)
-    // materialized once per query (r6; eager per-invocation local checkpoint): the star roots and the edge build both read the capped
-    // band table — each re-ran the shingle+signature chain before
+    val base = signedBase(spark, dir, shingleSize, Some(affineSig(bands * rowsPerBand)))
+    // checkpointed like [[signedBase]]: the star roots and the edge build
+    // both read the capped band table
     val admitted = capBuckets(portableBandBuckets(base, bands, rowsPerBand),
       "bkey", maxBucket)
       .localCheckpoint(true)

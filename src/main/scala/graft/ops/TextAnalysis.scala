@@ -1637,7 +1637,8 @@ object TextAnalysis {
     * whole-document near-duplicate of the eval text. This op runs the
     * qd7 portable banded-MinHash machinery ASYMMETRICALLY (train × eval,
     * the qd9 batch-vs-corpus shape): band keys on both sides, one
-    * bucket join, exact-Jaccard verify at the dedup threshold. The eval
+    * bucket join, exact-Jaccard verify at the dedup threshold (the shared
+    * [[graft.ops.Dedup]] shingle base and verify join). The eval
     * suite is the qt8 deterministic slice (doc_id % evalMod == 0).
     *
     * Scale shape: the eval side is benchmark-sized (thousands of docs),
@@ -1652,23 +1653,15 @@ object TextAnalysis {
   def nearContamination(spark: SparkSession, dir: String,
       shingleSize: Int = 2, threshold: Double = 0.2,
       evalMod: Int = 29): DataFrame = {
-    val base = Dedup.shinglesOf(docs(spark, dir), shingleSize)
+    val base = Dedup.signedBase(spark, dir, shingleSize)
     val evalSh = base.filter(col("doc_id") % evalMod === 0)
     val trainSh = base.filter(col("doc_id") % evalMod =!= 0)
-    val evalBands = Dedup.bandTableOf(evalSh)
-      .withColumnRenamed("doc_id", "eval_id")
-    val trainBands = Dedup.bandTableOf(trainSh)
-    val cand = trainBands.join(evalBands, "bkey")
-      .select(col("doc_id"), col("eval_id")).distinct()
-    cand
-      .join(trainSh.select(col("doc_id"), col("sh").as("sh_t")), "doc_id")
-      .join(evalSh.select(col("doc_id").as("eval_id"), col("sh").as("sh_e")),
-        "eval_id")
-      .withColumn("jaccard",
-        graft.functions.GraftFunctions.jaccardSorted(col("sh_t"), col("sh_e")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("doc_id"), col("eval_id"),
-        round(col("jaccard"), 6).as("jaccard"))
+    val cand = Dedup.bandTableOf(trainSh).as("t")
+      .join(Dedup.bandTableOf(evalSh).as("e"), col("t.bkey") === col("e.bkey"))
+      .select(col("t.doc_id").as("doc_a"), col("e.doc_id").as("doc_b"))
+      .distinct()
+    Dedup.verified(cand, trainSh, evalSh, threshold)
+      .select(col("doc_a").as("doc_id"), col("doc_b").as("eval_id"), col("jaccard"))
   }
 
   /** qt40: READABILITY scoring (Flesch 1948 Reading Ease + Flesch-Kincaid

@@ -75,40 +75,19 @@ object IncrementalDedupJob {
   /** Admit a batch against corpus-side tables (from the index, or recomputed
     * — the caller chooses; outputs must be identical either way, which the
     * runner asserts). One row per batch doc:
-    * (doc_id, exact_dup, n_near, best_jaccard, admit).
+    * (doc_id, exact_dup, n_near, best_jaccard, admit). The body is qd9's
+    * ([[Dedup.incrementalDedup]]); the batch's band keys are capped on their
+    * own, the corpus side as `corpusBands` was built.
     */
   def admitBatch(batch: DataFrame, corpusFp: DataFrame, corpusSh: DataFrame,
       corpusBands: DataFrame, shingleSize: Int = 2, bands: Int = 4,
       rowsPerBand: Int = 2, maxBucket: Int = 4096, threshold: Double = 0.2,
       admitBelowJaccard: Double = 0.5): DataFrame = {
-    val bfp = batch.select(col("doc_id"), Dedup.fingerprintCol(col("text")).as("fp"))
-    val exact = bfp.as("b")
-      .join(corpusFp.as("c"), col("b.fp") === col("c.fp"), "left_semi")
-      .select(col("doc_id"), lit(1).as("exact_dup"))
     val bsh = Dedup.shinglesOf(batch, shingleSize)
-    val bbands = Dedup.bandTableOf(bsh, bands, rowsPerBand, maxBucket)
-    val cand = bbands.as("b")
-      .join(corpusBands.as("c"), col("b.bkey") === col("c.bkey"))
-      .select(col("b.doc_id").as("batch_id"), col("c.doc_id").as("corpus_id"))
-      .distinct()
-    val near = cand
-      .join(bsh.select(col("doc_id").as("batch_id"), col("sh").as("sh_b")),
-        "batch_id")
-      .join(corpusSh.select(col("doc_id").as("corpus_id"), col("sh").as("sh_c")),
-        "corpus_id")
-      .withColumn("jaccard",
-        graft.functions.GraftFunctions.jaccardSorted(col("sh_b"), col("sh_c")))
-      .filter(col("jaccard") >= threshold)
-      .groupBy(col("batch_id").as("doc_id"))
-      .agg(count(lit(1)).as("n_near"),
-        round(max(col("jaccard")), 6).as("best_jaccard"))
-    batch.select(col("doc_id"))
-      .join(exact, Seq("doc_id"), "left")
-      .join(near, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("exact_dup"), lit(0)).as("exact_dup"),
-        coalesce(col("n_near"), lit(0L)).as("n_near"),
-        col("best_jaccard"))
+    Dedup.admission(
+      batch.select(col("doc_id"), Dedup.fingerprintCol(col("text")).as("fp")),
+      bsh, Dedup.bandTableOf(bsh, bands, rowsPerBand, maxBucket),
+      corpusFp, corpusSh, corpusBands, threshold)
       .withColumn("admit",
         col("exact_dup") === 0 &&
           coalesce(col("best_jaccard"), lit(0.0)) < admitBelowJaccard)

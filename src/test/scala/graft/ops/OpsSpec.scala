@@ -1363,6 +1363,20 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(out(4L)._2 >= 1, out.toString) // near vs doc 5
     assert(out(6L) == ((0, 0L)), out.toString)
     assert(out(8L) == ((0, 0L)), out.toString)
+    // qd9 is the production admission: the job's body over the same split
+    import org.apache.spark.sql.functions.col
+    val docs = spark.read.parquet(s"$dupDir/documents.parquet")
+    val corpus = docs.filter(col("doc_id") % 2 =!= 0)
+    val corpusSh = Dedup.shinglesOf(corpus, 2)
+    val job = graft.spark.IncrementalDedupJob.admitBatch(
+        docs.filter(col("doc_id") % 2 === 0),
+        corpus.select(col("doc_id"), Dedup.fingerprintCol(col("text")).as("fp")),
+        corpusSh, Dedup.bandTableOf(corpusSh), threshold = 0.2)
+      .drop("admit")
+    val qd9 = Dedup.incrementalDedup(spark, dupDir, batchMod = 2, threshold = 0.2)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long]).toSeq
+    assert(rows(qd9) == rows(job))
   }
 
   test("stratified sample: salted two-phase top-k equals the single-window form") {

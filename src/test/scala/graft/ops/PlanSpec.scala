@@ -157,20 +157,34 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  // CleanJob's builder and every other Jaccard near-dup path on the shared
+  // candidate -> verify core: one shingling scan branch, shingled once
   test("CleanJob's minhash-LSH pairs shingle the corpus in ONE scan branch") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.expressions.Expression
     import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    def nodes(p: SparkPlan): Iterator[SparkPlan] = Iterator(p) ++ (p match {
-      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
-      case q: QueryStageExec => nodes(q.plan)
-      case _ => p.children.iterator.flatMap(nodes)
-    })
-    def shingles(p: SparkPlan): Boolean = p.expressions.exists(_.exists {
+    def children(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case _ => p.children
+    }
+    def shingles(es: Seq[Expression]): Boolean = es.exists(_.exists {
       case _: graft.functions.WordShingles => true
       case _ => false
     })
+    // (scan, shingling operators above it + 1 if its DataFilters shingle),
+    // for every parquet scan under at least one shingling operator
+    def shingledScans(p: SparkPlan, above: Int): Seq[(SparkPlan, Int)] = p match {
+      case s: FileSourceScanExec =>
+        val n = above + (if (shingles(s.dataFilters)) 1 else 0)
+        if (n > 0) Seq(s -> n) else Nil
+      case _ =>
+        val here = above + (if (shingles(p.expressions)) 1 else 0)
+        children(p).flatMap(shingledScans(_, here))
+    }
     // every plan the call and its consumer execute, the base checkpoint's
-    // included: a branch is a parquet scan under an operator that shingles
+    // included
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(f: String,
@@ -179,22 +193,36 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
       override def onFailure(f: String,
           qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
     }
-    spark.listenerManager.register(listener)
-    try {
-      Dedup.minhashLshPairs(spark, sf, shingleSize = 3, threshold = 0.5)
-        .write.format("noop").mode("overwrite").save()
-      org.apache.spark.ListenerBusTestDrain(spark.sparkContext)
-    } finally spark.listenerManager.unregister(listener)
     import scala.jdk.CollectionConverters._
-    // by identity: the scans of one file in different branches are equal
-    val branches = plans.asScala.toSeq.flatMap { p =>
-      nodes(p).filter(shingles).flatMap(n => nodes(n).collect {
-        case s: FileSourceScanExec => s
-      }).foldLeft(Vector.empty[SparkPlan])((acc, s) =>
+    val inputs = Seq[(String, () => DataFrame)](
+      "minhashLshPairs" -> (() =>
+        Dedup.minhashLshPairs(spark, sf, shingleSize = 3, threshold = 0.5)),
+      "minhashLshPairsPortable" -> (() => Dedup.minhashLshPairsPortable(spark, sf)),
+      "minhashCalibration" -> (() => Dedup.minhashCalibration(spark, sf)),
+      "ppjoinPairs" -> (() => Dedup.ppjoinPairs(spark, sf)),
+      "bucketSplit" -> (() => Dedup.bucketSplit(spark, sf)),
+      "incrementalDedup" -> (() => Dedup.incrementalDedup(spark, sf)),
+      "nearContamination" -> (() => TextAnalysis.nearContamination(spark, sf)))
+    inputs.foreach { case (name, run) =>
+      plans.clear()
+      spark.listenerManager.register(listener)
+      try {
+        run().write.format("noop").mode("overwrite").save()
+        org.apache.spark.ListenerBusTestDrain(spark.sparkContext)
+      } finally spark.listenerManager.unregister(listener)
+      val scans = plans.asScala.toSeq.flatMap(shingledScans(_, 0))
+      // a branch is a parquet scan under an operator that shingles; by
+      // identity: the scans of one file in different branches are equal
+      val branches = scans.map(_._1).foldLeft(Vector.empty[SparkPlan])((acc, s) =>
         if (acc.exists(_ eq s)) acc else acc :+ s)
+      assert(branches.size == 1,
+        s"$name: ${branches.size} shingling scan branches:\n${plans.asScala.mkString("\n")}")
+      // a filter pushed into the scan (and evaluated above it) shingles a
+      // second time
+      assert(scans.forall(_._2 == 1),
+        s"$name: shingling operators per scan ${scans.map(_._2)}:\n" +
+          plans.asScala.mkString("\n"))
     }
-    assert(branches.size == 1,
-      s"${branches.size} shingling scan branches:\n${plans.asScala.mkString("\n")}")
   }
 
   test("embedding-dup LSH path has no cartesian / nested-loop join") {
