@@ -35,10 +35,67 @@ object LinkGraph {
     * the host dimension is data-bounded (mod here; ~10^8 rows of longs on a
     * real webgraph — a node table, not a corpus).
     */
-  private def observedHosts(spark: SparkSession, dir: String, mod: Int,
-      name: String = "h"): DataFrame =
-    docs(spark, dir).select((col("doc_id") % mod).as(name)).distinct()
+  private def observedHosts(spark: SparkSession, dir: String, mod: Int): DataFrame =
+    docs(spark, dir).select((col("doc_id") % mod).as("h")).distinct()
       .localCheckpoint(true)
+
+  /** The planted DIRECTED host graph of qg1/qg8/qg9/qg11 (see the object
+    * doc): one edge per document, src = doc_id mod 32,
+    * dst = (src*5 + 1 + doc_id mod 3) mod 32, deduplicated. Lazy.
+    */
+  private def plantedEdges(spark: SparkSession, dir: String): DataFrame =
+    docs(spark, dir)
+      .select((col("doc_id") % 32).as("src"),
+        ((col("doc_id") % 32) * 5 + 1 + col("doc_id") % 3) % 32 as "dst")
+      .distinct()
+
+  /** The qg2 chain graph over the observed hosts h = doc_id mod 64: one
+    * (a, b) row per host, b = h + 1 except at the community boundaries
+    * {8, 19, 44, 63}, which self-loop — four chains of 9/11/25/19 hosts.
+    * One row per host, so it needs no distinct.
+    */
+  private def chainEdges(spark: SparkSession, dir: String): DataFrame =
+    observedHosts(spark, dir, 64)
+      .select(col("h").as("a"),
+        when(col("h").isin(8L, 19L, 44L, 63L), col("h"))
+          .otherwise(col("h") + 1).as("b"))
+
+  /** The PageRank core of qg1 and qg11 over [[plantedEdges]], in EXACT
+    * int64 fixed point: r_0(v) = `initRank`, and each round applies
+    * r'(v) = `teleport` + floor(85 * sum_{u->v} floor(r(u)/outdeg(u)) / 100).
+    * Both columns are expressions over the node table (node, od). Returns
+    * (node, r, od) after `k` rounds; rounds run through the
+    * [[IterTuning]] driver.
+    */
+  private def pagerank(spark: SparkSession, dir: String, k: Int,
+      teleport: Column, initRank: Column): DataFrame =
+    IterTuning.sized(plantedEdges(spark, dir)) { edges =>
+      // host-sized, so the rounds and the returned lazy join read it instead
+      // of re-deriving it. Checkpointed, it also carries no small size
+      // estimate: the round joins stay in-job shuffles, where the lazy
+      // aggregate's estimate planned a separate broadcast job every round
+      val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("od"))
+        .localCheckpoint(true)
+      val nodes = deg.select(col("src").as("node"), col("od"))
+      // degree-annotated edge list materialized ONCE (r6): leaving it lazy
+      // re-ran the deg aggregate + join from the edges inside every round's
+      // job
+      val withDeg = edges.join(deg, "src").localCheckpoint(true)
+      def step(r: DataFrame): DataFrame = {
+        val contrib = withDeg
+          .join(r.withColumnRenamed("node", "src"), "src")
+          .groupBy(col("dst"))
+          .agg(sum(expr("r DIV od")).as("m"))
+        nodes
+          .join(contrib.withColumnRenamed("dst", "node"), Seq("node"), "left")
+          .select(col("node"),
+            (teleport + coalesce(expr("85 * m DIV 100"), lit(0L))).as("r"))
+      }
+      // the rank table is read ONCE per step, so two steps chain per
+      // checkpoint: half the per-round job overhead, lineage still O(1)
+      IterTuning.rounds(nodes.select(col("node"), initRank.as("r")), k, per = 2)(step)
+        .last.join(nodes, "node")
+    }
 
   /** qg1: k rounds of PageRank over the planted host graph, computed in
     * EXACT int64 fixed-point (the qc1/qs5 discipline) so Spark's
@@ -54,89 +111,48 @@ object LinkGraph {
     * key — exchange reuse across rounds) followed by a hash aggregate on
     * dst with map-side partials (a host with 10^8 in-links combines
     * before the shuffle); the node table re-attaches with a left join so
-    * in-link-free hosts keep the teleport mass. ITERATIVE DATAFLOW
-    * MATERIALIZES PER ROUND (the qd6 invariant): each round's rank table
-    * is localCheckpoint(true)-ed and its predecessor released, so lineage
-    * stays O(1) and nothing re-derives the base 2^k times. The edge list
-    * (reused every round) is eagerly checkpointed once.
+    * in-link-free hosts keep the teleport mass. The rounds materialize per
+    * the [[IterTuning]] driver's rule; the core is [[pagerank]], shared
+    * with qg11.
     */
-  def hostPagerank(spark: SparkSession, dir: String, k: Int = 5): DataFrame = {
-    val base = lit(150000000000L) // floor(0.15 * 10^12) teleport mass
-    val edges = docs(spark, dir)
-      .select((col("doc_id") % 32).as("src"),
-        ((col("doc_id") % 32) * 5 + 1 + col("doc_id") % 3) % 32 as "dst")
+  def hostPagerank(spark: SparkSession, dir: String, k: Int = 5): DataFrame =
+    pagerank(spark, dir, k, teleport = lit(150000000000L), // floor(0.15 * 10^12)
+      initRank = lit(1000000000000L))
+      .select(col("node").as("host_id"), col("od").as("out_deg"),
+        col("r").as("rank_fp"))
+
+  /** The HyperBall register iteration (Boldi & Vigna 2013) over the
+    * undirected qg2 chain graph: ball(v, 0) = hll_sketch({v}); each round
+    * merges every node's ball with its neighbors' previous balls. Returns
+    * ball(., 0) .. ball(., `rounds`), each (node, sk), materialized by the
+    * [[IterTuning]] driver. qg3 reads the last; qg4/qg10 estimate them all.
+    */
+  private def hyperball(spark: SparkSession, dir: String, rounds: Int,
+      m: Int): Vector[DataFrame] = {
+    import graft.functions.GraftFunctions
+    // one row per host in the chain, so no distinct before the union — the
+    // post-union distinct covers both orientations in a single exchange
+    val e0 = chainEdges(spark, dir)
+    val both = e0.select(col("a").as("src"), col("b").as("dst"))
+      .union(e0.select(col("b").as("src"), col("a").as("dst")))
       .distinct()
-      .localCheckpoint(true)
-    locally {
-      // state-sized shuffle parallelism for the eager rank rounds
-      // (IterTuning — the qg12 rationale)
-      val eCount = edges.count() // sizes the rounds (list is already materialized)
-      IterTuning.withStateSized(spark, eCount) {
-      val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("od"))
-        .localCheckpoint(true) // host-sized; outlives the finally, so the
-      // final lazy join reads it instead of re-scanning the corpus
-      val nodes = deg.select(col("src").as("node")).localCheckpoint(true)
-      // degree-annotated edge list materialized ONCE (r6): leaving it lazy
-      // re-ran the deg aggregate + join from the persisted edges inside
-      // every round's job
-      val withDeg = edges.join(deg, "src").localCheckpoint(true)
-      // one PageRank update as a lazy transform — the rank table is
-      // referenced exactly ONCE per round, so two rounds may chain between
-      // materializations without any re-derivation blowup (the qd6 invariant
-      // guards MULTI-reference rounds; a single-reference chain only deepens
-      // the plan linearly). Materializing every second round halves the
-      // per-round job+checkpoint overhead that dominates at small host
-      // counts while keeping lineage O(1).
-      def step(r: DataFrame): DataFrame = {
-        val contrib = withDeg
-          .join(r.withColumnRenamed("node", "src"), "src")
-          .groupBy(col("dst"))
-          .agg(sum(expr("r DIV od")).as("m"))
-        nodes
-          .join(contrib.withColumnRenamed("dst", "node"), Seq("node"), "left")
-          .select(col("node"),
-            (base + coalesce(expr("85 * m DIV 100"), lit(0L))).as("r"))
-      }
-      // the FINAL round's checkpoint stays pinned because the returned
-      // (lazy) DataFrame reads from it — unpersisting a lineage-truncated
-      // checkpoint before the caller materializes would make the result
-      // unrecomputable, not just slow
-      var ranks = nodes.select(col("node"), lit(1000000000000L).as("r"))
-        .localCheckpoint(true)
-      var done = 0
-      while (done < k) {
-        val take = math.min(2, k - done)
-        val next = (1 to take).foldLeft(ranks)((r, _) => step(r))
-          .localCheckpoint(true)
-        ranks = next
-        done += take
-      }
-      ranks.join(deg.withColumnRenamed("src", "node"), "node")
-        .select(col("node").as("host_id"), col("od").as("out_deg"),
-          col("r").as("rank_fp"))
+    IterTuning.sized(both) { edges =>
+      // ball(v, 0): the sketch of {v} itself — one single-row group per host
+      val ball0 = edges.select(col("src").as("node")).distinct()
+        .groupBy(col("node"))
+        .agg(GraftFunctions.hllSketch(col("node").cast("string"), m).as("sk"))
+      // a round reads the previous ball twice (kept, and shipped to the
+      // neighbors), so every round materializes
+      IterTuning.rounds(ball0, rounds, per = 1) { ball =>
+        ball.union(
+          edges.join(ball.withColumnRenamed("node", "src"), "src")
+            .select(col("dst").as("node"), col("sk")))
+          .groupBy(col("node"))
+          .agg(GraftFunctions.hllMerge(col("sk"), m).as("sk"))
       }
     }
   }
 
-  /** qg2: connected components over a planted host graph — the
-    * domain-clustering leg of crawl curation (mirror farms and site
-    * networks are removed per COMPONENT, not per host; Common Crawl's own
-    * host-level dedup works on the host webgraph's components). The CC
-    * core is [[graft.ops.Dedup.connectedComponents]] — pointer-jumping
-    * min-label propagation, O(log diameter) rounds, throws on
-    * non-convergence — reused unchanged; what qg2 adds is a graph whose
-    * DIAMETER actually exercises it: the planted graph is four chains of
-    * 9/11/25/19 hosts (edge h -> h+1 except at the community boundaries
-    * {8, 19, 44, 63}, which self-loop), so the widest component has
-    * diameter 24 and pointer jumping must fold it in ~5 rounds — the
-    * worst-case shape for label propagation, where qd6's organic near-dup
-    * clusters are shallow. The oracle recomputes reachability with a
-    * recursive CTE (min reachable label), fully independent of the
-    * pointer-jumping implementation.
-    *
-    * Output: one row per host: (host_id, component_id = component's min
-    * host, component_size, is_root).
-    */
   /** qg3: HyperBall neighborhood-function estimation (Boldi & Vigna 2013)
     * over the qg2 chain graph — the algorithm behind the harmonic-centrality
     * host ranks Common Crawl publishes. ball(v, 0) = HLL sketch of {v};
@@ -146,9 +162,8 @@ object LinkGraph {
     * TypedImperativeAggregate — map-side partials combine a high-in-degree
     * host's neighbor sketches before the shuffle, shipping one m-byte
     * state per key, which is the whole reason HyperBall scales to
-    * 10^11-edge webgraphs on one machine in the paper. Per-round
-    * materialization and edge-list persistence follow the qg1/qd6
-    * iterative-dataflow invariant.
+    * 10^11-edge webgraphs on one machine in the paper. The iteration is
+    * [[hyperball]], shared with qg4/qg10.
     *
     * Registers are pure integer math on the portable 60-bit md5 lane, so
     * the DuckDB oracle replays the ENTIRE iteration (init + `rounds`
@@ -161,46 +176,12 @@ object LinkGraph {
     * register) with zero registers included (the qt27 shape).
     */
   def hostHyperball(spark: SparkSession, dir: String, rounds: Int = 4,
-      m: Int = 64): DataFrame = {
-    import graft.functions.GraftFunctions
-    // e0 derives from the ONE materialized host scan (one row per host, so
-    // no distinct before the union — the post-union distinct covers both
-    // orientations in a single exchange)
-    val e0 = observedHosts(spark, dir, 64, "ch")
-      .select(col("ch").as("a"),
-        when(col("ch").isin(8L, 19L, 44L, 63L), col("ch"))
-          .otherwise(col("ch") + 1).as("b"))
-    val edges = e0.select(col("a").as("src"), col("b").as("dst"))
-      .union(e0.select(col("b").as("src"), col("a").as("dst")))
-      .distinct().localCheckpoint(true)
-    locally {
-      // state-sized shuffle parallelism for the eager merge rounds
-      // (IterTuning — the qg12 rationale)
-      val eCount = edges.count() // sizes the rounds (list is already materialized)
-      IterTuning.withStateSized(spark, eCount) {
-      // ball(v, 0): the sketch of {v} itself — one single-row group per host
-      var ball = edges.select(col("src").as("node")).distinct()
-        .groupBy(col("node"))
-        .agg(GraftFunctions.hllSketch(col("node").cast("string"), m).as("sk"))
-        .localCheckpoint(true)
-      for (_ <- 1 to rounds) {
-        val contrib = ball.union(
-          edges.join(ball.withColumnRenamed("node", "src"), "src")
-            .select(col("dst").as("node"), col("sk")))
-        val next = contrib.groupBy(col("node"))
-          .agg(GraftFunctions.hllMerge(col("sk"), m).as("sk"))
-          .localCheckpoint(true)
-        ball.unpersist() // predecessor released once successor materialized
-        ball = next
-      }
-      ball
-        .select(col("node").as("host_id"),
-          posexplode(col("sk")).as(Seq("bucket", "register")))
-        .select(col("host_id"), col("bucket").cast("int").as("bucket"),
-          col("register").cast("int").as("register"))
-      }
-    }
-  }
+      m: Int = 64): DataFrame =
+    hyperball(spark, dir, rounds, m).last
+      .select(col("node").as("host_id"),
+        posexplode(col("sk")).as(Seq("bucket", "register")))
+      .select(col("host_id"), col("bucket").cast("int").as("bucket"),
+        col("register").cast("int").as("register"))
 
   /** qg4: harmonic centrality from HyperBall (Boldi & Vigna 2013 §6 — the
     * centrality behind Common Crawl's published host ranks): per host,
@@ -229,15 +210,15 @@ object LinkGraph {
       round(harmonic, 6).as("harmonic"))
   }
 
-  /** Shared qg4/qg10 chain: the qg3 register iteration with the pinned
-    * per-round HLL estimate applied after every merge round — returns one
-    * row per host with columns (node, e0..e`rounds`), each e_r the
-    * 9-digit-rounded estimate of |ball(node, r)|.
+  /** Shared qg4/qg10 chain: the [[hyperball]] iteration with the pinned
+    * per-round HLL estimate applied to every round's registers — returns
+    * one row per host with columns (node, e0..e`rounds`), each e_r the
+    * 9-digit-rounded estimate of |ball(node, r)|. The estimates are lazy
+    * map-only projections over the materialized balls.
     */
   private def hyperballRoundEstimates(spark: SparkSession, dir: String,
       rounds: Int, m: Int): DataFrame = {
     require(m == 64, "estimate constants are pinned for m = 64")
-    import graft.functions.GraftFunctions
     val cNum = 0.709 * m * m * math.pow(2.0, 55) // alpha_64 * m^2 * 2^55
     def estOf(ball: DataFrame, r: Int): DataFrame =
       ball.select(col("node"),
@@ -249,39 +230,9 @@ object LinkGraph {
           round(when(col("raw") <= lit(2.5 * m) && col("v") > 0,
             lit(m.toDouble) * log(lit(m.toDouble) / col("v")))
             .otherwise(col("raw")), 9).as(s"e$r"))
-        .localCheckpoint(true) // 64 rows; lets the source ball release
-    // e0 from the ONE materialized host scan (see observedHosts); one row
-    // per host, so the single post-union distinct suffices
-    val e0 = observedHosts(spark, dir, 64, "ch")
-      .select(col("ch").as("a"),
-        when(col("ch").isin(8L, 19L, 44L, 63L), col("ch"))
-          .otherwise(col("ch") + 1).as("b"))
-    val edges = e0.select(col("a").as("src"), col("b").as("dst"))
-      .union(e0.select(col("b").as("src"), col("a").as("dst")))
-      .distinct().localCheckpoint(true)
-    locally {
-      val eCount = edges.count()
-      IterTuning.withStateSized(spark, eCount) {
-      var ball = edges.select(col("src").as("node")).distinct()
-        .groupBy(col("node"))
-        .agg(GraftFunctions.hllSketch(col("node").cast("string"), m).as("sk"))
-        .localCheckpoint(true)
-      var ests = Vector(estOf(ball, 0))
-      for (r <- 1 to rounds) {
-        val contrib = ball.union(
-          edges.join(ball.withColumnRenamed("node", "src"), "src")
-            .select(col("dst").as("node"), col("sk")))
-        val next = contrib.groupBy(col("node"))
-          .agg(GraftFunctions.hllMerge(col("sk"), m).as("sk"))
-          .localCheckpoint(true)
-        ests = ests :+ estOf(next, r)
-        ball.unpersist()
-        ball = next
-      }
-      ball.unpersist()
-      ests.reduce(_.join(_, Seq("node")))
-      }
-    }
+    hyperball(spark, dir, rounds, m).zipWithIndex
+      .map { case (ball, r) => estOf(ball, r) }
+      .reduce(_.join(_, Seq("node")))
   }
 
   /** qg10: the graph-wide NEIGHBORHOOD FUNCTION and effective diameter —
@@ -397,13 +348,29 @@ object LinkGraph {
           .otherwise(lit(0.0)), 6).as("clustering_coeff"))
   }
 
+  /** qg2: connected components over a planted host graph — the
+    * domain-clustering leg of crawl curation (mirror farms and site
+    * networks are removed per COMPONENT, not per host; Common Crawl's own
+    * host-level dedup works on the host webgraph's components). The CC
+    * core is [[graft.ops.Dedup.connectedComponents]] — pointer-jumping
+    * min-label propagation, O(log diameter) rounds, throws on
+    * non-convergence — reused unchanged; what qg2 adds is a graph whose
+    * DIAMETER actually exercises it: the planted graph is four chains of
+    * 9/11/25/19 hosts (edge h -> h+1 except at the community boundaries
+    * {8, 19, 44, 63}, which self-loop), so the widest component has
+    * diameter 24 and pointer jumping must fold it in ~5 rounds — the
+    * worst-case shape for label propagation, where qd6's organic near-dup
+    * clusters are shallow. The oracle recomputes reachability with a
+    * recursive CTE (min reachable label), fully independent of the
+    * pointer-jumping implementation.
+    *
+    * Output: one row per host: (host_id, component_id = component's min
+    * host, component_size, is_root).
+    */
   def hostComponents(spark: SparkSession, dir: String,
       maxRounds: Int = 16): DataFrame = {
-    // one row per observed host (doc_a = ch is unique), so no distinct needed
-    val edges = observedHosts(spark, dir, 64, "ch")
-      .select(col("ch").as("doc_a"),
-        when(col("ch").isin(8L, 19L, 44L, 63L), col("ch"))
-          .otherwise(col("ch") + 1).as("doc_b"))
+    val edges = chainEdges(spark, dir)
+      .select(col("a").as("doc_a"), col("b").as("doc_b"))
     val labels = Dedup.connectedComponents(edges, maxRounds)
     val sizes = labels.groupBy(col("label").as("component_id"))
       .agg(count(lit(1)).as("component_size"))
@@ -440,8 +407,8 @@ object LinkGraph {
     * Scale shape (the qg1 iterative-dataflow invariant): the per-round vote
     * is one join of the label table against the edge list ON src (exchange
     * reuse across rounds) + two hash aggregates with map-side partials — a
-    * 10^8-in-degree host combines its votes before the shuffle; per-round
-    * localCheckpoint(true) with predecessor release keeps lineage O(1).
+    * 10^8-in-degree host combines its votes before the shuffle; the rounds
+    * materialize per the [[IterTuning]] driver's rule.
     *
     * Output: (host_id, community_id = converged label, community_size).
     */
@@ -462,16 +429,10 @@ object LinkGraph {
       // never produced (the qg1 non-source-contribution discipline), so a
       // partial corpus can't mint phantom vote targets
       .join(hosts.withColumnRenamed("h", "dst"), Seq("dst"), "left_semi")
-      .localCheckpoint(true)
-    locally {
-      // state-sized shuffle parallelism for the eager vote rounds
-      // (IterTuning — the qg12 rationale)
-      val eCount = edges.count() // sizes the rounds (list is already materialized)
-      IterTuning.withStateSized(spark, eCount) {
+    IterTuning.sized(edges) { edges =>
       // one synchronous vote round as a lazy transform; the label table is
       // referenced exactly ONCE per round, so two rounds chain per
-      // materialization with zero re-derivation (the qg1 r6 rationale —
-      // halve the checkpoint-job overhead, lineage stays O(1))
+      // materialization with zero re-derivation (the qg1 rationale)
       def vote(l: DataFrame): DataFrame = edges
         .join(l.withColumnRenamed("node", "src"), "src")
         .groupBy(col("dst"), col("label"))
@@ -481,21 +442,14 @@ object LinkGraph {
           .as("vk"))
         .select(col("dst").as("node"),
           (lit(1048575L) - (col("vk") % lit(1048576L))).as("label"))
-      var labels = hosts.select(col("h").as("node"), col("h").cast("long").as("label"))
-        .localCheckpoint(true)
-      var done = 0
-      while (done < k) {
-        val take = math.min(2, k - done)
-        labels = (1 to take).foldLeft(labels)((l, _) => vote(l))
-          .localCheckpoint(true)
-        done += take
-      }
+      val labels = IterTuning.rounds(
+        hosts.select(col("h").as("node"), col("h").cast("long").as("label")),
+        k, per = 2)(vote).last
       val sizes = labels.groupBy(col("label"))
         .agg(count(lit(1)).as("community_size"))
       labels.join(sizes, Seq("label"))
         .select(col("node").as("host_id"), col("label").as("community_id"),
           col("community_size"))
-      }
     }
   }
 
@@ -517,13 +471,14 @@ object LinkGraph {
     * the pendant pair vanishes in wave 1.
     *
     * Scale shape (the qd6/qg1 iterative-dataflow invariant): per round two
-    * left-semi joins of the persisted both-direction edge list against the
-    * shrinking alive set + one hash aggregate with map-side partials;
-    * per-round localCheckpoint(true) with predecessor release; alive only
-    * shrinks, so count equality IS set equality and the loop THROWS past
-    * `maxRounds` (non-convergence is impossible for peeling — the bound
-    * guards a mis-planted graph). Rounds = peel depth, the same bound the
-    * distributed coreness literature accepts.
+    * left-semi joins of the checkpointed both-direction edge list against
+    * the shrinking alive set + one hash aggregate with map-side partials;
+    * each wave materializes and counts the alive set in one job (the
+    * [[IterTuning]] driver); alive only shrinks, so count equality IS set
+    * equality and the loop THROWS past `maxRounds` (non-convergence is
+    * impossible for peeling — the bound guards a mis-planted graph).
+    * Rounds = peel depth, the same bound the distributed coreness
+    * literature accepts.
     *
     * Output: one row per k-core member — (host_id, core_deg = its degree
     * within the core). The DuckDB oracle unrolls the waves as a CTE chain
@@ -561,12 +516,7 @@ object LinkGraph {
     val eb = raw
       .union(raw.select(col("dst").as("src"), col("src").as("dst")))
       .distinct()
-      .localCheckpoint(true)
-    locally {
-      // state-sized shuffle parallelism for the eager peel waves
-      // (IterTuning — the qg12 rationale)
-      val ebCount = eb.count() // sizes the rounds (list is already materialized)
-      IterTuning.withStateSized(spark, ebCount) {
+    IterTuning.sized(eb) { eb =>
       // one synchronous peel wave per materialization. (r6 note: chaining
       // two waves per checkpoint was tried and MEASURED SLOWER — the wave
       // references its input twice, so the batched plan pays a bounded 2x
@@ -577,27 +527,13 @@ object LinkGraph {
         .join(a.withColumnRenamed("v", "dst"), Seq("dst"), "left_semi")
         .groupBy(col("src").as("v")).agg(count(lit(1)).as("d"))
         .filter(col("d") >= k).select("v")
-      var alive = hosts.select(col("h").as("v")).localCheckpoint(true)
-      var n = alive.count()
-      var converged = false
-      var round = 0
-      while (!converged) {
-        round += 1
-        require(round <= maxRounds,
-          s"k-core peeling did not converge in $maxRounds rounds")
-        val next = wave(alive).localCheckpoint(true)
-        val m = next.count()
-        alive.unpersist()
-        alive = next
-        converged = m == n
-        n = m
-      }
-      // final core degrees; the last checkpoint stays pinned because the
-      // returned lazy DataFrame reads from it (the qg1 discipline)
+      val alive = IterTuning.untilStable(hosts.select(col("h").as("v")),
+        maxRounds, "k-core peeling")(a => (wave(a), lit(true)))(
+        (before, after) => after == before)
+      // final core degrees, lazily over the last checkpoint
       eb.join(alive.withColumnRenamed("v", "src"), Seq("src"), "left_semi")
         .join(alive.withColumnRenamed("v", "dst"), Seq("dst"), "left_semi")
         .groupBy(col("src").as("host_id")).agg(count(lit(1)).as("core_deg"))
-      }
     }
   }
 
@@ -624,10 +560,11 @@ object LinkGraph {
     * crossJoin against a broadcast 1-row aggregate (the N/V/max_id
     * discipline) — no driver collect in the loop.
     *
-    * Iterative-dataflow invariant (qd6/qg1): per-round
-    * localCheckpoint(true) with predecessor release; the reused edge list
-    * and node table checkpoint once (the final a/h checkpoints stay
-    * pinned — the returned lazy DataFrame reads them).
+    * Iterative-dataflow invariant (qd6/qg1): every half-update
+    * materializes its unscaled sums; the reused edge list and node table
+    * checkpoint once, the edge list through the [[IterTuning]] driver's
+    * sizing entry (the returned lazy DataFrame reads the final a/h
+    * checkpoints).
     *
     * Output: (host_id, auth_fp, hub_fp) after k rounds.
     */
@@ -635,23 +572,15 @@ object LinkGraph {
     // the ONE corpus scan, materialized: nodes and the semi-join guard below
     // both read it (bounded by the planted pattern — an edge table, not a
     // corpus; the observedHosts rationale)
-    val edges0 = docs(spark, dir)
-      .select((col("doc_id") % 32).as("src"),
-        ((col("doc_id") % 32) * 5 + 1 + col("doc_id") % 3) % 32 as "dst")
-      .distinct()
-      .localCheckpoint(true)
+    val edges0 = plantedEdges(spark, dir).localCheckpoint(true)
     val nodes = edges0.select(col("src").as("node")).distinct()
       .localCheckpoint(true)
     // graph over OBSERVED hosts (the qg6 discipline): a partial corpus
     // cannot mint authority targets it never crawled as hosts
     val edges = edges0
       .join(nodes.withColumnRenamed("node", "dst"), Seq("dst"), "left_semi")
-      .select(col("src"), col("dst")).localCheckpoint(true)
-    locally {
-      // state-sized shuffle parallelism for the eager half-update rounds
-      // (IterTuning — the qg12 rationale)
-      val eCount = edges.count() // sizes the rounds (tables are already materialized)
-      IterTuning.withStateSized(spark, eCount) {
+      .select(col("src"), col("dst"))
+    IterTuning.sized(edges) { edges =>
       // one half-update: sum `prevCol` of `prev` over edges joined on
       // `joinKey`, grouped to `groupKey`, re-attached to the full node
       // table (in-link-free hosts keep 0), then max-rescaled
@@ -677,17 +606,12 @@ object LinkGraph {
         .localCheckpoint(true)
       var auth: DataFrame = null
       for (_ <- 1 to k) {
-        val nextAuth = halfUpdate(hub, "h", "src", "dst", "a")
-        if (auth != null) auth.unpersist()
-        auth = nextAuth
-        val nextHub = halfUpdate(auth, "a", "dst", "src", "h")
-        hub.unpersist()
-        hub = nextHub
+        auth = halfUpdate(hub, "h", "src", "dst", "a")
+        hub = halfUpdate(auth, "a", "dst", "src", "h")
       }
       auth.join(hub, "node")
         .select(col("node").as("host_id"), col("a").as("auth_fp"),
           col("h").as("hub_fp"))
-      }
     }
   }
 
@@ -706,61 +630,20 @@ object LinkGraph {
     * rounds, hosts unreachable from the seeds hold rank 0 (the measurable
     * "outside the seed neighborhood" class).
     *
-    * Scale shape is qg1's verbatim: one rank-against-edges join ON src
-    * per round (exchange reuse), hash aggregate on dst with map-side
-    * partials, node table re-attach so contribution-free hosts keep
-    * their teleport term; per-round localCheckpoint(true) with
-    * predecessor release, reused edge list checkpointed once (the qd6
-    * iterative-dataflow invariant).
+    * Scale shape is qg1's verbatim — the same [[pagerank]] core: one
+    * rank-against-edges join ON src per round (exchange reuse), hash
+    * aggregate on dst with map-side partials, node table re-attach so
+    * contribution-free hosts keep their teleport term.
     *
     * Output: (host_id, is_seed, rank_fp).
     */
   def hostSeedPagerank(spark: SparkSession, dir: String, k: Int = 5): DataFrame = {
-    val edges = docs(spark, dir)
-      .select((col("doc_id") % 32).as("src"),
-        ((col("doc_id") % 32) * 5 + 1 + col("doc_id") % 3) % 32 as "dst")
-      .distinct()
-      .localCheckpoint(true)
-    locally {
-      // state-sized shuffle parallelism for the eager rank rounds
-      // (IterTuning — the qg12 rationale)
-      val eCount = edges.count() // sizes the rounds (list is already materialized)
-      IterTuning.withStateSized(spark, eCount) {
-      val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("od"))
-      // host-sized checkpoint: outlives the finally, so the final lazy join
-      // reads it instead of re-scanning the corpus (the qg1 r6 rationale)
-      val nodes = deg.select(col("src").as("node"),
-        col("src").isin(1L, 9L, 17L).as("is_seed")).localCheckpoint(true)
-      // degree-annotated edge list materialized ONCE (r6, the qg1 rationale)
-      val withDeg = edges.join(deg, "src").localCheckpoint(true)
-      val teleport = when(col("is_seed"), lit(150000000000L)).otherwise(lit(0L))
-      // one update as a lazy transform; the rank table is referenced ONCE
-      // per round, so two rounds chain per materialization (the qg1 r6
-      // rationale: halve the checkpoint-job overhead, lineage stays O(1))
-      def step(r: DataFrame): DataFrame = {
-        val contrib = withDeg
-          .join(r.withColumnRenamed("node", "src"), "src")
-          .groupBy(col("dst"))
-          .agg(sum(expr("r DIV od")).as("m"))
-        nodes
-          .join(contrib.withColumnRenamed("dst", "node"), Seq("node"), "left")
-          .select(col("node"),
-            (teleport + coalesce(expr("85 * m DIV 100"), lit(0L))).as("r"))
-      }
-      var ranks = nodes.select(col("node"),
-        when(col("is_seed"), lit(1000000000000L)).otherwise(lit(0L)).as("r"))
-        .localCheckpoint(true)
-      var done = 0
-      while (done < k) {
-        val take = math.min(2, k - done)
-        ranks = (1 to take).foldLeft(ranks)((r, _) => step(r))
-          .localCheckpoint(true)
-        done += take
-      }
-      ranks.join(nodes, "node")
-        .select(col("node").as("host_id"), col("is_seed"), col("r").as("rank_fp"))
-      }
-    }
+    val isSeed = col("node").isin(1L, 9L, 17L)
+    pagerank(spark, dir, k,
+      teleport = when(isSeed, lit(150000000000L)).otherwise(lit(0L)),
+      initRank = when(isSeed, lit(1000000000000L)).otherwise(lit(0L)))
+      .select(col("node").as("host_id"), isSeed.as("is_seed"),
+        col("r").as("rank_fp"))
   }
 
   /** qg9: host-graph MIXING metrics — edge reciprocity and degree
@@ -796,11 +679,7 @@ object LinkGraph {
   def hostMixing(spark: SparkSession, dir: String): DataFrame = {
     // the ONE corpus scan, materialized: nodes, the semi guard, counts and
     // the reciprocity legs all read it (the observedHosts rationale)
-    val e0 = docs(spark, dir)
-      .select((col("doc_id") % 32).as("src"),
-        ((col("doc_id") % 32) * 5 + 1 + col("doc_id") % 3) % 32 as "dst")
-      .distinct()
-      .localCheckpoint(true)
+    val e0 = plantedEdges(spark, dir).localCheckpoint(true)
     val nodes = e0.select(col("src").as("node")).distinct()
     val e = e0
       .join(nodes.withColumnRenamed("node", "dst"), Seq("dst"), "left_semi")
@@ -857,10 +736,11 @@ object LinkGraph {
     * iterations O(SCC chain depth) — both bounded and THROWN on (the
     * qd6 non-convergence guard); real webgraphs sit at diameter ≈ tens
     * (the qg10 HyperANF evidence) with trim+coloring converging in a few
-    * iterations. ITERATIVE DATAFLOW MATERIALIZES PER ROUND (the qd6
-    * invariant): every color/mark table localCheckpoint(true)s and its
-    * predecessor releases; change detection is a 1-row count, never a
-    * collect of node state.
+    * iterations. Every loop — peel iterations, coloring, backward mark and
+    * both role-reachability passes — runs through the [[IterTuning]]
+    * driver: each round materializes, and the same job counts what the loop
+    * watches (changed colors, marked or reached rows, remaining nodes),
+    * never a collect of node state.
     *
     * The planted graph (doc_id mod 32 indexes a fixed 32-edge pattern —
     * O(1) element_at lookups, the skewRepartition discipline) is a
@@ -887,132 +767,89 @@ object LinkGraph {
     val edges = docs(spark, dir).select(
       element_at(typedlit(srcs), idx).as("src"),
       element_at(typedlit(dsts), idx).as("dst"))
-      .distinct().localCheckpoint(true)
-    locally {
-      // the whole peel loop is eager (checkpoint-per-round), so it runs
-      // under state-sized shuffle parallelism (IterTuning: derived from the
-      // measured edge count, not the session constant — guide §2.2); the
-      // final lazy role projection plans under the session conf. Measured:
-      // 325 jobs -> 137 for the planted bow-tie (the AQE per-stage jobs and
-      // 32-way label shuffles were pure scheduling latency at this state
-      // size).
-      val eCount = edges.count()
-      IterTuning.withStateSized(spark, eCount) {
+      .distinct()
+    // the whole peel loop is eager (checkpoint-per-round), so it runs under
+    // state-sized shuffle parallelism (IterTuning: derived from the measured
+    // edge count, not the session constant — guide §2.2); the final lazy
+    // role projection plans under the session conf. Measured: 325 jobs ->
+    // 137 for the planted bow-tie (the AQE per-stage jobs and 32-way label
+    // shuffles were pure scheduling latency at this state size).
+    IterTuning.sized(edges) { edges =>
       val allNodes = edges.select(col("src").as("node"))
         .union(edges.select(col("dst").as("node"))).distinct()
-      var remaining = allNodes.localCheckpoint(true)
-      // starts empty (schema-typed) so an empty corpus yields an empty
-      // result instead of an uninitialized accumulator
-      var assigned: DataFrame = allNodes.limit(0)
-        .select(col("node").as("host_id"), col("node").as("scc_id"))
-      var iters = 0
-      while (remaining.count() > 0) {
-        iters += 1
-        require(iters <= maxIters,
-          s"SCC peeling did not converge in $maxIters iterations")
+      // each peel iteration's settled (host_id, scc_id) rows
+      val settled = Vector.newBuilder[DataFrame]
+      IterTuning.untilStable(allNodes, maxIters, "SCC peeling",
+          unit = "iterations") { remaining =>
         val live = edges
           .join(remaining.withColumnRenamed("node", "src"), "src")
           .join(remaining.withColumnRenamed("node", "dst"), "dst")
           .select(col("src"), col("dst")).localCheckpoint(true)
         // (1) forward max-label fixpoint, one propagation step per
         // materialization. (r6 note: two-step batching was tried and
-        // measured slower here — see the qg7 wave note.)
-        var c = remaining.select(col("node"), col("node").as("c"))
-          .localCheckpoint(true)
-        var rounds = 0
-        var changed = 1L
-        while (changed > 0) {
-          rounds += 1
-          require(rounds <= maxRounds,
-            s"SCC coloring did not converge in $maxRounds rounds")
+        // measured slower here — see the qg7 wave note.) `prev` rides along
+        // (the ccWithRounds discipline), so the changed count is a filter
+        // on the checkpointed result, not an extra join against the old
+        // colors
+        val c = IterTuning.untilStable(
+            remaining.select(col("node"), col("node").as("c")),
+            maxRounds, "SCC coloring") { c =>
           val inMax = live
             .join(c.withColumnRenamed("node", "src"), "src")
             .groupBy(col("dst")).agg(max(col("c")).as("cin"))
-          // `prev` rides along (the ccWithRounds discipline) so the change
-          // count is a filter on the checkpointed result, not an extra
-          // per-round join job against the old colors
-          val next = c
-            .join(inMax.withColumnRenamed("dst", "node"), Seq("node"), "left")
+          (c.join(inMax.withColumnRenamed("dst", "node"), Seq("node"), "left")
             .select(col("node"), col("c").as("prev"),
-              greatest(col("c"), coalesce(col("cin"), col("c"))).as("c2"))
-            .localCheckpoint(true)
-          changed = next.filter(col("c2") =!= col("prev")).count()
-          c.unpersist()
-          c = next.select(col("node"), col("c2").as("c"))
-        }
+              greatest(col("c"), coalesce(col("cin"), col("c"))).as("c")),
+            col("c") =!= col("prev"))
+        }((_, changed) => changed == 0).select(col("node"), col("c"))
         // (2) backward mark within color classes, from the pivots
         val sameColor = live
           .join(c.select(col("node").as("src"), col("c").as("cs")), "src")
           .join(c.select(col("node").as("dst"), col("c").as("cd")), "dst")
           .filter(col("cs") === col("cd"))
           .select(col("src"), col("dst")).localCheckpoint(true)
-        var marked = c.filter(col("node") === col("c")).select(col("node"))
-          .localCheckpoint(true)
-        var mCount = marked.count()
-        rounds = 0
-        changed = 1L
-        while (changed > 0) {
-          rounds += 1
-          require(rounds <= maxRounds,
-            s"SCC backward mark did not converge in $maxRounds rounds")
+        val marked = IterTuning.untilStable(
+            c.filter(col("node") === col("c")).select(col("node")),
+            maxRounds, "SCC backward mark") { marked =>
           val reached = sameColor
             .join(marked.withColumnRenamed("node", "dst"), "dst")
             .select(col("src").as("node"))
-          val next = marked.union(reached).distinct().localCheckpoint(true)
-          val n = next.count()
-          changed = n - mCount
-          mCount = n
-          marked.unpersist()
-          marked = next
-        }
+          (marked.union(reached).distinct(), lit(true))
+        }((before, after) => after == before)
         // (3) peel: settled nodes get scc_id = min member of their class
         val members = c.join(marked, Seq("node"))
         val ids = members.groupBy(col("c")).agg(min(col("node")).as("scc_id"))
-        val assignedThis = members.join(ids, "c")
+        settled += members.join(ids, "c")
           .select(col("node").as("host_id"), col("scc_id"))
-        val grown = assigned.union(assignedThis).localCheckpoint(true)
-        assigned.unpersist()
-        assigned = grown
-        val rest = remaining.join(marked, Seq("node"), "left_anti")
-          .localCheckpoint(true)
-        remaining.unpersist()
-        remaining = rest
-        live.unpersist(); sameColor.unpersist(); c.unpersist()
-        marked.unpersist()
-      }
+        (remaining.join(marked, Seq("node"), "left_anti"), lit(true))
+      }((_, left) => left == 0)
+      // starts empty (schema-typed) so an empty corpus yields an empty
+      // result instead of an uninitialized accumulator
+      val assigned = settled.result()
+        .foldLeft(allNodes.limit(0)
+          .select(col("node").as("host_id"), col("node").as("scc_id")))(_ union _)
+        .localCheckpoint(true)
       val sizes = assigned.groupBy(col("scc_id"))
         .agg(count(lit(1)).as("scc_size"))
       val big = sizes.orderBy(col("scc_size").desc, col("scc_id").asc)
         .limit(1).select(col("scc_id").as("core_scc"))
       val coreNodes = assigned.crossJoin(broadcast(big))
         .filter(col("scc_id") === col("core_scc"))
-        .select(col("host_id")).localCheckpoint(true)
+        .select(col("host_id"))
       // role reachability: two boolean fixpoints over the FULL edge list
-      def reachFix(seed: DataFrame, backward: Boolean): DataFrame = {
+      def reachFix(backward: Boolean): DataFrame = {
         val (key, out) = if (backward) ("dst", "src") else ("src", "dst")
-        var m = seed.localCheckpoint(true)
-        var n0 = m.count()
-        var rounds = 0
-        var changed = 1L
-        while (changed > 0) {
-          rounds += 1
-          require(rounds <= maxRounds,
-            s"role reachability did not converge in $maxRounds rounds")
+        IterTuning.untilStable(coreNodes, maxRounds,
+            "role reachability") { m =>
           val reached = edges
             .join(m.withColumnRenamed("host_id", key), key)
             .select(col(out).as("host_id"))
-          val next = m.union(reached).distinct().localCheckpoint(true)
-          val n = next.count()
-          changed = n - n0
-          n0 = n
-          m.unpersist()
-          m = next
-        }
-        m
+          (m.union(reached).distinct(), lit(true))
+        }((before, after) => after == before)
       }
-      val toCore = reachFix(coreNodes, backward = true)
+      val toCore = reachFix(backward = true)
         .withColumn("to_core", lit(true))
-      val fromCore = reachFix(coreNodes, backward = false)
+      val fromCore = reachFix(backward = false)
         .withColumn("from_core", lit(true))
       assigned.join(sizes, "scc_id")
         .crossJoin(broadcast(big))
@@ -1023,7 +860,6 @@ object LinkGraph {
             .when(coalesce(col("to_core"), lit(false)), "in")
             .when(coalesce(col("from_core"), lit(false)), "out")
             .otherwise("other").as("role"))
-      }
     }
   }
 }

@@ -712,38 +712,32 @@ object TextAnalysis {
     val merges = Vector.newBuilder[(Int, String, String, Long)]
     var rank = 1
     var exhausted = false
-    try {
-      // each round's localCheckpoint(true) pins a block set in executor
-      // storage; release the superseded round as soon as its successor has
-      // materialized (same resource discipline as connectedComponents' edge
-      // cache) — otherwise k+1 checkpointed type tables stay pinned for the
-      // session lifetime
-      while (rank <= k && !exhausted) {
-        val pairs = types
-          .select(col("cnt"), posexplode(when(size(col("syms")) >= 2,
-            expr("transform(sequence(0, size(syms) - 2), " +
-              "i -> struct(element_at(syms, i + 1) AS l, element_at(syms, i + 2) AS r))"))
-            .otherwise(array().cast("array<struct<l:string,r:string>>")))
-            .as(Seq("pos", "pr")))
-          .groupBy(col("pr.l").as("l"), col("pr.r").as("r"))
-          .agg(sum(col("cnt")).as("c"))
-        val best = pairs.orderBy(col("c").desc, col("l").asc, col("r").asc)
-          .limit(1).collect()
-        if (best.isEmpty) exhausted = true
-        else {
-          val (l, r, c) = (best(0).getString(0), best(0).getString(1),
-            best(0).getLong(2))
-          merges += ((rank, l, r, c))
-          val next = types.select(
-            graft.functions.GraftFunctions
-              .bpeMerge(col("syms"), lit(l), lit(r)).as("syms"),
-            col("cnt")).localCheckpoint(true)
-          types.unpersist()
-          types = next
-          rank += 1
-        }
+    // each round's type table is a fresh eager checkpoint; a superseded
+    // round's blocks are freed by the ContextCleaner once nothing
+    // references it (unpersist() on a checkpointed frame releases nothing)
+    while (rank <= k && !exhausted) {
+      val pairs = types
+        .select(col("cnt"), posexplode(when(size(col("syms")) >= 2,
+          expr("transform(sequence(0, size(syms) - 2), " +
+            "i -> struct(element_at(syms, i + 1) AS l, element_at(syms, i + 2) AS r))"))
+          .otherwise(array().cast("array<struct<l:string,r:string>>")))
+          .as(Seq("pos", "pr")))
+        .groupBy(col("pr.l").as("l"), col("pr.r").as("r"))
+        .agg(sum(col("cnt")).as("c"))
+      val best = pairs.orderBy(col("c").desc, col("l").asc, col("r").asc)
+        .limit(1).collect()
+      if (best.isEmpty) exhausted = true
+      else {
+        val (l, r, c) = (best(0).getString(0), best(0).getString(1),
+          best(0).getLong(2))
+        merges += ((rank, l, r, c))
+        types = types.select(
+          graft.functions.GraftFunctions
+            .bpeMerge(col("syms"), lit(l), lit(r)).as("syms"),
+          col("cnt")).localCheckpoint(true)
+        rank += 1
       }
-    } finally types.unpersist()
+    }
     val ss = spark
     import ss.implicits._
     merges.result().toDF("rank", "sym_l", "sym_r", "pair_count")

@@ -518,6 +518,46 @@ class LinkGraphSpec extends AnyFunSuite with BeforeAndAfterAll {
       LinkGraph.hostScc(spark, dir, maxIters = 2))
   }
 
+  test("qg12: the coloring budget throws instead of looping past it") {
+    // max-coloring floods the 8-deep IN chain one hop per round, so two
+    // rounds cannot reach the fixpoint; the coloring loop is the first to
+    // hit the budget
+    val e = intercept[IllegalArgumentException](
+      LinkGraph.hostScc(spark, dir, maxRounds = 2))
+    assert(e.getMessage.contains("SCC coloring did not converge"), e.getMessage)
+  }
+
+  /** `body`'s value and the number of Spark jobs it started. */
+  private def withJobCount[T](body: => T): (T, Int) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    org.apache.spark.ListenerBusTestDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val r = body
+      org.apache.spark.ListenerBusTestDrain(spark.sparkContext)
+      (r, jobs.get())
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("qg7 and qg12: one job per materialization in every loop") {
+    // each peel wave, coloring, mark and reachability round checkpoints its
+    // state and counts what the loop watches in ONE job; a separate
+    // count() per round (and per edge list) would add a job each
+    val (core, kJobs) = withJobCount(LinkGraph.hostKcore(spark, dir, k = 2).collect())
+    assert(core.length == 15, core.mkString(","))
+    val (scc, sJobs) = withJobCount(LinkGraph.hostScc(spark, dir).collect())
+    assert(scc.length == 32, scc.mkString(","))
+    // measured 63 and 89; a count() beside every checkpoint ran 82 and 137
+    assert(kJobs <= 63, s"$kJobs jobs for a qg7 call")
+    assert(sJobs <= 89, s"$sJobs jobs for a qg12 call")
+  }
+
   test("qg12: re-running produces the identical decomposition") {
     val a = LinkGraph.hostScc(spark, dir).collect().map(_.toString).sorted.toSeq
     val b = LinkGraph.hostScc(spark, dir).collect().map(_.toString).sorted.toSeq
