@@ -17,10 +17,8 @@ object SparkEntry {
 
   /** Flagship: the extraction pipeline end-to-end on a generated corpus. */
   def entry(spark: SparkSession): DataFrame = {
-    import spark.implicits._
     val pages = PagesTable.generate(spark, 120, partitions = 8)
-    ExtractJob.extract(ExtractJob.skewRepartition(pages.toDF(), 8)
-        .as[PagesTable.PageRow])
+    ExtractJob.extract(ExtractJob.extractInput(pages, None, 8))
       .toDF()
       .select(col("url"), col("extracted_text"), col("n_blocks"),
         col("need_ocr_pages"), col("parse_status"))
@@ -44,10 +42,9 @@ object SparkEntry {
     // strong reference to the session object)
     corpusCache.entrySet().removeIf(e => e.getKey.sparkContext.isStopped)
     corpusCache.computeIfAbsent(spark, s => {
-      import s.implicits._
       val pages = PagesTable.generate(s, 240, partitions = 16)
-      ExtractJob.extract(ExtractJob.skewRepartition(pages.toDF(), 16)
-        .as[PagesTable.PageRow]).toDF().localCheckpoint(true)
+      ExtractJob.extract(ExtractJob.extractInput(pages, None, 16))
+        .toDF().localCheckpoint(true)
     })
   }
 

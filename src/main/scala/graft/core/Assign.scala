@@ -1,5 +1,6 @@
 package graft.core
 
+import scala.collection.mutable
 import scala.collection.mutable.ArrayBuffer
 
 /** J1-J4 + O1: the spatial-assignment core.
@@ -26,51 +27,30 @@ object Assign {
   /** page.rs:31 — native-line coverage below this ⇒ page needs OCR. */
   val MinLayoutCoverageThreshold: Float = 0.5f
 
-  /** Last maximal element under `score` (Rust max_by semantics). */
-  private def maxByLast[A](xs: Seq[A])(score: A => Float): Option[A] = {
-    var best: Option[A] = None
-    var bestV = Float.NegativeInfinity
-    for (x <- xs) {
-      val v = score(x)
-      if (best.isEmpty || v >= bestV) { best = Some(x); bestV = v }
-    }
-    best
-  }
-
-  /** First minimal element under `score` (Rust min_by semantics). */
-  private def minByFirst[A](xs: Seq[A])(score: A => Float): Option[A] = {
-    var best: Option[A] = None
-    var bestV = Float.PositiveInfinity
-    for (x <- xs) {
-      val v = score(x)
-      if (best.isEmpty || v < bestV) { best = Some(x); bestV = v }
-    }
-    best
-  }
-
-  /** J2 — merge.rs:29-58. Element id quirk preserved verbatim: the first
-    * element gets id 0, later ones `elements.len() + 1` (so id 1 is skipped
-    * and headers/body/footers each restart at 0 — ids are NOT unique per
-    * page; the title-level map keys on them as-is).
+  /** J2 — merge.rs:29-58: one output stream (headers, body or footers) and
+    * its layout-box id -> element map. Element id quirk preserved verbatim:
+    * the first element gets id 0, later ones `elements.len() + 1` (so id 1
+    * is skipped and headers/body/footers each restart at 0 — ids are NOT
+    * unique per page; the title-level map keys on them as-is).
     */
-  private def mergeOrCreateElements(
-      elements: ArrayBuffer[Element],
-      line: Line,
-      box: LayoutBox,
-      pageId: Int
-  ): Unit = {
-    if (elements.isEmpty) {
-      val el = Element.fromLayoutBlock(0, box, pageId)
-      el.pushLine(line)
-      elements += el
-      return
-    }
-    elements.find(_.layoutBlockId == box.id) match {
-      case Some(el) => el.pushLine(line)
-      case None =>
-        val el = Element.fromLayoutBlock(elements.length + 1, box, pageId)
+  private final class ElementStream(pageId: Int) {
+    val elements = ArrayBuffer.empty[Element]
+    private val byBox = mutable.LongMap.empty[Element]
+    private var last: Element = null // consecutive lines mostly share a box
+
+    def mergeOrCreate(line: Line, box: LayoutBox): Unit = {
+      val found =
+        if (last != null && last.layoutBlockId == box.id) last
+        else byBox.getOrNull(box.id.toLong)
+      if (found != null) { found.pushLine(line); last = found }
+      else {
+        val id = if (elements.isEmpty) 0 else elements.length + 1
+        val el = Element.fromLayoutBlock(id, box, pageId)
         el.pushLine(line)
         elements += el
+        byBox.update(box.id.toLong, el)
+        last = el
+      }
     }
   }
 
@@ -89,9 +69,9 @@ object Assign {
       lines: Seq[Line],
       pageId: Int
   ): Vector[Element] = {
-    val headers = ArrayBuffer.empty[Element]
-    val body = ArrayBuffer.empty[Element]
-    val footers = ArrayBuffer.empty[Element]
+    val headers = new ElementStream(pageId)
+    val body = new ElementStream(pageId)
+    val footers = new ElementStream(pageId)
 
     val boxes = layoutBoxes.toArray
     for (line <- lines) {
@@ -123,13 +103,13 @@ object Assign {
       }
       if (matched != null) {
         matched.label match {
-          case "Page-header" => mergeOrCreateElements(headers, line, matched, pageId)
-          case "Page-footer" => mergeOrCreateElements(footers, line, matched, pageId)
-          case _             => mergeOrCreateElements(body, line, matched, pageId)
+          case "Page-header" => headers.mergeOrCreate(line, matched)
+          case "Page-footer" => footers.mergeOrCreate(line, matched)
+          case _             => body.mergeOrCreate(line, matched)
         }
       } // else: line dropped (merge.rs:141-157, fallback commented out)
     }
-    (headers ++ body ++ footers).toVector
+    (headers.elements ++ body.elements ++ footers.elements).toVector
   }
 
   /** J4 — merge.rs:166-196. Layout boxes that received no line (Pictures,
@@ -143,9 +123,15 @@ object Assign {
       pageId: Int
   ): Unit =
     for (box <- remaining) {
-      val insertAt = minByFirst(elements.zipWithIndex.toSeq) { case (e, _) =>
-        e.bbox.distance(box.bbox, DistanceXWeight, DistanceYWeight)
-      }.map(_._2).getOrElse(elements.length)
+      // first minimal element (Rust min_by); none -> append
+      var insertAt = elements.length
+      var bestV = Float.PositiveInfinity
+      var i = 0
+      while (i < elements.length) {
+        val v = elements(i).bbox.distance(box.bbox, DistanceXWeight, DistanceYWeight)
+        if (i == 0 || v < bestV) { insertAt = i; bestV = v }
+        i += 1
+      }
       elements.insert(insertAt, Element.fromLayoutBlock(elements.length, box, pageId))
     }
 

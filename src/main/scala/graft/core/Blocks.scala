@@ -63,24 +63,24 @@ object Blocks {
         case ElementType.FootNote | ElementType.Caption =>
           // Fold forward: concatenate consecutive captions (space-joined),
           // then pair with a following Image, else decay to TextBlock.
-          var text = curr.text
+          val text = new java.lang.StringBuilder(curr.text)
           var bbox = curr.bbox
           var done = false
           while (!done) peek match {
             case None =>
-              blocks += Block(blockId, BlockKind.TextBlock(text),
+              blocks += Block(blockId, BlockKind.TextBlock(text.toString),
                 Vector(curr.pageId), bbox)
               blockId += 1
               done = true
             case Some(next) =>
               next.kind match {
                 case ElementType.FootNote | ElementType.Caption =>
-                  text = text + " " + next.text // append_line, entities.rs:139-142
+                  text.append(' ').append(next.text) // append_line, entities.rs:139-142
                   i += 1
                 case ElementType.Image =>
                   bbox = bbox.merge(next.bbox)
                   blocks += Block(blockId,
-                    BlockKind.Image(imageId, Some(text)),
+                    BlockKind.Image(imageId, Some(text.toString)),
                     Vector(next.pageId), bbox) // pages_id from the image, merge.rs:292
                   imageId += 1
                   blockId += 1
@@ -88,7 +88,7 @@ object Blocks {
                   done = true
                 case _ =>
                   // orphan caption → TextBlock; follower NOT consumed
-                  blocks += Block(blockId, BlockKind.TextBlock(text),
+                  blocks += Block(blockId, BlockKind.TextBlock(text.toString),
                     Vector(curr.pageId), bbox)
                   blockId += 1
                   done = true
@@ -113,31 +113,31 @@ object Blocks {
           }
 
         case ElementType.Header =>
-          var text = curr.text
+          val text = new java.lang.StringBuilder(curr.text)
           var bbox = curr.bbox
           var done = false
           while (!done) peek match {
             case Some(next) if next.kind == ElementType.Header =>
               i += 1
               bbox = bbox.merge(next.bbox)
-              text = text + next.text // bare concat, blocks.rs:83
+              text.append(next.text) // bare concat, blocks.rs:83
             case _ => done = true
           }
-          blocks += Block(blockId, BlockKind.Header(text), Vector(curr.pageId), bbox)
+          blocks += Block(blockId, BlockKind.Header(text.toString), Vector(curr.pageId), bbox)
           blockId += 1
 
         case ElementType.Footer =>
-          var text = curr.text
+          val text = new java.lang.StringBuilder(curr.text)
           var bbox = curr.bbox
           var done = false
           while (!done) peek match {
             case Some(next) if next.kind == ElementType.Footer =>
               i += 1
               bbox = bbox.merge(next.bbox)
-              text = text + next.text // bare concat, blocks.rs:92
+              text.append(next.text) // bare concat, blocks.rs:92
             case _ => done = true
           }
-          blocks += Block(blockId, BlockKind.Footer(text), Vector(curr.pageId), bbox)
+          blocks += Block(blockId, BlockKind.Footer(text.toString), Vector(curr.pageId), bbox)
           blockId += 1
 
         case ElementType.Title | ElementType.Subtitle =>

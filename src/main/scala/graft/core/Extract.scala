@@ -12,8 +12,9 @@ import scala.util.hashing.MurmurHash3
   * order, k-means title levels (seeded from the url — SURVEY.md 7.3), block
   * grouping, renders.
   *
-  * This is a pure function: it is the unit of work `mapPartitions` applies,
-  * and also the sequential oracle that generates the goldens. Failures never
+  * This is a pure function: its blocks stage ([[extractBlocks]]) is the unit
+  * of work `mapPartitions` applies, and [[extractDocument]] is the
+  * sequential oracle that generates the goldens. Failures never
   * drop rows silently (unlike the reference's eprintln at native.rs:295) —
   * they surface in the `parseStatus` / `errorClass` taxonomy.
   */
@@ -97,12 +98,34 @@ object Extract {
   def extractDocument(url: String, html: Array[Byte],
       pageRange: Option[(Int, Int)], onPageParsed: Int => Unit,
       isCancelled: () => Boolean): ExtractedDoc =
+    extractBlocks(url, html, pageRange, onPageParsed, isCancelled)(
+      d => renderDoc(url, d), failed(url, _))
+
+  /** The blocks stage's result for a document that parses: its blocks and
+    * the counts [[ExtractedDoc]] carries.
+    */
+  private[graft] final case class DocBlocks(blocks: Vector[Block], nPages: Int,
+      nElements: Int, nLines: Int, needOcrPages: Int)
+
+  /** The counts of a document that failed. */
+  private[graft] val NoBlocks: DocBlocks = DocBlocks(Vector.empty, 0, 0, 0, 0)
+
+  /** The extraction up to the blocks, with the renders left to the caller:
+    * `render` turns the blocks of a parsed document into the caller's
+    * result, `failed` an error class. [[extractDocument]] renders all four
+    * outputs; ExtractJob only the three it stores. `render` runs inside the
+    * same failure taxonomy as every other stage.
+    */
+  private[graft] def extractBlocks[A](url: String, html: Array[Byte],
+      pageRange: Option[(Int, Int)] = None, onPageParsed: Int => Unit = _ => (),
+      isCancelled: () => Boolean = () => false)(
+      render: DocBlocks => A, failed: String => A): A =
     try {
-      if (isCancelled()) return failed(url, "cancelled")
+      if (isCancelled()) return failed("cancelled")
       if (html == null || html.isEmpty)
-        return failed(url, "empty_doc")
+        return failed("empty_doc")
       if (html.length > MaxBytes)
-        return failed(url, "oversize")
+        return failed("oversize")
       val text = new String(html, StandardCharsets.UTF_8)
       val laidOut = HtmlFront.layoutDocument(text)
       // enumerate BEFORE filtering: page ids keep their original index,
@@ -111,16 +134,32 @@ object Extract {
       val indexed = laidOut.zipWithIndex
       val ranged = pageRange match {
         case Some((start, end)) =>
-          if (end > laidOut.length) return failed(url, "range_error")
+          if (end > laidOut.length) return failed("range_error")
           indexed.slice(math.max(start, 0), end)
         case None => indexed
       }
-      extractPages(url, ranged, onPageParsed, isCancelled)
+      render(extractPages(url, ranged, onPageParsed, isCancelled))
     } catch {
-      case _: CancelledException => failed(url, "cancelled")
-      case _: HtmlFront.ParseException => failed(url, "parse_error")
-      case scala.util.control.NonFatal(_) => failed(url, "exception")
+      case _: CancelledException => failed("cancelled")
+      case _: HtmlFront.ParseException => failed("parse_error")
+      case scala.util.control.NonFatal(_) => failed("exception")
     }
+
+  private def renderDoc(url: String, d: DocBlocks): ExtractedDoc =
+    ExtractedDoc(
+      url = url,
+      extractedText = Render.toText(d.blocks),
+      markdown = Render.toMarkdown(d.blocks, None),
+      html = Render.toHtml(d.blocks, Render.sanitizeDocName(url), None),
+      blocksJson = Render.blocksToJson(d.blocks),
+      nPages = d.nPages,
+      nBlocks = d.blocks.length,
+      nElements = d.nElements,
+      nLines = d.nLines,
+      needOcrPages = d.needOcrPages,
+      parseStatus = "ok",
+      errorClass = ""
+    )
 
   private def failed(url: String, errorClass: String): ExtractedDoc =
     ExtractedDoc(url, "", "", "", "[]", 0, 0, 0, 0, 0, "error", errorClass)
@@ -128,7 +167,7 @@ object Extract {
   private def extractPages(url: String,
       pagesIn: Seq[(HtmlFront.LaidOutPage, Int)],
       onPageParsed: Int => Unit,
-      isCancelled: () => Boolean): ExtractedDoc = {
+      isCancelled: () => Boolean): DocBlocks = {
     var nLines = 0
     val pages = pagesIn.map { case (p, pageId) =>
       // cancellation poll before each page (parse/document.rs:309-315)
@@ -169,20 +208,7 @@ object Extract {
     val titleLevel = Titles.titleLevelsKmeans(titles, Titles.TitleBuckets, docSeed(url))
     val blocks = Blocks.mergeElementsIntoBlocks(allElements, titleLevel)
 
-    val docName = Render.sanitizeDocName(url)
-    ExtractedDoc(
-      url = url,
-      extractedText = Render.toText(blocks),
-      markdown = Render.toMarkdown(blocks, None),
-      html = Render.toHtml(blocks, docName, None),
-      blocksJson = Render.blocksToJson(blocks),
-      nPages = pages.length,
-      nBlocks = blocks.length,
-      nElements = allElements.length,
-      nLines = nLines,
-      needOcrPages = pages.count(_.needOcr),
-      parseStatus = "ok",
-      errorClass = ""
-    )
+    DocBlocks(blocks, pages.length, allElements.length, nLines,
+      pages.count(_.needOcr))
   }
 }

@@ -165,7 +165,7 @@ object HtmlFront {
       // around 512; past the cap this is a deterministic parse_error row in
       // the failure taxonomy, not an exception.
       if (depth > MaxDomDepth) error(s"DOM nesting deeper than $MaxDomDepth")
-      val out = ArrayBuffer.empty[Node]
+      val out = Vector.newBuilder[Node]
       while (i < n) {
         if (html.charAt(i) == '<') {
           if (i + 1 < n && html.charAt(i + 1) == '/') {
@@ -173,7 +173,7 @@ object HtmlFront {
             if (close < 0) error("unterminated close tag")
             val name = html.substring(i + 2, close).trim
             closing match {
-              case Some(c) if c == name => i = close + 1; return out.toVector
+              case Some(c) if c == name => i = close + 1; return out.result()
               case _ => error(s"unexpected </$name>")
             }
           } else {
@@ -196,15 +196,15 @@ object HtmlFront {
           }
         } else {
           val start = i
-          while (i < n && html.charAt(i) != '<') i += 1
-          val raw = html.substring(start, i)
-          val t = unescape(raw)
-          if (t.exists(!_.isWhitespace)) out += Text(normalizeWs(t))
+          i = html.indexOf('<', i)
+          if (i < 0) i = n
+          val t = unescape(html.substring(start, i))
+          if (!isBlank(t)) out += Text(normalizeWs(t))
         }
       }
       closing match {
         case Some(c) => error(s"missing </$c>")
-        case None    => out.toVector
+        case None    => out.result()
       }
     }
 
@@ -215,6 +215,12 @@ object HtmlFront {
         throw new ParseException("mixed <page> and top-level content")
       elems.toVector
     } else Vector(Elem("page", Map.empty, nodes))
+  }
+
+  private def isBlank(s: String): Boolean = {
+    var i = 0
+    while (i < s.length && s.charAt(i).isWhitespace) i += 1
+    i == s.length
   }
 
   private def unescape(s: String): String =
@@ -258,13 +264,22 @@ object HtmlFront {
   final case class LaidOutPage(spans: Vector[CharSpan], boxes: Vector[LayoutBox],
       ocrLines: Vector[Line])
 
-  private final class PageState(val nolb: Boolean) {
+  /** One page's layout sink. Chars arrive one at a time from the geometry
+    * loop ([[emitChar]]) and are folded per inline run ([[endRun]]): one
+    * span append and one block-box merge per run. With `chars` set (the
+    * reference mode of [[layoutChars]]) every char is instead recorded as a
+    * [[PChar]] and unioned into the block box on its own.
+    */
+  private final class PageState(val nolb: Boolean, chars: ArrayBuffer[PChar]) {
     val spanStream = new Tokenize.SpanStream
     // current block bbox as four mutable floats: a BBox instance per char
     // (the old union-merge) was the single largest allocation site in the
     // extraction JFR profile — one short-lived object per emitted char
     private var bbSet = false
     private var bbX0, bbY0, bbX1, bbY1 = 0f
+    // the open run: its char count and the f32 union of its char boxes
+    private var runN = 0
+    private var rx0, ry0, rx1, ry1 = 0f
     val boxes = ArrayBuffer.empty[LayoutBox]
     val ocrLines = ArrayBuffer.empty[Line]
     var bodyY: Float = BodyTop
@@ -276,15 +291,39 @@ object HtmlFront {
 
     def nextBoxId(): Int = { val id = boxId; boxId += 1; id }
 
-    /** Feed one char (as a slice of `src`) into the span fold; track the
-      * current block's bbox (union of non-linebreak char tight bounds since
-      * markBlock()). Allocation-free on the append fast path.
+    /** One laid-out char `src[from, until)` of the open run. */
+    def emitChar(src: String, from: Int, until: Int, font: Font,
+        x0: Float, y0: Float, x1: Float, y1: Float): Unit =
+      if (chars != null) {
+        val bb = BBox(x0, y0, x1, y1)
+        chars += PChar(src.substring(from, until), font.name, font.size,
+          font.weight, 0f, bb, bb, charIdx)
+        charIdx += 1
+        unionBlock(font, x0, y0, x1, y1)
+      } else if (runN == 0) {
+        runN = 1; rx0 = x0; ry0 = y0; rx1 = x1; ry1 = y1
+      } else {
+        runN += 1
+        if (x0 < rx0) rx0 = x0
+        if (y0 < ry0) ry0 = y0
+        if (x1 > rx1) rx1 = x1
+        if (y1 > ry1) ry1 = y1
+      }
+
+    /** Close the open run, whose chars are `text` in `font`: one span
+      * append, and the run's box joins the block box unless it is a
+      * linebreak (font size 0).
       */
-    def emitRaw(src: CharSequence, from: Int, until: Int, font: Font,
-        x0: Float, y0: Float, x1: Float, y1: Float): Unit = {
-      spanStream.feedRaw(src, from, until, font.name, font.size, font.weight,
-        0f, x0, y0, x1, y1, x0, y0, x1, y1, charIdx)
-      charIdx += 1
+    def endRun(text: String, font: Font): Unit =
+      if (runN > 0) {
+        spanStream.feedRun(text, font.name, font.size, font.weight,
+          0f, rx0, ry0, rx1, ry1, charIdx, charIdx + runN - 1)
+        charIdx += runN
+        runN = 0
+        unionBlock(font, rx0, ry0, rx1, ry1)
+      }
+
+    private def unionBlock(font: Font, x0: Float, y0: Float, x1: Float, y1: Float): Unit =
       if (font.size != 0f) {
         if (!bbSet) { bbSet = true; bbX0 = x0; bbY0 = y0; bbX1 = x1; bbY1 = y1 }
         else {
@@ -294,7 +333,6 @@ object HtmlFront {
           if (y1 > bbY1) bbY1 = y1
         }
       }
-    }
     def markBlock(): Unit = bbSet = false
     def blockBBox: Option[BBox] =
       if (bbSet) Some(BBox(bbX0, bbY0, bbX1, bbY1)) else None
@@ -306,7 +344,7 @@ object HtmlFront {
   }
 
   /** Inline runs of a block: text fragments with their effective font. */
-  private def inlineRuns(children: Seq[Node], base: Font): Vector[(String, Font)] = {
+  private def inlineRuns(children: Seq[Node], base: Font): ArrayBuffer[(String, Font)] = {
     val runs = ArrayBuffer.empty[(String, Font)]
     def walk(nodes: Seq[Node], font: Font): Unit = nodes.foreach {
       case Text(t) => runs += ((t, font))
@@ -325,7 +363,7 @@ object HtmlFront {
     // the joining space is EMITTED by layoutRuns before each run after the
     // first, carrying that run's font — identical chars/geometry to the old
     // `" " + t` per-fragment concat, without a fresh String per fragment
-    runs.toVector
+    runs
   }
 
   /** Lay out one block's runs starting at `y0`, word-wrapped at the content
@@ -333,7 +371,7 @@ object HtmlFront {
     */
   private def layoutRuns(
       st: PageState,
-      runs: Seq[(String, Font)],
+      runs: collection.Seq[(String, Font)],
       baseFont: Font,
       y0: Float,
       xLeft: Float = MarginLeft,
@@ -349,27 +387,29 @@ object HtmlFront {
       // first char of every non-first run before the concat was removed)
       if (runIdx > 0) {
         if (x + adv > xRight) { x = xLeft; y += lineHeight }
-        st.emitRaw(" ", 0, 1, font, x, y, x + adv, y + font.size)
+        st.emitChar(" ", 0, 1, font, x, y, x + adv, y + font.size)
+        st.endRun(" ", font)
         x += adv
       }
       runIdx += 1
       var ti = 0
       while (ti < text.length) {
-        val cp = text.codePointAt(ti)
-        val cs = Character.charCount(cp)
+        val cs = Character.charCount(text.codePointAt(ti))
         if (x + adv > xRight) { // wrap (positions only; no chars injected)
           x = xLeft
           y += lineHeight
         }
-        st.emitRaw(text, ti, ti + cs, font, x, y, x + adv, y + font.size)
+        st.emitChar(text, ti, ti + cs, font, x, y, x + adv, y + font.size)
         x += adv
         ti += cs
       }
+      st.endRun(text, font)
     }
     if (!st.nolb) {
       // Injected linebreak char (pdfium-synthetic-char emulation): zero-area
       // bbox, fontSize 0 — forces a span break and a "\n"-terminated line.
-      st.emitRaw("\n", 0, 1, LinebreakFont, x, y, x, y)
+      st.emitChar("\n", 0, 1, LinebreakFont, x, y, x, y)
+      st.endRun("\n", LinebreakFont)
     }
     y + lineHeight
   }
@@ -396,8 +436,8 @@ object HtmlFront {
     }
   }
 
-  private def layoutPageElem(page: Elem): LaidOutPage = {
-    val st = new PageState(page.attrs.contains("data-nolb"))
+  private def layoutPage(page: Elem, chars: ArrayBuffer[PChar]): PageState = {
+    val st = new PageState(page.attrs.contains("data-nolb"), chars)
     page.children.foreach {
       case Text(_) => throw new ParseException("bare text at page level")
       case Elem(tag, attrs, children) =>
@@ -476,10 +516,24 @@ object HtmlFront {
           case other => throw new ParseException(s"unsupported block tag <$other>")
         }
     }
-    LaidOutPage(st.spanStream.result(), st.boxes.toVector, st.ocrLines.toVector)
+    st
   }
 
   /** Parse + lay out a whole document (one entry per page). */
   def layoutDocument(html: String): Vector[LaidOutPage] =
-    parseDom(html).map(layoutPageElem)
+    parseDom(html).map { page =>
+      val st = layoutPage(page, null)
+      LaidOutPage(st.spanStream.result(), st.boxes.toVector, st.ocrLines.toVector)
+    }
+
+  /** The reference form of [[layoutDocument]]: the same geometry, with every
+    * char emitted as a [[PChar]] (for `Tokenize.parseTextSpans`) and each
+    * block box unioned char by char. Per page: (chars, raw boxes, OCR lines).
+    */
+  private[core] def layoutChars(html: String): Vector[(Vector[PChar], Vector[LayoutBox], Vector[Line])] =
+    parseDom(html).map { page =>
+      val chars = ArrayBuffer.empty[PChar]
+      val st = layoutPage(page, chars)
+      (chars.toVector, st.boxes.toVector, st.ocrLines.toVector)
+    }
 }

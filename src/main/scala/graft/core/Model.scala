@@ -103,22 +103,31 @@ object ElementType {
 
 /** Mutable element builder mirroring the reference's in-place accumulation
   * (entities.rs:160-203). Text join rule: first line raw, later lines with a
-  * single space (entities.rs:132-143).
+  * single space (entities.rs:132-143). Later lines append to a builder, so a
+  * paragraph of n lines costs O(text) instead of n string copies.
   */
 final class Element(
     val id: Int,
     val layoutBlockId: Int,
     val kind: ElementType,
     val pageId: Int,
-    var text: String,
+    text0: String,
     var bbox: BBox
 ) {
-  def pushLine(line: Line): Unit =
-    if (text.isEmpty) text = line.text
-    else text = text + " " + line.text
+  private var joined: String = text0
+  private var more: java.lang.StringBuilder = null // set from the second line on
 
-  /** Unconditional space-join — ElementText::append_line, entities.rs:139-142. */
-  def appendLineText(t: String): Unit = text = text + " " + t
+  def text: String = {
+    if (more != null && more.length != joined.length) joined = more.toString
+    joined
+  }
+
+  def pushLine(line: Line): Unit =
+    if (more == null && joined.isEmpty) joined = line.text
+    else {
+      if (more == null) more = new java.lang.StringBuilder(joined)
+      more.append(' ').append(line.text)
+    }
 
   override def toString: String =
     s"Element($id, $layoutBlockId, $kind, p$pageId, '$text', $bbox)"

@@ -30,12 +30,19 @@ object Render {
 
   /** utils.rs:43-56 — keep alnum/'-'/'_', drop whitespace, other -> '-'. */
   def sanitizeDocName(name: String): String = {
-    val sb = new StringBuilder
-    name.foreach { c =>
-      if (c.isLetterOrDigit || c == '-' || c == '_') sb += c
-      else if (!c.isWhitespace) sb += '-'
+    val sb = new java.lang.StringBuilder(name.length)
+    var from = 0 // start of the pending run of kept chars
+    var i = 0
+    while (i < name.length) {
+      val c = name.charAt(i)
+      if (!(c.isLetterOrDigit || c == '-' || c == '_')) {
+        sb.append(name, from, i)
+        if (!c.isWhitespace) sb.append('-')
+        from = i + 1
+      }
+      i += 1
     }
-    sb.toString
+    sb.append(name, from, name.length).toString
   }
 
   /** Plain extracted text: block texts in reading order, one block per line.
@@ -132,54 +139,89 @@ object Render {
     * serde output (tagged `block_type`, blocks.rs:36-37; bbox as f32 fields).
     */
   def blocksToJson(blocks: Seq[Block]): String = {
-    val sb = new StringBuilder
-    sb += '['
+    val sb = new java.lang.StringBuilder
+    sb.append('[')
     var first = true
     blocks.foreach { b =>
-      if (!first) sb += ','
+      if (!first) sb.append(',')
       first = false
-      sb += '{'
-      sb ++= "\"id\":" ++= b.id.toString
-      sb ++= ",\"kind\":{"
-      sb ++= "\"block_type\":\"" ++= b.kind.label ++= "\""
+      sb.append("{\"id\":").append(b.id)
+      sb.append(",\"kind\":{\"block_type\":\"").append(b.kind.label).append('"')
       b.kind match {
-        case BlockKind.Header(t)      => sb ++= ",\"text\":" ++= jsonStr(t)
-        case BlockKind.Footer(t)      => sb ++= ",\"text\":" ++= jsonStr(t)
+        case BlockKind.Header(t)      => appendJsonStr(sb.append(",\"text\":"), t)
+        case BlockKind.Footer(t)      => appendJsonStr(sb.append(",\"text\":"), t)
         case BlockKind.Title(lvl, t)  =>
-          sb ++= ",\"level\":" ++= lvl.toString ++= ",\"text\":" ++= jsonStr(t)
+          appendJsonStr(sb.append(",\"level\":").append(lvl).append(",\"text\":"), t)
         case BlockKind.ListBlock(its) =>
-          sb ++= ",\"items\":[" ++= its.map(jsonStr).mkString(",") ++= "]"
-        case BlockKind.TextBlock(t)   => sb ++= ",\"text\":" ++= jsonStr(t)
+          sb.append(",\"items\":[")
+          var i = 0
+          while (i < its.length) {
+            if (i > 0) sb.append(',')
+            appendJsonStr(sb, its(i))
+            i += 1
+          }
+          sb.append(']')
+        case BlockKind.TextBlock(t)   => appendJsonStr(sb.append(",\"text\":"), t)
         case BlockKind.Image(iid, cap) =>
-          sb ++= ",\"id\":" ++= iid.toString
-          sb ++= ",\"caption\":" ++= cap.fold("null")(jsonStr)
+          sb.append(",\"id\":").append(iid).append(",\"caption\":")
+          cap match {
+            case Some(c) => appendJsonStr(sb, c)
+            case None    => sb.append("null")
+          }
         case BlockKind.Table          =>
       }
-      sb += '}'
-      sb ++= ",\"pages_id\":[" ++= b.pagesId.mkString(",") ++= "]"
-      sb ++= ",\"bbox\":{\"x0\":" ++= fm(b.bbox.x0) ++= ",\"y0\":" ++= fm(b.bbox.y0)
-      sb ++= ",\"x1\":" ++= fm(b.bbox.x1) ++= ",\"y1\":" ++= fm(b.bbox.y1) ++= "}"
-      sb += '}'
+      sb.append('}')
+      sb.append(",\"pages_id\":[").append(b.pagesId.mkString(",")).append(']')
+      appendFloat(sb.append(",\"bbox\":{\"x0\":"), b.bbox.x0)
+      appendFloat(sb.append(",\"y0\":"), b.bbox.y0)
+      appendFloat(sb.append(",\"x1\":"), b.bbox.x1)
+      appendFloat(sb.append(",\"y1\":"), b.bbox.y1)
+      sb.append("}}")
     }
-    sb += ']'
-    sb.toString
+    sb.append(']').toString
   }
 
-  private def fm(f: Float): String = f.toString
+  /** Append `Float.toString(f)`. An integral `f` below 1e7 in magnitude
+    * prints as the integer plus ".0" (true of every such float; -0.0 is
+    * excluded), so those skip the float-to-decimal conversion.
+    */
+  private[core] def appendFloat(sb: java.lang.StringBuilder, f: Float): java.lang.StringBuilder = {
+    val i = f.toInt
+    if (i == f && i > -10000000 && i < 10000000 &&
+        java.lang.Float.floatToRawIntBits(f) != 0x80000000) sb.append(i).append(".0")
+    else sb.append(java.lang.Float.toString(f))
+  }
 
-  private def jsonStr(s: String): String = {
-    val sb = new StringBuilder
-    sb += '"'
-    s.foreach {
-      case '"'           => sb ++= "\\\""
-      case '\\'          => sb ++= "\\\\"
-      case '\n'          => sb ++= "\\n"
-      case '\r'          => sb ++= "\\r"
-      case '\t'          => sb ++= "\\t"
-      case c if c < ' '  => sb ++= f"\\u${c.toInt}%04x"
-      case c             => sb += c
+  /** `s` as a JSON string literal. */
+  private[core] def jsonStr(s: String): String =
+    appendJsonStr(new java.lang.StringBuilder(s.length + 2), s).toString
+
+  private val HexDigits = "0123456789abcdef"
+
+  /** Append `s` quoted and escaped: the runs between escapes are copied in
+    * bulk; quote, backslash, newline, carriage return and tab get their
+    * two-char escapes, the other chars below 0x20 a lowercase u00XX escape.
+    */
+  private def appendJsonStr(sb: java.lang.StringBuilder, s: String): java.lang.StringBuilder = {
+    sb.append('"')
+    var from = 0 // start of the pending unescaped run
+    var i = 0
+    while (i < s.length) {
+      val c = s.charAt(i)
+      if (c < ' ' || c == '"' || c == '\\') {
+        sb.append(s, from, i)
+        c match {
+          case '"'  => sb.append("\\\"")
+          case '\\' => sb.append("\\\\")
+          case '\n' => sb.append("\\n")
+          case '\r' => sb.append("\\r")
+          case '\t' => sb.append("\\t")
+          case _    => sb.append("\\u00").append(HexDigits.charAt(c >> 4)).append(HexDigits.charAt(c & 0xf))
+        }
+        from = i + 1
+      }
+      i += 1
     }
-    sb += '"'
-    sb.toString
+    sb.append(s, from, s.length).append('"')
   }
 }

@@ -21,14 +21,11 @@ object Tokenize {
     stream.result()
   }
 
-  /** Streaming form of the T3 fold: chars are fed one at a time and only the
-    * folded spans are retained. This is what the front-end uses — a page
-    * never materializes its char stream (a 1 MB document would otherwise
-    * hold ~1M char objects in flight per task, which wrecks GC at high
-    * parallelism). `feedRaw` is the allocation-free fast path: the common
-    * case (char appends to the current span) allocates nothing — text is
-    * appended straight from the source CharSequence and the bbox merge is
-    * four float compares.
+  /** Streaming form of the T3 fold: only the folded spans are retained, so a
+    * page never materializes its char stream (a 1 MB document would
+    * otherwise hold ~1M char objects in flight per task, which wrecks GC at
+    * high parallelism). `feed`/`feedRaw` take one char at a time and are the
+    * reference fold; the front-end feeds whole runs through [[feedRun]].
     */
   final class SpanStream {
     private val spans = ArrayBuffer.empty[SpanBuilder]
@@ -45,18 +42,36 @@ object Tokenize {
         fontName: String, fontSize: Float, fontWeight: Int, rotation: Float,
         tx0: Float, ty0: Float, tx1: Float, ty1: Float,
         lx0: Float, ly0: Float, lx1: Float, ly1: Float, index: Int): Unit = {
-      if (spans.nonEmpty && spans.last.tryAppendRaw(src, from, until, fontName,
-          fontSize, fontWeight, rotation, lx0, ly0, lx1, ly1, index)) ()
-      else spans += SpanBuilder.fromRaw(src, from, until, fontName, fontSize,
-        fontWeight, rotation, tx0, ty0, tx1, ty1, index)
+      val text = src.subSequence(from, until).toString
+      if (spans.isEmpty || !spans.last.tryAppend(text, fontName, fontSize,
+          fontWeight, rotation, lx0, ly0, lx1, ly1, index))
+        spans += new SpanBuilder(tx0, ty0, tx1, ty1, text, rotation, fontName,
+          fontSize, fontWeight, index, index)
     }
+
+    /** Feed a run of chars, `text`, that share one font and whose tight and
+      * loose bounds coincide: the f32 union of their boxes (folded in char
+      * order, seeded by the first char) and their first/last char indices.
+      * Equal to feeding the chars one by one: every char after the first
+      * appends to whichever span the first one lands in, and the span bbox
+      * is a min/max union, which does not depend on how the chars are
+      * grouped.
+      */
+    def feedRun(text: String,
+        fontName: String, fontSize: Float, fontWeight: Int, rotation: Float,
+        x0: Float, y0: Float, x1: Float, y1: Float,
+        firstIndex: Int, lastIndex: Int): Unit =
+      if (spans.isEmpty || !spans.last.tryAppend(text, fontName, fontSize,
+          fontWeight, rotation, x0, y0, x1, y1, lastIndex))
+        spans += new SpanBuilder(x0, y0, x1, y1, text, rotation, fontName,
+          fontSize, fontWeight, firstIndex, lastIndex)
 
     def result(): Vector[CharSpan] = spans.iterator.map(_.build).toVector
   }
 
   private final class SpanBuilder(
       var x0: Float, var y0: Float, var x1: Float, var y1: Float,
-      val text: java.lang.StringBuilder,
+      head: String,
       val rotation: Float,
       val fontName: String,
       val fontSize: Float,
@@ -64,13 +79,17 @@ object Tokenize {
       val charStartIdx: Int,
       var charEndIdx: Int
   ) {
+    // the text from the second appended piece on; a span of one run keeps
+    // that run's string as its text, uncopied
+    private var more: java.lang.StringBuilder = null
+
     /** entities.rs:282-300: reject on any font/rotation mismatch. */
-    def tryAppendRaw(src: CharSequence, from: Int, until: Int,
-        fn: String, fs: Float, fw: Int, rot: Float,
+    def tryAppend(text: String, fn: String, fs: Float, fw: Int, rot: Float,
         lx0: Float, ly0: Float, lx1: Float, ly1: Float, index: Int): Boolean =
       if (fs != fontSize || fn != fontName || fw != fontWeight || rot != rotation) false
       else {
-        text.append(src, from, until)
+        if (more == null) more = new java.lang.StringBuilder(head)
+        more.append(text)
         charEndIdx = index
         if (lx0 < x0) x0 = lx0
         if (ly0 < y0) y0 = ly0
@@ -80,18 +99,8 @@ object Tokenize {
       }
 
     def build: CharSpan =
-      CharSpan(BBox(x0, y0, x1, y1), text.toString, rotation, fontName,
-        fontSize, fontWeight, charStartIdx, charEndIdx)
-  }
-
-  private object SpanBuilder {
-    def fromRaw(src: CharSequence, from: Int, until: Int,
-        fn: String, fs: Float, fw: Int, rot: Float,
-        tx0: Float, ty0: Float, tx1: Float, ty1: Float, index: Int): SpanBuilder = {
-      val sb = new java.lang.StringBuilder(math.max(16, until - from))
-      sb.append(src, from, until)
-      new SpanBuilder(tx0, ty0, tx1, ty1, sb, rot, fn, fs, fw, index, index)
-    }
+      CharSpan(BBox(x0, y0, x1, y1), if (more == null) head else more.toString,
+        rotation, fontName, fontSize, fontWeight, charStartIdx, charEndIdx)
   }
 
   /** Accumulate spans into lines. A line breaks when the incoming span has a

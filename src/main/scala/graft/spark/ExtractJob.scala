@@ -4,7 +4,7 @@ import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.LongAccumulator
-import graft.core.Extract
+import graft.core.{Extract, Render}
 import graft.spark.PagesTable.PageRow
 
 /** The extraction job: resume anti-join -> skew-aware repartition ->
@@ -71,12 +71,12 @@ object ExtractJob {
   def skewRepartition(df: DataFrame, partitions: Int, balanced: Boolean = false): DataFrame = {
     val bucket = ceil(log2(greatest(length(col("html")).cast("long"), lit(2L))))
     if (!balanced) {
-      // Full-range salt, NOT pre-modded: repartition() re-hashes the column,
+      // Full-range salt, NOT pre-modded: repartition() re-hashes the key,
       // and quantizing to P values first would throw P balls into P bins
-      // (max/mean ~3 at P=256). A full-range hash keys ~uniformly.
-      df.withColumn("__salt", xxhash64(col("url"), bucket))
-        .repartition(partitions, col("__salt"))
-        .drop("__salt")
+      // (max/mean ~3 at P=256). A full-range hash keys ~uniformly. The salt
+      // is the partitioning expression itself, computed inside the exchange
+      // rather than shuffled as a column.
+      df.repartition(partitions, xxhash64(col("url"), bucket))
     } else {
       import org.apache.spark.sql.expressions.Window
       // Global descending-length round-robin (sorted-greedy): partition loads
@@ -114,31 +114,54 @@ object ExtractJob {
     }
   }
 
+  /** The [[PageRow]] columns extraction reads; `text` is not one of them. */
+  private val ReadColumns = Seq("url", "warc_ts", "html", "lang")
+
+  /** The pages left to extract (those not in `done`'s urls), placed by
+    * [[skewRepartition]], carrying only the columns extraction reads: `text`,
+    * about as large as `html`, is projected away before the anti-join and
+    * the exchange and comes back as null after them, so the rows keep the
+    * [[PageRow]] shape.
+    */
+  private[graft] def extractInput(pages: Dataset[PageRow], done: Option[DataFrame],
+      partitions: Int, balanced: Boolean = false): Dataset[PageRow] = {
+    import pages.sparkSession.implicits._
+    val read = pages.select(ReadColumns.map(col): _*)
+    val todo = done.fold(read)(read.join(_, Seq("url"), "left_anti"))
+    skewRepartition(todo, partitions, balanced)
+      .withColumn("text", lit(null).cast("string")).as[PageRow]
+  }
+
   /** The distributed extraction: one pure function per document, applied
-    * partition-locally. Never collects; never shuffles.
+    * partition-locally. Never collects; never shuffles. Rows carry only the
+    * three renders they store: ExtractJob never renders HTML.
     */
   def extract(pages: Dataset[PageRow], metrics: Option[Metrics] = None): Dataset[ExtractedRow] = {
     val spark = pages.sparkSession
     import spark.implicits._
     pages.mapPartitions { it =>
       val pid = TaskContext.getPartitionId()
-      it.map { row =>
-        val d = Extract.extractDocument(row.url, row.html)
-        metrics.foreach { m =>
-          if (d.parseStatus == "ok") m.docsOk.add(1) else m.docsFailed.add(1)
-          m.bytesIn.add(if (row.html == null) 0L else row.html.length.toLong)
-          m.lines.add(d.nLines.toLong)
-        }
-        ExtractedRow(
-          url = d.url, warc_ts = row.warc_ts, lang = row.lang,
-          extracted_text = d.extractedText, markdown = d.markdown,
-          blocks_json = d.blocksJson, n_pages = d.nPages, n_blocks = d.nBlocks,
+      it.map { page =>
+        val bytesIn = if (page.html == null) 0L else page.html.length.toLong
+        def row(text: String, markdown: String, json: String, d: Extract.DocBlocks,
+            status: String, errorClass: String) = ExtractedRow(
+          url = page.url, warc_ts = page.warc_ts, lang = page.lang,
+          extracted_text = text, markdown = markdown, blocks_json = json,
+          n_pages = d.nPages, n_blocks = d.blocks.length,
           n_elements = d.nElements, n_lines = d.nLines,
-          need_ocr_pages = d.needOcrPages, parse_status = d.parseStatus,
-          error_class = d.errorClass, engine_version = Extract.EngineVersion,
-          partition_id = pid,
-          bytes_in = if (row.html == null) 0L else row.html.length.toLong
-        )
+          need_ocr_pages = d.needOcrPages, parse_status = status,
+          error_class = errorClass, engine_version = Extract.EngineVersion,
+          partition_id = pid, bytes_in = bytesIn)
+        val out = Extract.extractBlocks(page.url, page.html)(
+          d => row(Render.toText(d.blocks), Render.toMarkdown(d.blocks, None),
+            Render.blocksToJson(d.blocks), d, "ok", ""),
+          row("", "", "[]", Extract.NoBlocks, "error", _))
+        metrics.foreach { m =>
+          if (out.parse_status == "ok") m.docsOk.add(1) else m.docsFailed.add(1)
+          m.bytesIn.add(bytesIn)
+          m.lines.add(out.n_lines.toLong)
+        }
+        out
       }
     }
   }
@@ -310,12 +333,8 @@ object ExtractJob {
       partitions: Int,
       balanced: Boolean = false
   ): Long = {
-    import spark.implicits._
-    val todo = store.committedKeys(spark, "url") match {
-      case Some(done) => pages.join(done, Seq("url"), "left_anti").as[PageRow]
-      case None       => pages
-    }
-    val repart = skewRepartition(todo.toDF(), partitions, balanced).as[PageRow]
+    val repart = extractInput(pages, store.committedKeys(spark, "url"),
+      partitions, balanced)
     val metrics = newMetrics(spark)
     val extracted = extract(repart, Some(metrics))
     // Single pass: MERGE writes the snapshot; lineage is then derived from

@@ -67,6 +67,13 @@ class RenderSpec extends AnyFunSuite {
     assert(Render.sanitizeDocName("my doc.pdf") == "mydoc-pdf")
     assert(Render.sanitizeDocName("a_b-c") == "a_b-c")
     assert(Render.sanitizeDocName("x/y:z") == "x-y-z")
+    // bulk-copied runs of kept chars: same as the per-char form
+    def perChar(name: String) = name.flatMap { c =>
+      if (c.isLetterOrDigit || c == '-' || c == '_') c.toString
+      else if (c.isWhitespace) "" else "-"
+    }
+    Seq("", "https://fixtures.test/skew/42/7", "  a \t b\n", "é 𝔸😀_x-y", "...")
+      .foreach(n => assert(Render.sanitizeDocName(n) == perChar(n), n))
   }
 
   test("blocks json is valid and tagged") {
@@ -205,5 +212,58 @@ class RenderSpec extends AnyFunSuite {
     // idempotence: fixing twice equals fixing once
     val once = FixText.fixText("café " + damage1252("’x”") + " é")
     assert(FixText.fixText(once) == once)
+  }
+
+  /** The per-char `jsonStr` that `Render` used to run: the bulk-append form
+    * must produce exactly these bytes.
+    */
+  private def perCharJsonStr(s: String): String = {
+    val sb = new StringBuilder
+    sb += '"'
+    s.foreach {
+      case '"'           => sb ++= "\\\""
+      case '\\'          => sb ++= "\\\\"
+      case '\n'          => sb ++= "\\n"
+      case '\r'          => sb ++= "\\r"
+      case '\t'          => sb ++= "\\t"
+      case c if c < ' '  => sb ++= f"\\u${c.toInt}%04x"
+      case c             => sb += c
+    }
+    sb += '"'
+    sb.toString
+  }
+
+  test("bbox floats print exactly as Float.toString") {
+    val edge = Seq(0f, -0f, 1f, -1f, 36f, 576f, 80.5f, 94.4f, 9999999f, -9999999f,
+      1e7f, -1e7f, 1.5e9f, 3e9f, Float.MaxValue, Float.MinPositiveValue, 1e-5f,
+      Float.NaN, Float.PositiveInfinity, Float.NegativeInfinity)
+    val rng = new scala.util.Random(11)
+    val sampled = Seq.fill(20000)(rng.nextInt(20000000) - 10000000).map(_.toFloat) ++
+      Seq.fill(2000)(java.lang.Float.intBitsToFloat(rng.nextInt()))
+    (edge ++ sampled).foreach { f =>
+      val got = Render.appendFloat(new java.lang.StringBuilder, f).toString
+      assert(got == java.lang.Float.toString(f), s"float bits ${java.lang.Float.floatToRawIntBits(f)}")
+    }
+  }
+
+  test("jsonStr: every escape branch equals the per-char form") {
+    val controls = (0 until 0x20).map(_.toChar).mkString
+    val cases = Seq(
+      "", "plain text", "say \"hi\"", "back\\slash", "two\nlines",
+      "cr\rhere", "tab\there", controls, "\u0000lead", "trail\u001f",
+      "𝔸 non-BMP 😀 pair", "\"\"\\\\\n\n", "mixed \"𝒳\"\t\u0001end",
+      "\u007f del and \u00e9 stay raw")
+    cases.foreach(s => assert(Render.jsonStr(s) == perCharJsonStr(s), s"escape of ${perCharJsonStr(s)}"))
+    assert(Render.jsonStr("\u0001\u001f") == "\"\\u0001\\u001f\"")
+    val rng = new scala.util.Random(7)
+    (0 until 500).foreach { _ =>
+      val s = Seq.fill(rng.nextInt(40))(rng.nextInt(6) match {
+        case 0 => rng.nextInt(0x20).toChar.toString
+        case 1 => "\"\\"
+        case 2 => "😀"
+        case _ => rng.nextPrintableChar().toString
+      }).mkString
+      assert(Render.jsonStr(s) == perCharJsonStr(s), s"escape of ${perCharJsonStr(s)}")
+    }
   }
 }

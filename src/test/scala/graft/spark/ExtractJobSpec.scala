@@ -228,6 +228,31 @@ class ExtractJobSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(lin.agg(org.apache.spark.sql.functions.sum("parse_errors")).head.getLong(0) == 0L)
   }
 
+  test("extraction input: no exchange carries text; rows match the oracle") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    object plans extends AdaptiveSparkPlanHelper
+    def exchangeColumns(plan: SparkPlan): Seq[Seq[String]] =
+      plans.collect(plan) { case e: ShuffleExchangeExec => e.output.map(_.name) }
+    val ss = spark; import ss.implicits._
+    val pages = PagesTable.generate(spark, 24, partitions = 2)
+    val done = Seq(PagesTable.genDoc(0).url, PagesTable.genDoc(5).url).toDF("url")
+    val expected = sequentialOracle()
+    for ((d, skipped) <- Seq(None -> 0, Some(done) -> 2); balanced <- Seq(false, true)) {
+      val input = ExtractJob.extractInput(pages, d, 4, balanced)
+      val exchanges = exchangeColumns(input.queryExecution.executedPlan)
+      assert(exchanges.exists(_.contains("html")), s"no repartition exchange: $exchanges")
+      assert(exchanges.forall(!_.contains("text")), s"text shuffled: $exchanges")
+      val rows = ExtractJob.extract(input).collect()
+      assert(rows.length == 24 - skipped)
+      rows.foreach(r => assert(r.extracted_text == expected(r.url)._1, r.url))
+    }
+    // the qx corpus and the flagship entry go through the same input
+    val entry = exchangeColumns(graft.SparkEntry.entry(spark).queryExecution.executedPlan)
+    assert(entry.nonEmpty && entry.forall(!_.contains("text")), s"entry: $entry")
+  }
+
   test("skew: balanced repartition bounds max/mean partition bytes under 2") {
     val ss = spark; import ss.implicits._
     import org.apache.spark.sql.functions._
