@@ -36,20 +36,16 @@ object Assign {
   private final class ElementStream(pageId: Int) {
     val elements = ArrayBuffer.empty[Element]
     private val byBox = mutable.LongMap.empty[Element]
-    private var last: Element = null // consecutive lines mostly share a box
 
     def mergeOrCreate(line: Line, box: LayoutBox): Unit = {
-      val found =
-        if (last != null && last.layoutBlockId == box.id) last
-        else byBox.getOrNull(box.id.toLong)
-      if (found != null) { found.pushLine(line); last = found }
+      val found = byBox.getOrNull(box.id.toLong)
+      if (found != null) found.pushLine(line)
       else {
         val id = if (elements.isEmpty) 0 else elements.length + 1
         val el = Element.fromLayoutBlock(id, box, pageId)
         el.pushLine(line)
         elements += el
         byBox.update(box.id.toLong, el)
-        last = el
       }
     }
   }

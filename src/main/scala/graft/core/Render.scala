@@ -172,29 +172,14 @@ object Render {
       }
       sb.append('}')
       sb.append(",\"pages_id\":[").append(b.pagesId.mkString(",")).append(']')
-      appendFloat(sb.append(",\"bbox\":{\"x0\":"), b.bbox.x0)
-      appendFloat(sb.append(",\"y0\":"), b.bbox.y0)
-      appendFloat(sb.append(",\"x1\":"), b.bbox.x1)
-      appendFloat(sb.append(",\"y1\":"), b.bbox.y1)
+      sb.append(",\"bbox\":{\"x0\":").append(java.lang.Float.toString(b.bbox.x0))
+      sb.append(",\"y0\":").append(java.lang.Float.toString(b.bbox.y0))
+      sb.append(",\"x1\":").append(java.lang.Float.toString(b.bbox.x1))
+      sb.append(",\"y1\":").append(java.lang.Float.toString(b.bbox.y1))
       sb.append("}}")
     }
     sb.append(']').toString
   }
-
-  /** Append `Float.toString(f)`. An integral `f` below 1e7 in magnitude
-    * prints as the integer plus ".0" (true of every such float; -0.0 is
-    * excluded), so those skip the float-to-decimal conversion.
-    */
-  private[core] def appendFloat(sb: java.lang.StringBuilder, f: Float): java.lang.StringBuilder = {
-    val i = f.toInt
-    if (i == f && i > -10000000 && i < 10000000 &&
-        java.lang.Float.floatToRawIntBits(f) != 0x80000000) sb.append(i).append(".0")
-    else sb.append(java.lang.Float.toString(f))
-  }
-
-  /** `s` as a JSON string literal. */
-  private[core] def jsonStr(s: String): String =
-    appendJsonStr(new java.lang.StringBuilder(s.length + 2), s).toString
 
   private val HexDigits = "0123456789abcdef"
 
@@ -202,7 +187,7 @@ object Render {
     * bulk; quote, backslash, newline, carriage return and tab get their
     * two-char escapes, the other chars below 0x20 a lowercase u00XX escape.
     */
-  private def appendJsonStr(sb: java.lang.StringBuilder, s: String): java.lang.StringBuilder = {
+  private[core] def appendJsonStr(sb: java.lang.StringBuilder, s: String): java.lang.StringBuilder = {
     sb.append('"')
     var from = 0 // start of the pending unescaped run
     var i = 0

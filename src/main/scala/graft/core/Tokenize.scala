@@ -24,30 +24,21 @@ object Tokenize {
   /** Streaming form of the T3 fold: only the folded spans are retained, so a
     * page never materializes its char stream (a 1 MB document would
     * otherwise hold ~1M char objects in flight per task, which wrecks GC at
-    * high parallelism). `feed`/`feedRaw` take one char at a time and are the
+    * high parallelism). [[feed]] takes one char at a time and is the
     * reference fold; the front-end feeds whole runs through [[feedRun]].
     */
   final class SpanStream {
     private val spans = ArrayBuffer.empty[SpanBuilder]
 
-    def feed(c: PChar): Unit =
-      feedRaw(c.text, 0, c.text.length, c.fontName, c.fontSize, c.fontWeight,
-        c.rotation, c.tight.x0, c.tight.y0, c.tight.x1, c.tight.y1,
-        c.loose.x0, c.loose.y0, c.loose.x1, c.loose.y1, c.index)
-
-    /** Feed one char given as a slice of `src`. Tight bounds seed a new
-      * span; loose bounds merge on append (entities.rs:265-300).
+    /** Feed one char. Tight bounds seed a new span; loose bounds merge on
+      * append (entities.rs:265-300).
       */
-    def feedRaw(src: CharSequence, from: Int, until: Int,
-        fontName: String, fontSize: Float, fontWeight: Int, rotation: Float,
-        tx0: Float, ty0: Float, tx1: Float, ty1: Float,
-        lx0: Float, ly0: Float, lx1: Float, ly1: Float, index: Int): Unit = {
-      val text = src.subSequence(from, until).toString
-      if (spans.isEmpty || !spans.last.tryAppend(text, fontName, fontSize,
-          fontWeight, rotation, lx0, ly0, lx1, ly1, index))
-        spans += new SpanBuilder(tx0, ty0, tx1, ty1, text, rotation, fontName,
-          fontSize, fontWeight, index, index)
-    }
+    def feed(c: PChar): Unit =
+      if (spans.isEmpty || !spans.last.tryAppend(c.text, c.fontName, c.fontSize,
+          c.fontWeight, c.rotation, c.loose.x0, c.loose.y0, c.loose.x1, c.loose.y1,
+          c.index))
+        spans += new SpanBuilder(c.tight.x0, c.tight.y0, c.tight.x1, c.tight.y1,
+          c.text, c.rotation, c.fontName, c.fontSize, c.fontWeight, c.index, c.index)
 
     /** Feed a run of chars, `text`, that share one font and whose tight and
       * loose bounds coincide: the f32 union of their boxes (folded in char

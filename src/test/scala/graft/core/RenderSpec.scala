@@ -233,28 +233,18 @@ class RenderSpec extends AnyFunSuite {
     sb.toString
   }
 
-  test("bbox floats print exactly as Float.toString") {
-    val edge = Seq(0f, -0f, 1f, -1f, 36f, 576f, 80.5f, 94.4f, 9999999f, -9999999f,
-      1e7f, -1e7f, 1.5e9f, 3e9f, Float.MaxValue, Float.MinPositiveValue, 1e-5f,
-      Float.NaN, Float.PositiveInfinity, Float.NegativeInfinity)
-    val rng = new scala.util.Random(11)
-    val sampled = Seq.fill(20000)(rng.nextInt(20000000) - 10000000).map(_.toFloat) ++
-      Seq.fill(2000)(java.lang.Float.intBitsToFloat(rng.nextInt()))
-    (edge ++ sampled).foreach { f =>
-      val got = Render.appendFloat(new java.lang.StringBuilder, f).toString
-      assert(got == java.lang.Float.toString(f), s"float bits ${java.lang.Float.floatToRawIntBits(f)}")
-    }
-  }
+  private def jsonStr(s: String): String =
+    Render.appendJsonStr(new java.lang.StringBuilder, s).toString
 
-  test("jsonStr: every escape branch equals the per-char form") {
+  test("appendJsonStr: every escape branch equals the per-char form") {
     val controls = (0 until 0x20).map(_.toChar).mkString
     val cases = Seq(
       "", "plain text", "say \"hi\"", "back\\slash", "two\nlines",
       "cr\rhere", "tab\there", controls, "\u0000lead", "trail\u001f",
       "𝔸 non-BMP 😀 pair", "\"\"\\\\\n\n", "mixed \"𝒳\"\t\u0001end",
       "\u007f del and \u00e9 stay raw")
-    cases.foreach(s => assert(Render.jsonStr(s) == perCharJsonStr(s), s"escape of ${perCharJsonStr(s)}"))
-    assert(Render.jsonStr("\u0001\u001f") == "\"\\u0001\\u001f\"")
+    cases.foreach(s => assert(jsonStr(s) == perCharJsonStr(s), s"escape of ${perCharJsonStr(s)}"))
+    assert(jsonStr("\u0001\u001f") == "\"\\u0001\\u001f\"")
     val rng = new scala.util.Random(7)
     (0 until 500).foreach { _ =>
       val s = Seq.fill(rng.nextInt(40))(rng.nextInt(6) match {
@@ -263,7 +253,7 @@ class RenderSpec extends AnyFunSuite {
         case 2 => "😀"
         case _ => rng.nextPrintableChar().toString
       }).mkString
-      assert(Render.jsonStr(s) == perCharJsonStr(s), s"escape of ${perCharJsonStr(s)}")
+      assert(jsonStr(s) == perCharJsonStr(s), s"escape of ${perCharJsonStr(s)}")
     }
   }
 }

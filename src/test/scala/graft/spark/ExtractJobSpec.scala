@@ -236,17 +236,34 @@ class ExtractJobSpec extends AnyFunSuite with BeforeAndAfterAll {
     def exchangeColumns(plan: SparkPlan): Seq[Seq[String]] =
       plans.collect(plan) { case e: ShuffleExchangeExec => e.output.map(_.name) }
     val ss = spark; import ss.implicits._
-    val pages = PagesTable.generate(spark, 24, partitions = 2)
+    // every field a row shares with the public extractDocument, plus the
+    // page columns it carries through
+    def fields(r: ExtractJob.ExtractedRow) = (r.url, r.extracted_text, r.markdown,
+      r.blocks_json, r.n_pages, r.n_blocks, r.n_elements, r.n_lines,
+      r.need_ocr_pages, r.parse_status, r.error_class, r.warc_ts, r.lang, r.bytes_in)
+    def oracle(p: PagesTable.PageRow) = {
+      val d = Extract.extractDocument(p.url, p.html)
+      (d.url, d.extractedText, d.markdown, d.blocksJson, d.nPages, d.nBlocks,
+        d.nElements, d.nLines, d.needOcrPages, d.parseStatus, d.errorClass,
+        p.warc_ts, p.lang, if (p.html == null) 0L else p.html.length.toLong)
+    }
+    val ts = new java.sql.Timestamp(0L)
+    val failing = Seq(
+      PagesTable.PageRow("u/empty", ts, Array.emptyByteArray, "t", "en"),
+      PagesTable.PageRow("u/null", ts, null, "t", "en"),
+      PagesTable.PageRow("u/bad", ts, "<page><p>a <blink>b</blink></p></page>".getBytes, "t", "en"))
+    val pages = PagesTable.generate(spark, 24, partitions = 2).union(failing.toDS())
+    val byUrl = pages.collect().map(p => p.url -> p).toMap
+    assert(failing.map(p => oracle(p)._11) == Seq("empty_doc", "empty_doc", "parse_error"))
     val done = Seq(PagesTable.genDoc(0).url, PagesTable.genDoc(5).url).toDF("url")
-    val expected = sequentialOracle()
     for ((d, skipped) <- Seq(None -> 0, Some(done) -> 2); balanced <- Seq(false, true)) {
       val input = ExtractJob.extractInput(pages, d, 4, balanced)
       val exchanges = exchangeColumns(input.queryExecution.executedPlan)
       assert(exchanges.exists(_.contains("html")), s"no repartition exchange: $exchanges")
       assert(exchanges.forall(!_.contains("text")), s"text shuffled: $exchanges")
       val rows = ExtractJob.extract(input).collect()
-      assert(rows.length == 24 - skipped)
-      rows.foreach(r => assert(r.extracted_text == expected(r.url)._1, r.url))
+      assert(rows.length == 27 - skipped)
+      rows.foreach(r => assert(fields(r) == oracle(byUrl(r.url)), r.url))
     }
     // the qx corpus and the flagship entry go through the same input
     val entry = exchangeColumns(graft.SparkEntry.entry(spark).queryExecution.executedPlan)
