@@ -75,13 +75,20 @@ object Assign {
       // Tie-breaks preserved: last max (Rust max_by), first min (min_by);
       // the distance fallback only runs when the intersection test fails
       // (both scores are pure, so this matches the reference's eager form).
+      // A zero-area line (a linebreak-only line, say) skips the scan, since
+      // it cannot pass the test: area == 0 needs finite coordinates (inf
+      // times anything is inf or NaN), each axis overlap lies in
+      // [0, max(0, extent)] or is NaN, and the product of those bounds is
+      // 0, so every intersection is 0 or NaN and so is the ratio's NaN.
       var best: LayoutBox = null
       var bestV = Float.NegativeInfinity
-      var i = 0
-      while (i < boxes.length) {
-        val v = boxes(i).bbox.intersection(line.bbox)
-        if (best == null || v >= bestV) { best = boxes(i); bestV = v }
-        i += 1
+      if (line.bbox.area != 0f) {
+        var i = 0
+        while (i < boxes.length) {
+          val v = boxes(i).bbox.intersection(line.bbox)
+          if (best == null || v >= bestV) { best = boxes(i); bestV = v }
+          i += 1
+        }
       }
       val maxIntersection =
         if (best != null && bestV / line.bbox.area > MinIntersectionLayout) best

@@ -60,6 +60,22 @@ object GraftImpl {
     out
   }
 
+  /** Spark 4.1's `lower`/`upper` on UTF8_BINARY strings, by the same steps
+    * (`CollationAwareUTF8String.toLowerCase`/`toUpperCase` in the 4.1.2
+    * bytecode): ASCII-only strings map byte-wise, anything else through
+    * ICU's full case mapping of the valid-UTF-8 string. Spark's path loads
+    * `CollationAwareUTF8String`, whose static initializer builds a
+    * title-case table over every code point; the first task to touch it
+    * holds up every other task of the stage on the class-init lock.
+    */
+  def toLowerCase(s: UTF8String): UTF8String =
+    if (s.isFullAscii) s.toLowerCaseAscii
+    else UTF8String.fromString(com.ibm.icu.lang.UCharacter.toLowerCase(s.toValidString))
+
+  def toUpperCase(s: UTF8String): UTF8String =
+    if (s.isFullAscii) s.toUpperCaseAscii
+    else UTF8String.fromString(com.ibm.icu.lang.UCharacter.toUpperCase(s.toValidString))
+
   /** Seeded xxHash64 of a UTF8String via Spark's own XXH64 implementation
     * (lane i uses seed i directly).
     */
@@ -1222,6 +1238,139 @@ case class TopKRankAgg(
   override def prettyName: String = "top_k_rank"
 }
 
+/** partition_counters(partition_id, c1, ..., cn): for each int partition
+  * id, the sum and the max of every integral counter c_i, as
+  * array<struct<partition_id, sum: array<bigint>, max: array<bigint>>> in
+  * ascending partition id. It is a grouped aggregate in the shape of one
+  * aggregate, so it can ride on a write as a Dataset observation, which
+  * takes aggregates but no groupBy: ExtractJob counts its lineage on the
+  * frame the commit writes instead of re-reading the commit. The buffer
+  * keeps 2n longs per partition id it sees, so the id space must be small.
+  * Rows with a null partition id are skipped; a null counter counts as 0.
+  */
+case class PartitionCounters(
+    partitionId: Expression,
+    counters: Seq[Expression],
+    mutableAggBufferOffset: Int = 0,
+    inputAggBufferOffset: Int = 0
+) extends org.apache.spark.sql.catalyst.expressions.aggregate
+    .TypedImperativeAggregate[scala.collection.mutable.LongMap[Array[Long]]] {
+  type Buffer = scala.collection.mutable.LongMap[Array[Long]]
+  private val n = counters.length
+
+  override def children: Seq[Expression] = partitionId +: counters
+  override def nullable: Boolean = false
+  override def dataType: DataType = ArrayType(StructType(Seq(
+    StructField("partition_id", IntegerType, nullable = false),
+    StructField("sum", ArrayType(LongType, containsNull = false), nullable = false),
+    StructField("max", ArrayType(LongType, containsNull = false), nullable = false))),
+    containsNull = false)
+
+  override def checkInputDataTypes()
+      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
+    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult._
+    val bad = (partitionId.dataType != IntegerType) +: counters.map(_.dataType match {
+      case ByteType | ShortType | IntegerType | LongType => false
+      case _ => true
+    })
+    if (!bad.contains(true)) TypeCheckSuccess
+    else TypeCheckFailure("partition_counters takes an int partition id and integral " +
+      s"counters, got ${children.map(_.dataType.simpleString).mkString(", ")}")
+  }
+
+  override def createAggregationBuffer(): Buffer = scala.collection.mutable.LongMap.empty
+
+  override def update(buffer: Buffer,
+      input: org.apache.spark.sql.catalyst.InternalRow): Buffer = {
+    val pid = partitionId.eval(input)
+    if (pid != null) {
+      val key = pid.asInstanceOf[Int].toLong
+      var acc = buffer.getOrNull(key)
+      val first = acc == null
+      if (first) { acc = new Array[Long](2 * n); buffer.update(key, acc) }
+      var i = 0
+      while (i < n) {
+        val c = counters(i).eval(input)
+        val v = if (c == null) 0L else c.asInstanceOf[Number].longValue
+        acc(i) += v
+        acc(n + i) = if (first) v else math.max(acc(n + i), v)
+        i += 1
+      }
+    }
+    buffer
+  }
+
+  override def merge(buffer: Buffer, other: Buffer): Buffer = {
+    other.foreachEntry { (key, o) =>
+      val acc = buffer.getOrNull(key)
+      if (acc == null) buffer.update(key, o)
+      else {
+        var i = 0
+        while (i < n) {
+          acc(i) += o(i)
+          acc(n + i) = math.max(acc(n + i), o(n + i))
+          i += 1
+        }
+      }
+    }
+    buffer
+  }
+
+  override def eval(buffer: Buffer): Any = {
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    val keys = buffer.keys.toArray
+    java.util.Arrays.sort(keys)
+    new GenericArrayData(keys.map { k =>
+      val acc = buffer(k)
+      org.apache.spark.sql.catalyst.InternalRow(k.toInt,
+        new GenericArrayData(java.util.Arrays.copyOfRange(acc, 0, n)),
+        new GenericArrayData(java.util.Arrays.copyOfRange(acc, n, 2 * n))): AnyRef
+    })
+  }
+
+  override def serialize(buffer: Buffer): Array[Byte] = {
+    val bb = java.nio.ByteBuffer.allocate(buffer.size * (8 + 16 * n))
+    buffer.foreachEntry { (key, acc) => bb.putLong(key); acc.foreach(bb.putLong) }
+    bb.array()
+  }
+
+  override def deserialize(bytes: Array[Byte]): Buffer = {
+    val bb = java.nio.ByteBuffer.wrap(bytes)
+    val buffer = createAggregationBuffer()
+    while (bb.hasRemaining) {
+      val key = bb.getLong
+      buffer.update(key, Array.fill(2 * n)(bb.getLong))
+    }
+    buffer
+  }
+
+  override def withNewMutableAggBufferOffset(newOffset: Int): PartitionCounters =
+    copy(mutableAggBufferOffset = newOffset)
+  override def withNewInputAggBufferOffset(newOffset: Int): PartitionCounters =
+    copy(inputAggBufferOffset = newOffset)
+  override protected def withNewChildrenInternal(
+      newChildren: IndexedSeq[Expression]): PartitionCounters =
+    copy(partitionId = newChildren.head, counters = newChildren.tail)
+  override def prettyName: String = "partition_counters"
+}
+
+/** graft_lower(s) / graft_upper(s): Spark's `lower`/`upper` on plain
+  * strings, computed by [[GraftImpl.toLowerCase]]/[[GraftImpl.toUpperCase]].
+  */
+case class CaseMap(child: Expression, upper: Boolean) extends UnaryExpression {
+  override def dataType: DataType = StringType
+  override protected def nullSafeEval(input: Any): Any = {
+    val s = input.asInstanceOf[UTF8String]
+    if (upper) GraftImpl.toUpperCase(s) else GraftImpl.toLowerCase(s)
+  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c =>
+      s"graft.functions.GraftImpl.${if (upper) "toUpperCase" else "toLowerCase"}($c)")
+  override protected def withNewChildInternal(newChild: Expression): CaseMap =
+    copy(child = newChild)
+  override def prettyName: String = if (upper) "graft_upper" else "graft_lower"
+}
+
 /** simhash64(text): 64-bit SimHash of a string (document-level near-dup key). */
 case class SimHash64(child: Expression) extends UnaryExpression {
   // input contract: StringType (AbstractDataType/ExpectsInputTypes are
@@ -1545,6 +1694,13 @@ object GraftFunctions {
       exprs => BpeMerge(exprs(0), exprs(1), exprs(2)), "built-in")
     reg.createOrReplaceTempFunction("ac_scan",
       exprs => AcScan(exprs(0), splitPhrases(strLit(exprs(1)))), "built-in")
+    reg.createOrReplaceTempFunction("graft_lower",
+      exprs => CaseMap(exprs.head, upper = false), "built-in")
+    reg.createOrReplaceTempFunction("graft_upper",
+      exprs => CaseMap(exprs.head, upper = true), "built-in")
+    reg.createOrReplaceTempFunction("partition_counters",
+      exprs => PartitionCounters(exprs.head, exprs.tail).toAggregateExpression(),
+      "built-in")
   }
 
   private[graft] def intLit(e: Expression): Int = e match {
@@ -1658,6 +1814,17 @@ object GraftFunctions {
     ensureRegistered()
     call_function("top_k_rank", sortKey.cast("double"), payload.cast("long"),
       org.apache.spark.sql.functions.lit(k))
+  }
+
+  /** Spark's `lower` without its class-init stall; graft code calls this. */
+  def lower(s: Column): Column = { ensureRegistered(); call_function("graft_lower", s) }
+
+  /** Spark's `upper` without its class-init stall; graft code calls this. */
+  def upper(s: Column): Column = { ensureRegistered(); call_function("graft_upper", s) }
+
+  /** Per-partition-id sums and maxes of integral counters (an aggregate). */
+  def partitionCounters(partitionId: Column, counters: Column*): Column = {
+    ensureRegistered(); call_function("partition_counters", partitionId +: counters: _*)
   }
 
   /** Multi-phrase blocklist scan; phrases must not contain '|' (the SQL

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, GraftCheckpoint, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.GraftFunctions
 
 /** Deduplication suite over the `documents` table — the operations a
   * large-scale training-data pipeline runs before anything else.
@@ -22,7 +23,7 @@ object Dedup {
 
   /** Normalized exact-dup fingerprint: lowercase, collapse whitespace, md5. */
   def fingerprintCol(text: Column): Column =
-    md5(trim(regexp_replace(lower(text), "\\s+", " ")))
+    md5(trim(regexp_replace(GraftFunctions.lower(text), "\\s+", " ")))
 
   /** Histogram of exact-duplicate group sizes (1 = unique doc). The classic
     * first pass of corpus dedup: one hash-shuffle on the fingerprint.

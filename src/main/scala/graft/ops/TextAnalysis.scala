@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.GraftFunctions
 import org.apache.spark.sql.types.DecimalType
 
 /** Text-analysis suite over the `documents` table: language ID, quality
@@ -55,7 +56,7 @@ object TextAnalysis {
     */
   def langId(spark: SparkSession, dir: String): DataFrame = {
     def hits(markers: String): Column =
-      regexp_count(lower(col("text")), lit("\\b(" + markers + ")\\b")).cast("long")
+      regexp_count(GraftFunctions.lower(col("text")), lit("\\b(" + markers + ")\\b")).cast("long")
     val en = hits("the|and|of|is|was|with")
     val fr = hits("le|la|les|et|est|une")
     val de = hits("der|die|das|und|ist|mit")
@@ -250,7 +251,7 @@ object TextAnalysis {
   def tfidfTopTerms(spark: SparkSession, dir: String, k: Int = 3): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val words = docs(spark, dir).select(col("doc_id"),
-      explode(split(trim(lower(col("text"))), "\\s+")).as("term"))
+      explode(split(trim(GraftFunctions.lower(col("text"))), "\\s+")).as("term"))
     // materialized once per query (r6; eager per-invocation local checkpoint): the df marginal and the scoring join both read tf —
     // each re-ran the tokenize+count chain before
     val tf = words.groupBy(col("doc_id"), col("term"))
@@ -303,7 +304,7 @@ object TextAnalysis {
     * reference for the one-pass expression: OpsSpec asserts row equality.
     */
   private[graft] def repetitionSignalsComposed(spark: SparkSession, dir: String): DataFrame = {
-    val norm = split(trim(regexp_replace(lower(col("text")), "\\s+", " ")), " ")
+    val norm = split(trim(regexp_replace(GraftFunctions.lower(col("text")), "\\s+", " ")), " ")
     val base = docs(spark, dir).select(col("doc_id"), norm.as("w"))
       .select(col("doc_id"), col("w"),
         size(col("w")).cast("long").as("n_words"),
@@ -378,7 +379,7 @@ object TextAnalysis {
     * the portable-hash idea applied to floating-point aggregation.
     */
   def lmScore(spark: SparkSession, dir: String): DataFrame = {
-    val norm = split(trim(regexp_replace(lower(col("text")), "\\s+", " ")), " ")
+    val norm = split(trim(regexp_replace(GraftFunctions.lower(col("text")), "\\s+", " ")), " ")
     // tokenize once (r6): the bigram-instance, unigram-count and vocab
     // branches each re-ran the lower/regexp/split scan (4 parquet scans in
     // the r6 plan audit; no shared exchange exists to reuse — the count
@@ -436,7 +437,7 @@ object TextAnalysis {
     * aggregation), so the oracle reproduces the whole score bit-for-bit.
     */
   def knLmScore(spark: SparkSession, dir: String): DataFrame = {
-    val norm = split(trim(regexp_replace(lower(col("text")), "\\s+", " ")), " ")
+    val norm = split(trim(regexp_replace(GraftFunctions.lower(col("text")), "\\s+", " ")), " ")
     // tokenize once (the qt16 r6 rationale)
     val base = ScanLayout.ensureParallel(docs(spark, dir))
       .select(col("doc_id"), norm.as("w"))
@@ -577,7 +578,7 @@ object TextAnalysis {
     */
   def dfPrune(spark: SparkSession, dir: String, maxDfPct: Int = 78): DataFrame = {
     require(maxDfPct > 0 && maxDfPct < 100, s"maxDfPct in (0,100), got $maxDfPct")
-    val norm = split(trim(regexp_replace(lower(col("text")), "\\s+", " ")), " ")
+    val norm = split(trim(regexp_replace(GraftFunctions.lower(col("text")), "\\s+", " ")), " ")
     val words = docs(spark, dir)
       .select(col("doc_id"), posexplode(norm).as(Seq("pos", "word")))
     val df = words.groupBy(col("word"))
@@ -702,7 +703,7 @@ object TextAnalysis {
     * count is replayed exactly.
     */
   def bpeMerges(spark: SparkSession, dir: String, k: Int = 8): DataFrame = {
-    val norm = split(trim(regexp_replace(lower(col("text")), "\\s+", " ")), " ")
+    val norm = split(trim(regexp_replace(GraftFunctions.lower(col("text")), "\\s+", " ")), " ")
     var types = docs(spark, dir)
       .select(explode(norm).as("word"))
       .filter(col("word") =!= "")
@@ -788,7 +789,7 @@ object TextAnalysis {
     */
   private def hashedFeats(spark: SparkSession, dir: String,
       buckets: Int): DataFrame = {
-    val norm = split(trim(regexp_replace(lower(col("text")), "\\s+", " ")), " ")
+    val norm = split(trim(regexp_replace(GraftFunctions.lower(col("text")), "\\s+", " ")), " ")
     val base = ScanLayout.ensureParallel(docs(spark, dir))
       .select(col("doc_id"), col("lang"), norm.as("w"))
     val unis = transform(col("w"), x => concat(lit("u:"), x))
@@ -932,8 +933,9 @@ object TextAnalysis {
     val ellipsisLines = size(filter(lines, l => l.rlike("(\\.\\.\\.|…)\\s*$"))).cast("long")
     val alphaWords = size(filter(words, w => w.rlike("[A-Za-z]"))).cast("long")
     val required = Seq("the", "be", "to", "of", "and", "that", "have", "with")
+    val lowered = GraftFunctions.lower(col("text"))
     val stopDistinct = required
-      .map(sw => when(lower(col("text")).rlike("\\b" + sw + "\\b"), 1L).otherwise(0L))
+      .map(sw => when(lowered.rlike("\\b" + sw + "\\b"), 1L).otherwise(0L))
       .reduce(_ + _)
     docs(spark, dir)
       .select(
@@ -1017,7 +1019,7 @@ object TextAnalysis {
     val merges = bpeMerges(spark, dir, k).collect()
       .map(r => (r.getInt(0), r.getString(1), r.getString(2)))
       .sortBy(_._1)
-    val norm = split(trim(regexp_replace(lower(col("text")), "\\s+", " ")), " ")
+    val norm = split(trim(regexp_replace(GraftFunctions.lower(col("text")), "\\s+", " ")), " ")
     val dw = docs(spark, dir)
       .select(col("doc_id"), explode(norm).as("word"))
       .filter(col("word") =!= "")
@@ -1360,7 +1362,7 @@ object TextAnalysis {
     // tokenize once (the qt16 r6 rationale): unigram counts, totals, bigram
     // counts and totals each re-ran the normalize+split scan (4x)
     val w = ScanLayout.ensureParallel(docs(spark, dir)).select(
-      split(trim(regexp_replace(lower(col("text")), "\\s+", " ")), " ").as("w"))
+      split(trim(regexp_replace(GraftFunctions.lower(col("text")), "\\s+", " ")), " ").as("w"))
       .localCheckpoint(true)
     val uni = w.select(explode(col("w")).as("word"))
     val cu = uni.groupBy(col("word")).agg(count(lit(1)).as("c"))
@@ -1503,7 +1505,7 @@ object TextAnalysis {
     require(buckets >= 2, s"need buckets >= 2, got $buckets")
     val words = docs(spark, dir).select(
       (col("doc_id") % 2).cast("int").as("half"),
-      explode(split(trim(regexp_replace(lower(col("text")), "\\s+", " ")), " "))
+      explode(split(trim(regexp_replace(GraftFunctions.lower(col("text")), "\\s+", " ")), " "))
         .as("w"))
       .filter(col("w") =!= "")
     val cells = words.select(col("half"),
@@ -1541,7 +1543,7 @@ object TextAnalysis {
     */
   def tokenHistogram(documents: DataFrame, buckets: Int = 256): DataFrame =
     documents
-      .select(explode(split(trim(regexp_replace(lower(col("text")), "\\s+", " ")),
+      .select(explode(split(trim(regexp_replace(GraftFunctions.lower(col("text")), "\\s+", " ")),
         " ")).as("w"))
       .filter(col("w") =!= "")
       .select((conv(substring(md5(col("w")), 1, 15), 16, 10).cast("long")
@@ -1684,7 +1686,7 @@ object TextAnalysis {
     val w = size(split(trim(col("text")), "\\s+")).cast("long")
     val s = greatest(regexp_count(col("text"), lit("[.!?]+")).cast("long"),
       lit(1L))
-    val syl = regexp_count(lower(col("text")), lit("[aeiouy]+")).cast("long")
+    val syl = regexp_count(GraftFunctions.lower(col("text")), lit("[aeiouy]+")).cast("long")
     val wps = col("n_words").cast("double") / col("n_sentences").cast("double")
     val spw = col("n_syllables").cast("double") / col("n_words").cast("double")
     docs(spark, dir)
@@ -1857,7 +1859,7 @@ object TextAnalysis {
   def heapsCurve(spark: SparkSession, dir: String, buckets: Int = 10): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val toks = docs(spark, dir).select(col("doc_id"),
-      explode(split(trim(lower(col("text"))), "\\s+")).as("term"))
+      explode(split(trim(GraftFunctions.lower(col("text"))), "\\s+")).as("term"))
     val maxId = toks.agg(max(col("doc_id")).as("max_id"))
     // genuine integer floor division (r6, ADVICE): `/` is DOUBLE division
     // in Spark and only coincides with the oracle's // while
@@ -1905,7 +1907,7 @@ object TextAnalysis {
   def zipfCurve(spark: SparkSession, dir: String, k: Int = 32): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val cnt = docs(spark, dir).select(
-        explode(split(trim(lower(col("text"))), "\\s+")).as("term"))
+        explode(split(trim(GraftFunctions.lower(col("text"))), "\\s+")).as("term"))
       .groupBy(col("term")).agg(count(lit(1)).as("cnt"))
     val scal = cnt.agg(max(col("cnt")).as("c1"), sum(col("cnt")).as("tot"))
     val head = cnt.orderBy(col("cnt").desc, col("term").asc).limit(k)
@@ -2018,7 +2020,7 @@ object TextAnalysis {
     // token table (3 normalize+split scans before); tf feeds both the df
     // marginal and the posting build
     val words = ScanLayout.ensureParallel(docs(spark, dir))
-      .select(col("doc_id"), split(trim(lower(col("text"))), "\\s+").as("w"))
+      .select(col("doc_id"), split(trim(GraftFunctions.lower(col("text"))), "\\s+").as("w"))
       .localCheckpoint(true)
     val tokens = words.select(col("doc_id"), explode(col("w")).as("term"))
     val tf = tokens.groupBy(col("doc_id"), col("term"))
@@ -2095,7 +2097,7 @@ object TextAnalysis {
       .select(col("doc_id"),
         length(col("text")).cast("long").as("n_chars_t"),
         graft.functions.GraftFunctions
-          .acScan(lower(col("text")), phrases).as("s"))
+          .acScan(GraftFunctions.lower(col("text")), phrases).as("s"))
       .select(col("doc_id"),
         col("s.n_hits").as("n_hits"),
         col("s.n_phrases").as("n_phrases"),

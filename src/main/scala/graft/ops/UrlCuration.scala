@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.GraftFunctions
 
 /** URL-level curation — the stage web pipelines run BEFORE any text looks at
   * a byte: per-domain quotas (C4/RefinedWeb cap how much any one host may
@@ -37,7 +38,7 @@ object UrlCuration {
     val host = concat(lit("d"), hostId.cast("string"),
       when(hostId % 7 === 0, lit(".spam.example")).otherwise(lit(".example.com")))
     val scheme = when(id % 2 === 0, lit("HTTPS")).otherwise(lit("https"))
-    val noisyHost = when(id % 3 === 0, upper(host)).otherwise(host)
+    val noisyHost = when(id % 3 === 0, GraftFunctions.upper(host)).otherwise(host)
     val path = concat(lit("/p/"), pid.cast("string"),
       when(id % 7 === 0, lit("/")).otherwise(lit("")))
     val params = concat_ws("&",
@@ -59,7 +60,7 @@ object UrlCuration {
   private[graft] def canonicalize(u: Column): Column = {
     val noFrag = regexp_replace(u, "#.*$", "")
     val schemeHost = regexp_extract(noFrag, "^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*", 0)
-    val cased = concat(lower(schemeHost),
+    val cased = concat(GraftFunctions.lower(schemeHost),
       noFrag.substr(length(schemeHost) + 1, lit(1 << 20)))
     val noTrack = regexp_replace(cased, "[?&](utm_[a-z_]+|ref)=[^&#]*", "")
     // separator repair: the FIRST '&' preceding any '?' becomes '?' (the
@@ -90,7 +91,7 @@ object UrlCuration {
   def domainCap(spark: SparkSession, dir: String, cap: Int = 8): DataFrame = {
     val u = withRawUrl(docs(spark, dir))
       .withColumn("domain",
-        regexp_extract(lower(col("raw_url")), "://([^/?#]*)", 1))
+        regexp_extract(GraftFunctions.lower(col("raw_url")), "://([^/?#]*)", 1))
       .select(col("doc_id"), col("n_chars"), col("domain"))
     val topk = u.groupBy(col("domain"))
       .agg(
@@ -184,7 +185,7 @@ object UrlCuration {
     */
   def urlFeatures(spark: SparkSession, dir: String): DataFrame = {
     val u = withRawUrl(docs(spark, dir))
-    val host = lower(regexp_extract(col("raw_url"), "^[A-Za-z]+://([^/?#]+)", 1))
+    val host = GraftFunctions.lower(regexp_extract(col("raw_url"), "^[A-Za-z]+://([^/?#]+)", 1))
     val path = regexp_extract(col("raw_url"), "^[A-Za-z]+://[^/?#]+([^?#]*)", 1)
     val query = regexp_extract(col("raw_url"), "\\?([^#]*)", 1)
     u.withColumn("host", host)

@@ -1,10 +1,12 @@
 package graft.spark
 
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.util.LongAccumulator
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
+import scala.jdk.CollectionConverters._
 import graft.core.{Extract, Render}
+import graft.functions.GraftFunctions
 import graft.spark.PagesTable.PageRow
 
 /** The extraction job: resume anti-join -> skew-aware repartition ->
@@ -12,9 +14,9 @@ import graft.spark.PagesTable.PageRow
   * per-partition lineage (SURVEY.md section 3.4).
   *
   * Exactly one narrow shuffle (the repartition); extraction itself never
-  * shuffles. Lineage is derived relationally from the extraction output
-  * (a groupBy over partition_id) instead of side-channel plumbing, so it
-  * stays a plain Catalyst aggregate.
+  * shuffles. Lineage is counted by the commit's own write job: the merge
+  * observes a per-partition counter aggregate on exactly the rows it
+  * writes, so no job re-reads the commit.
   */
 object ExtractJob {
 
@@ -38,20 +40,6 @@ object ExtractJob {
       engine_version: String,
       partition_id: Int,
       bytes_in: Long
-  )
-
-  final case class Metrics(
-      docsOk: LongAccumulator,
-      docsFailed: LongAccumulator,
-      bytesIn: LongAccumulator,
-      lines: LongAccumulator
-  )
-
-  def newMetrics(spark: SparkSession): Metrics = Metrics(
-    spark.sparkContext.longAccumulator("graft.docs_ok"),
-    spark.sparkContext.longAccumulator("graft.docs_failed"),
-    spark.sparkContext.longAccumulator("graft.bytes_in"),
-    spark.sparkContext.longAccumulator("graft.lines")
   )
 
   /** Skew-aware repartition ("html.length-bucketed", SURVEY.md section 4.2).
@@ -136,7 +124,7 @@ object ExtractJob {
     * partition-locally. Never collects; never shuffles. Rows carry only the
     * three renders they store: ExtractJob never renders HTML.
     */
-  def extract(pages: Dataset[PageRow], metrics: Option[Metrics] = None): Dataset[ExtractedRow] = {
+  def extract(pages: Dataset[PageRow]): Dataset[ExtractedRow] = {
     val spark = pages.sparkSession
     import spark.implicits._
     pages.mapPartitions { it =>
@@ -152,16 +140,10 @@ object ExtractJob {
           need_ocr_pages = d.needOcrPages, parse_status = status,
           error_class = errorClass, engine_version = Extract.EngineVersion,
           partition_id = pid, bytes_in = bytesIn)
-        val out = Extract.extractBlocks(page.url, page.html)(
+        Extract.extractBlocks(page.url, page.html)(
           d => row(Render.toText(d.blocks), Render.toMarkdown(d.blocks, None),
             Render.blocksToJson(d.blocks), d, "ok", ""),
           row("", "", "[]", Extract.NoBlocks, "error", _))
-        metrics.foreach { m =>
-          if (out.parse_status == "ok") m.docsOk.add(1) else m.docsFailed.add(1)
-          m.bytesIn.add(bytesIn)
-          m.lines.add(out.n_lines.toLong)
-        }
-        out
       }
     }
   }
@@ -303,27 +285,47 @@ object ExtractJob {
       col("y1") +: (ov ++ cr): _*)
   }
 
-  /** Per-partition lineage rows (partition id, doc count, bytes, failure
-    * taxonomy) — a plain Catalyst aggregate over the extraction output.
+  /** The per-partition counters a `lineage/` row sums over the committed
+    * rows, in its column order after `partition_id`; `max_doc_bytes`, the
+    * one max, is taken of `bytes_in` (the second counter).
     */
-  def lineage(extracted: DataFrame, runId: String): DataFrame =
-    extracted.groupBy(col("partition_id")).agg(
-      count(lit(1)).as("doc_count"),
-      sum(col("bytes_in")).as("bytes_in"),
-      max(col("bytes_in")).as("max_doc_bytes"),
-      sum(col("n_lines")).as("lines"),
-      sum(col("n_elements")).as("elements"),
-      sum(col("n_blocks")).as("blocks"),
-      sum(when(col("parse_status") === "ok", 1).otherwise(0)).as("ok_count"),
-      sum(when(col("error_class") === "parse_error", 1).otherwise(0)).as("parse_errors"),
-      sum(when(col("error_class") === "empty_doc", 1).otherwise(0)).as("empty_docs"),
-      sum(when(col("error_class") === "oversize", 1).otherwise(0)).as("oversize_docs"),
-      sum(when(col("error_class") === "exception", 1).otherwise(0)).as("exceptions")
-    ).withColumn("run_id", lit(runId))
+  private val LineageCounters: Seq[(String, Column)] = {
+    def is(c: Column) = when(c, 1).otherwise(0)
+    def errors(cls: String) = is(col("error_class") === cls)
+    Seq(
+      "doc_count" -> lit(1),
+      "bytes_in" -> col("bytes_in"),
+      "lines" -> col("n_lines"),
+      "elements" -> col("n_elements"),
+      "blocks" -> col("n_blocks"),
+      "ok_count" -> is(col("parse_status") === "ok"),
+      "parse_errors" -> errors("parse_error"),
+      "empty_docs" -> errors("empty_doc"),
+      "oversize_docs" -> errors("oversize"),
+      "exceptions" -> errors("exception"))
+  }
+
+  /** The `lineage/` schema; appends mix with the files of earlier runs. */
+  private val LineageSchema: StructType = {
+    val counts = LineageCounters.map(_._1)
+    StructType(StructField("partition_id", IntegerType) +:
+      (counts.take(2) ++ ("max_doc_bytes" +: counts.drop(2)))
+        .map(StructField(_, LongType)) :+ StructField("run_id", StringType))
+  }
+
+  /** One `lineage/` row per partition from its observed sums and maxes:
+    * the sums in counter order, with the max of `bytes_in` after its sum.
+    */
+  private def lineageRows(observed: Seq[Row], runId: String): Seq[Row] =
+    observed.map { p =>
+      val (sum, max) = (p.getSeq[Long](1), p.getSeq[Long](2))
+      Row.fromSeq((p.getInt(0) +: sum.take(2)) ++ (max(1) +: sum.drop(2)) :+ runId)
+    }
 
   /** Full resumable run: anti-join against committed urls, repartition,
-    * extract, MERGE INTO the snapshot store, append lineage.
-    * Returns (docs extracted this run).
+    * extract, then [[commit]]. On a fresh store that is three jobs: the
+    * exchange, the write and the lineage append.
+    * Returns the docs this run committed.
     */
   def run(
       spark: SparkSession,
@@ -333,18 +335,28 @@ object ExtractJob {
       partitions: Int,
       balanced: Boolean = false
   ): Long = {
-    val repart = extractInput(pages, store.committedKeys(spark, "url"),
-      partitions, balanced)
-    val metrics = newMetrics(spark)
-    val extracted = extract(repart, Some(metrics))
-    // Single pass: MERGE writes the snapshot; lineage is then derived from
-    // the commit's own files (no cache, no recompute — the write IS the scan).
-    val newFiles = store.merge(extracted.toDF(), "url")
-    if (newFiles.nonEmpty) {
-      val committed = spark.read.parquet(newFiles: _*)
-      lineage(committed, runId)
+    val done = store.committedKeys(spark, "url")
+    commit(store, extract(extractInput(pages, done.map(_._2), partitions, balanced)),
+      runId, done.map(_._1))
+  }
+
+  /** MERGE `extracted` INTO the store and append one `lineage/` row per
+    * partition. The merge observes the lineage counters on the rows it
+    * commits, so no job re-reads the commit; `excluded` is the snapshot
+    * whose urls `extracted` already lacks, which spares the merge its own
+    * anti-join unless another writer committed in between. Returns the
+    * rows committed.
+    */
+  private[graft] def commit(store: SnapshotStore, extracted: Dataset[ExtractedRow],
+      runId: String, excluded: Option[Long]): Long = {
+    val counters = GraftFunctions.partitionCounters(col("partition_id"),
+      LineageCounters.map(_._2): _*).as("lineage")
+    val observed = store.merge(extracted.toDF(), "url", Seq(counters), excluded)
+      .observed("lineage").asInstanceOf[Seq[Row]]
+    val rows = lineageRows(observed, runId)
+    if (rows.nonEmpty)
+      extracted.sparkSession.createDataFrame(rows.asJava, LineageSchema).coalesce(1)
         .write.mode("append").parquet(s"${store.root}/lineage")
-    }
-    metrics.docsOk.value + metrics.docsFailed.value
+    rows.map(_.getLong(1)).sum
   }
 }

@@ -63,9 +63,12 @@ object ExtractJobRunner {
 
     // lineage summary: byte balance across partitions (skew audit)
     import org.apache.spark.sql.functions._
-    val lin = spark.read.parquet(s"$storeRoot/lineage")
-      .filter(col("run_id") === runId)
-    if (!lin.isEmpty) {
+    // a run that commits no rows appends no lineage, so a store whose runs
+    // all committed nothing has no lineage directory
+    val linDir = java.nio.file.Paths.get(storeRoot, "lineage")
+    val lin = if (!java.nio.file.Files.isDirectory(linDir)) None
+      else Some(spark.read.parquet(linDir.toString).filter(col("run_id") === runId))
+    lin.filterNot(_.isEmpty).foreach { lin =>
       val stats = lin.agg(
         max(col("bytes_in")).as("max_bytes"),
         avg(col("bytes_in")).as("mean_bytes"),

@@ -3,11 +3,11 @@ package graft.spark
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import graft.functions.{AcScan, BpeMerge, CharEntropy, CmsSketch,
+import graft.functions.{AcScan, BpeMerge, CaseMap, CharEntropy, CmsSketch,
   CosineSimilarity, DotFF, DotI64, GopherRepetition, GraftFunctions,
   HllMerge, HllSketch, JaccardSorted, KmvSketch, MinHashAffine, MinHashSig,
-  RepetitionProfile, ScriptProfile, SimHash64, SrpSigs, TopKRankAgg,
-  WinnowFps, WordShingles}
+  PartitionCounters, RepetitionProfile, ScriptProfile, SimHash64, SrpSigs,
+  TopKRankAgg, WinnowFps, WordShingles}
 
 /** Catalyst extension point: register the engine's native expressions at
   * session build time so plain SQL can use them —
@@ -51,6 +51,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       exprs => HllSketch(exprs(0), intLit(exprs(1))).toAggregateExpression())
     inject("hll_merge", classOf[HllMerge],
       exprs => HllMerge(exprs(0), intLit(exprs(1))).toAggregateExpression())
+    inject("graft_lower", classOf[CaseMap], exprs => CaseMap(exprs.head, upper = false))
+    inject("graft_upper", classOf[CaseMap], exprs => CaseMap(exprs.head, upper = true))
+    inject("partition_counters", classOf[PartitionCounters],
+      exprs => PartitionCounters(exprs.head, exprs.tail).toAggregateExpression())
     inject("top_k_rank", classOf[TopKRankAgg],
       exprs => TopKRankAgg(exprs(0), exprs(1), intLit(exprs(2)))
         .toAggregateExpression())

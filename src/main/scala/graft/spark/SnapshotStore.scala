@@ -2,7 +2,7 @@ package graft.spark
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.{FileAlreadyExistsException, Files, Path, Paths, StandardCopyOption}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import scala.jdk.CollectionConverters._
 
 /** Parquet-backed snapshot layer emulating Iceberg's MERGE INTO + snapshot
@@ -19,7 +19,9 @@ import scala.jdk.CollectionConverters._
   *    current snapshot (left-anti against committed keys), then commits a new
   *    manifest atomically. Re-running a partially-committed job is therefore
   *    idempotent: already-committed urls are skipped, the final table has no
-  *    duplicates (the north rule's resumability requirement).
+  *    duplicates (the north rule's resumability requirement). A caller that
+  *    already anti-joined against snapshot N passes N as `excluded`; the
+  *    merge then skips its own anti-join as long as N is still current.
   *  - Readers see only committed snapshots; a crash mid-write leaves data
   *    files without a manifest, which are invisible and harmless.
   *  - MULTI-WRITER commits use Iceberg's optimistic-concurrency protocol:
@@ -40,11 +42,24 @@ import scala.jdk.CollectionConverters._
 trait TableStore {
   /** Current committed table; None when no snapshot exists. */
   def read(spark: SparkSession): Option[DataFrame]
-  /** Committed keys only (column-pruned). */
-  def committedKeys(spark: SparkSession, keyCol: String): Option[DataFrame]
-  /** MERGE-INTO-when-not-matched; returns the newly visible data files. */
-  def merge(df: DataFrame, keyCol: String): Vector[String]
+  /** The current snapshot's id and its committed keys (column-pruned), both
+    * from one manifest; None when no snapshot exists.
+    */
+  def committedKeys(spark: SparkSession, keyCol: String): Option[(Long, DataFrame)]
+  /** MERGE-INTO-when-not-matched. `observe` names aggregates computed on
+    * exactly the rows the commit writes; `excluded` names a snapshot whose
+    * keys `df` already lacks, so the merge skips its own anti-join while
+    * that snapshot is still the base.
+    */
+  def merge(df: DataFrame, keyCol: String, observe: Seq[Column] = Nil,
+      excluded: Option[Long] = None): Commit
 }
+
+/** What a merge committed: the newly visible data files, and the values of
+  * the aggregates it was asked to observe over the rows those files hold,
+  * by name (empty when it was asked for none).
+  */
+final case class Commit(files: Vector[String], observed: Map[String, Any])
 
 final class SnapshotStore(val root: String) extends TableStore {
 
@@ -124,17 +139,29 @@ final class SnapshotStore(val root: String) extends TableStore {
     }
   }
 
-  /** Committed keys only (column-pruned scan of the key column). */
-  def committedKeys(spark: SparkSession, keyCol: String): Option[DataFrame] =
-    read(spark).map(_.select(keyCol).distinct())
+  /** The current snapshot's id and a column-pruned scan of its keys, from
+    * one manifest read; None when the table is empty.
+    */
+  def committedKeys(spark: SparkSession, keyCol: String): Option[(Long, DataFrame)] =
+    currentSnapshotId.flatMap { id =>
+      val files = manifestFiles(id)
+      if (files.isEmpty) None else Some(id -> keysOf(spark, files, keyCol))
+    }
+
+  private def keysOf(spark: SparkSession, files: Vector[String], keyCol: String) =
+    spark.read.parquet(files: _*).select(keyCol).distinct()
 
   /** MERGE-INTO-when-not-matched: write `df` minus already-committed keys as
-    * a new snapshot. Returns the newly visible data files (so callers can
-    * derive per-commit aggregates without recomputing or caching upstream).
-    * Safe under concurrent writers (see class doc); losing attempts
-    * re-validate and retry, so overlapping keys commit exactly once.
+    * a new snapshot. Returns the newly visible data files and the `observe`
+    * aggregates over the rows they hold, counted by the write job itself (so
+    * callers need not re-read the commit). The observation sits above the
+    * anti-join and is made fresh for every attempt: a lost attempt's rows
+    * are never counted. Safe under concurrent writers (see class doc);
+    * losing attempts re-validate and retry, so overlapping keys commit
+    * exactly once.
     */
-  def merge(df: DataFrame, keyCol: String): Vector[String] = {
+  def merge(df: DataFrame, keyCol: String, observe: Seq[Column] = Nil,
+      excluded: Option[Long] = None): Commit = {
     val spark = df.sparkSession
     val maxRetries = 10
     var attempt = 0
@@ -147,18 +174,20 @@ final class SnapshotStore(val root: String) extends TableStore {
       val nonce = java.lang.Long.toHexString(
         System.nanoTime() ^ Thread.currentThread().getId << 48)
       val dataDir = Paths.get(root, "data", s"snap-$newId-$nonce")
+      // the anti-join runs unless `df` already excludes the base's keys
       val toWrite =
-        if (baseFiles.isEmpty) df
-        else df.join(
-          spark.read.parquet(baseFiles: _*).select(keyCol).distinct(),
-          Seq(keyCol), "left_anti")
-      toWrite.write.mode("overwrite").parquet(dataDir.toString)
+        if (baseFiles.isEmpty || excluded == baseId) df
+        else df.join(keysOf(spark, baseFiles, keyCol), Seq(keyCol), "left_anti")
+      val observation = if (observe.isEmpty) None else Some(Observation())
+      observation.fold(toWrite)(o => toWrite.observe(o, observe.head, observe.tail: _*))
+        .write.mode("overwrite").parquet(dataDir.toString)
       val listing = Files.list(dataDir)
       val newFiles =
         try listing.iterator().asScala.map(_.toString)
           .filter(_.endsWith(".parquet")).toVector
         finally listing.close()
-      if (tryCommit(newId, baseId, baseFiles ++ newFiles)) return newFiles
+      if (tryCommit(newId, baseId, baseFiles ++ newFiles))
+        return Commit(newFiles, observation.fold(Map.empty[String, Any])(_.get))
       // conflict: another writer committed v<newId> first. Drop this
       // attempt's (invisible) files and re-run the anti-join against the
       // winner's snapshot so MERGE semantics hold.

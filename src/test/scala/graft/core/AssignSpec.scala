@@ -157,4 +157,66 @@ class AssignSpec extends AnyFunSuite {
     // zero text-layout area -> always true
     assert(Assign.pageNeedsOcr(Seq.empty, Seq(bigLine)))
   }
+
+  /** The box J1 matched `line` to by the loop before zero-area lines
+    * skipped the intersection scan, or null when the line is dropped.
+    */
+  private def referenceMatch(boxes: Seq[LayoutBox], line: Line): LayoutBox = {
+    var best: LayoutBox = null
+    var bestV = Float.NegativeInfinity
+    for (b <- boxes) {
+      val v = b.bbox.intersection(line.bbox)
+      if (best == null || v >= bestV) { best = b; bestV = v }
+    }
+    if (best != null && bestV / line.bbox.area > Assign.MinIntersectionLayout) best
+    else {
+      var bestD: LayoutBox = null
+      var bestDV = Float.PositiveInfinity
+      for (b <- boxes) {
+        val d = b.bbox.distance(line.bbox, Assign.DistanceXWeight, Assign.DistanceYWeight)
+        if (bestD == null || d < bestDV) { bestD = b; bestDV = d }
+      }
+      if (bestD != null && bestDV < Assign.MaxAssignmentDistance) bestD else null
+    }
+  }
+
+  /** mergeLinesLayout matches every line as [[referenceMatch]] does. */
+  private def assertSameMatches(boxes: Seq[LayoutBox], lines: Seq[Line], what: String): Unit =
+    for (l <- lines) {
+      val got = Assign.mergeLinesLayout(boxes, Seq(l), 0)
+        .map(e => (e.layoutBlockId, e.kind, e.bbox.toString))
+      val want = Option(referenceMatch(boxes, l)).toVector
+        .map(b => (b.id, ElementType.fromLayoutLabel(b.label), b.bbox.toString))
+      assert(got == want, s"$what: line ${l.bbox}")
+    }
+
+  test("J1: zero-area lines skip the intersection scan; matches are unchanged") {
+    import graft.spark.PagesTable
+    var zeroArea = 0
+    for (family <- PagesTable.Families :+ PagesTable.OcrFamily; i <- 0L until 12L) {
+      val doc = PagesTable.genDocFamily(family, i)
+      for (p <- HtmlFront.layoutDocument(new String(doc.html, "UTF-8"))) {
+        val boxes = Nms.nms(p.boxes)
+        val lines = Tokenize.parseTextLines(p.spans) ++ p.ocrLines
+        zeroArea += lines.count(_.bbox.area == 0f)
+        assertSameMatches(boxes, lines, doc.url)
+      }
+    }
+    assert(zeroArea > 0, "no zero-area line in any family")
+    // degenerate geometry: NaN and infinite coordinates, negative extents,
+    // an area that underflows to 0, on boxes that are degenerate too
+    val nan = Float.NaN
+    val inf = Float.PositiveInfinity
+    val tiny = java.lang.Float.MIN_VALUE
+    val coords = Seq(
+      BBox(10f, 10f, 10f, 20f), BBox(10f, 10f, 20f, 10f), BBox(0f, 0f, 0f, 0f),
+      BBox(20f, 10f, 10f, 10f), BBox(10f, 20f, 20f, 20f), BBox(5f, 5f, 5f + tiny, 5f + tiny),
+      BBox(nan, 0f, 10f, 10f), BBox(0f, 0f, 10f, nan), BBox(0f, 0f, inf, 10f),
+      BBox(-inf, 0f, inf, 10f), BBox(0f, 0f, inf, 0f), BBox(inf, inf, inf, inf),
+      BBox(-inf, 5f, -inf, 5f), BBox(0f, 0f, 10f, 10f), BBox(2f, 2f, 4f, 3f))
+    val boxes = coords.zipWithIndex.map { case (b, id) => tbox(id, b) }
+    val lines = coords.map(b => line("x", b))
+    assertSameMatches(boxes, lines, "degenerate")
+    assertSameMatches(boxes.reverse, lines, "degenerate, reversed")
+  }
 }

@@ -121,6 +121,22 @@ class ExtensionsSpec extends AnyFunSuite {
       val ac = spark.sql(
         "SELECT ac_scan('ushers', 'he|she|his|hers') AS a").head.getStruct(0)
       assert(ac.getLong(0) == 3L && ac.getLong(1) == 3L, ac.toString)
+      // graft_lower/graft_upper: Spark's ICU case mapping (CaseMapSpec
+      // holds them to lower/upper byte for byte)
+      val cm = spark.sql("SELECT graft_lower('ÀB İ'), graft_upper('straße')").head
+      assert(cm.getString(0) == "àb i\u0307" && cm.getString(1) == "STRASSE", cm.toString)
+      // partition_counters: per partition id, each counter's sum and max
+      // (a null counter counts as 0, a null id is skipped); the partial
+      // buffers of two map tasks merge through the shuffle
+      val pc = spark.sql(
+        "SELECT partition_counters(p, 1, b) AS c FROM (SELECT /*+ REPARTITION(2) */ * " +
+          "FROM VALUES (3, 10L), (1, 5L), (3, 7L), (1, NULL), (NULL, 99L) AS v(p, b))")
+        .head.getSeq[org.apache.spark.sql.Row](0)
+      assert(pc.map(r => (r.getInt(0), r.getSeq[Long](1), r.getSeq[Long](2))) ==
+        Seq((1, Seq(2L, 5L), Seq(1L, 5L)), (3, Seq(2L, 17L), Seq(1L, 10L))), pc.toString)
+      val bad = intercept[org.apache.spark.sql.AnalysisException](
+        spark.sql("SELECT partition_counters(1, 'x')").collect())
+      assert(bad.getMessage.contains("integral"), bad.getMessage)
     } finally spark.stop()
   }
 }

@@ -1,7 +1,8 @@
 package graft.spark
 
-import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
+import java.nio.file.{Files, Paths, StandardOpenOption}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core.Extract
@@ -226,6 +227,130 @@ class ExtractJobSpec extends AnyFunSuite with BeforeAndAfterAll {
     val lin = spark.read.parquet(s"$dir/lineage")
     assert(lin.select("run_id").distinct().count() >= 2)
     assert(lin.agg(org.apache.spark.sql.functions.sum("parse_errors")).head.getLong(0) == 0L)
+  }
+
+  /** The lineage oracle: a groupBy over the rows one commit wrote. */
+  private def lineageOracle(committed: DataFrame, runId: String): DataFrame =
+    committed.groupBy(col("partition_id")).agg(
+      count(lit(1)).as("doc_count"),
+      sum(col("bytes_in")).as("bytes_in"),
+      max(col("bytes_in")).as("max_doc_bytes"),
+      sum(col("n_lines")).as("lines"),
+      sum(col("n_elements")).as("elements"),
+      sum(col("n_blocks")).as("blocks"),
+      sum(when(col("parse_status") === "ok", 1).otherwise(0)).as("ok_count"),
+      sum(when(col("error_class") === "parse_error", 1).otherwise(0)).as("parse_errors"),
+      sum(when(col("error_class") === "empty_doc", 1).otherwise(0)).as("empty_docs"),
+      sum(when(col("error_class") === "oversize", 1).otherwise(0)).as("oversize_docs"),
+      sum(when(col("error_class") === "exception", 1).otherwise(0)).as("exceptions")
+    ).withColumn("run_id", lit(runId))
+
+  /** Runs `body`, one commit into `store` under `runId`, and checks the
+    * lineage rows it appended against the oracle over the files that commit
+    * wrote (those in its own `snap-<id>-` directory): same schema, same rows,
+    * and `body` returns their doc count. Returns that count.
+    */
+  private def checkLineage(store: SnapshotStore, runId: String)(body: => Long): Long = {
+    val n = body
+    val id = store.currentSnapshotId.get
+    val written = store.currentFiles.filter(f =>
+      Paths.get(f).getParent.getFileName.toString.startsWith(s"snap-$id-"))
+    val want = lineageOracle(spark.read.parquet(written: _*), runId)
+    val got = spark.read.parquet(s"${store.root}/lineage").filter(col("run_id") === runId)
+    def types(df: DataFrame) = df.schema.map(f => f.name -> f.dataType)
+    assert(types(got) == types(want))
+    val wantRows = want.orderBy("partition_id").collect().toSeq
+    assert(got.orderBy("partition_id").collect().toSeq == wantRows)
+    assert(n == wantRows.map(_.getLong(1)).sum)
+    n
+  }
+
+  test("lineage: the observed rows equal a groupBy over each commit") {
+    val dir = Files.createTempDirectory("graft-lineage").toString
+    val store = new SnapshotStore(dir)
+    val ss = spark; import ss.implicits._
+    // a fresh run, then a resume run over a superset of its pages
+    assert(checkLineage(store, "fresh") {
+      ExtractJob.run(spark, PagesTable.generate(spark, 20, partitions = 2), store,
+        "fresh", partitions = 3)
+    } == 20)
+    assert(checkLineage(store, "resume") {
+      ExtractJob.run(spark, PagesTable.generate(spark, N, partitions = 2), store,
+        "resume", partitions = 3)
+    } == N - 20)
+    // nothing left: no rows committed, no lineage appended
+    assert(ExtractJob.run(spark, PagesTable.generate(spark, N, partitions = 2), store,
+      "empty", partitions = 3) == 0)
+    assert(spark.read.parquet(s"$dir/lineage").filter(col("run_id") === "empty").isEmpty)
+    // failing pages: parse error, empty and null bodies through extraction
+    val ts = new java.sql.Timestamp(0L)
+    val failing = Seq(
+      PagesTable.PageRow("u/empty", ts, Array.emptyByteArray, "t", "en"),
+      PagesTable.PageRow("u/null", ts, null, "t", "en"),
+      PagesTable.PageRow("u/bad", ts, "<page><p>a <blink>b</blink></p></page>".getBytes, "t", "en"))
+    assert(checkLineage(store, "failing") {
+      ExtractJob.run(spark, failing.toDS(), store, "failing", partitions = 2)
+    } == 3)
+    // the two failure classes no small page produces, as extracted rows
+    def failed(url: String, cls: String, pid: Int) = ExtractJob.ExtractedRow(url, ts,
+      "en", "", "", "[]", 0, 0, 0, 0, 0, "error", cls, Extract.EngineVersion, pid,
+      Extract.MaxBytes + 1L)
+    val synthetic = Seq(failed("u/big1", "oversize", 0), failed("u/big2", "oversize", 0),
+      failed("u/exc", "exception", 1)).toDS()
+    assert(checkLineage(store, "synthetic") {
+      ExtractJob.commit(store, synthetic, "synthetic", store.currentSnapshotId)
+    } == 3)
+    val lin = spark.read.parquet(s"$dir/lineage")
+    assert(lin.agg(sum("oversize_docs"), sum("exceptions"), sum("parse_errors"),
+      sum("empty_docs")).head == Row(2L, 1L, 1L, 2L))
+  }
+
+  test("lineage: a lost commit race counts only the retried attempt's rows") {
+    val ss = spark; import ss.implicits._
+    val store = new SnapshotStore(Files.createTempDirectory("graft-race").toString)
+    // the winner: the first 10 of the run's 30 pages, committed elsewhere
+    val winner = new SnapshotStore(Files.createTempDirectory("graft-winner").toString)
+    ExtractJob.run(spark, PagesTable.generate(spark, 10, partitions = 2), winner, "w", 2)
+    val files = winner.currentFiles.map("\"" + _ + "\"").mkString(",")
+    val json = s"""{"id":0,"parent":null,"files":[$files]}"""
+    // the first attempt's own job publishes the winner's manifest as v0, so
+    // that attempt's CAS on v0 loses; the retry anti-joins against it
+    val manifest = Paths.get(store.root, "_snapshots", "v0.json").toString
+    val racing = PagesTable.generate(spark, 30, partitions = 2).mapPartitions { it =>
+      val m = Paths.get(manifest)
+      Files.createDirectories(m.getParent)
+      try Files.write(m, json.getBytes("UTF-8"), StandardOpenOption.CREATE_NEW)
+      catch { case _: java.nio.file.FileAlreadyExistsException => }
+      it
+    }
+    assert(checkLineage(store, "r") { ExtractJob.run(spark, racing, store, "r", 3) } == 20)
+    assert(store.currentSnapshotId.contains(1L), "the first attempt did not lose")
+    val table = store.read(spark).get
+    assert(table.count() == 30 && table.select("url").distinct().count() == 30)
+    val lin = spark.read.parquet(s"${store.root}/lineage")
+    assert(lin.agg(sum("doc_count")).head.getLong(0) == 20L)
+  }
+
+  test("ExtractJob.run on a fresh store runs at most 3 jobs") {
+    val pages = PagesTable.generate(spark, N, partitions = 2)
+    val store = new SnapshotStore(Files.createTempDirectory("graft-jobs").toString)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    org.apache.spark.ListenerBusTestDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    val n = try {
+      val r = ExtractJob.run(spark, pages, store, "jobs", partitions = 4)
+      org.apache.spark.ListenerBusTestDrain(spark.sparkContext)
+      r
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(n == N)
+    // the exchange, the write and the lineage append; a re-scan of the
+    // commit for its lineage adds a schema job and two aggregate jobs
+    assert(jobs.get() <= 3, s"${jobs.get()} jobs")
   }
 
   test("extraction input: no exchange carries text; rows match the oracle") {
