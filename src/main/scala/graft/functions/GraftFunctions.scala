@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
@@ -1645,62 +1646,59 @@ case class AcScan(child: Expression, phrases: Seq[String])
   */
 object GraftFunctions {
 
+  /** Every graft function: its SQL name, its expression class (for the
+    * extension path's `ExpressionInfo`) and its builder. [[register]] and
+    * `graft.spark.GraftExtensions` both register exactly this list.
+    */
+  private[graft] val Functions: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
+    ("simhash64", classOf[SimHash64], exprs => SimHash64(exprs.head)),
+    ("cosine_ff", classOf[CosineSimilarity],
+      exprs => CosineSimilarity(exprs(0), exprs(1))),
+    ("word_shingles", classOf[WordShingles],
+      exprs => WordShingles(exprs(0), intLit(exprs(1)))),
+    ("jaccard_sorted", classOf[JaccardSorted],
+      exprs => JaccardSorted(exprs(0), exprs(1))),
+    ("minhash_sig", classOf[MinHashSig],
+      exprs => MinHashSig(exprs(0), intLit(exprs(1)))),
+    ("srp_sigs", classOf[SrpSigs],
+      exprs => SrpSigs(exprs(0), intLit(exprs(1)), intLit(exprs(2)))),
+    ("cms_sketch", classOf[CmsSketch],
+      exprs => CmsSketch(exprs(0), intLit(exprs(1)), intLit(exprs(2)))
+        .toAggregateExpression()),
+    ("kmv_sketch", classOf[KmvSketch],
+      exprs => KmvSketch(exprs(0), intLit(exprs(1))).toAggregateExpression()),
+    ("hll_sketch", classOf[HllSketch],
+      exprs => HllSketch(exprs(0), intLit(exprs(1))).toAggregateExpression()),
+    ("hll_merge", classOf[HllMerge],
+      exprs => HllMerge(exprs(0), intLit(exprs(1))).toAggregateExpression()),
+    ("minhash_affine", classOf[MinHashAffine],
+      exprs => MinHashAffine(exprs(0), intLit(exprs(1)))),
+    ("top_k_rank", classOf[TopKRankAgg],
+      exprs => TopKRankAgg(exprs(0), exprs(1), intLit(exprs(2))).toAggregateExpression()),
+    ("repetition_profile", classOf[RepetitionProfile],
+      exprs => RepetitionProfile(exprs.head)),
+    ("char_entropy", classOf[CharEntropy], exprs => CharEntropy(exprs.head)),
+    ("script_profile", classOf[ScriptProfile], exprs => ScriptProfile(exprs.head)),
+    ("dot_i64", classOf[DotI64], exprs => DotI64(exprs(0), exprs(1))),
+    ("dot_ff", classOf[DotFF], exprs => DotFF(exprs(0), exprs(1))),
+    ("gopher_repetition", classOf[GopherRepetition],
+      exprs => GopherRepetition(exprs(0), exprs(1))),
+    ("winnow_fps", classOf[WinnowFps],
+      exprs => WinnowFps(exprs(0), intLit(exprs(1)), intLit(exprs(2)))),
+    ("bpe_merge", classOf[BpeMerge], exprs => BpeMerge(exprs(0), exprs(1), exprs(2))),
+    ("ac_scan", classOf[AcScan],
+      exprs => AcScan(exprs(0), splitPhrases(strLit(exprs(1))))),
+    ("graft_lower", classOf[CaseMap], exprs => CaseMap(exprs.head, upper = false)),
+    ("graft_upper", classOf[CaseMap], exprs => CaseMap(exprs.head, upper = true)),
+    ("partition_counters", classOf[PartitionCounters],
+      exprs => PartitionCounters(exprs.head, exprs.tail).toAggregateExpression()))
+
+  /** (Re)registers every graft function as a temp function of `spark`. */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("simhash64",
-      exprs => SimHash64(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("cosine_ff",
-      exprs => CosineSimilarity(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("word_shingles",
-      exprs => WordShingles(exprs(0), intLit(exprs(1))), "built-in")
-    reg.createOrReplaceTempFunction("jaccard_sorted",
-      exprs => JaccardSorted(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("minhash_sig",
-      exprs => MinHashSig(exprs(0), intLit(exprs(1))), "built-in")
-    reg.createOrReplaceTempFunction("srp_sigs",
-      exprs => SrpSigs(exprs(0), intLit(exprs(1)), intLit(exprs(2))), "built-in")
-    reg.createOrReplaceTempFunction("cms_sketch",
-      exprs => CmsSketch(exprs(0), intLit(exprs(1)), intLit(exprs(2)))
-        .toAggregateExpression(), "built-in")
-    reg.createOrReplaceTempFunction("kmv_sketch",
-      exprs => KmvSketch(exprs(0), intLit(exprs(1)))
-        .toAggregateExpression(), "built-in")
-    reg.createOrReplaceTempFunction("hll_sketch",
-      exprs => HllSketch(exprs(0), intLit(exprs(1)))
-        .toAggregateExpression(), "built-in")
-    reg.createOrReplaceTempFunction("hll_merge",
-      exprs => HllMerge(exprs(0), intLit(exprs(1)))
-        .toAggregateExpression(), "built-in")
-    reg.createOrReplaceTempFunction("minhash_affine",
-      exprs => MinHashAffine(exprs(0), intLit(exprs(1))), "built-in")
-    reg.createOrReplaceTempFunction("top_k_rank",
-      exprs => TopKRankAgg(exprs(0), exprs(1), intLit(exprs(2)))
-        .toAggregateExpression(), "built-in")
-    reg.createOrReplaceTempFunction("repetition_profile",
-      exprs => RepetitionProfile(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("char_entropy",
-      exprs => CharEntropy(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("script_profile",
-      exprs => ScriptProfile(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("dot_i64",
-      exprs => DotI64(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("dot_ff",
-      exprs => DotFF(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("gopher_repetition",
-      exprs => GopherRepetition(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("winnow_fps",
-      exprs => WinnowFps(exprs(0), intLit(exprs(1)), intLit(exprs(2))), "built-in")
-    reg.createOrReplaceTempFunction("bpe_merge",
-      exprs => BpeMerge(exprs(0), exprs(1), exprs(2)), "built-in")
-    reg.createOrReplaceTempFunction("ac_scan",
-      exprs => AcScan(exprs(0), splitPhrases(strLit(exprs(1)))), "built-in")
-    reg.createOrReplaceTempFunction("graft_lower",
-      exprs => CaseMap(exprs.head, upper = false), "built-in")
-    reg.createOrReplaceTempFunction("graft_upper",
-      exprs => CaseMap(exprs.head, upper = true), "built-in")
-    reg.createOrReplaceTempFunction("partition_counters",
-      exprs => PartitionCounters(exprs.head, exprs.tail).toAggregateExpression(),
-      "built-in")
+    Functions.foreach { case (name, _, builder) =>
+      reg.createOrReplaceTempFunction(name, builder, "built-in")
+    }
   }
 
   private[graft] def intLit(e: Expression): Int = e match {
@@ -1718,7 +1716,18 @@ object GraftFunctions {
   private[graft] def splitPhrases(joined: String): Seq[String] =
     joined.split('|').toSeq
 
-  private def ensureRegistered(): Unit = register(SparkSession.active)
+  /** Registers the functions in the active session unless its registry
+    * already has them all (registered before, or injected by
+    * `GraftExtensions`): re-registering replaced each one, with a Spark
+    * warning per function, on every wrapper call. A `newSession()` starts
+    * from the built-in registry, so it registers on its first call.
+    */
+  private def ensureRegistered(): Unit = {
+    val spark = SparkSession.active
+    val reg = spark.sessionState.functionRegistry
+    if (!Functions.forall { case (name, _, _) => reg.functionExists(FunctionIdentifier(name)) })
+      register(spark)
+  }
 
   def simhash64(c: Column): Column = { ensureRegistered(); call_function("simhash64", c) }
 

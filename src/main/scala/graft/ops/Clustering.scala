@@ -41,7 +41,7 @@ object Clustering {
 
   /** (vec_id, qv ARRAY<BIGINT>) int64 codes of the embeddings table. */
   private def codes(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/embeddings.parquet").select(
+    Tables.parquet(spark, s"$dir/embeddings.parquet").select(
       col("vec_id"),
       transform(col("embedding"),
         v => round(v.cast("double") * lit(ScaleF)).cast("long")).as("qv"))

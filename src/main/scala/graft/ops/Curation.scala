@@ -51,15 +51,12 @@ import org.apache.spark.sql.functions._
   */
 object Curation {
 
-  private def docs(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/documents.parquet")
-
   def curationVerdict(spark: SparkSession, dir: String, budgetPct: Int = 55,
       gramWords: Int = 4, evalMod: Int = 29): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // parallelize the scan feeding the per-doc metric + gram map work
     // (ScanLayout: no-op whenever the scan already has >= cores splits)
-    val d = ScanLayout.ensureParallel(docs(spark, dir))
+    val d = ScanLayout.ensureParallel(Tables.docs(spark, dir))
 
     val words = split(trim(col("text")), "\\s+")
     val nWords = size(words).cast("long")
@@ -186,7 +183,7 @@ object Curation {
       evalMod: Int = 29): DataFrame = {
     // parallelize the scan feeding the per-doc metric + gram map work
     // (ScanLayout: no-op whenever the scan already has >= cores splits)
-    val d = ScanLayout.ensureParallel(docs(spark, dir))
+    val d = ScanLayout.ensureParallel(Tables.docs(spark, dir))
     val words = split(trim(col("text")), "\\s+")
     val nWords = size(words).cast("long")
     val wordChars = aggregate(transform(words, w => length(w).cast("long")),

@@ -18,9 +18,6 @@ import graft.functions.GraftFunctions
   */
 object Dedup {
 
-  private def docs(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/documents.parquet")
-
   /** Normalized exact-dup fingerprint: lowercase, collapse whitespace, md5. */
   def fingerprintCol(text: Column): Column =
     md5(trim(regexp_replace(GraftFunctions.lower(text), "\\s+", " ")))
@@ -29,7 +26,7 @@ object Dedup {
     * first pass of corpus dedup: one hash-shuffle on the fingerprint.
     */
   def exactDedupStats(spark: SparkSession, dir: String): DataFrame =
-    docs(spark, dir)
+    Tables.docs(spark, dir)
       .groupBy(fingerprintCol(col("text")).as("fp"))
       .agg(count(lit(1)).as("n_docs"))
       .groupBy(col("n_docs").as("group_size"))
@@ -37,7 +34,7 @@ object Dedup {
 
   /** Keep-first exact dedup: survivors = min doc_id per fingerprint. */
   def exactDedupKeepFirst(spark: SparkSession, dir: String): DataFrame =
-    docs(spark, dir)
+    Tables.docs(spark, dir)
       .groupBy(fingerprintCol(col("text")).as("fp"))
       .agg(min(col("doc_id")).as("keep_doc_id"), count(lit(1)).as("n_dups"))
 
@@ -100,7 +97,7 @@ object Dedup {
     */
   private[ops] def signedBase(spark: SparkSession, dir: String, shingleSize: Int,
       sig: Option[Column] = None): DataFrame = {
-    val base = ScanLayout.ensureParallel(docs(spark, dir))
+    val base = ScanLayout.ensureParallel(Tables.docs(spark, dir))
       .select(col("doc_id"), shingles(col("text"), shingleSize).as("sh"))
     sig.fold(base)(base.withColumn("sig", _))
       .localCheckpoint(true)
@@ -344,7 +341,7 @@ object Dedup {
     val inBatch = col("doc_id") % batchMod === 0
     // checkpointed like [[signedBase]]: each table feeds both sides of a
     // batch-vs-corpus join (9 corpus scans in the r6 plan audit otherwise)
-    val fps = docs(spark, dir)
+    val fps = Tables.docs(spark, dir)
       .select(col("doc_id"), fingerprintCol(col("text")).as("fp"))
       .localCheckpoint(true)
     val base = signedBase(spark, dir, shingleSize, Some(affineSig(bands * rowsPerBand)))
@@ -420,7 +417,7 @@ object Dedup {
     val sigArr = when(size(col("sh")) > 0,
       graft.functions.GraftFunctions.minhashAffine(col("sh"), lanes))
     val sigs = (0 until lanes).map(i => element_at(sigArr, i + 1).as(s"sig_$i"))
-    docs(spark, dir)
+    Tables.docs(spark, dir)
       .select(col("doc_id"), shingles(col("text"), shingleSize).as("sh"))
       .select(col("doc_id") +: size(col("sh")).as("n_shingles") +: sigs: _*)
   }
@@ -431,7 +428,7 @@ object Dedup {
   def simhashDocs(spark: SparkSession, dir: String): DataFrame = {
     val sim = graft.functions.GraftFunctions.simhash64(col("text"))
     // parallelize the scan feeding the per-char simhash map (ScanLayout)
-    ScanLayout.ensureParallel(docs(spark, dir))
+    ScanLayout.ensureParallel(Tables.docs(spark, dir))
       .select(col("doc_id"), sim.as("simhash"),
         shiftrightunsigned(sim, 48).as("prefix16"))
   }
@@ -547,7 +544,7 @@ object Dedup {
   private def ngramBase(spark: SparkSession, dir: String, shingleSize: Int,
       bucketWords: Int = 4): DataFrame =
     // parallelize the scan feeding the shingling map work (ScanLayout)
-    ScanLayout.ensureParallel(docs(spark, dir)).select(
+    ScanLayout.ensureParallel(Tables.docs(spark, dir)).select(
       col("doc_id"), col("lang"),
       floor(size(split(trim(col("text")), "\\s+")) / lit(bucketWords)).cast("int")
         .as("len_bucket"),
@@ -887,7 +884,7 @@ object Dedup {
         rowsPerBand, threshold)
       .select(col("doc_a"), col("doc_b"))
     val labels = connectedComponents(edges, maxRounds)
-    val rep = docs(spark, dir).select(col("doc_id"))
+    val rep = Tables.docs(spark, dir).select(col("doc_id"))
       .join(labels, Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("label"), col("doc_id")).as("cluster_rep"))
@@ -934,7 +931,7 @@ object Dedup {
     * qt14/qt16 discipline).
     */
   def passageDedup(spark: SparkSession, dir: String, w: Int = 10): DataFrame = {
-    val base = docs(spark, dir)
+    val base = Tables.docs(spark, dir)
       .select(col("doc_id"), split(col("text"), " ").as("words"))
       .withColumn("nwords", size(col("words")).cast("long"))
       .withColumn("npass", floor(col("nwords") / w))
@@ -1006,7 +1003,7 @@ object Dedup {
       minDocs: Int = 2): DataFrame = {
     // parallelize the scan feeding the gram explode (ScanLayout; the
     // per-doc w-gram explode + hash aggregate is the whole map cost here)
-    val g = ScanLayout.ensureParallel(docs(spark, dir))
+    val g = ScanLayout.ensureParallel(Tables.docs(spark, dir))
       .select(col("doc_id"), shingles(col("text"), w).as("sh"))
       .filter(size(col("sh")) > 0)
       .select(col("doc_id"), explode(col("sh")).as("g"))
@@ -1051,12 +1048,23 @@ object Dedup {
     * passes through untouched on the null side of the join.
     */
   def exactSubstrDedup(spark: SparkSession, dir: String, w: Int = 5,
-      minLen: Int = 8): DataFrame = {
+      minLen: Int = 8): DataFrame =
+    exactSubstrOf(Tables.docs(spark, dir), w, minLen)
+      .select(Seq("doc_id", "n_tokens", "n_spans", "removed_tokens", "clean_text")
+        .map(col): _*)
+
+  /** qd14's core over a frame with `doc_id` and `text` that reads a table
+    * with no exchange (its scan is [[ScanLayout.ensureParallel]]'d): the
+    * input's columns carried through, plus n_tokens, n_spans,
+    * removed_tokens and clean_text. CleanJob's substr stage writes from it.
+    * Building the frame runs the positional gram table's checkpoint job.
+    */
+  def exactSubstrOf(docs: DataFrame, w: Int = 5, minLen: Int = 8): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // parallelize the scan feeding the positional md5-gram explode
     // (ScanLayout: one md5 per token position — the query's map cost)
-    val base = ScanLayout.ensureParallel(docs(spark, dir))
-      .select(col("doc_id"), split(col("text"), " ").as("words"))
+    val base = ScanLayout.ensureParallel(docs)
+      .withColumn("words", split(col("text"), " "))
       .withColumn("n_tokens", size(col("words")).cast("long"))
 
     val grams = base.where(col("n_tokens") >= w)
@@ -1095,8 +1103,7 @@ object Dedup {
         collect_list(struct(col("s"), col("e"))).as("spans"))
 
     base.join(perDoc, Seq("doc_id"), "left")
-      .select(
-        col("doc_id"),
+      .select(docs.columns.toSeq.map(c => base(c)) ++ Seq(
         col("n_tokens"),
         coalesce(col("n_spans"), lit(0L)).as("n_spans"),
         coalesce(col("removed_tokens"), lit(0L)).as("removed_tokens"),
@@ -1105,7 +1112,7 @@ object Dedup {
             filter(col("words"), (_: Column, i: Column) =>
               !exists(col("spans"), sp =>
                 sp.getField("s") <= i && i < sp.getField("e"))),
-            " ")).as("clean_text"))
+            " ")).as("clean_text")): _*)
   }
 
   /** qd15: winnowing fingerprint selection (Schleimer, Wilkerson & Aiken
@@ -1132,7 +1139,7 @@ object Dedup {
     */
   def winnowFingerprints(spark: SparkSession, dir: String, k: Int = 3,
       win: Int = 4): DataFrame = {
-    val base = docs(spark, dir)
+    val base = Tables.docs(spark, dir)
       .select(col("doc_id"), split(col("text"), " ").as("words"))
       .withColumn("n_tokens", size(col("words")).cast("long"))
     // one O(n) native pass (graft.functions.WinnowFps): positional k-gram
@@ -1231,7 +1238,7 @@ object Dedup {
     */
   private def assignSplit(spark: SparkSession, dir: String,
       labels: DataFrame): DataFrame = {
-    val spine = spark.read.parquet(s"$dir/documents.parquet")
+    val spine = Tables.docs(spark, dir)
       .select(col("doc_id"))
     spine.join(labels.select(col("doc_id"), col("label")), Seq("doc_id"), "left")
       .select(col("doc_id"),
@@ -1357,7 +1364,7 @@ object Dedup {
     require(lanes <= 8, s"portable affine lanes need i <= 7, got $lanes")
     val hCol = conv(substring(md5(concat(lit("lsheval:"),
       col("doc_id").cast("string"))), 1, 15), 16, 10).cast("long")
-    val base = docs(spark, dir)
+    val base = Tables.docs(spark, dir)
       .withColumn("h", hCol)
       .orderBy(col("h"), col("doc_id")).limit(sampleK)
       .select(col("doc_id"), shingles(col("text"), shingleSize).as("sh"))

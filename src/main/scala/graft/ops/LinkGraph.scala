@@ -21,9 +21,6 @@ import org.apache.spark.sql.functions._
   */
 object LinkGraph {
 
-  private def docs(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/documents.parquet")
-
   /** Observed-host table (host = doc_id % mod), materialized ONCE per op.
     * The only corpus-sized work in every qg operator is exactly this
     * scan + distinct; its result is bounded by `mod` rows. Before round 6,
@@ -36,7 +33,7 @@ object LinkGraph {
     * real webgraph — a node table, not a corpus).
     */
   private def observedHosts(spark: SparkSession, dir: String, mod: Int): DataFrame =
-    docs(spark, dir).select((col("doc_id") % mod).as("h")).distinct()
+    Tables.docs(spark, dir).select((col("doc_id") % mod).as("h")).distinct()
       .localCheckpoint(true)
 
   /** The planted DIRECTED host graph of qg1/qg8/qg9/qg11 (see the object
@@ -44,7 +41,7 @@ object LinkGraph {
     * dst = (src*5 + 1 + doc_id mod 3) mod 32, deduplicated. Lazy.
     */
   private def plantedEdges(spark: SparkSession, dir: String): DataFrame =
-    docs(spark, dir)
+    Tables.docs(spark, dir)
       .select((col("doc_id") % 32).as("src"),
         ((col("doc_id") % 32) * 5 + 1 + col("doc_id") % 3) % 32 as "dst")
       .distinct()
@@ -764,7 +761,7 @@ object LinkGraph {
     val dsts = Seq[Long](1, 2, 3, 4, 5, 6, 7, 8, 9, 10, 11, 12, 13, 14, 15, 8,
       20, 21, 22, 23, 20, 24, 25, 26, 27, 24, 29, 28, 30, 32, 34, 31)
     val idx = (col("doc_id") % 32).cast("int") + 1
-    val edges = docs(spark, dir).select(
+    val edges = Tables.docs(spark, dir).select(
       element_at(typedlit(srcs), idx).as("src"),
       element_at(typedlit(dsts), idx).as("dst"))
       .distinct()

@@ -492,7 +492,7 @@ object Multimodal {
       unhex(lit("0A00000010000000")), // chunk len 10, alpha flag, reserved
       le(3)(embW - 1), le(3)(embH - 1),
       text)
-    spark.read.parquet(s"$dir/documents.parquet")
+    Tables.docs(spark, dir)
       .select(col("doc_id"),
         when(col("doc_id") % 6 === 0, png)
           .when(col("doc_id") % 6 === 1, jpeg)
@@ -609,7 +609,7 @@ object Multimodal {
     val data = concat(unhex(lit("64617461")), le(4)(length(text)), text)
     val body = when(col("doc_id") % 2 === 1, concat(filler, fmt, data))
       .otherwise(concat(fmt, data))
-    spark.read.parquet(s"$dir/documents.parquet")
+    Tables.docs(spark, dir)
       .select(col("doc_id"),
         concat(unhex(lit("52494646")), le(4)(length(body) + 4),
           unhex(lit("57415645")), body).as("payload"),
@@ -653,7 +653,7 @@ object Multimodal {
     */
   def pcmWavTable(spark: SparkSession, dir: String): Dataset[(Long, Array[Byte])] = {
     import spark.implicits._
-    spark.read.parquet(s"$dir/documents.parquet")
+    Tables.docs(spark, dir)
       .select(col("doc_id")).as[Long]
       .mapPartitions { it =>
         it.map { id =>
@@ -784,7 +784,7 @@ object Multimodal {
     val moov = concat(unhex(lit("000000D86D6F6F76")), mvhd,
       unhex(lit("000000647472616B")), tkhd)
     val mdat = concat(be(4)(length(text) + 8), unhex(lit("6D646174")), text)
-    spark.read.parquet(s"$dir/documents.parquet")
+    Tables.docs(spark, dir)
       .select(col("doc_id"),
         concat(unhex(lit("000000106674797069736F6D00000200")), moov, mdat)
           .as("payload"),
@@ -832,7 +832,7 @@ object Multimodal {
     */
   def pixelPngTable(spark: SparkSession, dir: String): Dataset[(Long, Array[Byte])] = {
     import spark.implicits._
-    spark.read.parquet(s"$dir/documents.parquet")
+    Tables.docs(spark, dir)
       .select(col("doc_id")).as[Long]
       .mapPartitions { it =>
         it.map { id =>
@@ -942,7 +942,7 @@ object Multimodal {
     // parallelize the id scan feeding the per-image encode map work
     // (ScanLayout: no-op whenever the scan already has >= cores splits)
     ScanLayout.ensureParallel(
-      spark.read.parquet(s"$dir/documents.parquet").select(col("doc_id")))
+      Tables.docs(spark, dir).select(col("doc_id")))
       .as[Long]
       .flatMap { id =>
         val w = pxW(id); val h = pxH(id)
@@ -1090,7 +1090,7 @@ object Multimodal {
     import spark.implicits._
     // parallelize the id scan feeding the per-frame encode+decode map
     val frames = ScanLayout.ensureParallel(
-      spark.read.parquet(s"$dir/documents.parquet").select(col("doc_id")))
+      Tables.docs(spark, dir).select(col("doc_id")))
       .as[Long]
       .mapPartitions { it =>
         it.flatMap { id =>

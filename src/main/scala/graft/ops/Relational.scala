@@ -18,7 +18,7 @@ import org.apache.spark.sql.expressions.Window
 object Relational {
 
   private def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    Tables.parquet(spark, s"$dir/$name.parquet")
 
   /** Exact decimal sum surfaced as double. */
   private def dsum(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =

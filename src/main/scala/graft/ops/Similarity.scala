@@ -18,7 +18,7 @@ import graft.functions.GraftFunctions
 object Similarity {
 
   private def embeddings(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/embeddings.parquet")
+    Tables.parquet(spark, s"$dir/embeddings.parquet")
 
   /** Brute-force top-k cosine neighbors for the query vectors
     * (vec_id < nQueries). The query side is tiny -> broadcast; corpus side
@@ -311,7 +311,7 @@ object Similarity {
   def filteredAnn(spark: SparkSession, dir: String, nQueries: Int = 5,
       k: Int = 10, lang: String = "en"): DataFrame = {
     val codes = sq8Codes(spark, dir)
-    val meta = spark.read.parquet(s"$dir/documents.parquet")
+    val meta = Tables.docs(spark, dir)
       .select(col("doc_id").as("vec_id"), col("lang"))
     val corpus = codes.join(meta, "vec_id").filter(col("lang") === lang)
     val queries = codes.filter(col("vec_id") < nQueries)

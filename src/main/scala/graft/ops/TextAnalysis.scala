@@ -12,14 +12,11 @@ import org.apache.spark.sql.types.DecimalType
   */
 object TextAnalysis {
 
-  private def docs(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/documents.parquet")
-
   /** Token counting: whitespace tokens plus a BPE-ish split (letter runs,
     * digit runs, and single punctuation marks each count as one token).
     */
   def tokenCounts(spark: SparkSession, dir: String): DataFrame =
-    docs(spark, dir).select(
+    Tables.docs(spark, dir).select(
       col("doc_id"),
       size(split(trim(col("text")), "\\s+")).as("ws_tokens"),
       regexp_count(col("text"), lit("[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]")).as("bpeish_tokens"),
@@ -37,16 +34,25 @@ object TextAnalysis {
     val digits = regexp_count(col("text"), lit("[0-9]")).cast("double")
     val stop = regexp_count(col("text"),
       lit("\\b(the|a|and|of|to|in|is|for|on|with)\\b")).cast("double")
-    docs(spark, dir).select(
+    Tables.docs(spark, dir).select(
       col("doc_id"),
       col("n_chars"),
       round(chars / words, 4).as("mean_word_len"),
       round(punct / chars, 6).as("punct_ratio"),
       round(digits / chars, 6).as("digit_ratio"),
       round(stop / words, 6).as("stopword_ratio"),
-      round(least(words / lit(100.0), lit(1.0)) * (lit(1.0) - punct / chars), 6)
-        .as("quality_score")
+      qualityScore(col("text")).as("quality_score")
     )
+  }
+
+  /** qt2's composite score of one text: the word count up to 100, discounted
+    * by the punctuation ratio. CleanJob's quality gate filters on it.
+    */
+  def qualityScore(text: Column): Column = {
+    val words = size(split(trim(text), "\\s+")).cast("double")
+    val chars = length(text).cast("double")
+    val punct = regexp_count(text, lit("[\\.,;:!\\?]")).cast("double")
+    round(least(words / lit(100.0), lit(1.0)) * (lit(1.0) - punct / chars), 6)
   }
 
   /** Language ID: marker-word n-gram heuristic. Counts per-language stopword
@@ -62,7 +68,7 @@ object TextAnalysis {
     val de = hits("der|die|das|und|ist|mit")
     val es = hits("el|los|las|y|es|una")
     val best = greatest(en, fr, de, es)
-    docs(spark, dir).select(
+    Tables.docs(spark, dir).select(
       col("doc_id"), col("lang").as("labeled_lang"),
       when(best === 0, "und")
         .when(en === best, "en")
@@ -78,7 +84,7 @@ object TextAnalysis {
     * explode+groupBy shape of corpus statistics (vocabulary building).
     */
   def bigramFreq(spark: SparkSession, dir: String, minCount: Long = 10): DataFrame =
-    docs(spark, dir)
+    Tables.docs(spark, dir)
       .select(explode(Dedup.shingles(col("text"), 2)).as("bigram"))
       .groupBy(col("bigram"))
       .agg(count(lit(1)).as("n_docs"))
@@ -94,7 +100,7 @@ object TextAnalysis {
     */
   def cmsBigrams(spark: SparkSession, dir: String, depth: Int = 4,
       width: Int = 64): DataFrame =
-    docs(spark, dir)
+    Tables.docs(spark, dir)
       .select(explode(Dedup.shingles(col("text"), 2)).as("item"))
       .agg(graft.functions.GraftFunctions.cmsSketch(col("item"), depth, width)
         .as("sketch"))
@@ -113,7 +119,7 @@ object TextAnalysis {
     * every row: SELECT DISTINCT hash ORDER BY hash LIMIT k.
     */
   def kmvDistinct(spark: SparkSession, dir: String, k: Int = 256): DataFrame =
-    docs(spark, dir)
+    Tables.docs(spark, dir)
       .select(explode(Dedup.shingles(col("text"), 2)).as("item"))
       .agg(graft.functions.GraftFunctions.kmvSketch(col("item"), k).as("sk"))
       .select(posexplode(col("sk")).as(Seq("pos", "h")))
@@ -132,7 +138,7 @@ object TextAnalysis {
     * empty bucket is part of the sketch).
     */
   def hllDistinct(spark: SparkSession, dir: String, m: Int = 64): DataFrame =
-    docs(spark, dir)
+    Tables.docs(spark, dir)
       .select(explode(Dedup.shingles(col("text"), 2)).as("item"))
       .agg(graft.functions.GraftFunctions.hllSketch(col("item"), m).as("sk"))
       .select(posexplode(col("sk")).as(Seq("bucket", "register")))
@@ -150,7 +156,7 @@ object TextAnalysis {
     val bucket = conv(substring(md5(
       concat(col("doc_id").cast("string"), lit("#"), lit(salt))), 1, 15), 16, 10)
       .cast("long") % 1000
-    docs(spark, dir)
+    Tables.docs(spark, dir)
       .filter(bucket < math.round(rate * 1000).toInt)
       .select(col("doc_id"), col("lang"), col("n_chars"))
   }
@@ -168,7 +174,7 @@ object TextAnalysis {
     */
   def contamination(spark: SparkSession, dir: String, gramWords: Int = 4,
       evalMod: Int = 29): DataFrame = {
-    val grams = docs(spark, dir).select(col("doc_id"),
+    val grams = Tables.docs(spark, dir).select(col("doc_id"),
       explode(Dedup.shingles(col("text"), gramWords)).as("g"))
     val evalGrams = grams.filter(col("doc_id") % evalMod === 0)
       .select(col("doc_id").as("eval_id"), col("g"))
@@ -204,7 +210,7 @@ object TextAnalysis {
     val mersenne61 = 2305843009213693951L
     // materialized once per query (r6; eager per-invocation local checkpoint): the eval slice (bloom build + verify join) and the
     // train-side probe all read the gram table — 3 shingling scans before
-    val grams = ScanLayout.ensureParallel(docs(spark, dir))
+    val grams = ScanLayout.ensureParallel(Tables.docs(spark, dir))
       .select(col("doc_id"),
         explode(Dedup.shingles(col("text"), gramWords)).as("g"))
       .localCheckpoint(true)
@@ -250,7 +256,7 @@ object TextAnalysis {
     */
   def tfidfTopTerms(spark: SparkSession, dir: String, k: Int = 3): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val words = docs(spark, dir).select(col("doc_id"),
+    val words = Tables.docs(spark, dir).select(col("doc_id"),
       explode(split(trim(GraftFunctions.lower(col("text"))), "\\s+")).as("term"))
     // materialized once per query (r6; eager per-invocation local checkpoint): the df marginal and the scoring join both read tf —
     // each re-ran the tokenize+count chain before
@@ -259,7 +265,7 @@ object TextAnalysis {
       .localCheckpoint(true)
     val df = tf.groupBy(col("term"))
       .agg(countDistinct(col("doc_id")).as("df"))
-    val n = docs(spark, dir).agg(count(lit(1)).as("n"))
+    val n = Tables.docs(spark, dir).agg(count(lit(1)).as("n"))
     val score = col("tf") * log(col("n") / col("df"))
     val w = Window.partitionBy(col("doc_id"))
       .orderBy(score.desc, col("term").asc)
@@ -288,7 +294,7 @@ object TextAnalysis {
     * [[repetitionSignalsComposed]] for the differential spec.
     */
   def repetitionSignals(spark: SparkSession, dir: String): DataFrame =
-    docs(spark, dir)
+    Tables.docs(spark, dir)
       .select(col("doc_id"),
         graft.functions.GraftFunctions.repetitionProfile(col("text")).as("p"))
       .filter(col("p").isNotNull) // < 2 words: no bigram slots (oracle drops too)
@@ -305,7 +311,7 @@ object TextAnalysis {
     */
   private[graft] def repetitionSignalsComposed(spark: SparkSession, dir: String): DataFrame = {
     val norm = split(trim(regexp_replace(GraftFunctions.lower(col("text")), "\\s+", " ")), " ")
-    val base = docs(spark, dir).select(col("doc_id"), norm.as("w"))
+    val base = Tables.docs(spark, dir).select(col("doc_id"), norm.as("w"))
       .select(col("doc_id"), col("w"),
         size(col("w")).cast("long").as("n_words"),
         size(array_distinct(col("w"))).cast("long").as("n_distinct"))
@@ -347,7 +353,7 @@ object TextAnalysis {
     * the oracle reproduces every value exactly regardless of sum order.
     */
   def noveltyScores(spark: SparkSession, dir: String, rareDf: Long = 3): DataFrame = {
-    val grams = docs(spark, dir).select(col("doc_id"),
+    val grams = Tables.docs(spark, dir).select(col("doc_id"),
       explode(Dedup.shingles(col("text"), 2)).as("g")) // distinct per doc
     val df = grams.groupBy(col("g")).agg(count(lit(1)).as("df"))
     grams.join(df, Seq("g"))
@@ -385,7 +391,7 @@ object TextAnalysis {
     // the r6 plan audit; no shared exchange exists to reuse — the count
     // tables broadcast). Persisting the normalized token table is the
     // tokenize-once discipline any LM-scoring deployment uses.
-    val base = ScanLayout.ensureParallel(docs(spark, dir))
+    val base = ScanLayout.ensureParallel(Tables.docs(spark, dir))
       .select(col("doc_id"), norm.as("w"))
       .localCheckpoint(true)
     val bigrams = when(size(col("w")) >= 2,
@@ -439,7 +445,7 @@ object TextAnalysis {
   def knLmScore(spark: SparkSession, dir: String): DataFrame = {
     val norm = split(trim(regexp_replace(GraftFunctions.lower(col("text")), "\\s+", " ")), " ")
     // tokenize once (the qt16 r6 rationale)
-    val base = ScanLayout.ensureParallel(docs(spark, dir))
+    val base = ScanLayout.ensureParallel(Tables.docs(spark, dir))
       .select(col("doc_id"), norm.as("w"))
       .localCheckpoint(true)
     val bigrams = when(size(col("w")) >= 2,
@@ -500,7 +506,7 @@ object TextAnalysis {
     // (bigram explode + three vocabulary joins + the order-pinned fold —
     // 15 scans in the r6 plan audit; guide §2.4). Two narrow columns per
     // doc — the per-doc score table CCNet materializes anyway.
-    val d = docs(spark, dir).select(col("doc_id"), col("lang"))
+    val d = Tables.docs(spark, dir).select(col("doc_id"), col("lang"))
       .join(sc, Seq("doc_id"))
       .localCheckpoint(true)
     val hist = d.groupBy(col("lang"), col("avg_logp")).agg(count(lit(1)).as("cnt"))
@@ -550,7 +556,7 @@ object TextAnalysis {
     val w1 = Window.partitionBy(col("lang"), col("salt"))
       .orderBy(col("h"), col("doc_id"))
     val w2 = Window.partitionBy(col("lang")).orderBy(col("h"), col("doc_id"))
-    docs(spark, dir)
+    Tables.docs(spark, dir)
       .select(col("doc_id"), col("lang"), col("n_chars"))
       .withColumn("h", h)
       .withColumn("salt", pmod(col("doc_id"), lit(buckets)))
@@ -579,11 +585,11 @@ object TextAnalysis {
   def dfPrune(spark: SparkSession, dir: String, maxDfPct: Int = 78): DataFrame = {
     require(maxDfPct > 0 && maxDfPct < 100, s"maxDfPct in (0,100), got $maxDfPct")
     val norm = split(trim(regexp_replace(GraftFunctions.lower(col("text")), "\\s+", " ")), " ")
-    val words = docs(spark, dir)
+    val words = Tables.docs(spark, dir)
       .select(col("doc_id"), posexplode(norm).as(Seq("pos", "word")))
     val df = words.groupBy(col("word"))
       .agg(countDistinct(col("doc_id")).as("df"))
-    val n = docs(spark, dir).agg(count(lit(1)).as("n"))
+    val n = Tables.docs(spark, dir).agg(count(lit(1)).as("n"))
     words.join(df, Seq("word"))
       .crossJoin(broadcast(n))
       .withColumn("keep", col("df") * 100 <= col("n") * maxDfPct)
@@ -620,7 +626,7 @@ object TextAnalysis {
     val bucket = conv(substring(md5(
       concat(col("doc_id").cast("string"), lit("#"), lit(salt))), 1, 15), 16, 10)
       .cast("long") % 1000
-    val sampled = docs(spark, dir)
+    val sampled = Tables.docs(spark, dir)
       .filter(bucket < ratePerMille)
       .select(col("lang"), col("n_chars"))
     val hist = sampled.groupBy(col("lang"), col("n_chars"))
@@ -629,7 +635,7 @@ object TextAnalysis {
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val cum = hist.withColumn("cum", sum(col("cnt")).over(w))
     val nSampled = hist.groupBy(col("lang")).agg(sum(col("cnt")).as("n_sampled"))
-    val nTotal = docs(spark, dir).groupBy(col("lang")).agg(count(lit(1)).as("n_total"))
+    val nTotal = Tables.docs(spark, dir).groupBy(col("lang")).agg(count(lit(1)).as("n_total"))
     def q(p: Int): Column =
       min(when(col("cum") >= expr(s"((n_sampled - 1) * $p) div 100 + 1"),
         col("n_chars"))).as(s"p$p")
@@ -657,7 +663,7 @@ object TextAnalysis {
   def packBins(spark: SparkSession, dir: String, budget: Long = 2048,
       shards: Int = 16): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val toks = docs(spark, dir).select(col("doc_id"),
+    val toks = Tables.docs(spark, dir).select(col("doc_id"),
       size(split(trim(col("text")), "\\s+")).cast("long").as("n_tokens"))
     // order-preserving range shard (doc_id * shards stays in long up to
     // ~2^57 ids at 16 shards); max_id is a 1-row broadcast scalar
@@ -704,7 +710,7 @@ object TextAnalysis {
     */
   def bpeMerges(spark: SparkSession, dir: String, k: Int = 8): DataFrame = {
     val norm = split(trim(regexp_replace(GraftFunctions.lower(col("text")), "\\s+", " ")), " ")
-    var types = docs(spark, dir)
+    var types = Tables.docs(spark, dir)
       .select(explode(norm).as("word"))
       .filter(col("word") =!= "")
       .groupBy(col("word")).agg(count(lit(1)).as("cnt"))
@@ -748,7 +754,7 @@ object TextAnalysis {
     * SimHash64 rolling 64-bit fingerprint (near-dup key, custom expression).
     */
   def fingerprints(spark: SparkSession, dir: String): DataFrame =
-    docs(spark, dir).select(
+    Tables.docs(spark, dir).select(
       col("doc_id"),
       Dedup.fingerprintCol(col("text")).as("md5_fp"),
       graft.functions.GraftFunctions.simhash64(col("text")).as("simhash_fp")
@@ -790,7 +796,7 @@ object TextAnalysis {
   private def hashedFeats(spark: SparkSession, dir: String,
       buckets: Int): DataFrame = {
     val norm = split(trim(regexp_replace(GraftFunctions.lower(col("text")), "\\s+", " ")), " ")
-    val base = ScanLayout.ensureParallel(docs(spark, dir))
+    val base = ScanLayout.ensureParallel(Tables.docs(spark, dir))
       .select(col("doc_id"), col("lang"), norm.as("w"))
     val unis = transform(col("w"), x => concat(lit("u:"), x))
     val bis = when(size(col("w")) >= 2,
@@ -896,7 +902,7 @@ object TextAnalysis {
     */
   def domainMixture(spark: SparkSession, dir: String,
       k: Int = 1000000): DataFrame = {
-    val d = docs(spark, dir).select(col("doc_id"), col("source"))
+    val d = Tables.docs(spark, dir).select(col("doc_id"), col("source"))
     val counts = d.groupBy(col("source")).agg(count(lit(1)).as("n_docs"))
     val minN = counts.agg(min(col("n_docs")).as("n_min"))
     val rates = counts.crossJoin(broadcast(minN))
@@ -937,7 +943,7 @@ object TextAnalysis {
     val stopDistinct = required
       .map(sw => when(lowered.rlike("\\b" + sw + "\\b"), 1L).otherwise(0L))
       .reduce(_ + _)
-    docs(spark, dir)
+    Tables.docs(spark, dir)
       .select(
         col("doc_id"),
         nWords.as("word_count"),
@@ -987,7 +993,7 @@ object TextAnalysis {
     val emailRe = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
     val phoneRe = "\\b\\d{3}-\\d{3}-\\d{4}\\b"
     val ipRe = "\\b\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\b"
-    docs(spark, dir)
+    Tables.docs(spark, dir)
       .select(col("doc_id"), dirty.as("dirty"))
       .select(
         col("doc_id"),
@@ -1020,7 +1026,7 @@ object TextAnalysis {
       .map(r => (r.getInt(0), r.getString(1), r.getString(2)))
       .sortBy(_._1)
     val norm = split(trim(regexp_replace(GraftFunctions.lower(col("text")), "\\s+", " ")), " ")
-    val dw = docs(spark, dir)
+    val dw = Tables.docs(spark, dir)
       .select(col("doc_id"), explode(norm).as("word"))
       .filter(col("word") =!= "")
     val encoded = merges.foldLeft(split(col("word"), ""): Column) {
@@ -1037,6 +1043,78 @@ object TextAnalysis {
         sum(length(col("word")).cast("long")).as("n_chars"))
       .withColumn("chars_per_token",
         round(col("n_chars").cast("double") / col("n_tokens"), 6))
+  }
+
+  /** qt29: the Gopher REPETITION battery (Rae et al. 2021 §A1.1 — the
+    * MassiveText repetition filter that FineWeb/Dolma/RefinedWeb all run),
+    * distinct from qt20's quality heuristics and qt10's within-doc profile:
+    * thirteen fractions per document —
+    *
+    *   - duplicate line / paragraph fraction (occurrences beyond the first
+    *     of each distinct segment, over segment count),
+    *   - duplicate line / paragraph CHARACTER fraction (their code-point
+    *     chars, over all segment chars),
+    *   - top-{2,3,4}-gram character fraction (chars of the most frequent
+    *     n-gram times its count, over total word chars; ties to the
+    *     byte-order-smallest gram),
+    *   - dup-{5..10}-gram character fraction (chars of words covered by at
+    *     least one occurrence of any n-gram appearing >= 2 times — the
+    *     position-union semantics, so overlaps never double-count),
+    *
+    * and the pass flag at the published A1 thresholds (0.30/0.30/0.20/0.20
+    * lines/paras; 0.20/0.18/0.16 top-2/3/4; 0.15..0.10 dup-5..10),
+    * compared on the ROUNDED fractions (the qt20 rounded-before-compare
+    * discipline). Lines/paragraphs come from qt26's deterministic md5
+    * segmentation (% 5 / % 15 — the corpus has no newline structure).
+    *
+    * Scale shape: ONE map-only pass, zero exchanges — the native
+    * gopher_repetition expression returns the 19 integer numerators/
+    * denominators in a single traversal (O(words · n) with one HashMap per
+    * n-gram size, never the O(L^2) array-math form), and every division
+    * happens once per doc at the column layer. Scan reads (doc_id, text).
+    */
+  def gopherRepetition(spark: SparkSession, dir: String): DataFrame =
+    gopherRepetitionOf(Tables.docs(spark, dir)).select(
+      (Seq("doc_id", "n_words") ++ GopherThresholds.map(_._1) :+ "passes_repetition")
+        .map(col): _*)
+
+  /** The qt29 fractions at the published A1 thresholds, in output order. */
+  private val GopherThresholds = Seq(
+    "dup_line_frac" -> 0.30, "dup_line_char_frac" -> 0.20,
+    "dup_para_frac" -> 0.30, "dup_para_char_frac" -> 0.20,
+    "top2_char_frac" -> 0.20, "top3_char_frac" -> 0.18,
+    "top4_char_frac" -> 0.16, "dup5_char_frac" -> 0.15,
+    "dup6_char_frac" -> 0.14, "dup7_char_frac" -> 0.13,
+    "dup8_char_frac" -> 0.12, "dup9_char_frac" -> 0.11,
+    "dup10_char_frac" -> 0.10)
+
+  /** qt29's core over any frame with `doc_id` and `text`: the input's
+    * columns carried through, plus n_words, the thirteen fractions and
+    * passes_repetition. CleanJob's repetition gate filters on it.
+    */
+  def gopherRepetitionOf(docs: DataFrame): DataFrame = {
+    def frac(num: Column, den: Column) =
+      when(den === 0L, lit(0.0d))
+        .otherwise(round(num.cast("double") / den, 6))
+    val p = col("__gopher")
+    val fracs = Seq(
+      frac(p("dup_line_occ"), p("n_lines")).as("dup_line_frac"),
+      frac(p("dup_line_chars"), p("line_chars")).as("dup_line_char_frac"),
+      frac(p("dup_para_occ"), p("n_paras")).as("dup_para_frac"),
+      frac(p("dup_para_chars"), p("para_chars")).as("dup_para_char_frac"),
+      frac(p("top2_num"), p("word_chars")).as("top2_char_frac"),
+      frac(p("top3_num"), p("word_chars")).as("top3_char_frac"),
+      frac(p("top4_num"), p("word_chars")).as("top4_char_frac")) ++
+      (5 to 10).map(n =>
+        frac(p(s"dup${n}_cov"), p("word_chars")).as(s"dup${n}_char_frac"))
+    docs
+      .withColumn("__gopher", graft.functions.GraftFunctions.gopherRepetition(
+        col("doc_id").cast("string"), col("text")))
+      .select(col("*") +: p("n_words").as("n_words") +: fracs: _*)
+      .drop("__gopher")
+      .withColumn("passes_repetition",
+        GopherThresholds.map { case (c, t) => col(c) <= t }
+          .reduce(_ && _).cast("int"))
   }
 
   /** qt26: C4-style LINE-level cleaning (Raffel et al. 2020 §2.2; CCNet's
@@ -1067,68 +1145,18 @@ object TextAnalysis {
     * corpus-bounded; a corpus-wide line-frequency gate is qd12's shape, not
     * this one. Scan reads exactly (doc_id, text).
     */
-  /** qt29: the Gopher REPETITION battery (Rae et al. 2021 §A1.1 — the
-    * MassiveText repetition filter that FineWeb/Dolma/RefinedWeb all run),
-    * distinct from qt20's quality heuristics and qt10's within-doc profile:
-    * thirteen fractions per document —
-    *
-    *   - duplicate line / paragraph fraction (occurrences beyond the first
-    *     of each distinct segment, over segment count),
-    *   - duplicate line / paragraph CHARACTER fraction (their code-point
-    *     chars, over all segment chars),
-    *   - top-{2,3,4}-gram character fraction (chars of the most frequent
-    *     n-gram times its count, over total word chars; ties to the
-    *     byte-order-smallest gram),
-    *   - dup-{5..10}-gram character fraction (chars of words covered by at
-    *     least one occurrence of any n-gram appearing >= 2 times — the
-    *     position-union semantics, so overlaps never double-count),
-    *
-    * and the pass flag at the published A1 thresholds (0.30/0.30/0.20/0.20
-    * lines/paras; 0.20/0.18/0.16 top-2/3/4; 0.15..0.10 dup-5..10),
-    * compared on the ROUNDED fractions (the qt20 rounded-before-compare
-    * discipline). Lines/paragraphs come from qt26's deterministic md5
-    * segmentation (% 5 / % 15 — the corpus has no newline structure).
-    *
-    * Scale shape: ONE map-only pass, zero exchanges — the native
-    * gopher_repetition expression returns the 19 integer numerators/
-    * denominators in a single traversal (O(words · n) with one HashMap per
-    * n-gram size, never the O(L^2) array-math form), and every division
-    * happens once per doc at the column layer. Scan reads (doc_id, text).
-    */
-  def gopherRepetition(spark: SparkSession, dir: String): DataFrame = {
-    def frac(num: Column, den: Column) =
-      when(den === 0L, lit(0.0d))
-        .otherwise(round(num.cast("double") / den, 6))
-    val p = col("p")
-    val fracs = Seq(
-      frac(p("dup_line_occ"), p("n_lines")).as("dup_line_frac"),
-      frac(p("dup_line_chars"), p("line_chars")).as("dup_line_char_frac"),
-      frac(p("dup_para_occ"), p("n_paras")).as("dup_para_frac"),
-      frac(p("dup_para_chars"), p("para_chars")).as("dup_para_char_frac"),
-      frac(p("top2_num"), p("word_chars")).as("top2_char_frac"),
-      frac(p("top3_num"), p("word_chars")).as("top3_char_frac"),
-      frac(p("top4_num"), p("word_chars")).as("top4_char_frac")) ++
-      (5 to 10).map(n =>
-        frac(p(s"dup${n}_cov"), p("word_chars")).as(s"dup${n}_char_frac"))
-    val thresholds = Seq(
-      "dup_line_frac" -> 0.30, "dup_line_char_frac" -> 0.20,
-      "dup_para_frac" -> 0.30, "dup_para_char_frac" -> 0.20,
-      "top2_char_frac" -> 0.20, "top3_char_frac" -> 0.18,
-      "top4_char_frac" -> 0.16, "dup5_char_frac" -> 0.15,
-      "dup6_char_frac" -> 0.14, "dup7_char_frac" -> 0.13,
-      "dup8_char_frac" -> 0.12, "dup9_char_frac" -> 0.11,
-      "dup10_char_frac" -> 0.10)
-    docs(spark, dir)
-      .select(col("doc_id"), graft.functions.GraftFunctions.gopherRepetition(
-        col("doc_id").cast("string"), col("text")).as("p"))
-      .select(col("doc_id") +: p("n_words").as("n_words") +: fracs: _*)
-      .withColumn("passes_repetition",
-        thresholds.map { case (c, t) => col(c) <= t }
-          .reduce(_ && _).cast("int"))
-  }
-
   def c4LineClean(spark: SparkSession, dir: String, meanLen: Int = 5,
-      minWords: Int = 4, block: String = "dup", minLines: Int = 3): DataFrame = {
+      minWords: Int = 4, block: String = "dup", minLines: Int = 3): DataFrame =
+    c4LineCleanOf(Tables.docs(spark, dir), meanLen, minWords, block, minLines)
+      .select(Seq("doc_id", "n_lines", "n_rule_dropped", "n_dup_dropped",
+        "n_kept", "kept", "clean_text").map(col): _*)
+
+  /** qt26's core over any frame with `doc_id` and `text`: the input's
+    * columns carried through, plus n_lines, n_rule_dropped, n_dup_dropped,
+    * n_kept, kept and clean_text. CleanJob's line stage writes from it.
+    */
+  def c4LineCleanOf(docs: DataFrame, meanLen: Int = 5, minWords: Int = 4,
+      block: String = "dup", minLines: Int = 3): DataFrame = {
     val words = split(col("text"), " ")
     // word i (0-based) ends a line iff md5_60(doc_id:i) % meanLen == 0
     val brk = filter(sequence(lit(0), size(words) - 1), i =>
@@ -1144,13 +1172,13 @@ object TextAnalysis {
       size(split(l, " ")) >= minWords and
         not(array_contains(split(l, " "), block))
 
-    docs(spark, dir)
-      .select(col("doc_id"), linesAll.as("lines_all"))
+    docs
+      .withColumn("lines_all", linesAll)
       .withColumn("lr", filter(col("lines_all"), ruleOk))
       .withColumn("lk",
         filter(col("lr"), (l, i) => array_position(col("lr"), l) === i + 1))
       .select(
-        col("doc_id"),
+        col("*"),
         size(col("lines_all")).cast("long").as("n_lines"),
         (size(col("lines_all")) - size(col("lr"))).cast("long")
           .as("n_rule_dropped"),
@@ -1158,6 +1186,7 @@ object TextAnalysis {
         size(col("lk")).cast("long").as("n_kept"),
         (size(col("lk")) >= minLines).cast("int").as("kept"),
         array_join(col("lk"), " ").as("clean_text"))
+      .drop("lines_all", "lr", "lk")
   }
 
   /** qt31: character-entropy quality profile — the compressibility-proxy
@@ -1178,7 +1207,7 @@ object TextAnalysis {
     */
   def charEntropyProfile(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.GraftFunctions
-    docs(spark, dir)
+    Tables.docs(spark, dir)
       .select(col("doc_id"), GraftFunctions.charEntropy(col("text")).as("e"))
       .select(
         col("doc_id"),
@@ -1218,7 +1247,7 @@ object TextAnalysis {
     require(w >= 1 && minLen >= w, s"need minLen >= w >= 1, got w=$w minLen=$minLen")
     // split once (r6): the eval gram set, the train-side gram scan and the
     // final rebuild all read the word table (3 scans before)
-    val base = docs(spark, dir)
+    val base = Tables.docs(spark, dir)
       .select(col("doc_id"), split(col("text"), " ").as("words"))
       .withColumn("n_tokens", size(col("words")).cast("long"))
       .localCheckpoint(true)
@@ -1285,7 +1314,7 @@ object TextAnalysis {
     import graft.functions.GraftFunctions
     val buckets = Seq("latin", "cyrillic", "greek", "arabic", "hebrew",
       "cjk", "hangul")
-    val base = docs(spark, dir).select(col("doc_id"), col("lang"),
+    val base = Tables.docs(spark, dir).select(col("doc_id"), col("lang"),
       GraftFunctions.scriptProfile(col("text")).as("p"))
     val letters = buckets.map(b => col(s"p.$b")).reduce(_ + _)
     val top = greatest(buckets.map(b => col(s"p.$b")): _*)
@@ -1323,7 +1352,7 @@ object TextAnalysis {
     val h = (s: Column) =>
       conv(substring(md5(s), 1, 15), 16, 10).cast("long")
     val dec = (c: Column) => c.cast(DecimalType(38, 0))
-    docs(spark, dir)
+    Tables.docs(spark, dir)
       .select(
         (h(concat(lit("shard:"), col("doc_id").cast("string"))) % shards)
           .as("shard_id"),
@@ -1361,7 +1390,7 @@ object TextAnalysis {
       topK: Int = 50): DataFrame = {
     // tokenize once (the qt16 r6 rationale): unigram counts, totals, bigram
     // counts and totals each re-ran the normalize+split scan (4x)
-    val w = ScanLayout.ensureParallel(docs(spark, dir)).select(
+    val w = ScanLayout.ensureParallel(Tables.docs(spark, dir)).select(
       split(trim(regexp_replace(GraftFunctions.lower(col("text")), "\\s+", " ")), " ").as("w"))
       .localCheckpoint(true)
     val uni = w.select(explode(col("w")).as("word"))
@@ -1421,7 +1450,7 @@ object TextAnalysis {
     */
   def kmvSetOps(spark: SparkSession, dir: String, k: Int = 256): DataFrame = {
     require(k >= 2, s"need k >= 2, got $k")
-    val toks = docs(spark, dir).select(
+    val toks = Tables.docs(spark, dir).select(
       (col("doc_id") % 2).cast("int").as("half"),
       explode(Dedup.shingles(col("text"), 2)).as("item"))
     val sk = toks.groupBy(col("half"))
@@ -1503,7 +1532,7 @@ object TextAnalysis {
     */
   def jsdDrift(spark: SparkSession, dir: String, buckets: Int = 256): DataFrame = {
     require(buckets >= 2, s"need buckets >= 2, got $buckets")
-    val words = docs(spark, dir).select(
+    val words = Tables.docs(spark, dir).select(
       (col("doc_id") % 2).cast("int").as("half"),
       explode(split(trim(regexp_replace(GraftFunctions.lower(col("text")), "\\s+", " ")), " "))
         .as("w"))
@@ -1607,7 +1636,7 @@ object TextAnalysis {
     val digits = regexp_count(col("text"), lit("[0-9]")).cast("long")
     val stop = regexp_count(col("text"),
       lit("\\b(the|a|and|of|to|in|is|for|on|with)\\b")).cast("long")
-    docs(spark, dir)
+    Tables.docs(spark, dir)
       .select(col("source"), chars.as("c"), words.as("w"), punct.as("p"),
         digits.as("d"), stop.as("s"))
       .groupBy(col("source"))
@@ -1689,7 +1718,7 @@ object TextAnalysis {
     val syl = regexp_count(GraftFunctions.lower(col("text")), lit("[aeiouy]+")).cast("long")
     val wps = col("n_words").cast("double") / col("n_sentences").cast("double")
     val spw = col("n_syllables").cast("double") / col("n_words").cast("double")
-    docs(spark, dir)
+    Tables.docs(spark, dir)
       .select(col("doc_id"), w.as("n_words"), s.as("n_sentences"),
         syl.as("n_syllables"))
       .withColumn("wps_raw", wps)
@@ -1727,7 +1756,7 @@ object TextAnalysis {
       s"need 1 <= stride <= win, got win=$win stride=$stride")
     val h = (s: Column) =>
       conv(substring(md5(s), 1, 15), 16, 10).cast("long")
-    docs(spark, dir)
+    Tables.docs(spark, dir)
       .select(col("doc_id"), split(trim(col("text")), "\\s+").as("words"))
       .select(col("doc_id"), col("words"),
         posexplode(sequence(lit(0), size(col("words")) - 1, lit(stride)))
@@ -1765,7 +1794,7 @@ object TextAnalysis {
       .cast("long")
     val u = (h.cast("double") + lit(1.0d)) / lit(1152921504606846976.0d) // 2^60
     val w = (lit(1) + col("n_chars") % 64).cast("long")
-    docs(spark, dir)
+    Tables.docs(spark, dir)
       .select(col("doc_id"), w.as("weight"),
         round(round(log(u), 9) / w, 9).as("es_key"))
       .orderBy(col("es_key").desc, col("doc_id").asc)
@@ -1794,7 +1823,7 @@ object TextAnalysis {
     */
   def tokenBudget(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val perSource = docs(spark, dir)
+    val perSource = Tables.docs(spark, dir)
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"),
         sum(size(split(trim(col("text")), "\\s+")).cast("long")).as("tokens"))
@@ -1858,7 +1887,7 @@ object TextAnalysis {
     */
   def heapsCurve(spark: SparkSession, dir: String, buckets: Int = 10): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val toks = docs(spark, dir).select(col("doc_id"),
+    val toks = Tables.docs(spark, dir).select(col("doc_id"),
       explode(split(trim(GraftFunctions.lower(col("text"))), "\\s+")).as("term"))
     val maxId = toks.agg(max(col("doc_id")).as("max_id"))
     // genuine integer floor division (r6, ADVICE): `/` is DOUBLE division
@@ -1906,7 +1935,7 @@ object TextAnalysis {
     */
   def zipfCurve(spark: SparkSession, dir: String, k: Int = 32): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val cnt = docs(spark, dir).select(
+    val cnt = Tables.docs(spark, dir).select(
         explode(split(trim(GraftFunctions.lower(col("text"))), "\\s+")).as("term"))
       .groupBy(col("term")).agg(count(lit(1)).as("cnt"))
     val scal = cnt.agg(max(col("cnt")).as("c1"), sum(col("cnt")).as("tot"))
@@ -1945,7 +1974,7 @@ object TextAnalysis {
   def sourceOverlap(spark: SparkSession, dir: String, w: Int = 3): DataFrame = {
     // materialized once per query (r6; eager per-invocation local checkpoint): per-source sizes and BOTH self-join sides read the
     // distinct (source, gram) table — 3 shingling scans before (guide §2.4)
-    val ss = docs(spark, dir)
+    val ss = Tables.docs(spark, dir)
       .select(col("source"), explode(Dedup.shingles(col("text"), w)).as("g"))
       .distinct()
       .localCheckpoint(true)
@@ -2019,7 +2048,7 @@ object TextAnalysis {
     // tokenize once (r6): tf, dl and the query carve-out all read the
     // token table (3 normalize+split scans before); tf feeds both the df
     // marginal and the posting build
-    val words = ScanLayout.ensureParallel(docs(spark, dir))
+    val words = ScanLayout.ensureParallel(Tables.docs(spark, dir))
       .select(col("doc_id"), split(trim(GraftFunctions.lower(col("text"))), "\\s+").as("w"))
       .localCheckpoint(true)
     val tokens = words.select(col("doc_id"), explode(col("w")).as("term"))
@@ -2093,7 +2122,7 @@ object TextAnalysis {
       phrases: Seq[String] =
         Seq("slow scan", "hash join", "a a", "an", "merge"),
       flagPerTenK: Int = 150): DataFrame = {
-    docs(spark, dir)
+    Tables.docs(spark, dir)
       .select(col("doc_id"),
         length(col("text")).cast("long").as("n_chars_t"),
         graft.functions.GraftFunctions
@@ -2146,7 +2175,7 @@ object TextAnalysis {
   def sketchedOverlap(spark: SparkSession, dir: String, w: Int = 3,
       k: Int = 256): DataFrame = {
     require(k >= 2, s"need k >= 2, got $k")
-    val toks = docs(spark, dir).select(col("source"),
+    val toks = Tables.docs(spark, dir).select(col("source"),
       explode(Dedup.shingles(col("text"), w)).as("g"))
     val sk = toks.groupBy(col("source"))
       .agg(graft.functions.GraftFunctions.kmvSketch(col("g"), k).as("sk"))
@@ -2214,7 +2243,7 @@ object TextAnalysis {
     val mers = 2305843009213693951L
     // parallelize the scan feeding BOTH full passes (CMS build + exact
     // re-count) — each was one serial map task at the test layout
-    val items = ScanLayout.ensureParallel(docs(spark, dir))
+    val items = ScanLayout.ensureParallel(Tables.docs(spark, dir))
       .select(explode(Dedup.shingles(col("text"), 2)).as("item"))
     // fixed-size driver collect: d*w longs + one count (the bloom-bitset /
     // IVF-quantizer precedent, Similarity.scala:98)
@@ -2240,7 +2269,7 @@ object TextAnalysis {
 
   def tokenizerFertility(spark: SparkSession, dir: String, k: Int = 8): DataFrame =
     bpeEncode(spark, dir, k)
-      .join(docs(spark, dir).select(col("doc_id"), col("lang")), Seq("doc_id"))
+      .join(Tables.docs(spark, dir).select(col("doc_id"), col("lang")), Seq("doc_id"))
       .groupBy(col("lang"))
       .agg(
         count(lit(1)).as("n_docs"),

@@ -22,9 +22,6 @@ import graft.functions.GraftFunctions
   */
 object UrlCuration {
 
-  private def docs(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/documents.parquet")
-
   /** Deterministic planted raw URL per doc (see class doc). Path identity is
     * `doc_id % 300` and the host derives from THAT, so distinct docs collide
     * on the canonical URL at every corpus size; noise (case, params,
@@ -89,7 +86,7 @@ object UrlCuration {
     * corpus-sized; AQE size-gates it, never hinted).
     */
   def domainCap(spark: SparkSession, dir: String, cap: Int = 8): DataFrame = {
-    val u = withRawUrl(docs(spark, dir))
+    val u = withRawUrl(Tables.docs(spark, dir))
       .withColumn("domain",
         regexp_extract(GraftFunctions.lower(col("raw_url")), "://([^/?#]*)", 1))
       .select(col("doc_id"), col("n_chars"), col("domain"))
@@ -133,7 +130,7 @@ object UrlCuration {
   def snapshotDedup(spark: SparkSession, dir: String): DataFrame = {
     val epoch = lit(1704067200L) +
       (col("doc_id") % 97) * 86400L + (col("doc_id") % 13) * 3600L
-    val u = withRawUrl(docs(spark, dir))
+    val u = withRawUrl(Tables.docs(spark, dir))
       .select(col("doc_id"), col("raw_url"))
       .withColumn("canon_url", canonicalize(col("raw_url")))
       .withColumn("warc_epoch", epoch)
@@ -159,7 +156,7 @@ object UrlCuration {
     * pages combines map-side instead of serializing a window partition.
     */
   def urlDedup(spark: SparkSession, dir: String): DataFrame = {
-    val u = withRawUrl(docs(spark, dir))
+    val u = withRawUrl(Tables.docs(spark, dir))
       .select(col("doc_id"), col("raw_url"))
       .withColumn("canon_url", canonicalize(col("raw_url")))
     val keepers = u.groupBy(col("canon_url"))
@@ -184,7 +181,7 @@ object UrlCuration {
     * path_depth, n_params, n_tracking_params, url_len).
     */
   def urlFeatures(spark: SparkSession, dir: String): DataFrame = {
-    val u = withRawUrl(docs(spark, dir))
+    val u = withRawUrl(Tables.docs(spark, dir))
     val host = GraftFunctions.lower(regexp_extract(col("raw_url"), "^[A-Za-z]+://([^/?#]+)", 1))
     val path = regexp_extract(col("raw_url"), "^[A-Za-z]+://[^/?#]+([^?#]*)", 1)
     val query = regexp_extract(col("raw_url"), "\\?([^#]*)", 1)
@@ -228,7 +225,7 @@ object UrlCuration {
   def frontierSchedule(spark: SparkSession, dir: String, delayMs: Long = 1000,
       slots: Long = 64): DataFrame = {
     require(delayMs >= 1 && slots >= 1, s"need delayMs/slots >= 1")
-    val canon = withRawUrl(docs(spark, dir))
+    val canon = withRawUrl(Tables.docs(spark, dir))
       .select(canonicalize(col("raw_url")).as("canon_url")).distinct()
     val hosts = canon
       .select(regexp_extract(col("canon_url"), "^[a-z]+://([^/?#]+)", 1)

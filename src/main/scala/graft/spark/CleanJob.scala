@@ -1,9 +1,10 @@
 package graft.spark
 
-import org.apache.spark.sql.{DataFrame, Dataset, GraftCheckpoint, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, GraftCheckpoint, Observation,
+  SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.ops.{Dedup, TextAnalysis}
+import graft.ops.{Dedup, Tables, TextAnalysis}
 
 /** The composed corpus-cleaning pipeline — the ops library's individual
   * passes (canonical-URL dedup -> exact dedup -> MinHash-LSH near-dup pairs
@@ -31,6 +32,12 @@ import graft.ops.{Dedup, TextAnalysis}
   *    files its write produced ([[writtenRows]]), not from a Spark job over
   *    the re-read table, so the lineage checks still audit what landed on
   *    disk without paying a read-back per stage.
+  *  - ONE WRITE PER STAGE: every stage reads its input through
+  *    [[graft.ops.Tables.parquet]] (no schema-inference job) and writes one
+  *    frame derived from it. The per-row tallies a stage reports (gated
+  *    docs, dropped lines, rewritten docs, split sizes) are observed on that
+  *    write ([[writeObserved]]); kept counts still come from the written
+  *    footers, so each lineage check compares two independent counts.
   */
 object CleanJob {
 
@@ -176,23 +183,15 @@ object CleanJob {
     }
   }
 
-  /** Rows in the parquet table at `path` (a file or a directory of part
-    * files), summed from the file footers on the driver — no Spark job.
-    * Hidden entries (`_SUCCESS`, `.crc`, `_temporary`) are skipped, as the
-    * parquet reader skips them.
+  /** Rows in the parquet table at `path`, summed from the footers of its
+    * data files ([[graft.ops.Tables.dataFiles]], the listing the table
+    * reader uses) on the driver — no Spark job.
     */
   private[spark] def writtenRows(spark: SparkSession, path: String): Long = {
-    import org.apache.hadoop.fs.{FileStatus, Path}
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
     val conf = spark.sparkContext.hadoopConfiguration
-    val root = new Path(path)
-    val fs = root.getFileSystem(conf)
-    def visible(p: Path) = !p.getName.startsWith("_") && !p.getName.startsWith(".")
-    def files(st: FileStatus): Seq[FileStatus] =
-      if (!st.isDirectory) Seq(st)
-      else fs.listStatus(st.getPath).toSeq.filter(c => visible(c.getPath)).flatMap(files)
-    files(fs.getFileStatus(root)).map { st =>
+    Tables.dataFiles(spark, path).map { st =>
       val r = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
       try r.getRecordCount finally r.close()
     }.sum
@@ -203,6 +202,26 @@ object CleanJob {
     df.write.mode("overwrite").parquet(path)
     writtenRows(df.sparkSession, path)
   }
+
+  /** Overwrite `path` with `keep(df)`, observing `tallies` (long aggregates)
+    * over `df`'s rows on that same write job, through an `Observation` made
+    * for this call. Returns the rows written (footers) and the tallies.
+    */
+  private def writeObserved(df: DataFrame, path: String, tallies: Column*)(
+      keep: DataFrame => DataFrame): (Long, Map[String, Long]) = {
+    val o = Observation()
+    val n = writeCounted(keep(df.observe(o, tallies.head, tallies.tail: _*)), path)
+    (n, o.get.map { case (k, v) => k -> v.asInstanceOf[Long] })
+  }
+
+  /** `rows` with the stage input's columns (`in`), its `text` replaced by
+    * `clean_text` and `n_chars` recomputed, both moved last: the layout the
+    * rewrite stages have always written.
+    */
+  private def withCleanText(in: DataFrame, rows: DataFrame): DataFrame =
+    rows.select(in.columns.toSeq.filterNot(Set("text", "n_chars")).map(col) ++ Seq(
+      col("clean_text").as("text"),
+      length(col("clean_text")).cast("long").as("n_chars")): _*)
 
   final case class CleanStats(
       nInput: Long,
@@ -275,7 +294,7 @@ object CleanJob {
           r
       }
     }
-    val docsIn = spark.read.parquet(s"$corpusDir/documents.parquet")
+    val docsIn = Tables.docs(spark, corpusDir)
     val nInput = writtenRows(spark, s"$corpusDir/documents.parquet")
 
     // stage 0: URL-level dedup — runs BEFORE any text pass, as in a real
@@ -303,7 +322,7 @@ object CleanJob {
     // One hash shuffle; survivors checkpoint to parquet for the next stage.
     val exactDir = s"$outDir/stage_exact"
     val exactKept = stage("exact", urlKept) {
-      val textIn = spark.read.parquet(s"$textInDir/documents.parquet")
+      val textIn = Tables.docs(spark, textInDir)
       val keep = textIn
         .withColumn("fp", Dedup.fingerprintCol(col("text")))
         .groupBy(col("fp")).agg(min(col("doc_id")).as("doc_id"))
@@ -331,7 +350,7 @@ object CleanJob {
     val ccStats = stage("cc_survivors", exactKept) {
       // the pair list is read once: connectedComponents checkpoints it
       val labels = Dedup.connectedComponents(
-        spark.read.parquet(s"$pairsDir/pairs.parquet"))
+        Tables.parquet(spark, s"$pairsDir/pairs.parquet"))
       val sizes = labels.groupBy(col("label").as("cluster_id"))
         .agg(count(lit(1)).as("cluster_size"))
       val clusters = labels
@@ -345,21 +364,19 @@ object CleanJob {
         col("survivor"))
       val dropIds = survivors.filter(!col("survivor")).select(col("doc_id"))
       Map("clusters" -> nC,
-        "kept" -> writeCounted(spark.read.parquet(s"$exactDir/documents.parquet")
+        "kept" -> writeCounted(Tables.docs(spark, exactDir)
           .join(dropIds, Seq("doc_id"), "left_anti"), s"$nearDir/documents.parquet"))
     }
     val (nearClusters, nearKept) = (ccStats("clusters"), ccStats("kept"))
 
     // stage 4: quality gate on the deduped corpus -> the doc-level clean
-    // table. Scores the (smaller) nearDir table directly — per-doc scores
-    // are deterministic, so this equals gating on the stage-3 scores while
-    // keeping the stage self-contained for resume.
+    // table: the nearDir rows whose qt2 quality score passes. Per-doc
+    // scores are deterministic, so this equals gating on the stage-3
+    // scores while keeping the stage self-contained for resume.
     val nFinal = stage("quality_gate", nearKept) {
-      val passing = TextAnalysis.qualityScores(spark, nearDir)
-        .filter(col("quality_score") >= minQuality)
-        .select(col("doc_id"))
-      Map("kept" -> writeCounted(spark.read.parquet(s"$nearDir/documents.parquet")
-        .join(passing, Seq("doc_id"), "left_semi"), s"$outDir/clean/documents.parquet"))
+      Map("kept" -> writeCounted(Tables.docs(spark, nearDir)
+        .filter(TextAnalysis.qualityScore(col("text")) >= minQuality),
+        s"$outDir/clean/documents.parquet"))
     }("kept")
 
     // stage 5: exact-substring span removal (qd14's operator) — the
@@ -370,23 +387,15 @@ object CleanJob {
     // RefinedWeb's order (doc-level dedup first shrinks the gram table the
     // substring pass must build).
     val substrStats = stage("substr", nFinal) {
-      val prof = Dedup.exactSubstrDedup(spark, s"$outDir/clean")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val a = prof.agg(
-          coalesce(sum((col("n_spans") > 0).cast("long")), lit(0L)).as("rd"),
-          coalesce(sum(col("removed_tokens")), lit(0L)).as("rt")).collect()(0)
-        val nOut = writeCounted(spark.read.parquet(s"$outDir/clean/documents.parquet")
-          .drop("text", "n_chars")
-          .join(prof.select(col("doc_id"), col("clean_text").as("text")),
-            Seq("doc_id"))
-          .withColumn("n_chars", length(col("text")).cast("long")),
-          s"$outDir/final/documents.parquet")
-        require(nOut == nFinal,
-          s"substr stage must rewrite, never drop: $nOut != $nFinal")
-        Map("rewritten" -> a.getAs[Long]("rd"),
-          "tokens_removed" -> a.getAs[Long]("rt"))
-      } finally prof.unpersist()
+      val in = Tables.docs(spark, s"$outDir/clean")
+      val (nOut, t) = writeObserved(Dedup.exactSubstrOf(in),
+          s"$outDir/final/documents.parquet",
+          coalesce(sum((col("n_spans") > 0).cast("long")), lit(0L)).as("rewritten"),
+          coalesce(sum(col("removed_tokens")), lit(0L)).as("tokens_removed"))(
+        withCleanText(in, _))
+      require(nOut == nFinal,
+        s"substr stage must rewrite, never drop: $nOut != $nFinal")
+      t
     }
 
     // stage 6: LINE-level cleaning (qt26's operator, C4 §2.2 / CCNet's
@@ -403,54 +412,40 @@ object CleanJob {
     // (one map-only pass); the gate is the only stage after quality that
     // may DROP documents, so lineage tracks it separately.
     val lineStats = stage("line_clean", nFinal) {
-      val prof = TextAnalysis.c4LineClean(spark, s"$outDir/final",
-          block = "graft")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val a = prof.agg(
-          coalesce(sum((col("kept") === 0).cast("long")), lit(0L)).as("g"),
+      val in = Tables.docs(spark, s"$outDir/final")
+      val (nOut, t) = writeObserved(TextAnalysis.c4LineCleanOf(in, block = "graft"),
+          s"$outDir/delivered/documents.parquet",
+          coalesce(sum((col("kept") === 0).cast("long")), lit(0L)).as("gated"),
           coalesce(sum(when(col("kept") === 1,
             col("n_rule_dropped") + col("n_dup_dropped")).otherwise(0L)),
-            lit(0L)).as("ld")).collect()(0)
-        val nOut = writeCounted(spark.read.parquet(s"$outDir/final/documents.parquet")
-          .drop("text", "n_chars")
-          .join(prof.filter(col("kept") === 1)
-            .select(col("doc_id"), col("clean_text").as("text")),
-            Seq("doc_id"))
-          .withColumn("n_chars", length(col("text")).cast("long")),
-          s"$outDir/delivered/documents.parquet")
-        require(nOut == nFinal - a.getAs[Long]("g"),
-          s"line stage drops exactly the gated docs: $nOut != " +
-            s"$nFinal - ${a.getAs[Long]("g")}")
-        Map("gated" -> a.getAs[Long]("g"),
-          "lines_dropped" -> a.getAs[Long]("ld"),
-          "delivered" -> nOut)
-      } finally prof.unpersist()
+            lit(0L)).as("lines_dropped"))(
+        rows => withCleanText(in, rows.filter(col("kept") === 1)))
+      require(nOut == nFinal - t("gated"),
+        s"line stage drops exactly the gated docs: $nOut != $nFinal - ${t("gated")}")
+      t + ("delivered" -> nOut)
     }
 
     // stage 7: Gopher repetition gate (qt29's operator, Rae et al. 2021
     // §A1.1) — the MassiveText repetition battery over the delivered table:
     // docs failing ANY of the thirteen published thresholds (dup lines/
     // paragraphs, top-{2,3,4}-gram and dup-{5..10}-gram character
-    // fractions) are dropped. One map-only native-expression pass plus a
-    // semi join; runs LAST because its md5 line segmentation must see the
-    // line-cleaned rebuild (production pipelines run it among the quality
-    // filters pre-dedup; here the dedup stages are verified against planted
-    // populations the gate must not perturb).
+    // fractions) are dropped. One map-only native-expression pass that
+    // filters on the pass flag; runs LAST because its md5 line segmentation
+    // must see the line-cleaned rebuild (production pipelines run it among
+    // the quality filters pre-dedup; here the dedup stages are verified
+    // against planted populations the gate must not perturb).
     val nDeliveredCnt = lineStats("delivered")
     val repStats = stage("repetition_gate", nDeliveredCnt) {
-      val prof = TextAnalysis.gopherRepetition(spark, s"$outDir/delivered")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val gated = prof.filter(col("passes_repetition") === 0).count()
-        val nOut = writeCounted(spark.read.parquet(s"$outDir/delivered/documents.parquet")
-          .join(prof.filter(col("passes_repetition") === 1).select(col("doc_id")),
-            Seq("doc_id"), "left_semi"), s"$outDir/released/documents.parquet")
-        require(nOut == nDeliveredCnt - gated,
-          s"repetition stage drops exactly the gated docs: $nOut != " +
-            s"$nDeliveredCnt - $gated")
-        Map("gated" -> gated, "released" -> nOut)
-      } finally prof.unpersist()
+      val in = Tables.docs(spark, s"$outDir/delivered")
+      val (nOut, t) = writeObserved(TextAnalysis.gopherRepetitionOf(in),
+          s"$outDir/released/documents.parquet",
+          coalesce(sum((col("passes_repetition") === 0).cast("long")), lit(0L))
+            .as("gated"))(
+        _.filter(col("passes_repetition") === 1).select(in.columns.toSeq.map(col): _*))
+      require(nOut == nDeliveredCnt - t("gated"),
+        s"repetition stage drops exactly the gated docs: $nOut != " +
+          s"$nDeliveredCnt - ${t("gated")}")
+      t + ("released" -> nOut)
     }
 
     // stage 8: leakage-free split assignment over the RELEASED corpus via
@@ -463,14 +458,14 @@ object CleanJob {
     // star guard co-locates a SUPERSET of every pair either would admit.
     val nReleasedCnt = repStats("released")
     val splitStats = stage("split_assign", nReleasedCnt) {
-      graft.ops.Dedup.bucketSplit(spark, s"$outDir/released")
-        .write.mode("overwrite").parquet(s"$outDir/splits/splits.parquet")
-      val byS = spark.read.parquet(s"$outDir/splits/splits.parquet")
-        .groupBy(col("split")).count().collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-      Map("train" -> byS.getOrElse("train", 0L),
-        "val" -> byS.getOrElse("val", 0L),
-        "test" -> byS.getOrElse("test", 0L))
+      def splitSize(split: String) =
+        coalesce(sum((col("split") === split).cast("long")), lit(0L)).as(split)
+      val (nOut, t) = writeObserved(Dedup.bucketSplit(spark, s"$outDir/released"),
+        s"$outDir/splits/splits.parquet",
+        splitSize("train"), splitSize("val"), splitSize("test"))(identity)
+      require(nOut == nReleasedCnt,
+        s"split stage assigns every released doc once: $nOut != $nReleasedCnt")
+      t
     }
 
     val stats = CleanStats(

@@ -2,7 +2,7 @@ package graft.spark
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,6 +11,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * must conserve end to end.
   */
 class CleanJobSpec extends AnyFunSuite with BeforeAndAfterAll {
+
+  /** Jobs `CleanJob.run` may start on the 500-doc corpus. */
+  private val JOBPIN = 53
 
   @transient private var spark: SparkSession = _
 
@@ -74,7 +77,24 @@ class CleanJobSpec extends AnyFunSuite with BeforeAndAfterAll {
     val n = 500L
     CleanJob.DocCorpus.generate(spark, n, partitions = 4)
       .write.mode("overwrite").parquet(s"$out/corpus/documents.parquet")
-    val stats = CleanJob.run(spark, s"$out/corpus", out)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    org.apache.spark.ListenerBusTestDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    val stats = try {
+      val r = CleanJob.run(spark, s"$out/corpus", out)
+      org.apache.spark.ListenerBusTestDrain(spark.sparkContext)
+      r
+    } finally spark.sparkContext.removeSparkListener(listener)
+    // no schema-inference job per table read, and the rewrite and gate
+    // stages run one write each, their tallies observed on it: 85 jobs
+    // here when each read inferred its schema and those stages persisted a
+    // profile, tallied it in separate jobs and joined it back
+    assert(jobs.get() <= JOBPIN, s"${jobs.get()} jobs for CleanJob.run at n = $n")
 
     // every lineage number, pinned: the seeded corpus is a pure function of
     // the row index, so any drift here is a changed stage result
@@ -86,14 +106,18 @@ class CleanJobSpec extends AnyFunSuite with BeforeAndAfterAll {
       nReleased = 251, splitTrain = 209, splitVal = 20, splitTest = 22),
       stats.toString)
     // stage counts come from the written files' footers: each must equal
-    // what the parquet reader counts in the same table
+    // what the parquet reader counts in the same table, and the shared
+    // reader must see the schema Spark infers for it
     Seq("corpus/documents", "stage_url/documents", "stage_exact/documents",
         "stage_pairs/pairs", "stage_near/documents", "clean/documents",
         "final/documents", "delivered/documents", "released/documents",
         "splits/splits").foreach { t =>
       val dir = s"$out/$t.parquet"
       assert(CleanJob.writtenRows(spark, dir) == spark.read.parquet(dir).count(), t)
+      assert(graft.ops.Tables.parquet(spark, dir).schema ==
+        spark.read.parquet(dir).schema, t)
     }
+    assertStagesMatchJoinComposition(out, stats)
 
     assert(stats.nInput == n)
     // stage 0 removes exactly the 50 planted URL re-crawls (id%10==9),
@@ -203,6 +227,96 @@ class CleanJobSpec extends AnyFunSuite with BeforeAndAfterAll {
         val (a, b) = (r.getLong(0), r.getLong(1))
         assert(splitOf(a) == splitOf(b), s"LEAK: ($a,$b) straddles splits")
       }
+  }
+
+  /** The composition the rewrite and gate stages ran before each became one
+    * observed write: persist the per-doc profile of the query form, tally
+    * it with separate aggregate jobs, re-read the stage input and join the
+    * profile back on doc_id. Each stage table (rows, column order) and each
+    * tally must equal what it computes from the same stage input.
+    */
+  private def assertStagesMatchJoinComposition(out: String,
+      stats: CleanJob.CleanStats): Unit = {
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+    import graft.ops.{Dedup, TextAnalysis}
+    def docs(t: String) = spark.read.parquet(s"$out/$t/documents.parquet")
+    def same(got: DataFrame, want: DataFrame, stage: String): Unit = {
+      assert(got.columns.toSeq == want.columns.toSeq, stage)
+      assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty, stage)
+    }
+    def rewritten(in: DataFrame, prof: DataFrame) =
+      in.drop("text", "n_chars")
+        .join(prof.select(col("doc_id"), col("clean_text").as("text")), Seq("doc_id"))
+        .withColumn("n_chars", length(col("text")).cast("long"))
+
+    val passing = TextAnalysis.qualityScores(spark, s"$out/stage_near")
+      .filter(col("quality_score") >= 0.35).select(col("doc_id"))
+    same(docs("clean"), docs("stage_near").join(passing, Seq("doc_id"), "left_semi"),
+      "quality_gate")
+
+    val substr = Dedup.exactSubstrDedup(spark, s"$out/clean").persist(MEMORY_AND_DISK)
+    try {
+      val a = substr.agg(sum((col("n_spans") > 0).cast("long")),
+        sum(col("removed_tokens"))).head()
+      assert((a.getLong(0), a.getLong(1)) ==
+        ((stats.substrRewritten, stats.substrTokensRemoved)))
+      same(docs("final"), rewritten(docs("clean"), substr), "substr")
+    } finally substr.unpersist()
+
+    val lines = TextAnalysis.c4LineClean(spark, s"$out/final", block = "graft")
+      .persist(MEMORY_AND_DISK)
+    try {
+      val a = lines.agg(sum((col("kept") === 0).cast("long")),
+        sum(when(col("kept") === 1, col("n_rule_dropped") + col("n_dup_dropped"))
+          .otherwise(0L))).head()
+      assert((a.getLong(0), a.getLong(1)) == ((stats.lineGated, stats.lineLinesDropped)))
+      same(docs("delivered"), rewritten(docs("final"), lines.filter(col("kept") === 1)),
+        "line_clean")
+    } finally lines.unpersist()
+
+    val rep = TextAnalysis.gopherRepetition(spark, s"$out/delivered")
+      .persist(MEMORY_AND_DISK)
+    try {
+      assert(rep.filter(col("passes_repetition") === 0).count() == stats.repetitionGated)
+      same(docs("released"), docs("delivered").join(
+        rep.filter(col("passes_repetition") === 1).select(col("doc_id")),
+        Seq("doc_id"), "left_semi"), "repetition_gate")
+    } finally rep.unpersist()
+
+    val splits = spark.read.parquet(s"$out/splits/splits.parquet")
+    same(splits, Dedup.bucketSplit(spark, s"$out/released"), "split_assign")
+    val bySplit = splits.groupBy(col("split")).count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(bySplit == Map("train" -> stats.splitTrain, "val" -> stats.splitVal,
+      "test" -> stats.splitTest).filter(_._2 > 0), bySplit.toString)
+  }
+
+  test("frame-level cores carry extra columns and equal the qd14/qt26/qt29 " +
+      "query outputs") {
+    import org.apache.spark.sql.functions.col
+    import graft.ops.{Dedup, Tables, TextAnalysis}
+    val out = Files.createTempDirectory("graft-clean-cores").toString
+    CleanJob.DocCorpus.generate(spark, 300L, partitions = 4)
+      .write.mode("overwrite").parquet(s"$out/documents.parquet")
+    val docs = Tables.docs(spark, out)
+    assert(docs.columns.length == 6) // doc_id, text and four columns to carry
+    def same(got: DataFrame, want: DataFrame, what: String): Unit = {
+      assert(got.columns.toSeq == want.columns.toSeq, what)
+      assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty, what)
+    }
+    Seq[(String, DataFrame, DataFrame)](
+      ("qd14", Dedup.exactSubstrOf(docs), Dedup.exactSubstrDedup(spark, out)),
+      ("qt26", TextAnalysis.c4LineCleanOf(docs, block = "graft"),
+        TextAnalysis.c4LineClean(spark, out, block = "graft")),
+      ("qt29", TextAnalysis.gopherRepetitionOf(docs),
+        TextAnalysis.gopherRepetition(spark, out))).foreach { case (q, core, query) =>
+      same(core.select(docs.columns.map(col): _*), docs, s"$q carried columns")
+      same(core.select(query.columns.map(col): _*), query, s"$q query columns")
+    }
+    // the quality gate's score is qt2's quality_score
+    same(docs.select(col("doc_id"), TextAnalysis.qualityScore(col("text")).as("quality_score")),
+      TextAnalysis.qualityScores(spark, out).select("doc_id", "quality_score"), "qt2")
   }
 
   test("near-dup recall: CleanJob's XXH64 LSH builder and the portable one " +
