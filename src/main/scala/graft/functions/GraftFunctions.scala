@@ -2,12 +2,14 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression,
+  UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expressions for the hot paths where composing built-ins
@@ -228,15 +230,163 @@ object GraftImpl {
     * DuckDB oracles compute the same halves via substr(md5(x), ...).
     */
   def md5Halves(dg: Array[Byte]): (Long, Long) = {
+    var lo7 = 0L
+    var i = 8
+    while (i < 15) { lo7 = (lo7 << 8) | (dg(i) & 0xffL); i += 1 }
+    val b = ((dg(7) & 0x0fL) << 56) | lo7
+    (md5Hi60(dg), b)
+  }
+
+  /** [[md5Halves]]' first half alone: the md5_60 key
+    * conv(substring(md5(x), 1, 15), 16, 10) every positional-gram and
+    * line-break hash uses.
+    */
+  def md5Hi60(dg: Array[Byte]): Long = {
     var hi7 = 0L
     var i = 0
     while (i < 7) { hi7 = (hi7 << 8) | (dg(i) & 0xffL); i += 1 }
-    val a = (hi7 << 4) | ((dg(7) & 0xf0L) >>> 4)
-    var lo7 = 0L
-    i = 8
-    while (i < 15) { lo7 = (lo7 << 8) | (dg(i) & 0xffL); i += 1 }
-    val b = ((dg(7) & 0x0fL) << 56) | lo7
-    (a, b)
+    (hi7 << 4) | ((dg(7) & 0xf0L) >>> 4)
+  }
+
+  /** Feeds a string's bytes to `md` without copying them off the heap. */
+  private def mdUpdate(md: java.security.MessageDigest, s: UTF8String): Unit =
+    s.getBaseObject match {
+      case b: Array[Byte] =>
+        md.update(b, (s.getBaseOffset - Platform.BYTE_ARRAY_OFFSET).toInt, s.numBytes)
+      case _ => md.update(s.getBytes)
+    }
+
+  /** md5_60 of `doc_id:i` for each word index i < n: the qt26/qt29 line
+    * break hash (word i ends a line iff it is 0 mod the mean line length),
+    * equal to conv(substring(md5(concat(doc_id, ':', i)), 1, 15), 16, 10).
+    * Null for a null doc_id: callers break nowhere then, as that composed
+    * form's null predicate does.
+    */
+  def breakHashes(docId: UTF8String, n: Int): Array[Long] = {
+    if (docId == null) return null
+    val out = new Array[Long](n)
+    val p = docId.numBytes
+    val key = new Array[Byte](p + 11)
+    docId.writeToMemory(key, Platform.BYTE_ARRAY_OFFSET)
+    key(p) = ':'
+    val md = md5Local.get()
+    md.reset()
+    val dg = new Array[Byte](16)
+    var i = 0
+    while (i < n) {
+      var digits = 1
+      var v = i / 10
+      while (v > 0) { digits += 1; v /= 10 }
+      v = i
+      var d = p + digits
+      while (d > p) { key(d) = ('0' + v % 10).toByte; v /= 10; d -= 1 }
+      md.update(key, 0, p + 1 + digits)
+      md.digest(dg, 0, 16)
+      out(i) = md5Hi60(dg)
+      i += 1
+    }
+    out
+  }
+
+  /** md5_60 of each positional word w-gram: entry i hashes
+    * array_join(slice(words, i + 1, w), ' ') (null words skipped, as
+    * array_join skips them), for i in 0 .. n - w. Empty below w words.
+    * qd14/qt38's gram table and winnowing's first loop.
+    */
+  def gramHashes(words: ArrayData, w: Int): Array[Long] = {
+    val n = words.numElements()
+    val out = new Array[Long](math.max(n - w + 1, 0))
+    if (out.isEmpty) return out
+    val ws = new Array[UTF8String](n)
+    var i = 0
+    while (i < n) { if (!words.isNullAt(i)) ws(i) = words.getUTF8String(i); i += 1 }
+    val md = md5Local.get()
+    md.reset()
+    val dg = new Array[Byte](16)
+    i = 0
+    while (i < out.length) {
+      var first = true
+      var q = i
+      while (q < i + w) {
+        if (ws(q) != null) {
+          if (!first) md.update(' '.toByte)
+          mdUpdate(md, ws(q))
+          first = false
+        }
+        q += 1
+      }
+      md.digest(dg, 0, 16)
+      out(i) = md5Hi60(dg)
+      i += 1
+    }
+    out
+  }
+
+  /** array_join of the words whose index no span [s, e) covers, with ' ':
+    * the filter(words, (_, i) -> !exists(spans, sp -> sp.s <= i AND i < sp.e))
+    * rebuild, one mask pass. Null spans keep every word; null span entries
+    * are skipped.
+    */
+  def dropSpans(words: ArrayData, spans: ArrayData): UTF8String = {
+    val n = words.numElements()
+    val cut = new Array[Boolean](n)
+    if (spans != null) {
+      var j = 0
+      while (j < spans.numElements()) {
+        if (!spans.isNullAt(j)) {
+          val sp = spans.getStruct(j, 2)
+          if (!sp.isNullAt(0) && !sp.isNullAt(1)) {
+            var i = math.min(math.max(sp.getLong(0), 0L), n.toLong).toInt
+            val e = math.min(sp.getLong(1), n.toLong)
+            while (i < e) { cut(i) = true; i += 1 }
+          }
+        }
+        j += 1
+      }
+    }
+    val kept = new Array[UTF8String](n)
+    var m = 0
+    var i = 0
+    while (i < n) {
+      if (!cut(i) && !words.isNullAt(i)) { kept(m) = words.getUTF8String(i); m += 1 }
+      i += 1
+    }
+    UTF8String.concatWs(Space, java.util.Arrays.copyOf(kept, m): _*)
+  }
+
+  private val Space = UTF8String.fromString(" ")
+
+  /** The islands of one doc's hit positions (any order): hits p < p'
+    * chain when p' - p <= w, an island spans [first, last + w), and islands
+    * shorter than minLen tokens are dropped. Returns (n_spans,
+    * removed_tokens, spans ascending) — qd14/qt38's gaps-and-islands merge
+    * in one sort and one sweep. Null positions are skipped.
+    */
+  def islandSpans(hits: ArrayData, w: Int,
+      minLen: Int): org.apache.spark.sql.catalyst.InternalRow = {
+    val pos = new Array[Long](hits.numElements())
+    var n = 0
+    var i = 0
+    while (i < pos.length) {
+      if (!hits.isNullAt(i)) { pos(n) = hits.getInt(i); n += 1 }
+      i += 1
+    }
+    java.util.Arrays.sort(pos, 0, n)
+    val spans = new java.util.ArrayList[AnyRef]()
+    var removed = 0L
+    i = 0
+    while (i < n) {
+      val s = pos(i)
+      while (i + 1 < n && pos(i + 1) - pos(i) <= w) i += 1
+      val e = pos(i) + w
+      if (e - s >= minLen) {
+        spans.add(org.apache.spark.sql.catalyst.InternalRow(s, e))
+        removed += e - s
+      }
+      i += 1
+    }
+    org.apache.spark.sql.catalyst.InternalRow(spans.size.toLong, removed,
+      new org.apache.spark.sql.catalyst.util.GenericArrayData(spans.toArray))
   }
 
   private val md5Local = new ThreadLocal[java.security.MessageDigest] {
@@ -346,132 +496,169 @@ object GraftImpl {
     *     of each distinct segment (occurrences and their code-point chars);
     *   - top-{2,3,4}-gram numerators = top_count * word-chars(top gram)
     *     (joined-gram code points minus the n-1 separators), tie-broken by
-    *     UTF-8 byte order like repetitionProfile;
+    *     the UTF-8 byte order of the joined grams like repetitionProfile;
     *   - dup-{5..10}-gram coverage = code-point chars of words at positions
     *     covered by AT LEAST one occurrence of any n-gram appearing >= 2
     *     times (the position-union Gopher/datatrove semantics — overlapping
     *     duplicated grams never double-count a word).
     *
-    * All lengths are Unicode code points (= DuckDB len()).
+    * All lengths are Unicode code points (= DuckDB len()). The words are
+    * interned to int ids once ([[WordRuns]]); segments and n-grams are
+    * counted as id runs in its exact (start, length) table, so no gram
+    * string is built: gram bytes are compared only to break top-gram ties.
     */
   def gopherRepetition(docId: UTF8String, text: UTF8String):
       org.apache.spark.sql.catalyst.InternalRow = {
-    val lowered = text.toLowerCase.toString
-    // split on single spaces, KEEPING empties (DuckDB string_split parity)
-    val words = new java.util.ArrayList[String]()
-    var start = 0
-    var i = 0
-    val len = lowered.length
-    while (i <= len) {
-      if (i == len || lowered.charAt(i) == ' ') {
-        words.add(lowered.substring(start, i))
-        start = i + 1
-      }
-      i += 1
-    }
-    val nWords = words.size()
-    def cp(s: String): Long = s.codePointCount(0, s.length).toLong
+    val r = new WordRuns(validBytes(text.toLowerCase))
+    val nWords = r.n
+    val cps = new Array[Long](nWords)
     var wordChars = 0L
-    i = 0
-    while (i < nWords) { wordChars += cp(words.get(i)); i += 1 }
+    var i = 0
+    while (i < nWords) { cps(i) = r.codePoints(i); wordChars += cps(i); i += 1 }
     // one 60-bit hash per word index drives both segmentations
-    val md = md5Local.get()
-    val idPrefix = docId.toString + ":"
-    val brk5 = new Array[Boolean](nWords)
-    val brk15 = new Array[Boolean](nWords)
-    i = 0
-    while (i < nWords) {
-      md.reset()
-      val h = md5Halves(md.digest((idPrefix + i).getBytes("UTF-8")))._1
-      brk5(i) = h % 5 == 0
-      brk15(i) = h % 15 == 0
-      i += 1
-    }
-    def segStats(brk: Array[Boolean]): (Long, Long, Long, Long) = {
-      val counts = new java.util.HashMap[String, Int]()
-      val sb = new java.lang.StringBuilder
-      var first = true
+    val h = breakHashes(docId, nWords)
+    def segStats(mod: Int): Array[Long] = {
+      r.clearRuns()
+      val st = new Array[Long](4) // segments, chars, dup occurrences, dup chars
+      var s = 0
+      var segChars = 0L
       var j = 0
       while (j < nWords) {
-        if (!first) sb.append(' ')
-        sb.append(words.get(j))
-        first = false
-        if (brk(j) || j == nWords - 1) {
-          val seg = sb.toString
-          if (seg.nonEmpty) counts.merge(seg, 1, Integer.sum)
-          sb.setLength(0)
-          first = true
+        segChars += cps(j)
+        if ((h != null && h(j) % mod == 0) || j == nWords - 1) {
+          val len = j - s + 1
+          if (len > 1 || r.until(s) > r.from(s)) {
+            val l = segChars + (len - 1)
+            val slot = r.runSlot(s, len, r.runHash(s, len))
+            st(0) += 1; st(1) += l
+            if (r.runCount(slot) > 0) { st(2) += 1; st(3) += l }
+            r.runCount(slot) += 1
+          }
+          s = j + 1
+          segChars = 0L
         }
         j += 1
       }
-      var n = 0L; var chars = 0L; var dupOcc = 0L; var dupChars = 0L
-      val it = counts.entrySet().iterator()
-      while (it.hasNext) {
-        val e = it.next()
-        val c = e.getValue.toLong
-        val l = cp(e.getKey)
-        n += c; chars += c * l
-        dupOcc += c - 1; dupChars += (c - 1) * l
-      }
-      (n, chars, dupOcc, dupChars)
+      st
     }
-    val (nLines, lineChars, dupLineOcc, dupLineChars) = segStats(brk5)
-    val (nParas, paraChars, dupParaOcc, dupParaChars) = segStats(brk15)
-    def gram(p: Int, n: Int): String = {
-      val sb = new java.lang.StringBuilder
-      var q = p
-      while (q < p + n) {
-        if (q > p) sb.append(' ')
-        sb.append(words.get(q))
-        q += 1
-      }
-      sb.toString
-    }
-    // top-{2,3,4}: top_count * word-chars of the byte-order-smallest
-    // max-count gram
-    val topNum = Array(2, 3, 4).map { n =>
-      val counts = new java.util.HashMap[String, Int]()
+    val lines = segStats(5)
+    val paras = segStats(15)
+    // n-grams of growing n: gh(p) extends the run hash of [p, p + n - 1)
+    // by word p + n - 1; slots(p) is the table slot of the gram at p
+    val gh = new Array[Long](nWords)
+    java.util.Arrays.fill(gh, WordRuns.Seed)
+    val slots = new Array[Int](nWords)
+    val topNum = new Array[Long](3)
+    val dupCov = new Array[Long](6)
+    var n = 1
+    while (n <= 10) {
+      val nGrams = nWords - n + 1
       var p = 0
-      while (p + n <= nWords) { counts.merge(gram(p, n), 1, Integer.sum); p += 1 }
-      var topCount = 0
-      var top: UTF8String = null
-      val it = counts.entrySet().iterator()
-      while (it.hasNext) {
-        val e = it.next()
-        if (e.getValue > topCount) {
-          topCount = e.getValue; top = UTF8String.fromString(e.getKey)
-        } else if (e.getValue == topCount && topCount > 0) {
-          val u = UTF8String.fromString(e.getKey)
-          if (u.compareTo(top) < 0) top = u
+      while (p < nGrams) { gh(p) = WordRuns.step(gh(p), r.ids(p + n - 1)); p += 1 }
+      if (n >= 2 && nGrams > 0) {
+        r.clearRuns()
+        p = 0
+        while (p < nGrams) {
+          val slot = r.runSlot(p, n, gh(p))
+          r.runCount(slot) += 1
+          slots(p) = slot
+          p += 1
+        }
+        if (n <= 4) {
+          // top_count * word-chars of the byte-order-smallest max-count gram
+          var best = 0
+          p = 1
+          while (p < nGrams) {
+            val c = r.runCount(slots(p))
+            val cb = r.runCount(slots(best))
+            if (c > cb || (c == cb && slots(p) != slots(best) &&
+                r.compareJoined(p, best, n) < 0)) best = p
+            p += 1
+          }
+          var chars = 0L
+          var q = best
+          while (q < best + n) { chars += cps(q); q += 1 }
+          topNum(n - 2) = r.runCount(slots(best)) * chars
+        } else {
+          // union of word positions covered by duplicated n-grams
+          var reach = 0
+          var chars = 0L
+          p = 0
+          while (p < nWords) {
+            if (p < nGrams && r.runCount(slots(p)) >= 2) reach = p + n
+            if (p < reach) chars += cps(p)
+            p += 1
+          }
+          dupCov(n - 5) = chars
         }
       }
-      if (top == null) 0L else topCount.toLong * (cp(top.toString) - (n - 1))
-    }
-    // dup-{5..10}: union of word positions covered by duplicated n-grams
-    val covered = new Array[Boolean](nWords)
-    val dupCov = (5 to 10).map { n =>
-      val counts = new java.util.HashMap[String, Int]()
-      var p = 0
-      while (p + n <= nWords) { counts.merge(gram(p, n), 1, Integer.sum); p += 1 }
-      java.util.Arrays.fill(covered, false)
-      p = 0
-      while (p + n <= nWords) {
-        if (counts.get(gram(p, n)) >= 2) {
-          var q = p
-          while (q < p + n) { covered(q) = true; q += 1 }
-        }
-        p += 1
-      }
-      var chars = 0L
-      var j = 0
-      while (j < nWords) { if (covered(j)) chars += cp(words.get(j)); j += 1 }
-      chars
+      n += 1
     }
     org.apache.spark.sql.catalyst.InternalRow(
-      (Seq(nWords.toLong, wordChars, nLines, lineChars, dupLineOcc,
-        dupLineChars, nParas, paraChars, dupParaOcc, dupParaChars) ++
-        topNum ++ dupCov).map(_.asInstanceOf[Any]): _*)
+      (Seq(nWords.toLong, wordChars) ++ lines ++ paras ++ topNum ++ dupCov)
+        .map(_.asInstanceOf[Any]): _*)
   }
+
+  /** qt26's C4 line battery over one document in one pass (the
+    * split/filter/zip_with/array_position composition it replaces): words =
+    * split(text, ' ') keeping empties; word i ends a line iff
+    * md5_60(doc_id:i) % meanLen == 0 ([[breakHashes]]); empty lines are not
+    * lines; a line passes the rules with >= minWords words and no word equal
+    * to `block`; among passing lines the first of each distinct line is
+    * kept (a hash set of [[WordRuns]] id runs). Returns (n_lines,
+    * n_rule_dropped, n_dup_dropped, n_kept, kept = n_kept >= minLines,
+    * clean_text = the kept lines joined with ' ').
+    */
+  def c4LineClean(docId: UTF8String, text: UTF8String, meanLen: Int,
+      minWords: Int, block: UTF8String,
+      minLines: Int): org.apache.spark.sql.catalyst.InternalRow = {
+    val b = validBytes(text)
+    val r = new WordRuns(b)
+    val n = r.n
+    val h = breakHashes(docId, n)
+    val blockId = r.idOf(block)
+    val out = new Array[Byte](b.length)
+    var o = 0
+    var nLines = 0L
+    var nRuleOk = 0L
+    var nKept = 0L
+    var s = 0
+    var blocked = false
+    var j = 0
+    while (j < n) {
+      blocked ||= r.ids(j) == blockId
+      if ((h != null && h(j) % meanLen == 0) || j == n - 1) {
+        val len = j - s + 1
+        if (len > 1 || r.until(s) > r.from(s)) {
+          nLines += 1
+          if (len >= minWords && !blocked) {
+            nRuleOk += 1
+            val slot = r.runSlot(s, len, r.runHash(s, len))
+            if (r.runCount(slot) == 0) {
+              r.runCount(slot) = 1
+              nKept += 1
+              if (o > 0) { out(o) = ' '.toByte; o += 1 }
+              System.arraycopy(b, r.from(s), out, o, r.until(j) - r.from(s))
+              o += r.until(j) - r.from(s)
+            }
+          }
+        }
+        s = j + 1
+        blocked = false
+      }
+      j += 1
+    }
+    org.apache.spark.sql.catalyst.InternalRow(nLines, nLines - nRuleOk,
+      nRuleOk - nKept, nKept, if (nKept >= minLines) 1 else 0,
+      UTF8String.fromBytes(out, 0, o))
+  }
+
+  /** The bytes of `s` as Spark's split sees them: a string that is not
+    * valid UTF-8 round-trips through java.lang.String, whose decoder
+    * replaces each malformed sequence (what split(s, ' ') does to it).
+    */
+  private def validBytes(s: UTF8String): Array[Byte] =
+    if (s.isValid) s.getBytes else UTF8String.fromString(s.toString).getBytes
 
   /** One-pass winnowing fingerprint selection (qd15's map-only core;
     * Schleimer et al. 2003): positional k-gram 60-bit md5 hashes over the
@@ -484,26 +671,11 @@ object GraftImpl {
     * (OpsSpec pins them against an independent reference).
     */
   def winnowFps(words: ArrayData, k: Int, win: Int): ArrayData = {
-    val n = words.numElements()
-    val nGrams = n - k + 1
+    val h = gramHashes(words, k)
+    val nGrams = h.length
     val empty = new org.apache.spark.sql.catalyst.util.GenericArrayData(
       Array.empty[AnyRef])
     if (nGrams < win) return empty
-    val h = new Array[Long](nGrams)
-    val md = md5Local.get()
-    var i = 0
-    while (i < nGrams) {
-      val sb = new java.lang.StringBuilder
-      var q = i
-      while (q < i + k) {
-        if (q > i) sb.append(' ')
-        sb.append(words.getUTF8String(q).toString)
-        q += 1
-      }
-      md.reset()
-      h(i) = md5Halves(md.digest(sb.toString.getBytes("UTF-8")))._1
-      i += 1
-    }
     // sliding rightmost-min: evict back while >= incoming (ties prefer the
     // newer index, so the deque front is the window's RIGHTMOST min)
     val deque = new Array[Int](nGrams)
@@ -511,7 +683,7 @@ object GraftImpl {
     var tail = 0
     val out = new java.util.ArrayList[AnyRef]()
     var last = -1
-    i = 0
+    var i = 0
     while (i < nGrams) {
       while (tail > head && h(deque(tail - 1)) >= h(i)) tail -= 1
       deque(tail) = i
@@ -716,6 +888,151 @@ object GraftImpl {
       i += 1
     }
     org.apache.spark.sql.catalyst.InternalRow(hits, nSeen)
+  }
+}
+
+/** One document's words as byte ranges of a UTF-8 buffer, split on single
+  * spaces keeping empties (Spark's split(text, ' '), DuckDB's
+  * string_split), each distinct word interned to an int id, plus an exact
+  * open-addressing table of word runs keyed by (start, length). Two runs
+  * share a slot only when their id runs are equal, and since no word holds
+  * a space, equal id runs are exactly equal joined strings. The table holds
+  * at most `n` runs between clears at load <= 1/2.
+  */
+private[functions] final class WordRuns(bytes: Array[Byte]) {
+  val n: Int = {
+    var c = 1
+    var i = 0
+    while (i < bytes.length) { if (bytes(i) == ' ') c += 1; i += 1 }
+    c
+  }
+  /** Word w is bytes [from(w), until(w)). */
+  val from = new Array[Int](n)
+  val until = new Array[Int](n)
+  locally {
+    var w = 0
+    var s = 0
+    var i = 0
+    while (i <= bytes.length) {
+      if (i == bytes.length || bytes(i) == ' ') {
+        from(w) = s; until(w) = i; w += 1; s = i + 1
+      }
+      i += 1
+    }
+  }
+
+  private val mask = {
+    var cap = 16
+    while (cap < 2 * n) cap <<= 1
+    cap - 1
+  }
+
+  private def bytesHash(b: Array[Byte], f: Int, u: Int): Int = {
+    var h = 0x811c9dc5
+    var i = f
+    while (i < u) { h = (h ^ (b(i) & 0xff)) * 0x01000193; i += 1 }
+    h ^ (h >>> 16)
+  }
+
+  private def sameBytes(b: Array[Byte], f: Int, u: Int, w: Int): Boolean =
+    u - f == until(w) - from(w) &&
+      java.util.Arrays.equals(b, f, u, bytes, from(w), until(w))
+
+  // intern table: slot -> 1 + the index of the word that first held it
+  private val wordAt = new Array[Int](mask + 1)
+  private val idAt = new Array[Int](mask + 1)
+  /** The id of word w: ids count distinct words in first-seen order. */
+  val ids = new Array[Int](n)
+  locally {
+    var next = 0
+    var w = 0
+    while (w < n) {
+      var slot = bytesHash(bytes, from(w), until(w)) & mask
+      while (wordAt(slot) != 0 && !sameBytes(bytes, from(w), until(w), wordAt(slot) - 1))
+        slot = (slot + 1) & mask
+      if (wordAt(slot) == 0) { wordAt(slot) = w + 1; idAt(slot) = next; next += 1 }
+      ids(w) = idAt(slot)
+      w += 1
+    }
+  }
+
+  /** The id of the word equal to `s`, or -1 when no word is. */
+  def idOf(s: UTF8String): Int = {
+    val b = s.getBytes
+    var slot = bytesHash(b, 0, b.length) & mask
+    while (wordAt(slot) != 0) {
+      if (sameBytes(b, 0, b.length, wordAt(slot) - 1)) return idAt(slot)
+      slot = (slot + 1) & mask
+    }
+    -1
+  }
+
+  /** Unicode code points of word w (its non-continuation bytes). */
+  def codePoints(w: Int): Long = {
+    var c = 0L
+    var i = from(w)
+    while (i < until(w)) { if ((bytes(i) & 0xc0) != 0x80) c += 1; i += 1 }
+    c
+  }
+
+  private val runStart = new Array[Int](mask + 1)
+  private val runLen = new Array[Int](mask + 1) // 0 = free slot
+  private val runKey = new Array[Long](mask + 1)
+  /** A caller-kept count per slot, zeroed when its run is inserted. */
+  val runCount = new Array[Int](mask + 1)
+
+  def clearRuns(): Unit = java.util.Arrays.fill(runLen, 0)
+
+  /** [[WordRuns.step]] folded over the ids of run [s, s + len). */
+  def runHash(s: Int, len: Int): Long = {
+    var h = WordRuns.Seed
+    var i = s
+    while (i < s + len) { h = WordRuns.step(h, ids(i)); i += 1 }
+    h
+  }
+
+  /** The slot of run [s, s + len) (len >= 1, `h` its [[runHash]]),
+    * inserted with count 0 if no equal run is in the table.
+    */
+  def runSlot(s: Int, len: Int, h: Long): Int = {
+    var slot = (h ^ (h >>> 32)).toInt & mask
+    while (runLen(slot) != 0) {
+      if (runLen(slot) == len && runKey(slot) == h &&
+          java.util.Arrays.equals(ids, runStart(slot), runStart(slot) + len, ids, s, s + len))
+        return slot
+      slot = (slot + 1) & mask
+    }
+    runStart(slot) = s; runLen(slot) = len; runKey(slot) = h; runCount(slot) = 0
+    slot
+  }
+
+  /** UTF-8 byte order of the joined strings of runs [p, p + len) and
+    * [q, q + len): what UTF8String.compareTo gives for the two grams.
+    */
+  def compareJoined(p: Int, q: Int, len: Int): Int = {
+    // cursors over the virtual joined bytes; a word's end reads as ' '
+    // unless it is the run's last word
+    var wa = p; var ia = from(p)
+    var wb = q; var ib = from(q)
+    while (true) {
+      val ea = ia == until(wa) && wa == p + len - 1
+      val eb = ib == until(wb) && wb == q + len - 1
+      if (ea || eb) return (if (ea) 0 else 1) - (if (eb) 0 else 1)
+      val ca = if (ia < until(wa)) bytes(ia) & 0xff else ' '.toInt
+      val cb = if (ib < until(wb)) bytes(ib) & 0xff else ' '.toInt
+      if (ca != cb) return ca - cb
+      if (ia < until(wa)) ia += 1 else { wa += 1; ia = from(wa) }
+      if (ib < until(wb)) ib += 1 else { wb += 1; ib = from(wb) }
+    }
+    0
+  }
+}
+
+private[functions] object WordRuns {
+  val Seed: Long = 0x243f6a8885a308d3L
+  def step(h: Long, id: Int): Long = {
+    val x = (h ^ (id + 1L)) * 0x9e3779b97f4a7c15L
+    x ^ (x >>> 29)
   }
 }
 
@@ -1488,7 +1805,6 @@ case class ScriptProfile(child: Expression) extends UnaryExpression {
   override def prettyName: String = "script_profile"
 }
 
-/** dot_i64(a, b): exact integer dot product of two ARRAY<BIGINT> codes. */
 /** gopher_repetition(doc_id, text): the 19 integer numerators/denominators
   * of the Gopher §A1.1 repetition battery in one pass (qt29's core) — the
   * fractions divide once at the column layer. Never null for non-null input.
@@ -1512,6 +1828,7 @@ case class GopherRepetition(left: Expression, right: Expression)
   override def prettyName: String = "gopher_repetition"
 }
 
+/** dot_i64(a, b): exact integer dot product of two ARRAY<BIGINT> codes. */
 case class DotI64(left: Expression, right: Expression) extends BinaryExpression {
   override def dataType: DataType = LongType
   override protected def nullSafeEval(a: Any, b: Any): Any =
@@ -1587,7 +1904,6 @@ case class MinHashAffine(child: Expression, lanes: Int) extends UnaryExpression 
   override def prettyName: String = "minhash_affine"
 }
 
-/** srp_sigs(vec, tables, bits): one-pass multi-table SRP-LSH signatures. */
 /** winnow_fps(words, k, win): winnowing fingerprint selection —
   * ARRAY<STRUCT<pos, fp>> of the rightmost-min positional k-gram hashes
   * per win-window, distinct, in one O(n) pass.
@@ -1606,6 +1922,7 @@ case class WinnowFps(child: Expression, k: Int, win: Int)
   override def prettyName: String = "winnow_fps"
 }
 
+/** srp_sigs(vec, tables, bits): one-pass multi-table SRP-LSH signatures. */
 case class SrpSigs(child: Expression, tables: Int, bits: Int) extends UnaryExpression {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override protected def nullSafeEval(input: Any): Any =
@@ -1615,6 +1932,133 @@ case class SrpSigs(child: Expression, tables: Int, bits: Int) extends UnaryExpre
   override protected def withNewChildInternal(newChild: Expression): SrpSigs =
     copy(child = newChild)
   override def prettyName: String = "srp_sigs"
+}
+
+/** gram_hashes(words, w): the md5_60 of each positional word w-gram,
+  * ARRAY<BIGINT> in position order (qd14/qt38's gram table): the
+  * transform(sequence(0, n - w), i -> md5_60(array_join(slice(words, i + 1,
+  * w), ' '))) composition in one pass. Empty below w words.
+  */
+case class GramHashes(child: Expression, w: Int) extends UnaryExpression {
+  require(w >= 1, s"gram_hashes needs w >= 1, got $w")
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override protected def nullSafeEval(input: Any): Any =
+    UnsafeArrayData.fromPrimitiveArray(GraftImpl.gramHashes(input.asInstanceOf[ArrayData], w))
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => "org.apache.spark.sql.catalyst.expressions.UnsafeArrayData" +
+      s".fromPrimitiveArray(graft.functions.GraftImpl.gramHashes($c, $w))")
+  override protected def withNewChildInternal(newChild: Expression): GramHashes =
+    copy(child = newChild)
+  override def prettyName: String = "gram_hashes"
+}
+
+/** drop_spans(words, spans): the words outside every span [s, e) of an
+  * ARRAY<STRUCT<s: BIGINT, e: BIGINT>>, joined with ' ' (qd14/qt38's
+  * rebuild). Null spans keep every word, so a doc with no span comes back
+  * as array_join(words, ' '); null for null words.
+  */
+case class DropSpans(left: Expression, right: Expression) extends BinaryExpression {
+  override def dataType: DataType = StringType
+  override def nullable: Boolean = left.nullable
+  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
+    val words = left.eval(input)
+    if (words == null) null
+    else GraftImpl.dropSpans(words.asInstanceOf[ArrayData],
+      right.eval(input).asInstanceOf[ArrayData])
+  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val w = left.genCode(ctx)
+    val sp = right.genCode(ctx)
+    ev.copy(code = code"""
+      ${w.code}
+      ${sp.code}
+      boolean ${ev.isNull} = ${w.isNull};
+      org.apache.spark.unsafe.types.UTF8String ${ev.value} = null;
+      if (!${ev.isNull}) {
+        ${ev.value} = graft.functions.GraftImpl.dropSpans(${w.value},
+          ${sp.isNull} ? null : ${sp.value});
+      }
+    """)
+  }
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): DropSpans =
+    copy(left = l, right = r)
+  override def prettyName: String = "drop_spans"
+}
+
+/** c4_line_clean(doc_id, text, meanLen, minWords, block, minLines): qt26's
+  * C4 line battery in one pass (see GraftImpl.c4LineClean) — STRUCT(n_lines,
+  * n_rule_dropped, n_dup_dropped, n_kept, kept, clean_text). Null for null
+  * text; a null doc_id breaks no line.
+  */
+case class C4LineClean(left: Expression, right: Expression, meanLen: Int,
+    minWords: Int, block: String, minLines: Int) extends BinaryExpression {
+  require(meanLen >= 1, s"c4_line_clean needs meanLen >= 1, got $meanLen")
+  require(block != null, "c4_line_clean needs a blocklist token")
+  @transient private lazy val blockUtf8 = UTF8String.fromString(block)
+  override def dataType: DataType = StructType(
+    Seq("n_lines", "n_rule_dropped", "n_dup_dropped", "n_kept")
+      .map(f => StructField(f, LongType, nullable = false)) ++ Seq(
+      StructField("kept", IntegerType, nullable = false),
+      StructField("clean_text", StringType, nullable = false)))
+  override def nullable: Boolean = right.nullable
+  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
+    val text = right.eval(input)
+    if (text == null) null
+    else GraftImpl.c4LineClean(left.eval(input).asInstanceOf[UTF8String],
+      text.asInstanceOf[UTF8String], meanLen, minWords, blockUtf8, minLines)
+  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val blockRef = ctx.addReferenceObj("c4Block", blockUtf8,
+      "org.apache.spark.unsafe.types.UTF8String")
+    val d = left.genCode(ctx)
+    val t = right.genCode(ctx)
+    ev.copy(code = code"""
+      ${d.code}
+      ${t.code}
+      boolean ${ev.isNull} = ${t.isNull};
+      org.apache.spark.sql.catalyst.InternalRow ${ev.value} = null;
+      if (!${ev.isNull}) {
+        ${ev.value} = graft.functions.GraftImpl.c4LineClean(
+          ${d.isNull} ? null : ${d.value}, ${t.value}, $meanLen, $minWords,
+          $blockRef, $minLines);
+      }
+    """)
+  }
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): C4LineClean =
+    copy(left = l, right = r)
+  override def prettyName: String = "c4_line_clean"
+}
+
+/** island_spans(hits, w, minLen): the island fold of one doc's hit
+  * positions, ARRAY<INT> in any order (collect_list them grouped by
+  * doc_id). Hits p < p' chain when p' - p <= w; an island spans
+  * [first, last + w) and is kept when it covers >= minLen tokens.
+  * STRUCT(n_spans, removed_tokens, spans: ARRAY<STRUCT<s, e>> ascending) —
+  * the lag/sum gaps-and-islands windows, their sort and the per-island and
+  * per-doc aggregates in one pass over each doc's hits.
+  */
+case class IslandSpans(child: Expression, w: Int, minLen: Int) extends UnaryExpression {
+  override def checkInputDataTypes()
+      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = child.dataType match {
+    case ArrayType(IntegerType, _) =>
+      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+    case t => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+      s"island_spans takes ARRAY<INT> positions, got ${t.simpleString}")
+  }
+  override def dataType: DataType = StructType(Seq(
+    StructField("n_spans", LongType, nullable = false),
+    StructField("removed_tokens", LongType, nullable = false),
+    StructField("spans", ArrayType(StructType(Seq(
+      StructField("s", LongType, nullable = false),
+      StructField("e", LongType, nullable = false))), containsNull = false),
+      nullable = false)))
+  override protected def nullSafeEval(input: Any): Any =
+    GraftImpl.islandSpans(input.asInstanceOf[ArrayData], w, minLen)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.functions.GraftImpl.islandSpans($c, $w, $minLen)")
+  override protected def withNewChildInternal(newChild: Expression): IslandSpans =
+    copy(child = newChild)
+  override def prettyName: String = "island_spans"
 }
 
 /** ac_scan(text, phrases): Aho–Corasick multi-phrase substring scan —
@@ -1685,6 +2129,13 @@ object GraftFunctions {
       exprs => GopherRepetition(exprs(0), exprs(1))),
     ("winnow_fps", classOf[WinnowFps],
       exprs => WinnowFps(exprs(0), intLit(exprs(1)), intLit(exprs(2)))),
+    ("gram_hashes", classOf[GramHashes], exprs => GramHashes(exprs(0), intLit(exprs(1)))),
+    ("drop_spans", classOf[DropSpans], exprs => DropSpans(exprs(0), exprs(1))),
+    ("island_spans", classOf[IslandSpans],
+      exprs => IslandSpans(exprs(0), intLit(exprs(1)), intLit(exprs(2)))),
+    ("c4_line_clean", classOf[C4LineClean],
+      exprs => C4LineClean(exprs(0), exprs(1), intLit(exprs(2)), intLit(exprs(3)),
+        strLit(exprs(4)), intLit(exprs(5)))),
     ("bpe_merge", classOf[BpeMerge], exprs => BpeMerge(exprs(0), exprs(1), exprs(2))),
     ("ac_scan", classOf[AcScan],
       exprs => AcScan(exprs(0), splitPhrases(strLit(exprs(1))))),
@@ -1810,6 +2261,29 @@ object GraftFunctions {
     call_function("winnow_fps", words,
       org.apache.spark.sql.functions.lit(k),
       org.apache.spark.sql.functions.lit(win))
+  }
+
+  def gramHashes(words: Column, w: Int): Column = {
+    ensureRegistered()
+    call_function("gram_hashes", words, org.apache.spark.sql.functions.lit(w))
+  }
+
+  def dropSpans(words: Column, spans: Column): Column = {
+    ensureRegistered(); call_function("drop_spans", words, spans)
+  }
+
+  def islandSpans(hits: Column, w: Int, minLen: Int): Column = {
+    ensureRegistered()
+    call_function("island_spans", hits, org.apache.spark.sql.functions.lit(w),
+      org.apache.spark.sql.functions.lit(minLen))
+  }
+
+  def c4LineClean(docId: Column, text: Column, meanLen: Int, minWords: Int,
+      block: String, minLines: Int): Column = {
+    import org.apache.spark.sql.functions.lit
+    ensureRegistered()
+    call_function("c4_line_clean", docId, text, lit(meanLen), lit(minWords),
+      lit(block), lit(minLines))
   }
 
   def bpeMerge(syms: Column, l: Column, r: Column): Column = {

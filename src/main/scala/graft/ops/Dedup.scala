@@ -1036,14 +1036,16 @@ object Dedup {
     * p < p' overlap or adjoin when p' - p <= w — and islands whose merged
     * token length e - s >= minLen are removed.
     *
-    * Scale shape: the duplicated-gram table is distinct + hash aggregate on
-    * the 60-bit key (map-side partials; a boilerplate gram in 10^6 docs
-    * combines before the shuffle) and is PRUNED to nd >= 2 before the probe
-    * join, so the join's build side carries only the duplicated vocabulary
-    * (qd13's pruning). Island merge is a gaps-and-islands window keyed by
-    * doc_id — high-cardinality key, partition bounded by tokens-per-doc.
-    * The rebuild joins the (tiny) per-doc span list back ONCE on doc_id and
-    * filters the doc's own token array with an index lambda — tokens are
+    * Scale shape: the positional gram rows are one native gram_hashes
+    * array per doc, exploded, and carry only 60-bit md5 keys and longs. A
+    * window partitioned by the key flags the duplicated grams (min/max
+    * doc_id): one shuffle and sort of the gram rows, which are read once —
+    * an aggregate of the duplicated keys probed back into the gram rows
+    * would read them twice and shuffle them three times.
+    * The hits are grouped once by doc_id and merged into islands by the
+    * native island_spans fold (doc-bounded buffers). The rebuild joins the
+    * (tiny) per-doc span list back ONCE on doc_id and cuts the spans from
+    * the doc's own token array with the native drop_spans — tokens are
     * never exploded through a shuffle, and a doc with no duplicated span
     * passes through untouched on the null side of the join.
     */
@@ -1057,7 +1059,6 @@ object Dedup {
     * with no exchange (its scan is [[ScanLayout.ensureParallel]]'d): the
     * input's columns carried through, plus n_tokens, n_spans,
     * removed_tokens and clean_text. CleanJob's substr stage writes from it.
-    * Building the frame runs the positional gram table's checkpoint job.
     */
   def exactSubstrOf(docs: DataFrame, w: Int = 5, minLen: Int = 8): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -1067,52 +1068,47 @@ object Dedup {
       .withColumn("words", split(col("text"), " "))
       .withColumn("n_tokens", size(col("words")).cast("long"))
 
-    val grams = base.where(col("n_tokens") >= w)
-      .select(col("doc_id"),
-        posexplode(transform(
-          sequence(lit(0), (col("n_tokens") - w).cast("int")),
-          i => conv(substring(md5(
-            array_join(slice(col("words"), i + 1, lit(w)), " ")),
-            1, 15), 16, 10).cast("long"))))
+    // a gram is duplicated when >= 2 distinct docs carry it (a null doc_id
+    // counts as one doc, as in the oracle's SELECT DISTINCT gh, doc_id)
+    val byGram = Window.partitionBy(col("gh"))
+    val hits = positionalGrams(base, w)
+      .select(col("doc_id"), col("pos"),
+        min(col("doc_id")).over(byGram).as("lo"),
+        max(col("doc_id")).over(byGram).as("hi"),
+        (count(lit(1)).over(byGram) > count(col("doc_id")).over(byGram)).as("anull"))
+      .where(col("lo") < col("hi") || (col("lo").isNotNull && col("anull")))
+
+    cutSpans(base, hits, w, minLen, docs.columns.toSeq.map(c => base(c)))
+  }
+
+  /** (doc_id, pos, gh): the md5_60 of each positional word w-gram of a frame
+    * carrying `doc_id`, `words` and `n_tokens` — the native gram_hashes
+    * array, exploded. qd14's and qt38's probe side.
+    */
+  private[ops] def positionalGrams(base: DataFrame, w: Int): DataFrame =
+    base.where(col("n_tokens") >= w)
+      .select(col("doc_id"), posexplode(GraftFunctions.gramHashes(col("words"), w)))
       .toDF("doc_id", "pos", "gh")
-      // checkpointed like [[signedBase]]: the duplicate-gram profile and the
-      // span join both read the positional gram table — each re-ran the md5
-      // gram explode before
-      .localCheckpoint(true)
 
-    val dup = grams.select(col("gh"), col("doc_id")).distinct()
-      .groupBy(col("gh")).agg(count(lit(1)).as("nd"))
-      .where(col("nd") >= 2)
-      .select(col("gh"))
-
-    val byDoc = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-    val spans = grams.join(dup, Seq("gh"))
-      .select(col("doc_id"), col("pos"))
-      .withColumn("brk",
-        when(col("pos") - lag(col("pos"), 1).over(byDoc) <= w, lit(0L))
-          .otherwise(lit(1L)))
-      .withColumn("grp", sum(col("brk")).over(byDoc))
-      .groupBy(col("doc_id"), col("grp"))
-      .agg(min(col("pos")).as("s"), (max(col("pos")) + w).as("e"))
-      .where(col("e") - col("s") >= minLen)
-
-    val perDoc = spans.groupBy(col("doc_id"))
-      .agg(
-        count(lit(1)).as("n_spans"),
-        sum((col("e") - col("s")).cast("long")).as("removed_tokens"),
-        collect_list(struct(col("s"), col("e"))).as("spans"))
-
+  /** `keep`, n_tokens, n_spans, removed_tokens and clean_text for each row
+    * of `base` (`doc_id`, `words`, `n_tokens`): each doc's hit positions
+    * (`hits`: doc_id, pos) are grouped ONCE on doc_id and fold into
+    * islands — hits p < p' chain when p' - p <= w, an island covers
+    * [first, last + w) — in the native island_spans; islands under minLen
+    * tokens are dropped, and the surviving spans are cut from the doc's own
+    * token array (drop_spans) after one left join. Tokens never shuffle; a
+    * doc with no span passes through on the null side of the join.
+    */
+  private[ops] def cutSpans(base: DataFrame, hits: DataFrame, w: Int, minLen: Int,
+      keep: Seq[Column]): DataFrame = {
+    val perDoc = hits.groupBy(col("doc_id"))
+      .agg(GraftFunctions.islandSpans(collect_list(col("pos")), w, minLen).as("isl"))
     base.join(perDoc, Seq("doc_id"), "left")
-      .select(docs.columns.toSeq.map(c => base(c)) ++ Seq(
+      .select(keep ++ Seq(
         col("n_tokens"),
-        coalesce(col("n_spans"), lit(0L)).as("n_spans"),
-        coalesce(col("removed_tokens"), lit(0L)).as("removed_tokens"),
-        when(col("spans").isNull, array_join(col("words"), " "))
-          .otherwise(array_join(
-            filter(col("words"), (_: Column, i: Column) =>
-              !exists(col("spans"), sp =>
-                sp.getField("s") <= i && i < sp.getField("e"))),
-            " ")).as("clean_text")): _*)
+        coalesce(col("isl.n_spans"), lit(0L)).as("n_spans"),
+        coalesce(col("isl.removed_tokens"), lit(0L)).as("removed_tokens"),
+        GraftFunctions.dropSpans(col("words"), col("isl.spans")).as("clean_text")): _*)
   }
 
   /** qd15: winnowing fingerprint selection (Schleimer, Wilkerson & Aiken

@@ -1069,9 +1069,11 @@ object TextAnalysis {
     *
     * Scale shape: ONE map-only pass, zero exchanges — the native
     * gopher_repetition expression returns the 19 integer numerators/
-    * denominators in a single traversal (O(words · n) with one HashMap per
-    * n-gram size, never the O(L^2) array-math form), and every division
-    * happens once per doc at the column layer. Scan reads (doc_id, text).
+    * denominators in a single traversal: the doc's words are interned to
+    * int ids once, and segments and n-grams are counted as id runs in one
+    * exact table keyed by (start, length), O(words · 10), with no string
+    * built per gram. Every division happens once per doc at the column
+    * layer. Scan reads (doc_id, text).
     */
   def gopherRepetition(spark: SparkSession, dir: String): DataFrame =
     gopherRepetitionOf(Tables.docs(spark, dir)).select(
@@ -1138,12 +1140,12 @@ object TextAnalysis {
     * mean line length meanLen, reproducible across engines and parallelism.
     *
     * Scale shape: ONE map-only pass, zero exchanges — segmentation, rules,
-    * dedup and rebuild are all array math inside the row (PlanSpec-style
-    * assertion in the spec). The keep-first step is array_position over the
-    * rule-surviving lines (first-occurrence index), O(L^2) in a document's
-    * LINE count — doc-bounded like qt14/qt16's collect_list rebuilds, never
-    * corpus-bounded; a corpus-wide line-frequency gate is qd12's shape, not
-    * this one. Scan reads exactly (doc_id, text).
+    * dedup and rebuild run in the native c4_line_clean expression, one
+    * traversal of the doc's words (PlanSpec-style assertion in the spec).
+    * The keep-first step is a hash set of the rule-surviving lines, linear
+    * in the doc's words — doc-bounded, never corpus-bounded; a corpus-wide
+    * line-frequency gate is qd12's shape, not this one. Scan reads exactly
+    * (doc_id, text).
     */
   def c4LineClean(spark: SparkSession, dir: String, meanLen: Int = 5,
       minWords: Int = 4, block: String = "dup", minLines: Int = 3): DataFrame =
@@ -1157,36 +1159,13 @@ object TextAnalysis {
     */
   def c4LineCleanOf(docs: DataFrame, meanLen: Int = 5, minWords: Int = 4,
       block: String = "dup", minLines: Int = 3): DataFrame = {
-    val words = split(col("text"), " ")
-    // word i (0-based) ends a line iff md5_60(doc_id:i) % meanLen == 0
-    val brk = filter(sequence(lit(0), size(words) - 1), i =>
-      conv(substring(md5(concat(col("doc_id").cast("string"), lit(":"),
-        i.cast("string"))), 1, 15), 16, 10).cast("long") % meanLen === 0)
-    val starts = concat(array(lit(0)), transform(brk, b => b + 1))
-    val ends = concat(brk, array(size(words) - 1))
-    val linesAll = filter(
-      zip_with(starts, ends,
-        (s, e) => array_join(slice(words, s + 1, e - s + 1), " ")),
-      l => l =!= "")
-    val ruleOk = (l: Column) =>
-      size(split(l, " ")) >= minWords and
-        not(array_contains(split(l, " "), block))
-
+    val p = col("__c4")
     docs
-      .withColumn("lines_all", linesAll)
-      .withColumn("lr", filter(col("lines_all"), ruleOk))
-      .withColumn("lk",
-        filter(col("lr"), (l, i) => array_position(col("lr"), l) === i + 1))
-      .select(
-        col("*"),
-        size(col("lines_all")).cast("long").as("n_lines"),
-        (size(col("lines_all")) - size(col("lr"))).cast("long")
-          .as("n_rule_dropped"),
-        (size(col("lr")) - size(col("lk"))).cast("long").as("n_dup_dropped"),
-        size(col("lk")).cast("long").as("n_kept"),
-        (size(col("lk")) >= minLines).cast("int").as("kept"),
-        array_join(col("lk"), " ").as("clean_text"))
-      .drop("lines_all", "lr", "lk")
+      .withColumn("__c4", GraftFunctions.c4LineClean(col("doc_id").cast("string"),
+        col("text"), meanLen, minWords, block, minLines))
+      .select(col("*") +: Seq("n_lines", "n_rule_dropped", "n_dup_dropped",
+        "n_kept", "kept", "clean_text").map(f => p(f).as(f)): _*)
+      .drop("__c4")
   }
 
   /** qt31: character-entropy quality profile — the compressibility-proxy
@@ -1227,15 +1206,16 @@ object TextAnalysis {
     * w-gram md5-60 hashes over train docs probe the distinct eval-suite
     * gram set (doc_id % evalMod == 0 plays the benchmark, as in qt8);
     * matched positions chain into islands (gap <= w), islands >= minLen
-    * tokens become removal spans, and each doc's token array is filtered
-    * once and re-joined.
+    * tokens become removal spans, and each doc's token array is cut once
+    * and re-joined — qd14's gram_hashes table, island_spans fold and
+    * drop_spans rebuild ([[Dedup.cutSpans]]).
     *
     * Scale shape: the probe join is AQE size-gated, never hinted — eval
     * suites grow with benchmark count (the qt13 lesson; at production
     * width the bloom prefilter composes in front of this probe unchanged).
-    * The island window partitions by doc_id (doc-bounded, never
-    * corpus-sized); the rebuild filters each doc's own token array after
-    * one span-list join, so tokens never shuffle (the qd14 property). The
+    * The island fold groups the hits by doc_id (doc-bounded, never
+    * corpus-sized); the rebuild cuts each doc's own token array after one
+    * span-list join, so tokens never shuffle (the qd14 property). The
     * DuckDB oracle replays every step including the rebuild.
     *
     * Output (train docs only): (doc_id, n_tokens, n_spans, removed_tokens,
@@ -1243,7 +1223,6 @@ object TextAnalysis {
     */
   def decontaminationRewrite(spark: SparkSession, dir: String, w: Int = 4,
       evalMod: Int = 29, minLen: Int = 6): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(w >= 1 && minLen >= w, s"need minLen >= w >= 1, got w=$w minLen=$minLen")
     // split once (r6): the eval gram set, the train-side gram scan and the
     // final rebuild all read the word table (3 scans before)
@@ -1251,44 +1230,11 @@ object TextAnalysis {
       .select(col("doc_id"), split(col("text"), " ").as("words"))
       .withColumn("n_tokens", size(col("words")).cast("long"))
       .localCheckpoint(true)
-    def grams(df: DataFrame): DataFrame = df.where(col("n_tokens") >= w)
-      .select(col("doc_id"),
-        posexplode(transform(
-          sequence(lit(0), (col("n_tokens") - w).cast("int")),
-          i => conv(substring(md5(
-            array_join(slice(col("words"), i + 1, lit(w)), " ")),
-            1, 15), 16, 10).cast("long"))))
-      .toDF("doc_id", "pos", "gh")
     val train = base.filter(col("doc_id") % evalMod =!= 0)
-    val evalSet = grams(base.filter(col("doc_id") % evalMod === 0))
+    val evalSet = Dedup.positionalGrams(base.filter(col("doc_id") % evalMod === 0), w)
       .select(col("gh")).distinct()
-    val byDoc = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-    val spans = grams(train).join(evalSet, Seq("gh"))
-      .select(col("doc_id"), col("pos"))
-      .withColumn("brk",
-        when(col("pos") - lag(col("pos"), 1).over(byDoc) <= w, lit(0L))
-          .otherwise(lit(1L)))
-      .withColumn("grp", sum(col("brk")).over(byDoc))
-      .groupBy(col("doc_id"), col("grp"))
-      .agg(min(col("pos")).as("s"), (max(col("pos")) + w).as("e"))
-      .where(col("e") - col("s") >= minLen)
-    val perDoc = spans.groupBy(col("doc_id"))
-      .agg(
-        count(lit(1)).as("n_spans"),
-        sum((col("e") - col("s")).cast("long")).as("removed_tokens"),
-        collect_list(struct(col("s"), col("e"))).as("spans"))
-    train.join(perDoc, Seq("doc_id"), "left")
-      .select(
-        col("doc_id"),
-        col("n_tokens"),
-        coalesce(col("n_spans"), lit(0L)).as("n_spans"),
-        coalesce(col("removed_tokens"), lit(0L)).as("removed_tokens"),
-        when(col("spans").isNull, array_join(col("words"), " "))
-          .otherwise(array_join(
-            filter(col("words"), (_: Column, i: Column) =>
-              !exists(col("spans"), sp =>
-                sp.getField("s") <= i && i < sp.getField("e"))),
-            " ")).as("clean_text"))
+    Dedup.cutSpans(train, Dedup.positionalGrams(train, w).join(evalSet, Seq("gh")),
+      w, minLen, Seq(col("doc_id")))
   }
 
   /** qt37: UNICODE SCRIPT PROFILE + declared-language consistency — the

@@ -2,11 +2,9 @@ package graft.functions
 
 import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Expression, Lower, Upper}
-import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.catalyst.expressions.{Lower, Upper}
+import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -67,32 +65,12 @@ class CaseMapSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  private object plans extends AdaptiveSparkPlanHelper
-
   /** Spark's Lower/Upper anywhere in an executed plan, subqueries included. */
   private def caseMaps(plan: SparkPlan): Seq[String] =
-    plans.collectWithSubqueries(plan) { case p => p }.flatMap(_.expressions)
-      .flatMap(_.collect { case e @ (_: Lower | _: Upper) => e.sql })
+    PlanWalk.find(plan) { case e @ (_: Lower | _: Upper) => e }
 
-  /** Every plan executed while `body` runs, plus the plan of its result. */
-  private def executedPlans(body: => Option[DataFrame]): Seq[SparkPlan] = {
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
-    val listener = new QueryExecutionListener {
-      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = {
-        seen.add(qe.executedPlan); ()
-      }
-      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    val result = try {
-      val df = body
-      df.foreach(_.collect())
-      org.apache.spark.ListenerBusTestDrain(spark.sparkContext)
-      df.map(_.queryExecution.executedPlan)
-    } finally spark.listenerManager.unregister(listener)
-    import scala.jdk.CollectionConverters._
-    seen.asScala.toSeq ++ result
-  }
+  private def executedPlans(body: => Option[DataFrame]): Seq[SparkPlan] =
+    PlanWalk.executedPlans(spark)(body)
 
   test("the walk finds Spark's own lower") {
     val own = executedPlans(Some(spark.range(3).select(lower(col("id").cast("string")))))

@@ -394,15 +394,17 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("qd14: exact-substring dedup shuffles BIGINT gram keys, never tokens") {
     val plan = planOf(Dedup.exactSubstrDedup(spark, sf))
-    // the duplicated-gram table is distinct + hash aggregate with map-side
-    // partials on the 60-bit key; the rebuild must be an array lambda over
-    // the doc's own tokens (one doc-keyed join), never a token explode
-    assert(plan.contains("partial_count"), plan)
+    // the exploded gram_hashes rows carry 60-bit keys; exactly one Window,
+    // keyed by the gram key, flags the duplicated grams; the rebuild is
+    // drop_spans over the doc's own tokens (one doc-keyed join), never a
+    // token explode
+    assert(plan.contains("posexplode(gram_hashes("), plan)
+    assert("Window\\b".r.findAllIn(plan).size == 1, plan)
+    assert("windowspecdefinition\\(gh#".r.findAllIn(plan).size == 4, plan)
+    assert(plan.contains("drop_spans("), plan)
     assert(!plan.contains("SortAggregate"), plan)
     assert(!plan.contains("CartesianProduct"), plan)
     assert(!plan.toLowerCase.contains("udf"), plan)
-    // exactly one Window: the doc_id-keyed gaps-and-islands merge
-    assert("Window\\b".r.findAllIn(plan).size >= 1, plan)
   }
 
   test("qt24: classifier inference broadcasts the fixed-size model, no Window") {

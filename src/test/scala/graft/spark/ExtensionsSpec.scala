@@ -117,6 +117,36 @@ class ExtensionsSpec extends AnyFunSuite {
       val poss = wf.map(_.getLong(0))
       assert(poss.nonEmpty && poss.length <= 3 && poss == poss.sorted &&
         poss.forall(p => p >= 0 && p <= 5), wf.toString)
+      // gram_hashes: one md5_60 per positional w-gram, equal to the
+      // composed conv(substring(md5(..))) key; none below w words
+      val gh = spark.sql(
+        "SELECT gram_hashes(array('a','b','c'), 2) AS g, " +
+          "conv(substring(md5('b c'), 1, 15), 16, 10) AS bc, " +
+          "gram_hashes(array('a'), 2) AS none").head
+      assert(gh.getSeq[Long](0).length == 2 && gh.getSeq[Long](0)(1) == gh.getString(1).toLong &&
+        gh.getSeq[Long](2).isEmpty, gh.toString)
+      // island_spans: hits 0,2,3 chain at w = 2 (island [0, 5)), 9 stands
+      // alone ([9, 11), under minLen 3); drop_spans cuts [0, 5)
+      val isl = spark.sql(
+        "SELECT island_spans(collect_list(p), 2, 3) AS i FROM VALUES (3), (0), (9), (2) AS v(p)")
+        .head.getStruct(0)
+      assert(isl.getLong(0) == 1L && isl.getLong(1) == 5L &&
+        isl.getSeq[org.apache.spark.sql.Row](2).map(r => (r.getLong(0), r.getLong(1))) ==
+          Seq((0L, 5L)), isl.toString)
+      val badIsl = intercept[org.apache.spark.sql.AnalysisException](
+        spark.sql("SELECT island_spans(array(1L), 2, 3)").collect())
+      assert(badIsl.getMessage.contains("ARRAY<INT>"), badIsl.getMessage)
+      val dropped = spark.sql(
+        "SELECT drop_spans(split('a b c d e f g', ' '), " +
+          "array(named_struct('s', 1L, 'e', 3L), named_struct('s', 5L, 'e', 6L))) AS t, " +
+          "drop_spans(split('a b', ' '), NULL) AS kept").head
+      assert(dropped.getString(0) == "a d e g" && dropped.getString(1) == "a b", dropped.toString)
+      // c4_line_clean: with mean line length 1 every word is a line; the
+      // repeated 'x' and the blocked 'b' drop, three lines survive
+      val c4 = spark.sql(
+        "SELECT c4_line_clean('7', 'x b y x z', 1, 1, 'b', 3) AS c").head.getStruct(0)
+      assert((0 to 3).map(c4.getLong) == Seq(5L, 1L, 1L, 3L) && c4.getInt(4) == 1 &&
+        c4.getString(5) == "x y z", c4.toString)
       // ac_scan: '|'-joined phrase list; "ushers" hits she/he/hers
       val ac = spark.sql(
         "SELECT ac_scan('ushers', 'he|she|his|hers') AS a").head.getStruct(0)
