@@ -520,24 +520,14 @@ object GraftImpl {
     def segStats(mod: Int): Array[Long] = {
       r.clearRuns()
       val st = new Array[Long](4) // segments, chars, dup occurrences, dup chars
-      var s = 0
-      var segChars = 0L
-      var j = 0
-      while (j < nWords) {
-        segChars += cps(j)
-        if ((h != null && h(j) % mod == 0) || j == nWords - 1) {
-          val len = j - s + 1
-          if (len > 1 || r.until(s) > r.from(s)) {
-            val l = segChars + (len - 1)
-            val slot = r.runSlot(s, len, r.runHash(s, len))
-            st(0) += 1; st(1) += l
-            if (r.runCount(slot) > 0) { st(2) += 1; st(3) += l }
-            r.runCount(slot) += 1
-          }
-          s = j + 1
-          segChars = 0L
-        }
-        j += 1
+      r.foreachSegment(h, mod) { (s, len) =>
+        var l = len - 1L // the joining spaces
+        var j = s
+        while (j < s + len) { l += cps(j); j += 1 }
+        val slot = r.runSlot(s, len)
+        st(0) += 1; st(1) += l
+        if (r.runCount(slot) > 0) { st(2) += 1; st(3) += l }
+        r.runCount(slot) += 1
       }
       st
     }
@@ -622,31 +612,23 @@ object GraftImpl {
     var nLines = 0L
     var nRuleOk = 0L
     var nKept = 0L
-    var s = 0
-    var blocked = false
-    var j = 0
-    while (j < n) {
-      blocked ||= r.ids(j) == blockId
-      if ((h != null && h(j) % meanLen == 0) || j == n - 1) {
-        val len = j - s + 1
-        if (len > 1 || r.until(s) > r.from(s)) {
-          nLines += 1
-          if (len >= minWords && !blocked) {
-            nRuleOk += 1
-            val slot = r.runSlot(s, len, r.runHash(s, len))
-            if (r.runCount(slot) == 0) {
-              r.runCount(slot) = 1
-              nKept += 1
-              if (o > 0) { out(o) = ' '.toByte; o += 1 }
-              System.arraycopy(b, r.from(s), out, o, r.until(j) - r.from(s))
-              o += r.until(j) - r.from(s)
-            }
-          }
+    r.foreachSegment(h, meanLen) { (s, len) =>
+      nLines += 1
+      var blocked = false
+      var j = s
+      while (j < s + len) { blocked ||= r.ids(j) == blockId; j += 1 }
+      if (len >= minWords && !blocked) {
+        nRuleOk += 1
+        val slot = r.runSlot(s, len)
+        if (r.runCount(slot) == 0) {
+          r.runCount(slot) = 1
+          nKept += 1
+          if (o > 0) { out(o) = ' '.toByte; o += 1 }
+          val u = r.until(s + len - 1)
+          System.arraycopy(b, r.from(s), out, o, u - r.from(s))
+          o += u - r.from(s)
         }
-        s = j + 1
-        blocked = false
       }
-      j += 1
     }
     org.apache.spark.sql.catalyst.InternalRow(nLines, nLines - nRuleOk,
       nRuleOk - nKept, nKept, if (nKept >= minLines) 1 else 0,
@@ -990,6 +972,27 @@ private[functions] final class WordRuns(bytes: Array[Byte]) {
     while (i < s + len) { h = WordRuns.step(h, ids(i)); i += 1 }
     h
   }
+
+  /** Calls f(s, len) for each segment [s, s + len) of the words: word j
+    * ends a segment iff h(j) % mod == 0 or j is the last word (`h` null:
+    * one segment), and a segment that is one empty word is skipped. The
+    * line and paragraph rule of qt26 and qt29.
+    */
+  def foreachSegment(h: Array[Long], mod: Int)(f: (Int, Int) => Unit): Unit = {
+    var s = 0
+    var j = 0
+    while (j < n) {
+      if ((h != null && h(j) % mod == 0) || j == n - 1) {
+        val len = j - s + 1
+        if (len > 1 || until(s) > from(s)) f(s, len)
+        s = j + 1
+      }
+      j += 1
+    }
+  }
+
+  /** [[runSlot]] with the run's [[runHash]]. */
+  def runSlot(s: Int, len: Int): Int = runSlot(s, len, runHash(s, len))
 
   /** The slot of run [s, s + len) (len >= 1, `h` its [[runHash]]),
     * inserted with count 0 if no equal run is in the table.

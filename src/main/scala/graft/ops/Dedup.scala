@@ -1037,17 +1037,21 @@ object Dedup {
     * token length e - s >= minLen are removed.
     *
     * Scale shape: the positional gram rows are one native gram_hashes
-    * array per doc, exploded, and carry only 60-bit md5 keys and longs. A
-    * window partitioned by the key flags the duplicated grams (min/max
-    * doc_id): one shuffle and sort of the gram rows, which are read once —
-    * an aggregate of the duplicated keys probed back into the gram rows
-    * would read them twice and shuffle them three times.
-    * The hits are grouped once by doc_id and merged into islands by the
-    * native island_spans fold (doc-bounded buffers). The rebuild joins the
-    * (tiny) per-doc span list back ONCE on doc_id and cuts the spans from
-    * the doc's own token array with the native drop_spans — tokens are
-    * never exploded through a shuffle, and a doc with no duplicated span
-    * passes through untouched on the null side of the join.
+    * array per doc, exploded, and carry only 60-bit md5 keys and longs.
+    * The duplicated-gram table is a hash aggregate on the key (min/max
+    * doc_id, map-side partials: a boilerplate gram in 10^6 docs combines
+    * before the shuffle, where a gram-keyed window would serialize one
+    * partition) and is PRUNED to the duplicated keys before the probe
+    * join, so the join's build side carries only the duplicated vocabulary
+    * (qd13's pruning). The gram rows are not checkpointed: the native
+    * gram_hashes is cheaper to recompute for the probe side than to
+    * materialize. The hits are grouped once by doc_id and merged into
+    * islands by the native island_spans fold (doc-bounded buffers). The
+    * rebuild joins the (tiny) per-doc span list back ONCE on doc_id and
+    * cuts the spans from the doc's own token array with the native
+    * drop_spans — tokens are never exploded through a shuffle, and a doc
+    * with no duplicated span passes through untouched on the null side of
+    * the join.
     */
   def exactSubstrDedup(spark: SparkSession, dir: String, w: Int = 5,
       minLen: Int = 8): DataFrame =
@@ -1061,7 +1065,6 @@ object Dedup {
     * removed_tokens and clean_text. CleanJob's substr stage writes from it.
     */
   def exactSubstrOf(docs: DataFrame, w: Int = 5, minLen: Int = 8): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     // parallelize the scan feeding the positional md5-gram explode
     // (ScanLayout: one md5 per token position — the query's map cost)
     val base = ScanLayout.ensureParallel(docs)
@@ -1070,13 +1073,13 @@ object Dedup {
 
     // a gram is duplicated when >= 2 distinct docs carry it (a null doc_id
     // counts as one doc, as in the oracle's SELECT DISTINCT gh, doc_id)
-    val byGram = Window.partitionBy(col("gh"))
-    val hits = positionalGrams(base, w)
-      .select(col("doc_id"), col("pos"),
-        min(col("doc_id")).over(byGram).as("lo"),
-        max(col("doc_id")).over(byGram).as("hi"),
-        (count(lit(1)).over(byGram) > count(col("doc_id")).over(byGram)).as("anull"))
+    val grams = positionalGrams(base, w)
+    val dup = grams.groupBy(col("gh"))
+      .agg(min(col("doc_id")).as("lo"), max(col("doc_id")).as("hi"),
+        (count(lit(1)) > count(col("doc_id"))).as("anull"))
       .where(col("lo") < col("hi") || (col("lo").isNotNull && col("anull")))
+      .select(col("gh"))
+    val hits = grams.join(dup, Seq("gh"), "left_semi")
 
     cutSpans(base, hits, w, minLen, docs.columns.toSeq.map(c => base(c)))
   }

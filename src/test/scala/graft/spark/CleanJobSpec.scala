@@ -13,7 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class CleanJobSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   /** Jobs `CleanJob.run` may start on the 500-doc corpus. */
-  private val JOBPIN = 50
+  private val JOBPIN = 52
 
   @transient private var spark: SparkSession = _
 
