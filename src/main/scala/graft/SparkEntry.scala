@@ -345,6 +345,119 @@ object SparkEntry {
           sum(when(col("parse_status") === "ok", 1).otherwise(0)).as("ok_docs")))
   )
 
+  // ---- shared oracle fragments ----
+  // Each portable decision the DuckDB oracles replay is written once below
+  // and spliced into every oracle that needs it. A host string that splices
+  // one is s-interpolated, so its own `\s` is written `\\s` and `$` `$$`.
+  // tools/diff_oracle_sql.py checks a refactor of these strings: two
+  // oracle_sql.json dumps must be token-identical.
+
+  /** Lowercased, whitespace-collapsed, trimmed `text`: the exact-dup key
+    * qd1/qt4 hash and the input of [[lowerWords]]. */
+  private val normText = """trim(regexp_replace(lower(text), '\s+', ' ', 'g'))"""
+
+  /** The lowercased tokenizer: [[normText]] split on ' '. */
+  private val lowerWords = s"string_split_regex($normText, ' ')"
+
+  /** `text` split on whitespace runs, case kept. */
+  private val wsWords = """string_split_regex(trim(text), '\s+')"""
+
+  /** Lowercased `text` split on whitespace runs. */
+  private val lowerWsWords = """string_split_regex(trim(lower(text)), '\s+')"""
+
+  /** The n-word grams of list `words` starting at positions 1 until `end`,
+    * each joined with ' '. */
+  private def wordGrams(n: Int, end: String): String =
+    s"[list_aggregate(words[i:i+${n - 1}], 'string_agg', ' ') FOR i IN range(1, $end)]"
+
+  /** The distinct non-empty n-word shingles of `words`; a list shorter than
+    * n words is one shingle. */
+  private def shingleSet(n: Int): String =
+    s"list_distinct(list_filter(${wordGrams(n, s"GREATEST(len(words)-${n - 1}, 1)+1")}, x -> x <> ''))"
+
+  /** CTE `w`(keys, words) over documents, then CTE `name`(keys, col) with
+    * the [[shingleSet]] of width n. */
+  private def shingleCtes(name: String, col: String, n: Int, keys: String = "doc_id"): String =
+    s"""w AS (SELECT $keys, $lowerWords AS words FROM documents),
+         $name AS (SELECT $keys, ${shingleSet(n)} AS $col FROM w)"""
+
+  /** The portable 60-bit md5 key of SQL string `x`: its first 15 hex
+    * digits (Spark: GraftFunctions.md5Hi60). */
+  private def md5Hi(x: String): String = s"CAST('0x' || substr(md5($x), 1, 15) AS BIGINT)"
+
+  /** The second 60-bit md5 lane of `x`: hex digits 16 to 30
+    * (Spark: GraftFunctions.md5Lo60). */
+  private def md5Lo(x: String): String = s"CAST('0x' || substr(md5($x), 16, 15) AS BIGINT)"
+
+  /** 2^61-1, the modulus of the md5-affine lanes and content fingerprints. */
+  private val mersenne61 = graft.functions.GraftFunctions.Mersenne61.toString
+
+  /** MinHash lane `i` of shingle set `sh`: the min over its shingles of the
+    * md5-affine hash (hi + i * lo) mod 2^61-1 (Dedup.minhashPortable). */
+  private def minhashLane(i: String): String =
+    s"list_min([(${md5Hi("s")} + $i * ${md5Lo("s")}) % $mersenne61 FOR s IN sh])"
+
+  /** CTE `sigs`(doc_id, sh, sig): the 8-lane MinHash signature of every
+    * non-empty shingle set of CTE `sh`. */
+  private val sigsCte: String =
+    s"""sigs AS (
+           SELECT doc_id, sh, [${minhashLane("i")} FOR i IN range(0, 8)] AS sig
+           FROM sh WHERE len(sh) > 0)"""
+
+  /** Every document's 2-word [[shingleCtes]] and their [[sigsCte]]. */
+  private val minhashSigCtes: String = s"${shingleCtes("sh", "sh", 2)},\n         $sigsCte"
+
+  /** The 4x2 band collision of signatures `a.sig` and `b.sig`: the two
+    * lanes of some band agree. */
+  private def bandHit(a: String, b: String): String =
+    (1 to 8 by 2).map(i => s"($a.sig[$i] = $b.sig[$i] AND $a.sig[${i + 1}] = $b.sig[${i + 1}])")
+      .mkString(" OR ")
+
+  /** The exact Jaccard of shingle sets `a.sh` and `b.sh`, the LSH verify. */
+  private def jaccard(a: String, b: String): String =
+    s"len(list_intersect($a.sh, $b.sh)) / len(list_distinct(list_concat($a.sh, $b.sh)))"
+
+  /** CTE `name`(vec_id, qv): every embedding as int64 fixed-point codes. */
+  private def fixedPointCte(name: String): String =
+    s"""$name AS (
+           SELECT vec_id, [CAST(round(CAST(embedding[i] AS DOUBLE)*1000000) AS BIGINT)
+                           FOR i IN range(1, len(embedding)+1)] AS qv
+           FROM embeddings)"""
+
+  /** The squared L2 distance of code lists `x` and `y` (HUGEINT sum). */
+  private def l2Sum(x: String, y: String): String =
+    s"list_sum([($x[i]-$y[i])*($x[i]-$y[i]) FOR i IN range(1, len($x)+1)])"
+
+  /** [[l2Sum]] cast back to int64. */
+  private def sqL2(x: String, y: String): String = s"CAST(${l2Sum(x, y)} AS BIGINT)"
+
+  /** Per-vec_id rank of candidate rows by (dist, id): rn = 1 is the nearest
+    * center, ties to the smaller id. */
+  private def distRank(id: String): String =
+    s"ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY dist, $id) AS rn"
+
+  /** CTE `name`(vec_id, out, dist): each `q` vector's nearest row of the
+    * center set `cset`(id, cv) by exact squared L2. */
+  private def argmin(name: String, cset: String, id: String, out: String): String =
+    s"""$name AS (
+           SELECT vec_id, $out, dist FROM (
+             SELECT vec_id, $id, dist, ${distRank(id)}
+             FROM (
+               SELECT q.vec_id, c.$id, ${sqL2("q.qv", "c.cv")} AS dist
+               FROM q, $cset c)) WHERE rn = 1)"""
+
+  /** CTE `name`(vec_id, m, out): each subvector of `sub`(vec_id, m, sv)
+    * assigned to its nearest codeword of `book`(m, cid, cv), ties to the
+    * smallest cid. */
+  private def subArgminCte(name: String, sub: String, book: String, out: String): String =
+    s"""$name AS (
+           SELECT vec_id, m, cid AS $out FROM (
+             SELECT vec_id, m, cid,
+               ROW_NUMBER() OVER (PARTITION BY vec_id, m ORDER BY dist, cid) AS rn
+             FROM (
+               SELECT s.vec_id, s.m, c.cid, ${sqL2("s.sv", "c.cv")} AS dist
+               FROM $sub s JOIN $book c ON s.m = c.m)) WHERE rn = 1)"""
+
   /** qt19's oracle, generated: the BPE trainer's k rounds UNROLLED as a CTE
     * chain — per round, a weighted adjacent-pair count over the word-type
     * symbol lists, the (count DESC, l ASC, r ASC) argmax, and the greedy
@@ -360,10 +473,7 @@ object SparkEntry {
     */
   private def bpeOracleBlocks(k: Int): String = {
     val head =
-      """WITH dwords AS (
-           SELECT doc_id,
-             string_split_regex(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS words
-           FROM documents),
+      s"""WITH dwords AS (SELECT doc_id, $lowerWords AS words FROM documents),
          dw AS (SELECT doc_id, unnest(words) AS word FROM dwords),
          t AS (
            SELECT word, COUNT(*) AS cnt FROM dw WHERE word <> ''
@@ -441,23 +551,10 @@ object SparkEntry {
     */
   private def kmeansOracleBlocks(k: Int, rounds: Int): String = {
     val head =
-      s"""WITH q AS (
-           SELECT vec_id, [CAST(round(CAST(embedding[i] AS DOUBLE)*1000000) AS BIGINT)
-                           FOR i IN range(1, len(embedding)+1)] AS qv
-           FROM embeddings),
+      s"""WITH ${fixedPointCte("q")},
          c0 AS (SELECT CAST(vec_id AS INTEGER) AS cid, qv AS cv FROM q WHERE vec_id < $k)"""
     val body = (1 to rounds).map { r =>
-      val assign =
-        s""",
-         a$r AS (
-           SELECT vec_id, cid AS cluster, dist FROM (
-             SELECT vec_id, cid, dist,
-               ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY dist, cid) AS rn
-             FROM (
-               SELECT q.vec_id, c.cid,
-                 CAST(list_sum([(q.qv[i]-c.cv[i])*(q.qv[i]-c.cv[i])
-                                FOR i IN range(1, len(q.qv)+1)]) AS BIGINT) AS dist
-               FROM q, c${r - 1} c)) WHERE rn = 1)"""
+      val assign = s",\n         ${argmin(s"a$r", s"c${r - 1}", "cid", "cid AS cluster")}"
       val mstep = if (r == rounds) "" else
         s""",
          s$r AS (
@@ -500,8 +597,7 @@ object SparkEntry {
            FROM st),
          cdist AS (
            SELECT a.cid AS ci, b.cid AS cj,
-             CAST(list_sum([(a.cv[i]-b.cv[i])*(a.cv[i]-b.cv[i])
-                            FOR i IN range(1, len(a.cv)+1)]) AS BIGINT) AS d2
+             ${sqL2("a.cv", "b.cv")} AS d2
            FROM c${rounds - 1} a, c${rounds - 1} b WHERE a.cid <> b.cid)
          SELECT i.cluster, i.csize, i.sse, i.msd,
            MIN(cdist.d2) AS min_sep_sq,
@@ -521,31 +617,16 @@ object SparkEntry {
     */
   private def kmeansParOracleSql(k: Int, l: Int, r: Int): String = {
     val two60 = "1152921504606846976"
-    def argmin(name: String, cset: String): String =
-      s""",
-         $name AS (
-           SELECT vec_id, cand, dist FROM (
-             SELECT vec_id, cand, dist,
-               ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY dist, cand) AS rn
-             FROM (
-               SELECT q.vec_id, c.cand,
-                 CAST(list_sum([(q.qv[i]-c.cv[i])*(q.qv[i]-c.cv[i])
-                                FOR i IN range(1, len(q.qv)+1)]) AS BIGINT) AS dist
-               FROM q, $cset c)) WHERE rn = 1)"""
     val head =
-      s"""WITH q AS (
-           SELECT vec_id, [CAST(round(CAST(embedding[i] AS DOUBLE)*1000000) AS BIGINT)
-                           FOR i IN range(1, len(embedding)+1)] AS qv
-           FROM embeddings),
+      s"""WITH ${fixedPointCte("q")},
          c0 AS (SELECT CAST(vec_id AS BIGINT) AS cand, qv AS cv FROM q WHERE vec_id = 0)"""
     val roundsSql = (1 to r).map { t =>
-      argmin(s"d${t - 1}", s"c${t - 1}") +
-        s""",
+      s""",
+         ${argmin(s"d${t - 1}", s"c${t - 1}", "cand", "cand")},
          p${t - 1} AS (SELECT CAST(SUM(dist) AS HUGEINT) AS phi FROM d${t - 1}),
          s$t AS (
            SELECT d.vec_id FROM d${t - 1} d CROSS JOIN p${t - 1} p
-           WHERE CAST(CAST('0x' || substr(md5(CAST(d.vec_id AS VARCHAR) || ':$t'),
-                 1, 15) AS BIGINT) AS HUGEINT) * p.phi
+           WHERE CAST(${md5Hi(s"CAST(d.vec_id AS VARCHAR) || ':$t'")} AS HUGEINT) * p.phi
              < $l * CAST(d.dist AS HUGEINT) * CAST($two60 AS HUGEINT)),
          c$t AS (
            SELECT cand, cv FROM c${t - 1}
@@ -553,17 +634,16 @@ object SparkEntry {
            SELECT CAST(q.vec_id AS BIGINT), q.qv FROM q JOIN s$t USING (vec_id))"""
     }.mkString
     val tail =
-      argmin("dw", s"c$r") +
-        s""",
+      s""",
+         ${argmin("dw", s"c$r", "cand", "cand")},
          w AS (SELECT cand, COUNT(*) AS w FROM dw GROUP BY cand),
          tk AS (
            SELECT cand FROM (
              SELECT c.cand,
                ROW_NUMBER() OVER (ORDER BY COALESCE(w.w, 0) DESC, c.cand ASC) AS rn
              FROM c$r c LEFT JOIN w USING (cand)) WHERE rn <= $k),
-         cf AS (SELECT c.cand, c.cv FROM c$r c JOIN tk USING (cand))""" +
-        argmin("af", "cf") +
-        """
+         cf AS (SELECT c.cand, c.cv FROM c$r c JOIN tk USING (cand)),
+         ${argmin("af", "cf", "cand", "cand")}
          SELECT vec_id, cand AS cluster, dist AS dist_sq FROM af"""
     head + roundsSql + tail
   }
@@ -576,26 +656,12 @@ object SparkEntry {
     * tie-break. Bit-for-bit the Spark traversal (Clustering.kcenterCoreset).
     */
   private def kcenterOracleSql(k: Int): String = {
-    def argmin(name: String, cset: String): String =
-      s""",
-         $name AS (
-           SELECT vec_id, cand, dist FROM (
-             SELECT vec_id, cand, dist,
-               ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY dist, cand) AS rn
-             FROM (
-               SELECT q.vec_id, c.cand,
-                 CAST(list_sum([(q.qv[i]-c.cv[i])*(q.qv[i]-c.cv[i])
-                                FOR i IN range(1, len(q.qv)+1)]) AS BIGINT) AS dist
-               FROM q, $cset c)) WHERE rn = 1)"""
     val head =
-      s"""WITH q AS (
-           SELECT vec_id, [CAST(round(CAST(embedding[i] AS DOUBLE)*1000000) AS BIGINT)
-                           FOR i IN range(1, len(embedding)+1)] AS qv
-           FROM embeddings),
+      s"""WITH ${fixedPointCte("q")},
          c1 AS (SELECT CAST(vec_id AS BIGINT) AS cand, qv AS cv FROM q WHERE vec_id = 0)"""
     val roundsSql = (2 to k).map { t =>
-      argmin(s"d${t - 1}", s"c${t - 1}") +
-        s""",
+      s""",
+         ${argmin(s"d${t - 1}", s"c${t - 1}", "cand", "cand")},
          s$t AS (
            SELECT vec_id FROM d${t - 1} ORDER BY dist DESC, vec_id ASC LIMIT 1),
          c$t AS (
@@ -603,11 +669,9 @@ object SparkEntry {
            UNION ALL
            SELECT CAST(q.vec_id AS BIGINT), q.qv FROM q JOIN s$t USING (vec_id))"""
     }.mkString
-    val tail =
-      argmin("af", s"c$k") +
-        """
+    head + roundsSql + s""",
+         ${argmin("af", s"c$k", "cand", "cand")}
          SELECT vec_id, cand AS center, dist AS dist_sq FROM af"""
-    head + roundsSql + tail
   }
 
   /** qg7's oracle, generated: the planted undirected graph rebuilt from
@@ -711,8 +775,7 @@ object SparkEntry {
     kmeansOracleBlocks(k, rounds) +
       s""",
          b2 AS (
-           SELECT a.vec_id, MIN(CAST(list_sum([(q.qv[i]-c.cv[i])*(q.qv[i]-c.cv[i])
-                            FOR i IN range(1, len(q.qv)+1)]) AS BIGINT)) AS b2
+           SELECT a.vec_id, MIN(${sqL2("q.qv", "c.cv")}) AS b2
            FROM a$rounds a JOIN q USING (vec_id)
            CROSS JOIN c${rounds - 1} c
            WHERE c.cid <> a.cluster
@@ -735,18 +798,10 @@ object SparkEntry {
     */
   private def kmvSetOpsOracleSql(k: Int): String = {
     val num = s"${k - 1}.0 * 1152921504606846976.0"
-    s"""WITH w AS (
-           SELECT doc_id % 2 AS half,
-             string_split_regex(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS words
-           FROM documents),
-         sh AS (
-           SELECT half, list_distinct(list_filter(
-             [list_aggregate(words[i:i+1], 'string_agg', ' ')
-              FOR i IN range(1, GREATEST(len(words)-1, 1)+1)], x -> x <> '')) AS sh
-           FROM w),
+    s"""WITH w AS (SELECT doc_id % 2 AS half, $lowerWords AS words FROM documents),
+         sh AS (SELECT half, ${shingleSet(2)} AS sh FROM w),
          tt AS (SELECT half, unnest(sh) AS item FROM sh),
-         hh AS (SELECT DISTINCT half,
-             CAST('0x' || substr(md5(item), 1, 15) AS BIGINT) AS h FROM tt),
+         hh AS (SELECT DISTINCT half, ${md5Hi("item")} AS h FROM tt),
          ska AS (SELECT h FROM hh WHERE half = 0 ORDER BY h LIMIT $k),
          skb AS (SELECT h FROM hh WHERE half = 1 ORDER BY h LIMIT $k),
          mg AS (SELECT h FROM (SELECT h FROM ska UNION SELECT h FROM skb)
@@ -788,18 +843,9 @@ object SparkEntry {
     */
   def sketchedOverlapOracleSql(k: Int): String = {
     val num = s"${k - 1}.0 * 1152921504606846976.0"
-    s"""WITH w AS (
-           SELECT source,
-             string_split_regex(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ') AS words
-           FROM documents),
-         sh AS (
-           SELECT source, list_distinct(list_filter(
-             [list_aggregate(words[i:i+2], 'string_agg', ' ')
-              FOR i IN range(1, GREATEST(len(words)-2, 1)+1)], x -> x <> '')) AS sh
-           FROM w),
+    s"""WITH ${shingleCtes("sh", "sh", 3, "source")},
          tt AS (SELECT DISTINCT source, unnest(sh) AS item FROM sh),
-         hh AS (SELECT DISTINCT source,
-             CAST('0x' || substr(md5(item), 1, 15) AS BIGINT) AS h FROM tt),
+         hh AS (SELECT DISTINCT source, ${md5Hi("item")} AS h FROM tt),
          rk AS (SELECT source, h,
              ROW_NUMBER() OVER (PARTITION BY source ORDER BY h) AS rn FROM hh),
          sk AS (SELECT source, list(h ORDER BY h) AS sk,
@@ -856,10 +902,7 @@ object SparkEntry {
       nQueries: Int, k: Int): String = {
     val sd = "(len(qv)/" + m + ")" // subDim, derived from the data like Spark
     val head =
-      s"""WITH q AS (
-           SELECT vec_id, [CAST(round(CAST(embedding[i] AS DOUBLE)*1000000) AS BIGINT)
-                           FOR i IN range(1, len(embedding)+1)] AS qv
-           FROM embeddings),
+      s"""WITH ${fixedPointCte("q")},
          sub AS (
            SELECT vec_id, CAST(t.m AS INTEGER) AS m,
              [qv[i] FOR i IN range(CAST(t.m*$sd+1 AS BIGINT),
@@ -871,15 +914,7 @@ object SparkEntry {
     // rounds-1 M-steps: assignment a_r over the SAMPLE, then centroid update
     val train = (1 until rounds).map { r =>
       s""",
-         a$r AS (
-           SELECT vec_id, m, cid AS cluster FROM (
-             SELECT vec_id, m, cid,
-               ROW_NUMBER() OVER (PARTITION BY vec_id, m ORDER BY dist, cid) AS rn
-             FROM (
-               SELECT s.vec_id, s.m, c.cid,
-                 CAST(list_sum([(s.sv[i]-c.cv[i])*(s.sv[i]-c.cv[i])
-                                FOR i IN range(1, len(s.sv)+1)]) AS BIGINT) AS dist
-               FROM samp s JOIN c${r - 1} c ON s.m = c.m)) WHERE rn = 1),
+         ${subArgminCte(s"a$r", "samp", s"c${r - 1}", "cluster")},
          s$r AS (
            SELECT a.m, a.cluster, t.i, CAST(SUM(s.sv[t.i]) AS BIGINT) AS sm, COUNT(*) AS cnt
            FROM a$r a JOIN samp s USING (vec_id, m),
@@ -896,19 +931,10 @@ object SparkEntry {
     val fin = rounds - 1
     head + train +
       s""",
-         enc AS (
-           SELECT vec_id, m, cid AS code FROM (
-             SELECT vec_id, m, cid,
-               ROW_NUMBER() OVER (PARTITION BY vec_id, m ORDER BY dist, cid) AS rn
-             FROM (
-               SELECT s.vec_id, s.m, c.cid,
-                 CAST(list_sum([(s.sv[i]-c.cv[i])*(s.sv[i]-c.cv[i])
-                                FOR i IN range(1, len(s.sv)+1)]) AS BIGINT) AS dist
-               FROM sub s JOIN c$fin c ON s.m = c.m)) WHERE rn = 1),
+         ${subArgminCte("enc", "sub", s"c$fin", "code")},
          adc AS (
            SELECT qs.vec_id AS query_id, e.vec_id,
-             CAST(SUM(CAST(list_sum([(qs.sv[i]-c.cv[i])*(qs.sv[i]-c.cv[i])
-               FOR i IN range(1, len(qs.sv)+1)]) AS BIGINT)) AS BIGINT) AS adc_dist
+             CAST(SUM(${sqL2("qs.sv", "c.cv")}) AS BIGINT) AS adc_dist
            FROM enc e
            JOIN c$fin c ON c.m = e.m AND c.cid = e.code
            JOIN sub qs ON qs.m = e.m AND qs.vec_id < $nQueries
@@ -925,7 +951,7 @@ object SparkEntry {
     * subvectors — the pqOracleSql training loop, factored so qs7 can replay
     * TWO trainings (coarse m=1 chain, then the residual PQ chain) in one
     * statement. Emits CTEs `<pfx>0 .. <pfx>{rounds-1}` (codebooks per round)
-    * reading the sample table `$samp`; `chainEncSql` emits the full-corpus
+    * reading the sample table `$samp`; [[subArgminCte]] emits the full-corpus
     * argmin assignment against the final books. Semantics replayed exactly:
     * init = first ks sample vectors, argmin ties -> smallest cid, half-away
     * M-step re-rounding, empty cells COALESCE to the previous centroid.
@@ -937,15 +963,7 @@ object SparkEntry {
                 FROM $samp WHERE vec_id < $ks)"""
     val train = (1 until rounds).map { r =>
       s""",
-         ${pfx}a$r AS (
-           SELECT vec_id, m, cid AS cluster FROM (
-             SELECT vec_id, m, cid,
-               ROW_NUMBER() OVER (PARTITION BY vec_id, m ORDER BY dist, cid) AS rn
-             FROM (
-               SELECT s.vec_id, s.m, c.cid,
-                 CAST(list_sum([(s.sv[i]-c.cv[i])*(s.sv[i]-c.cv[i])
-                                FOR i IN range(1, len(s.sv)+1)]) AS BIGINT) AS dist
-               FROM $samp s JOIN ${pfx}${r - 1} c ON s.m = c.m)) WHERE rn = 1),
+         ${subArgminCte(s"${pfx}a$r", samp, s"$pfx${r - 1}", "cluster")},
          ${pfx}s$r AS (
            SELECT a.m, a.cluster, t.i, CAST(SUM(s.sv[t.i]) AS BIGINT) AS sm, COUNT(*) AS cnt
            FROM ${pfx}a$r a JOIN $samp s USING (vec_id, m),
@@ -962,18 +980,6 @@ object SparkEntry {
     }.mkString
     c0 + train
   }
-
-  private def chainEncSql(name: String, sub: String, book: String): String =
-    s""",
-         $name AS (
-           SELECT vec_id, m, cid AS code FROM (
-             SELECT vec_id, m, cid,
-               ROW_NUMBER() OVER (PARTITION BY vec_id, m ORDER BY dist, cid) AS rn
-             FROM (
-               SELECT s.vec_id, s.m, c.cid,
-                 CAST(list_sum([(s.sv[i]-c.cv[i])*(s.sv[i]-c.cv[i])
-                                FOR i IN range(1, len(s.sv)+1)]) AS BIGINT) AS dist
-               FROM $sub s JOIN $book c ON s.m = c.m)) WHERE rn = 1)"""
 
   /** qs7's oracle, generated: IVF-PQ (IVFADC) END TO END — the coarse
     * quantizer trains as an m=1 Lloyd chain over full vectors, the corpus
@@ -995,15 +1001,12 @@ object SparkEntry {
       out: String): String = {
     val sd = "(len(q.qv)/" + m + ")" // residual subDim, derived like Spark
     val fin = rounds - 1
-    s"""WITH q AS (
-           SELECT vec_id, [CAST(round(CAST(embedding[i] AS DOUBLE)*1000000) AS BIGINT)
-                           FOR i IN range(1, len(embedding)+1)] AS qv
-           FROM embeddings),
+    s"""WITH ${fixedPointCte("q")},
          csub AS (SELECT vec_id, 0 AS m, qv AS sv FROM q),
          csamp AS (SELECT * FROM csub WHERE vec_id < $sampleCap)""" +
       lloydChainSql("cc", "csamp", kc, rounds) +
-      chainEncSql("encc", "csub", s"cc$fin") +
       s""",
+         ${subArgminCte("encc", "csub", s"cc$fin", "code")},
          res AS (
            SELECT q.vec_id, e.code AS cell,
              [q.qv[i] - c.cv[i] FOR i IN range(1, len(q.qv)+1)] AS rv
@@ -1015,16 +1018,13 @@ object SparkEntry {
            FROM res, unnest(range(0, $m)) AS t(m)),
          rsamp AS (SELECT * FROM rsub WHERE vec_id < $sampleCap)""" +
       lloydChainSql("pc", "rsamp", ks, rounds) +
-      chainEncSql("encp", "rsub", s"pc$fin") +
       s""",
+         ${subArgminCte("encp", "rsub", s"pc$fin", "code")},
          probe AS (
            SELECT vec_id AS query_id, cid AS cell FROM (
-             SELECT vec_id, cid,
-               ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY dist, cid) AS rn
+             SELECT vec_id, cid, ${distRank("cid")}
              FROM (
-               SELECT s.vec_id, c.cid,
-                 CAST(list_sum([(s.sv[i]-c.cv[i])*(s.sv[i]-c.cv[i])
-                                FOR i IN range(1, len(s.sv)+1)]) AS BIGINT) AS dist
+               SELECT s.vec_id, c.cid, ${sqL2("s.sv", "c.cv")} AS dist
                FROM csub s JOIN cc$fin c ON s.m = c.m
                WHERE s.vec_id < $nQueries))
            WHERE rn <= $nprobe),
@@ -1037,8 +1037,7 @@ object SparkEntry {
                 unnest(range(0, $m)) AS t(m)),
          adc AS (
            SELECT qr.query_id, e.vec_id,
-             CAST(SUM(CAST(list_sum([(qr.sv[i]-c.cv[i])*(qr.sv[i]-c.cv[i])
-               FOR i IN range(1, len(qr.sv)+1)]) AS BIGINT)) AS BIGINT) AS adc_dist
+             CAST(SUM(${sqL2("qr.sv", "c.cv")}) AS BIGINT) AS adc_dist
            FROM encp e
            JOIN encc ec ON ec.vec_id = e.vec_id
            JOIN qres qr ON qr.cell = ec.code AND qr.m = e.m
@@ -1113,8 +1112,7 @@ object SparkEntry {
            FROM (SELECT doc_id, x, COUNT(*) AS cnt, len(x) AS l
                  FROM SRC, unnest(segs) AS t(x) GROUP BY doc_id, x)
            GROUP BY doc_id"""
-    val md5i =
-      "(CAST('0x' || substr(md5(doc_id || ':' || i), 1, 15) AS BIGINT))"
+    val md5i = s"(${md5Hi("doc_id || ':' || i")})"
     def segCte(name: String, brkCol: String) =
       s""",
          $name AS (
@@ -1355,14 +1353,23 @@ object SparkEntry {
         FROM r$k JOIN n ON n.node = r$k.node"""
   }
 
-  /** DuckDB replay of [[graft.ops.LinkGraph.hostHyperball]]: the planted
-    * chain graph, each host's single-item HLL registers (the qt27 md5
-    * bucket/rank lane on CAST(host AS VARCHAR)), then k UNROLLED rounds of
-    * register-wise MAX over self + neighbors, in sparse (node, bucket, reg)
-    * row form; the final select zero-fills absent registers (the qt27
-    * sequence left-join discipline).
-    */
-  private def hyperballOracleSql(k: Int): String = {
+  /** The planted chain host graph: CTE `hosts`(ch) and its undirected
+    * `edges`(src, dst). */
+  private val chainGraphCtes: String =
+    """hosts AS (SELECT DISTINCT doc_id % 64 AS ch FROM documents),
+        e0 AS (
+          SELECT ch AS a,
+            CASE WHEN ch IN (8, 19, 44, 63) THEN ch ELSE ch + 1 END AS b
+          FROM hosts),
+        edges AS (
+          SELECT a AS src, b AS dst FROM e0
+          UNION SELECT b, a FROM e0)"""
+
+  /** [[chainGraphCtes]], each host's single-item HLL registers `b0`(node,
+    * bucket, reg) (the qt27 md5 bucket/rank lane on CAST(host AS VARCHAR)),
+    * then k rounds `b1`..`bk` of register-wise MAX over self + neighbors,
+    * in sparse row form. */
+  private def hllRegisterCtes(k: Int): String = {
     val rounds = (1 to k).map { i =>
       s"""b$i AS (
             SELECT node, bucket, MAX(reg) AS reg FROM (
@@ -1371,29 +1378,52 @@ object SparkEntry {
               SELECT e.dst, p.bucket, p.reg
               FROM edges e JOIN b${i - 1} p ON p.node = e.src)
             GROUP BY node, bucket)"""
-    }.mkString(",\n")
-    s"""WITH hosts AS (SELECT DISTINCT doc_id % 64 AS ch FROM documents),
-        e0 AS (
-          SELECT ch AS a,
-            CASE WHEN ch IN (8, 19, 44, 63) THEN ch ELSE ch + 1 END AS b
-          FROM hosts),
-        edges AS (
-          SELECT a AS src, b AS dst FROM e0
-          UNION SELECT b, a FROM e0),
+    }.mkString(",\n        ")
+    s"""$chainGraphCtes,
         b0 AS (
           SELECT ch AS node, h % 64 AS bucket,
             CASE WHEN h // 64 = 0 THEN 55
               ELSE 55 - length(ltrim(bin(h // 64), '0')) END AS reg
-          FROM (SELECT ch,
-              CAST('0x' || substr(md5(CAST(ch AS VARCHAR)), 1, 15) AS BIGINT) AS h
-            FROM hosts)),
-        $rounds
+          FROM (SELECT ch, ${md5Hi("CAST(ch AS VARCHAR)")} AS h FROM hosts)),
+        $rounds"""
+  }
+
+  /** CTEs `est0`..`estk`(node, e): each host's HLL estimate after every
+    * round of [[hllRegisterCtes]] — the 2^-register sum carried as the exact
+    * int64 sum of 2^(55-reg) over the dense 64-bucket grid, the m=64 alpha
+    * constant as the identical f64 literal both engines parse, the <= 2.5m
+    * linear-counting rule, rounded to 9 digits. */
+  private def hllEstimateCtes(k: Int): String = {
+    val cNum = 0.709 * 64 * 64 * math.pow(2.0, 55)
+    (0 to k).map { i =>
+      s"""est$i AS (
+            SELECT node,
+              ROUND(CASE WHEN ($cNum / s2) <= 160.0 AND v > 0
+                THEN 64.0 * ln(64.0 / v) ELSE ($cNum / s2) END, 9) AS e
+            FROM (
+              SELECT h.ch AS node,
+                CAST(SUM(CASE WHEN COALESCE(b.reg, 0) = 0 THEN 1 ELSE 0 END)
+                  AS BIGINT) AS v,
+                CAST(SUM(CAST(1 AS BIGINT) << (55 - COALESCE(b.reg, 0)))
+                  AS BIGINT) AS s2
+              FROM hosts h
+              CROSS JOIN (SELECT unnest(range(0, 64)) AS bucket) bk
+              LEFT JOIN b$i b ON b.node = h.ch AND b.bucket = bk.bucket
+              GROUP BY h.ch))"""
+    }.mkString(",\n        ")
+  }
+
+  /** DuckDB replay of [[graft.ops.LinkGraph.hostHyperball]]: the k
+    * UNROLLED [[hllRegisterCtes]] rounds; the final select zero-fills absent
+    * registers (the qt27 sequence left-join discipline).
+    */
+  private def hyperballOracleSql(k: Int): String =
+    s"""WITH ${hllRegisterCtes(k)}
         SELECT h.ch AS host_id, CAST(bk.bucket AS INT) AS bucket,
           CAST(COALESCE(b$k.reg, 0) AS INT) AS register
         FROM hosts h
         CROSS JOIN (SELECT unnest(range(0, 64)) AS bucket) bk
         LEFT JOIN b$k ON b$k.node = h.ch AND b$k.bucket = bk.bucket"""
-  }
 
   /** q20's oracle, generated: the Morton interleave as 32 explicit
     * shift/mask/shift terms over the same 16-bit dimension codes, the
@@ -1429,61 +1459,16 @@ object SparkEntry {
   }
 
   /** qg4's oracle, generated: the qg3 register iteration (same b_i chain),
-    * then per-round HLL estimates and the harmonic sum — the 2^-register
-    * sum carried as the exact int64 sum of 2^(55-reg) over the DENSE
-    * 64-bucket grid, the m=64 alpha constant interpolated as the identical
-    * f64 literal both engines parse, the <= 2.5m linear-counting rule,
-    * 9-digit per-round rounding, and the ascending-radius left-associated
-    * harmonic fold (LinkGraph.hostHarmonic).
+    * then the per-round [[hllEstimateCtes]] and the ascending-radius
+    * left-associated harmonic fold (LinkGraph.hostHarmonic).
     */
   private def harmonicOracleSql(k: Int): String = {
-    val cNum = 0.709 * 64 * 64 * math.pow(2.0, 55)
-    val rounds = (1 to k).map { i =>
-      s"""b$i AS (
-            SELECT node, bucket, MAX(reg) AS reg FROM (
-              SELECT node, bucket, reg FROM b${i - 1}
-              UNION ALL
-              SELECT e.dst, p.bucket, p.reg
-              FROM edges e JOIN b${i - 1} p ON p.node = e.src)
-            GROUP BY node, bucket)"""
-    }.mkString(",\n        ")
-    val ests = (0 to k).map { i =>
-      s"""est$i AS (
-            SELECT node,
-              ROUND(CASE WHEN ($cNum / s2) <= 160.0 AND v > 0
-                THEN 64.0 * ln(64.0 / v) ELSE ($cNum / s2) END, 9) AS e
-            FROM (
-              SELECT h.ch AS node,
-                CAST(SUM(CASE WHEN COALESCE(b.reg, 0) = 0 THEN 1 ELSE 0 END)
-                  AS BIGINT) AS v,
-                CAST(SUM(CAST(1 AS BIGINT) << (55 - COALESCE(b.reg, 0)))
-                  AS BIGINT) AS s2
-              FROM hosts h
-              CROSS JOIN (SELECT unnest(range(0, 64)) AS bucket) bk
-              LEFT JOIN b$i b ON b.node = h.ch AND b.bucket = bk.bucket
-              GROUP BY h.ch))"""
-    }.mkString(",\n        ")
     val harm = (1 to k).map(i => s"(est$i.e - est${i - 1}.e) / $i.0")
       .mkString(" + ")
     val joins = (1 to k).map(i => s"JOIN est$i ON est$i.node = est0.node")
       .mkString("\n          ")
-    s"""WITH hosts AS (SELECT DISTINCT doc_id % 64 AS ch FROM documents),
-        e0 AS (
-          SELECT ch AS a,
-            CASE WHEN ch IN (8, 19, 44, 63) THEN ch ELSE ch + 1 END AS b
-          FROM hosts),
-        edges AS (
-          SELECT a AS src, b AS dst FROM e0
-          UNION SELECT b, a FROM e0),
-        b0 AS (
-          SELECT ch AS node, h % 64 AS bucket,
-            CASE WHEN h // 64 = 0 THEN 55
-              ELSE 55 - length(ltrim(bin(h // 64), '0')) END AS reg
-          FROM (SELECT ch,
-              CAST('0x' || substr(md5(CAST(ch AS VARCHAR)), 1, 15) AS BIGINT) AS h
-            FROM hosts)),
-        $rounds,
-        $ests
+    s"""WITH ${hllRegisterCtes(k)},
+        ${hllEstimateCtes(k)}
         SELECT est0.node AS host_id,
           ROUND(est$k.e, 6) AS reach_est,
           ROUND($harm, 6) AS harmonic
@@ -1499,32 +1484,6 @@ object SparkEntry {
     * Spark when-chain, and the single pinned interpolation division.
     */
   private def neighborhoodOracleSql(k: Int, q: Double): String = {
-    val cNum = 0.709 * 64 * 64 * math.pow(2.0, 55)
-    val rounds = (1 to k).map { i =>
-      s"""b$i AS (
-            SELECT node, bucket, MAX(reg) AS reg FROM (
-              SELECT node, bucket, reg FROM b${i - 1}
-              UNION ALL
-              SELECT e.dst, p.bucket, p.reg
-              FROM edges e JOIN b${i - 1} p ON p.node = e.src)
-            GROUP BY node, bucket)"""
-    }.mkString(",\n        ")
-    val ests = (0 to k).map { i =>
-      s"""est$i AS (
-            SELECT node,
-              ROUND(CASE WHEN ($cNum / s2) <= 160.0 AND v > 0
-                THEN 64.0 * ln(64.0 / v) ELSE ($cNum / s2) END, 9) AS e
-            FROM (
-              SELECT h.ch AS node,
-                CAST(SUM(CASE WHEN COALESCE(b.reg, 0) = 0 THEN 1 ELSE 0 END)
-                  AS BIGINT) AS v,
-                CAST(SUM(CAST(1 AS BIGINT) << (55 - COALESCE(b.reg, 0)))
-                  AS BIGINT) AS s2
-              FROM hosts h
-              CROSS JOIN (SELECT unnest(range(0, 64)) AS bucket) bk
-              LEFT JOIN b$i b ON b.node = h.ch AND b.bucket = bk.bucket
-              GROUP BY h.ch))"""
-    }.mkString(",\n        ")
     val nfs = (0 to k).map { i =>
       s"""(SELECT list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
               list_sort(list(e))), (a, b) -> a + b) FROM est$i) AS nf$i"""
@@ -1534,23 +1493,8 @@ object SparkEntry {
              THEN CAST(${r - 1} AS DOUBLE) + (t - nf${r - 1}) / (nf$r - nf${r - 1})"""
     }.mkString("\n           ")
     val nfCase = (0 to k).map(r => s"WHEN $r THEN nf$r").mkString(" ")
-    s"""WITH hosts AS (SELECT DISTINCT doc_id % 64 AS ch FROM documents),
-        e0 AS (
-          SELECT ch AS a,
-            CASE WHEN ch IN (8, 19, 44, 63) THEN ch ELSE ch + 1 END AS b
-          FROM hosts),
-        edges AS (
-          SELECT a AS src, b AS dst FROM e0
-          UNION SELECT b, a FROM e0),
-        b0 AS (
-          SELECT ch AS node, h % 64 AS bucket,
-            CASE WHEN h // 64 = 0 THEN 55
-              ELSE 55 - length(ltrim(bin(h // 64), '0')) END AS reg
-          FROM (SELECT ch,
-              CAST('0x' || substr(md5(CAST(ch AS VARCHAR)), 1, 15) AS BIGINT) AS h
-            FROM hosts)),
-        $rounds,
-        $ests,
+    s"""WITH ${hllRegisterCtes(k)},
+        ${hllEstimateCtes(k)},
         agg AS (
           SELECT
             $nfs),
@@ -1575,10 +1519,7 @@ object SparkEntry {
     * `lmsc(doc_id, n_bigrams, avg_logp)`.
     */
   private val lmScoreCte: String =
-    """WITH w AS (
-         SELECT doc_id,
-           string_split_regex(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS words
-         FROM documents),
+    s"""WITH w AS (SELECT doc_id, $lowerWords AS words FROM documents),
        bi AS (
          SELECT doc_id, unnest(
            [words[i] || ' ' || words[i+1]
@@ -1635,14 +1576,13 @@ object SparkEntry {
     * hashes, each 4-window picks its rightmost-min position, distinct.
     */
   private val winnowCte: String =
-    """WITH base AS (
+    s"""WITH base AS (
          SELECT doc_id, string_split(text, ' ') AS w,
            len(string_split(text, ' ')) AS n
          FROM documents),
        g AS (
          SELECT doc_id,
-           [CAST('0x' || substr(md5(array_to_string(w[(i+1):(i+3)], ' ')),
-              1, 15) AS BIGINT)
+           [${md5Hi("array_to_string(w[(i+1):(i+3)], ' ')")}
             FOR i IN range(0, CAST(n - 3 + 1 AS INT))] AS h
          FROM base WHERE n >= 6),
        sel AS (
@@ -1658,9 +1598,7 @@ object SparkEntry {
     * 1-based inclusive list slice == Spark's slice; both clamp at the tail).
     */
   private val chunkCte: String =
-    """WITH w AS (
-         SELECT doc_id, string_split_regex(trim(text), '\s+') AS words
-         FROM documents),
+    s"""WITH w AS (SELECT doc_id, $wsWords AS words FROM documents),
        s AS (
          SELECT doc_id, words, len(words) AS n,
            unnest(range(0, len(words), 48)) AS start
@@ -1670,55 +1608,81 @@ object SparkEntry {
            CAST(start // 48 AS BIGINT) AS chunk_id,
            CAST(start AS BIGINT) AS start_tok,
            CAST(LEAST(64, n - start) AS BIGINT) AS n_toks,
-           CAST('0x' || substr(md5(
-             array_to_string(words[start + 1 : start + 64], ' ')),
-             1, 15) AS BIGINT) AS chunk_fp
+           ${md5Hi("array_to_string(words[start + 1 : start + 64], ' ')")} AS chunk_fp
          FROM s)"""
+
+  /** CTEs `edges`, `reach` and `comp`(doc_id, cluster_id): the connected
+    * components of the pair graph in CTE `pairs`(doc_a, doc_b), recomputed
+    * as recursive reachability; a cluster's id is its smallest doc_id. */
+  private val pairComponentCtes: String =
+    """edges AS (
+           SELECT doc_a AS src, doc_b AS dst FROM pairs
+           UNION ALL SELECT doc_b, doc_a FROM pairs),
+         reach(doc_id, r) AS (
+           SELECT src, src FROM edges
+           UNION
+           SELECT e.src, reach.r FROM edges e JOIN reach ON e.dst = reach.doc_id),
+         comp AS (
+           SELECT doc_id, MIN(r) AS cluster_id FROM reach GROUP BY doc_id)"""
+
+  /** CTE `sizes`(cluster_id, cluster_size) over CTE `comp`. */
+  private val clusterSizesCte =
+    "sizes AS (SELECT cluster_id, COUNT(*) AS cluster_size FROM comp GROUP BY cluster_id)"
+
+  /** qd4/qd6/qd8's blocking: CTE `sh`(doc_id, lang, len_bucket, sh) holds
+    * the 2-word shingle sets of the (lang, whitespace tokens // 4) blocks of
+    * at most 4096 documents. */
+  private val ngramBlockCtes: String =
+    s"""w AS (
+           SELECT doc_id, lang, len($wsWords) // 4 AS len_bucket, $lowerWords AS words
+           FROM documents),
+         sh0 AS (SELECT doc_id, lang, len_bucket, ${shingleSet(2)} AS sh FROM w),
+         bs AS (
+           SELECT lang, len_bucket, COUNT(*) AS n_in_block
+           FROM sh0 GROUP BY 1, 2),
+         sh AS (
+           SELECT sh0.* FROM sh0 JOIN bs USING (lang, len_bucket)
+           WHERE bs.n_in_block <= 4096)"""
+
+  /** qd6/qd8's near-dup clusters: the in-block pairs of [[ngramBlockCtes]]
+    * with Jaccard >= 0.1, their [[pairComponentCtes]] and cluster sizes. */
+  private val ngramClusterCtes: String =
+    s"""$ngramBlockCtes,
+         pairs AS (
+           SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
+           FROM sh a JOIN sh b
+             ON a.lang = b.lang AND a.len_bucket = b.len_bucket
+             AND a.doc_id < b.doc_id
+           WHERE ${jaccard("a", "b")} >= 0.1),
+         $pairComponentCtes,
+         $clusterSizesCte"""
+
+  /** qt2's quality score of `text`, rounded to 6 places. */
+  private val qualityScore: String =
+    s"""ROUND(LEAST(len($wsWords) / 100.0, 1.0)
+           * (1.0 - len(regexp_extract_all(text, '[\\.,;:!\\?]')) / CAST(length(text) AS DOUBLE)), 6)"""
+
+  /** qd8/qd10's survivorship over CTEs `comp` and `sizes`: the member with
+    * the best [[qualityScore]] (then the smallest doc_id) survives. */
+  private val survivorSql: String =
+    s"""q AS (SELECT doc_id, $qualityScore AS quality_score FROM documents)
+         SELECT comp.doc_id, comp.cluster_id, sizes.cluster_size,
+           q.quality_score,
+           ROW_NUMBER() OVER (PARTITION BY comp.cluster_id
+             ORDER BY q.quality_score DESC, comp.doc_id ASC) = 1 AS survivor
+         FROM comp JOIN sizes USING (cluster_id) JOIN q USING (doc_id)"""
 
   /** Shared qd10/qd19 CTE chain: shingles → portable MinHash signatures →
     * the 4x2 band predicate + exact-Jaccard verify → recursive-CTE
     * connected components, ending in CTE `comp`(doc_id, cluster_id) over
     * the pair-participating documents.
     */
-  /** Shared shingle→portable-MinHash-signature prefix (qd10/qd19/qd20),
-    * ending in CTE `sigs`(doc_id, sh, sig[8]).
-    */
-  private val minhashSigsCte: String =
-    """WITH RECURSIVE w AS (
-         SELECT doc_id,
-           string_split_regex(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS words
-         FROM documents),
-       sh AS (
-         SELECT doc_id, list_distinct(list_filter(
-           [list_aggregate(words[i:i+1], 'string_agg', ' ')
-            FOR i IN range(1, GREATEST(len(words)-1, 1)+1)], x -> x <> '')) AS sh
-         FROM w),
-       sigs AS (
-         SELECT doc_id, sh,
-           [list_min([(CAST('0x' || substr(md5(s),1,15) AS BIGINT)
-              + i * CAST('0x' || substr(md5(s),16,15) AS BIGINT)) % 2305843009213693951
-             FOR s IN sh]) FOR i IN range(0, 8)] AS sig
-         FROM sh WHERE len(sh) > 0)"""
-
-  private val lshCompCte: String = minhashSigsCte + """,
+  private val lshCompCte: String = s"""WITH RECURSIVE $minhashSigCtes,
        pairs AS (
          SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-         FROM sigs a JOIN sigs b ON a.doc_id < b.doc_id AND (
-           (a.sig[1] = b.sig[1] AND a.sig[2] = b.sig[2]) OR
-           (a.sig[3] = b.sig[3] AND a.sig[4] = b.sig[4]) OR
-           (a.sig[5] = b.sig[5] AND a.sig[6] = b.sig[6]) OR
-           (a.sig[7] = b.sig[7] AND a.sig[8] = b.sig[8]))
-         WHERE len(list_intersect(a.sh, b.sh))
-           / len(list_distinct(list_concat(a.sh, b.sh))) >= 0.2),
-       edges AS (
-         SELECT doc_a AS src, doc_b AS dst FROM pairs
-         UNION ALL SELECT doc_b, doc_a FROM pairs),
-       reach(doc_id, r) AS (
-         SELECT src, src FROM edges
-         UNION
-         SELECT e.src, reach.r FROM edges e JOIN reach ON e.dst = reach.doc_id),
-       comp AS (
-         SELECT doc_id, MIN(r) AS cluster_id FROM reach GROUP BY doc_id)"""
+         FROM sigs a JOIN sigs b ON a.doc_id < b.doc_id AND (${bandHit("a", "b")})
+         WHERE ${jaccard("a", "b")} >= 0.2),
+       $pairComponentCtes"""
 
   /** DuckDB replay of [[graft.ops.LinkGraph.hostCommunities]]: the planted
     * 4-block graph (directed rings + chord + self-loops + downward bridges)
@@ -1755,6 +1719,12 @@ object SparkEntry {
         FROM l$k JOIN sz ON sz.label = l$k.label"""
   }
 
+  /** CTEs `shw`(doc_id, words) and `sh`(doc_id, sh): every document's
+    * 4-word shingles, the qt8 contamination grams qp1-qp3 test. */
+  private val contaminationShingles: String =
+    s"""shw AS (SELECT doc_id, $lowerWords AS words FROM documents),
+         sh AS (SELECT doc_id, ${shingleSet(4)} AS sh FROM shw)"""
+
   /** qp1/qp2 shared DuckDB CTE chain: the composed admission pipeline
     * (qd1 families + qt20-subset quality + qt8 gram contamination + qt43
     * water-fill), ending at the per-source rate table `rr` and the gated
@@ -1762,10 +1732,7 @@ object SparkEntry {
     * kept-set filter + shard manifest aggregation.
     */
   private val curationChain: String =
-    """WITH w AS (
-           SELECT doc_id, source, lang, text,
-             string_split_regex(trim(text), '\s+') AS words
-           FROM documents),
+    s"""WITH w AS (SELECT doc_id, source, lang, text, $wsWords AS words FROM documents),
          base AS (
            SELECT doc_id, source, lang,
              CAST(len(words) AS BIGINT) AS tokens,
@@ -1773,21 +1740,13 @@ object SparkEntry {
                / len(words), 4) AS mwl,
              round(len([x FOR x IN words IF regexp_matches(x, '[A-Za-z]')])
                / CAST(len(words) AS DOUBLE), 6) AS awr,
-             md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS fp
+             md5($normText) AS fp
            FROM w),
          fam AS (
            SELECT fp, MIN(doc_id) AS canon_id,
              CAST(COUNT(*) AS BIGINT) AS n_dups
            FROM base GROUP BY 1),
-         shw AS (
-           SELECT doc_id,
-             string_split_regex(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS words
-           FROM documents),
-         sh AS (
-           SELECT doc_id, list_distinct(list_filter(
-             [list_aggregate(words[i:i+3], 'string_agg', ' ')
-              FOR i IN range(1, GREATEST(len(words)-3, 1)+1)], x -> x <> '')) AS sh
-           FROM shw),
+         $contaminationShingles,
          ev AS (SELECT DISTINCT unnest(sh) AS g FROM sh WHERE doc_id % 29 = 0),
          cont AS (
            SELECT DISTINCT co.doc_id
@@ -1844,18 +1803,38 @@ object SparkEntry {
                * 1000 // capacity AS rate_milli
            FROM fin)"""
 
+  /** qt21/qt24's DSIR model: CTE `fb`(doc_id, lang, bucket) hashes every
+    * word and adjacent-word-pair feature into 1024 md5 buckets, and CTE
+    * `lam`(bucket, lam) holds each bucket's add-one-smoothed log ratio of
+    * the 'en' target to the raw distribution, rounded to 9 digits. */
+  private val dsirCtes: String =
+    s"""w AS (SELECT doc_id, lang, $lowerWords AS words FROM documents),
+         f AS (
+           SELECT doc_id, lang, unnest(
+             ['u:' || x FOR x IN words] ||
+             ['b:' || words[i] || ' ' || words[i+1]
+              FOR i IN range(1, GREATEST(len(words)-1, 0)+1)]) AS f
+           FROM w),
+         fb AS (SELECT doc_id, lang, ${md5Hi("f")} % 1024 AS bucket FROM f),
+         cnt AS (
+           SELECT bucket, COUNT(*) AS n_raw,
+             SUM(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS n_tgt
+           FROM fb GROUP BY bucket),
+         tot AS (
+           SELECT COUNT(*) AS t_raw,
+             SUM(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS t_tgt
+           FROM fb),
+         spine AS (SELECT unnest(range(0, 1024)) AS bucket),
+         lam AS (
+           SELECT spine.bucket,
+             ROUND(ln((COALESCE(n_tgt, 0) + 1.0) / (t_tgt + 1024.0)) -
+                   ln((COALESCE(n_raw, 0) + 1.0) / (t_raw + 1024.0)), 9) AS lam
+           FROM spine LEFT JOIN cnt ON spine.bucket = cnt.bucket CROSS JOIN tot)"""
+
   /** DuckDB-runnable oracles, column-aligned with the Spark results. */
   def oracleSql: Map[String, String] = Map(
     "qd13_dup_ngrams" ->
-      """WITH w AS (
-           SELECT doc_id,
-             string_split_regex(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS words
-           FROM documents),
-         b AS (
-           SELECT doc_id, list_distinct(list_filter(
-             [list_aggregate(words[i:i+2], 'string_agg', ' ')
-              FOR i IN range(1, GREATEST(len(words)-2, 1)+1)], x -> x <> '')) AS sh
-           FROM w),
+      s"""WITH ${shingleCtes("b", "sh", 3)},
          g AS (SELECT doc_id, unnest(sh) AS gram FROM b WHERE len(sh) > 0),
          dup AS (SELECT gram FROM g GROUP BY gram HAVING COUNT(*) >= 2)
          SELECT g.doc_id,
@@ -1871,14 +1850,13 @@ object SparkEntry {
     // from surviving token indexes. lag's NULL first row falls to ELSE 1 on
     // both engines (Spark's otherwise() and SQL CASE agree on NULL).
     "qd14_exact_substr" ->
-      """WITH base AS (
+      s"""WITH base AS (
            SELECT doc_id, string_split(text, ' ') AS w,
              len(string_split(text, ' ')) AS n
            FROM documents),
          g AS (
            SELECT doc_id, i AS pos,
-             CAST('0x' || substr(md5(array_to_string(w[(i+1):(i+5)], ' ')),
-               1, 15) AS BIGINT) AS gh
+             ${md5Hi("array_to_string(w[(i+1):(i+5)], ' ')")} AS gh
            FROM (SELECT doc_id, w,
                    unnest(generate_series(0, CAST(n - 5 AS INT))) AS i
                  FROM base WHERE n >= 5)),
@@ -2144,15 +2122,7 @@ object SparkEntry {
     // reachability recomputed with a recursive CTE (min reachable label) —
     // independent of the pointer-jumping CC implementation (qd6 discipline)
     "qg2_host_components" ->
-      """WITH RECURSIVE hosts AS (
-           SELECT DISTINCT doc_id % 64 AS ch FROM documents),
-         e0 AS (
-           SELECT ch AS a,
-             CASE WHEN ch IN (8, 19, 44, 63) THEN ch ELSE ch + 1 END AS b
-           FROM hosts),
-         edges AS (
-           SELECT a AS src, b AS dst FROM e0
-           UNION SELECT b, a FROM e0),
+      s"""WITH RECURSIVE $chainGraphCtes,
          reach(hid, r) AS (
            SELECT src, src FROM edges
            UNION
@@ -2259,9 +2229,9 @@ object SparkEntry {
     // DuckDB 1.0), formulas on CAST-to-DOUBLE constants (decimal literals
     // would otherwise compute in DECIMAL), pinned parenthesization, round 6
     "qt40_readability" ->
-      """WITH c AS (
+      s"""WITH c AS (
            SELECT doc_id,
-             CAST(len(string_split_regex(trim(text), '\s+')) AS BIGINT) AS n_words,
+             CAST(len($wsWords) AS BIGINT) AS n_words,
              GREATEST(CAST(len(regexp_extract_all(text, '[.!?]+')) AS BIGINT), 1) AS n_sentences,
              CAST(len(regexp_extract_all(lower(text), '[aeiouy]+')) AS BIGINT) AS n_syllables
            FROM documents),
@@ -2283,13 +2253,13 @@ object SparkEntry {
     // (TextAnalysis.jsdDrift) — p/q/m are single IEEE divisions of
     // exactly-converted int64s, one ln per operand, round 9
     "qt39_jsd_drift" ->
-      """WITH w AS (
+      s"""WITH w AS (
            SELECT doc_id % 2 AS half,
-             unnest(string_split_regex(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ')) AS w
+             unnest($lowerWords) AS w
            FROM documents),
          wf AS (SELECT half, w FROM w WHERE w <> ''),
          c AS (
-           SELECT half, CAST('0x' || substr(md5(w), 1, 15) AS BIGINT) % 256 AS bucket,
+           SELECT half, ${md5Hi("w")} % 256 AS bucket,
              CAST(COUNT(*) AS BIGINT) AS c
            FROM wf GROUP BY 1, 2),
          sp AS (SELECT unnest(range(256)) AS bucket),
@@ -2314,14 +2284,13 @@ object SparkEntry {
     // decontamination rewrite: qd14's span replay pointed at the eval-gram
     // set — islands chain at gap <= 4, spans >= 6 tokens, rebuild included
     "qt38_decontam_rewrite" ->
-      """WITH base AS (
+      s"""WITH base AS (
            SELECT doc_id, string_split(text, ' ') AS w,
              len(string_split(text, ' ')) AS n
            FROM documents),
          g AS (
            SELECT doc_id, i AS pos,
-             CAST('0x' || substr(md5(array_to_string(w[(i+1):(i+4)], ' ')),
-               1, 15) AS BIGINT) AS gh
+             ${md5Hi("array_to_string(w[(i+1):(i+4)], ' ')")} AS gh
            FROM (SELECT doc_id, w,
                    unnest(generate_series(0, CAST(n - 4 AS INT))) AS i
                  FROM base WHERE n >= 4)),
@@ -2427,17 +2396,12 @@ object SparkEntry {
     // L2 on the same fixed-point vectors; recall = |approx ∩ exact| / k
     "qs10_recall_eval" ->
       s"""WITH approx AS (${pqOracleSql(4, 8, 2, 4096, 5, 10)}),
-         fx AS (
-           SELECT vec_id, [CAST(round(CAST(embedding[i] AS DOUBLE)*1000000) AS BIGINT)
-                           FOR i IN range(1, len(embedding)+1)] AS qv
-           FROM embeddings),
+         ${fixedPointCte("fx")},
          ex AS (
            SELECT query_id, neighbor_id FROM (
              SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-               ROW_NUMBER() OVER (PARTITION BY a.vec_id ORDER BY
-                 list_sum([(a.qv[i]-b.qv[i])*(a.qv[i]-b.qv[i])
-                           FOR i IN range(1, len(a.qv)+1)]) ASC,
-                 b.vec_id ASC) AS rnk
+               ROW_NUMBER() OVER (PARTITION BY a.vec_id
+                 ORDER BY ${l2Sum("a.qv", "b.qv")} ASC, b.vec_id ASC) AS rnk
              FROM fx a JOIN fx b ON a.vec_id < 5 AND b.vec_id <> a.vec_id)
            WHERE rnk <= 10),
          hits AS (
@@ -2477,34 +2441,7 @@ object SparkEntry {
              ROUND(cos, 6) AS cosine
            FROM sc) WHERE rnk <= 10"""),
     "qt21_dsir_weights" ->
-      """WITH w AS (
-           SELECT doc_id, lang,
-             string_split_regex(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS words
-           FROM documents),
-         f AS (
-           SELECT doc_id, lang, unnest(
-             ['u:' || x FOR x IN words] ||
-             ['b:' || words[i] || ' ' || words[i+1]
-              FOR i IN range(1, GREATEST(len(words)-1, 0)+1)]) AS f
-           FROM w),
-         fb AS (
-           SELECT doc_id, lang,
-             CAST('0x' || substr(md5(f), 1, 15) AS BIGINT) % 1024 AS bucket
-           FROM f),
-         cnt AS (
-           SELECT bucket, COUNT(*) AS n_raw,
-             SUM(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS n_tgt
-           FROM fb GROUP BY bucket),
-         tot AS (
-           SELECT COUNT(*) AS t_raw,
-             SUM(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS t_tgt
-           FROM fb),
-         spine AS (SELECT unnest(range(0, 1024)) AS bucket),
-         lam AS (
-           SELECT spine.bucket,
-             ROUND(ln((COALESCE(n_tgt, 0) + 1.0) / (t_tgt + 1024.0)) -
-                   ln((COALESCE(n_raw, 0) + 1.0) / (t_raw + 1024.0)), 9) AS lam
-           FROM spine LEFT JOIN cnt ON spine.bucket = cnt.bucket CROSS JOIN tot)
+      s"""WITH $dsirCtes
          SELECT doc_id, COUNT(*) AS n_feats,
            ROUND(list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_sort(list(lam))),
              (a, b) -> a + b), 6) AS log_weight
@@ -2514,34 +2451,7 @@ object SparkEntry {
     // the logit sum and keep flag are pure integers — the whole decision is
     // hash-verified, not epsilon-compared
     "qt24_classifier_gate" ->
-      """WITH w AS (
-           SELECT doc_id, lang,
-             string_split_regex(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS words
-           FROM documents),
-         f AS (
-           SELECT doc_id, lang, unnest(
-             ['u:' || x FOR x IN words] ||
-             ['b:' || words[i] || ' ' || words[i+1]
-              FOR i IN range(1, GREATEST(len(words)-1, 0)+1)]) AS f
-           FROM w),
-         fb AS (
-           SELECT doc_id, lang,
-             CAST('0x' || substr(md5(f), 1, 15) AS BIGINT) % 1024 AS bucket
-           FROM f),
-         cnt AS (
-           SELECT bucket, COUNT(*) AS n_raw,
-             SUM(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS n_tgt
-           FROM fb GROUP BY bucket),
-         tot AS (
-           SELECT COUNT(*) AS t_raw,
-             SUM(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS t_tgt
-           FROM fb),
-         spine AS (SELECT unnest(range(0, 1024)) AS bucket),
-         lam AS (
-           SELECT spine.bucket,
-             ROUND(ln((COALESCE(n_tgt, 0) + 1.0) / (t_tgt + 1024.0)) -
-                   ln((COALESCE(n_raw, 0) + 1.0) / (t_raw + 1024.0)), 9) AS lam
-           FROM spine LEFT JOIN cnt ON spine.bucket = cnt.bucket CROSS JOIN tot),
+      s"""WITH $dsirCtes,
          mx AS (SELECT MAX(abs(lam)) AS max_abs FROM lam),
          qm AS (
            SELECT bucket,
@@ -2555,7 +2465,7 @@ object SparkEntry {
     // alpha = 0.5 temperature mixing: sqrt is IEEE-correctly-rounded on
     // both engines, so floor(k*sqrt(n_min)/sqrt(n_d)) agrees bit-for-bit
     "qt25_domain_mixture" ->
-      """WITH c AS (
+      s"""WITH c AS (
            SELECT source, COUNT(*) AS n_docs FROM documents GROUP BY source),
          m AS (SELECT MIN(n_docs) AS n_min FROM c),
          r AS (
@@ -2565,8 +2475,7 @@ object SparkEntry {
            FROM c, m),
          d AS (
            SELECT doc_id, source,
-             CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR) || '#mix'),
-               1, 15) AS BIGINT) % 1000000 AS h
+             ${md5Hi("CAST(doc_id AS VARCHAR) || '#mix'")} % 1000000 AS h
            FROM documents)
          SELECT d.doc_id, d.source, r.n_docs AS domain_docs, r.keep_per_k,
            CAST(d.h < r.keep_per_k AS INTEGER) AS kept
@@ -2575,13 +2484,12 @@ object SparkEntry {
     // per-line rules, the keep-first dedup (list_position == 1-based lambda
     // index), and the >=3-lines doc gate are all replayed in list math
     "qt26_c4_lines" ->
-      """WITH base AS (
+      s"""WITH base AS (
            SELECT doc_id, string_split(text, ' ') AS w FROM documents),
          seg AS (
            SELECT doc_id, w, len(w) AS n,
              [i FOR i IN range(0, len(w))
-              IF (CAST('0x' || substr(md5(doc_id || ':' || i), 1, 15)
-                  AS BIGINT)) % 5 = 0] AS brk
+              IF (${md5Hi("doc_id || ':' || i")}) % 5 = 0] AS brk
            FROM base),
          lined AS (
            SELECT doc_id,
@@ -2625,17 +2533,9 @@ object SparkEntry {
     // (bitlength via bin() string math — integer-exact, no log2 rounding
     // risk), max per bucket, zero registers pinned by the range left join
     "qt27_hll_distinct" ->
-      """WITH w AS (
-           SELECT doc_id,
-             string_split_regex(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS words
-           FROM documents),
-         sh AS (
-           SELECT doc_id, list_distinct(list_filter(
-             [list_aggregate(words[i:i+1], 'string_agg', ' ')
-              FOR i IN range(1, GREATEST(len(words)-1, 1)+1)], x -> x <> '')) AS sh
-           FROM w),
+      s"""WITH ${shingleCtes("sh", "sh", 2)},
          e AS (SELECT unnest(sh) AS g FROM sh),
-         h AS (SELECT DISTINCT CAST('0x' || substr(md5(g),1,15) AS BIGINT) AS h FROM e),
+         h AS (SELECT DISTINCT ${md5Hi("g")} AS h FROM e),
          r AS (SELECT h % 64 AS bucket,
                  CASE WHEN h // 64 = 0 THEN 55
                    ELSE 55 - length(ltrim(bin(h // 64), '0')) END AS rank
@@ -2648,7 +2548,7 @@ object SparkEntry {
     "qc2_semdedup" -> semdedupOracleSql(8, 4, 2025L),
     "qc3_prototype_prune" -> prototypePruneOracleSql(8, 4),
     "qt20_gopher_rules" ->
-      """SELECT doc_id, word_count, mean_word_len, symbol_word_ratio,
+      s"""SELECT doc_id, word_count, mean_word_len, symbol_word_ratio,
            bullet_line_ratio, ellipsis_line_ratio, alpha_word_ratio,
            stop_distinct,
            CAST(word_count BETWEEN 50 AND 100000
@@ -2662,21 +2562,21 @@ object SparkEntry {
            SELECT doc_id,
              CAST(len(words) AS BIGINT) AS word_count,
              round(CAST(list_sum([length(w) FOR w IN words]) AS DOUBLE) / len(words), 4) AS mean_word_len,
-             round(len(regexp_extract_all(text, '#|\.\.\.|…')) / CAST(len(words) AS DOUBLE), 6) AS symbol_word_ratio,
-             round(len([l FOR l IN lines IF regexp_matches(l, '^\s*[-*•]')]) / CAST(len(lines) AS DOUBLE), 6) AS bullet_line_ratio,
-             round(len([l FOR l IN lines IF regexp_matches(l, '(\.\.\.|…)\s*$')]) / CAST(len(lines) AS DOUBLE), 6) AS ellipsis_line_ratio,
+             round(len(regexp_extract_all(text, '#|\\.\\.\\.|…')) / CAST(len(words) AS DOUBLE), 6) AS symbol_word_ratio,
+             round(len([l FOR l IN lines IF regexp_matches(l, '^\\s*[-*•]')]) / CAST(len(lines) AS DOUBLE), 6) AS bullet_line_ratio,
+             round(len([l FOR l IN lines IF regexp_matches(l, '(\\.\\.\\.|…)\\s*$$')]) / CAST(len(lines) AS DOUBLE), 6) AS ellipsis_line_ratio,
              round(len([w FOR w IN words IF regexp_matches(w, '[A-Za-z]')]) / CAST(len(words) AS DOUBLE), 6) AS alpha_word_ratio,
-             CAST(regexp_matches(lower(text), '\bthe\b') AS BIGINT)
-               + CAST(regexp_matches(lower(text), '\bbe\b') AS BIGINT)
-               + CAST(regexp_matches(lower(text), '\bto\b') AS BIGINT)
-               + CAST(regexp_matches(lower(text), '\bof\b') AS BIGINT)
-               + CAST(regexp_matches(lower(text), '\band\b') AS BIGINT)
-               + CAST(regexp_matches(lower(text), '\bthat\b') AS BIGINT)
-               + CAST(regexp_matches(lower(text), '\bhave\b') AS BIGINT)
-               + CAST(regexp_matches(lower(text), '\bwith\b') AS BIGINT) AS stop_distinct
+             CAST(regexp_matches(lower(text), '\\bthe\\b') AS BIGINT)
+               + CAST(regexp_matches(lower(text), '\\bbe\\b') AS BIGINT)
+               + CAST(regexp_matches(lower(text), '\\bto\\b') AS BIGINT)
+               + CAST(regexp_matches(lower(text), '\\bof\\b') AS BIGINT)
+               + CAST(regexp_matches(lower(text), '\\band\\b') AS BIGINT)
+               + CAST(regexp_matches(lower(text), '\\bthat\\b') AS BIGINT)
+               + CAST(regexp_matches(lower(text), '\\bhave\\b') AS BIGINT)
+               + CAST(regexp_matches(lower(text), '\\bwith\\b') AS BIGINT) AS stop_distinct
            FROM (
              SELECT doc_id, text,
-               string_split_regex(trim(text), '\s+') AS words,
+               $wsWords AS words,
                string_split(text, chr(10)) AS lines
              FROM documents))""",
     "q01_agg_pricing" ->
@@ -2811,37 +2711,21 @@ object SparkEntry {
            AND abs(a.sec - b.sec) <= 120
          GROUP BY a.event_type""",
     "qt5_bigram_freq" ->
-      """WITH w AS (
-           SELECT doc_id,
-             string_split_regex(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS words
-           FROM documents),
-         b AS (
-           SELECT doc_id, list_distinct(list_filter(
-             [list_aggregate(words[i:i+1], 'string_agg', ' ')
-              FOR i IN range(1, GREATEST(len(words)-1, 1)+1)], x -> x <> '')) AS bigrams
-           FROM w),
+      s"""WITH ${shingleCtes("b", "bigrams", 2)},
          e AS (SELECT unnest(bigrams) AS bigram FROM b)
          SELECT bigram, COUNT(*) AS n_docs FROM e
          GROUP BY bigram HAVING COUNT(*) >= 10""",
     // Count-Min Sketch cells replayed exactly: same md5-affine lane hashes
     // as qd2, every (d, w) cell of the 4x64 grid incl. zeros
     "qt6_cms_bigrams" ->
-      """WITH w AS (
-           SELECT doc_id,
-             string_split_regex(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS words
-           FROM documents),
-         b AS (
-           SELECT doc_id, list_distinct(list_filter(
-             [list_aggregate(words[i:i+1], 'string_agg', ' ')
-              FOR i IN range(1, GREATEST(len(words)-1, 1)+1)], x -> x <> '')) AS sh
-           FROM w),
+      s"""WITH ${shingleCtes("b", "sh", 2)},
          e AS (SELECT unnest(sh) AS item FROM b),
          h AS (
-           SELECT CAST('0x' || substr(md5(item),1,15) AS BIGINT) AS a,
-                  CAST('0x' || substr(md5(item),16,15) AS BIGINT) AS bb
+           SELECT ${md5Hi("item")} AS a,
+                  ${md5Lo("item")} AS bb
            FROM e),
          cells AS (
-           SELECT d.d, CAST(((a + d.d * bb) % 2305843009213693951) % 64 AS INT) AS w,
+           SELECT d.d, CAST(((a + d.d * bb) % $mersenne61) % 64 AS INT) AS w,
                   COUNT(*) AS n
            FROM h CROSS JOIN (SELECT unnest(range(0, 4)) AS d) d
            GROUP BY 1, 2),
@@ -2852,22 +2736,14 @@ object SparkEntry {
          SELECT grid.d, grid.w, COALESCE(cells.n, 0) AS n
          FROM grid LEFT JOIN cells ON grid.d = cells.d AND grid.w = cells.w""",
     "qt7_hash_sample" ->
-      """SELECT doc_id, lang, n_chars FROM documents
-         WHERE CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR) || '#graft'), 1, 15) AS BIGINT) % 1000 < 100""",
+      s"""SELECT doc_id, lang, n_chars FROM documents
+         WHERE ${md5Hi("CAST(doc_id AS VARCHAR) || '#graft'")} % 1000 < 100""",
     // Heavy hitters: the CMS runtime filter is exact-output-preserving
     // (over-count-only => no false negatives; false positives die on the
     // exact count filter), so the oracle is the PLAIN exact HAVING query
     // over the same bigram stream — the qt13 shared-oracle argument
     "qt50_heavy_hitters" ->
-      """WITH w AS (
-           SELECT doc_id,
-             string_split_regex(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS words
-           FROM documents),
-         b AS (
-           SELECT doc_id, list_distinct(list_filter(
-             [list_aggregate(words[i:i+1], 'string_agg', ' ')
-              FOR i IN range(1, GREATEST(len(words)-1, 1)+1)], x -> x <> '')) AS sh
-           FROM w),
+      s"""WITH ${shingleCtes("b", "sh", 2)},
          e AS (SELECT unnest(sh) AS item FROM b),
          t AS (SELECT GREATEST(CAST(COUNT(*) AS BIGINT) // 1000, 1) AS th
                FROM e)
@@ -2875,23 +2751,15 @@ object SparkEntry {
          FROM e GROUP BY item
          HAVING COUNT(*) >= (SELECT th FROM t)""",
     "qt8_contamination" ->
-      """WITH w AS (
-           SELECT doc_id,
-             string_split_regex(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS words
-           FROM documents),
-         sh AS (
-           SELECT doc_id, list_distinct(list_filter(
-             [list_aggregate(words[i:i+3], 'string_agg', ' ')
-              FOR i IN range(1, GREATEST(len(words)-3, 1)+1)], x -> x <> '')) AS sh
-           FROM w),
+      s"""WITH ${shingleCtes("sh", "sh", 4)},
          ev AS (SELECT doc_id AS eval_id, unnest(sh) AS g FROM sh WHERE doc_id % 29 = 0),
          co AS (SELECT doc_id, unnest(sh) AS g FROM sh WHERE doc_id % 29 <> 0)
          SELECT co.doc_id, ev.eval_id, COUNT(*) AS n_shared_grams
          FROM co JOIN ev USING (g)
          GROUP BY 1, 2""",
     "qt9_tfidf" ->
-      """WITH wds AS (
-           SELECT doc_id, unnest(string_split_regex(trim(lower(text)), '\s+')) AS term
+      s"""WITH wds AS (
+           SELECT doc_id, unnest($lowerWsWords) AS term
            FROM documents),
          tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM wds GROUP BY 1, 2),
          dfreq AS (SELECT term, COUNT(DISTINCT doc_id) AS df FROM tf GROUP BY 1),
@@ -2906,16 +2774,10 @@ object SparkEntry {
     // Gopher-style repetition filters: non-distinct bigram slot counts, ties
     // on the top bigram resolve lexicographically in both engines
     "qt10_repetition" ->
-      """WITH w AS (
-           SELECT doc_id,
-             string_split_regex(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS words
-           FROM documents),
+      s"""WITH w AS (SELECT doc_id, $lowerWords AS words FROM documents),
          b AS (
            SELECT doc_id, words,
-             CASE WHEN len(words) >= 2 THEN
-               [list_aggregate(words[i:i+1], 'string_agg', ' ')
-                FOR i IN range(1, len(words))]
-             ELSE [] END AS bg
+             CASE WHEN len(words) >= 2 THEN ${wordGrams(2, "len(words)")} ELSE [] END AS bg
            FROM w),
          c AS (
            SELECT doc_id, bigram, COUNT(*) AS cnt
@@ -2939,8 +2801,8 @@ object SparkEntry {
          FROM wm JOIN m ON wm.doc_id = m.doc_id
          JOIN tb ON wm.doc_id = tb.doc_id""",
     "qd1_exact_dedup" ->
-      """SELECT n_docs AS group_size, COUNT(*) AS n_groups FROM (
-           SELECT md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS fp,
+      s"""SELECT n_docs AS group_size, COUNT(*) AS n_groups FROM (
+           SELECT md5($normText) AS fp,
              COUNT(*) AS n_docs
            FROM documents GROUP BY 1)
          GROUP BY 1""",
@@ -2953,24 +2815,12 @@ object SparkEntry {
            AND list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
              CAST(b.embedding AS DOUBLE[])) > 0.5""",
     "qd2_minhash_sigs" ->
-      """WITH w AS (
-           SELECT doc_id,
-             string_split_regex(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS words
-           FROM documents),
-         sh AS (
-           SELECT doc_id, list_distinct(list_filter(
-             [list_aggregate(words[i:i+2], 'string_agg', ' ')
-              FOR i IN range(1, GREATEST(len(words)-2, 1)+1)], x -> x <> '')) AS sh
-           FROM w)
+      s"""WITH ${shingleCtes("sh", "sh", 3)}
          SELECT doc_id, len(sh) AS n_shingles,
-           list_min([(CAST('0x' || substr(md5(s),1,15) AS BIGINT)
-             + 0 * CAST('0x' || substr(md5(s),16,15) AS BIGINT)) % 2305843009213693951 FOR s IN sh]) AS sig_0,
-           list_min([(CAST('0x' || substr(md5(s),1,15) AS BIGINT)
-             + 1 * CAST('0x' || substr(md5(s),16,15) AS BIGINT)) % 2305843009213693951 FOR s IN sh]) AS sig_1,
-           list_min([(CAST('0x' || substr(md5(s),1,15) AS BIGINT)
-             + 2 * CAST('0x' || substr(md5(s),16,15) AS BIGINT)) % 2305843009213693951 FOR s IN sh]) AS sig_2,
-           list_min([(CAST('0x' || substr(md5(s),1,15) AS BIGINT)
-             + 3 * CAST('0x' || substr(md5(s),16,15) AS BIGINT)) % 2305843009213693951 FOR s IN sh]) AS sig_3
+           ${minhashLane("0")} AS sig_0,
+           ${minhashLane("1")} AS sig_1,
+           ${minhashLane("2")} AS sig_2,
+           ${minhashLane("3")} AS sig_3
          FROM sh""",
     // FNV-1a + bit-vote SimHash replayed exactly in HUGEINT arithmetic
     // (the byte fold is a list_reduce seeded with the FNV offset basis)
@@ -2988,26 +2838,10 @@ object SparkEntry {
          FROM sg a JOIN sg b ON a.doc_id < b.doc_id
          WHERE bit_count(xor(a.simhash, b.simhash)) <= 8"""),
     "qd4_ngram_jaccard" ->
-      """WITH w AS (
-           SELECT doc_id, lang,
-             len(string_split_regex(trim(text), '\s+')) // 4 AS len_bucket,
-             string_split_regex(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS words
-           FROM documents),
-         sh0 AS (
-           SELECT doc_id, lang, len_bucket, list_distinct(list_filter(
-             [list_aggregate(words[i:i+1], 'string_agg', ' ')
-              FOR i IN range(1, GREATEST(len(words)-1, 1)+1)], x -> x <> '')) AS sh
-           FROM w),
-         bs AS (
-           SELECT lang, len_bucket, COUNT(*) AS n_in_block
-           FROM sh0 GROUP BY 1, 2),
-         sh AS (
-           SELECT sh0.* FROM sh0 JOIN bs USING (lang, len_bucket)
-           WHERE bs.n_in_block <= 4096)
+      s"""WITH $ngramBlockCtes
          SELECT doc_a, doc_b, ROUND(jaccard, 6) AS jaccard FROM (
            SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-             len(list_intersect(a.sh, b.sh))
-               / len(list_distinct(list_concat(a.sh, b.sh))) AS jaccard
+             ${jaccard("a", "b")} AS jaccard
            FROM sh a JOIN sh b
              ON a.lang = b.lang AND a.len_bucket = b.len_bucket
              AND a.doc_id < b.doc_id)
@@ -3015,40 +2849,7 @@ object SparkEntry {
     // connected components over the near-dup pair graph, replayed as a
     // recursive reachability CTE (cluster id = min reachable doc id)
     "qd6_dedup_clusters" ->
-      """WITH RECURSIVE w AS (
-           SELECT doc_id, lang,
-             len(string_split_regex(trim(text), '\s+')) // 4 AS len_bucket,
-             string_split_regex(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS words
-           FROM documents),
-         sh0 AS (
-           SELECT doc_id, lang, len_bucket, list_distinct(list_filter(
-             [list_aggregate(words[i:i+1], 'string_agg', ' ')
-              FOR i IN range(1, GREATEST(len(words)-1, 1)+1)], x -> x <> '')) AS sh
-           FROM w),
-         bs AS (
-           SELECT lang, len_bucket, COUNT(*) AS n_in_block
-           FROM sh0 GROUP BY 1, 2),
-         sh AS (
-           SELECT sh0.* FROM sh0 JOIN bs USING (lang, len_bucket)
-           WHERE bs.n_in_block <= 4096),
-         pairs AS (
-           SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-           FROM sh a JOIN sh b
-             ON a.lang = b.lang AND a.len_bucket = b.len_bucket
-             AND a.doc_id < b.doc_id
-           WHERE len(list_intersect(a.sh, b.sh))
-             / len(list_distinct(list_concat(a.sh, b.sh))) >= 0.1),
-         edges AS (
-           SELECT doc_a AS src, doc_b AS dst FROM pairs
-           UNION ALL SELECT doc_b, doc_a FROM pairs),
-         reach(doc_id, r) AS (
-           SELECT src, src FROM edges
-           UNION
-           SELECT e.src, reach.r FROM edges e JOIN reach ON e.dst = reach.doc_id),
-         comp AS (
-           SELECT doc_id, MIN(r) AS cluster_id FROM reach GROUP BY doc_id),
-         sizes AS (
-           SELECT cluster_id, COUNT(*) AS cluster_size FROM comp GROUP BY cluster_id)
+      s"""WITH RECURSIVE $ngramClusterCtes
          SELECT comp.doc_id, comp.cluster_id, sizes.cluster_size,
            comp.doc_id = comp.cluster_id AS keep
          FROM comp JOIN sizes USING (cluster_id)""",
@@ -3057,50 +2858,18 @@ object SparkEntry {
     // and the exact-Jaccard verify — so recall curve aside, every emitted
     // pair and jaccard value must match bit-for-bit
     "qd7_minhash_lsh_pairs" ->
-      """WITH w AS (
-           SELECT doc_id,
-             string_split_regex(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS words
-           FROM documents),
-         sh AS (
-           SELECT doc_id, list_distinct(list_filter(
-             [list_aggregate(words[i:i+1], 'string_agg', ' ')
-              FOR i IN range(1, GREATEST(len(words)-1, 1)+1)], x -> x <> '')) AS sh
-           FROM w),
-         sigs AS (
-           SELECT doc_id, sh,
-             [list_min([(CAST('0x' || substr(md5(s),1,15) AS BIGINT)
-                + i * CAST('0x' || substr(md5(s),16,15) AS BIGINT)) % 2305843009213693951
-               FOR s IN sh]) FOR i IN range(0, 8)] AS sig
-           FROM sh WHERE len(sh) > 0)
+      s"""WITH $minhashSigCtes
          SELECT doc_a, doc_b, ROUND(j, 6) AS jaccard FROM (
            SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-             len(list_intersect(a.sh, b.sh))
-               / len(list_distinct(list_concat(a.sh, b.sh))) AS j
+             ${jaccard("a", "b")} AS j
            FROM sigs a JOIN sigs b ON a.doc_id < b.doc_id AND (
-             (a.sig[1] = b.sig[1] AND a.sig[2] = b.sig[2]) OR
-             (a.sig[3] = b.sig[3] AND a.sig[4] = b.sig[4]) OR
-             (a.sig[5] = b.sig[5] AND a.sig[6] = b.sig[6]) OR
-             (a.sig[7] = b.sig[7] AND a.sig[8] = b.sig[8])))
+             ${bandHit("a", "b")}))
          WHERE j >= 0.2""",
     // qd21: qd7's sigs + band predicate, NO threshold, plus the lane-match
     // estimator — matches/8 is a dyadic rational (exact f64), the exact
     // Jaccard rounds 6, and the error is one IEEE subtraction (round 6)
     "qd21_minhash_calibration" ->
-      """WITH w AS (
-           SELECT doc_id,
-             string_split_regex(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS words
-           FROM documents),
-         sh AS (
-           SELECT doc_id, list_distinct(list_filter(
-             [list_aggregate(words[i:i+1], 'string_agg', ' ')
-              FOR i IN range(1, GREATEST(len(words)-1, 1)+1)], x -> x <> '')) AS sh
-           FROM w),
-         sigs AS (
-           SELECT doc_id, sh,
-             [list_min([(CAST('0x' || substr(md5(s),1,15) AS BIGINT)
-                + i * CAST('0x' || substr(md5(s),16,15) AS BIGINT)) % 2305843009213693951
-               FOR s IN sh]) FOR i IN range(0, 8)] AS sig
-           FROM sh WHERE len(sh) > 0)
+      s"""WITH $minhashSigCtes
          SELECT doc_a, doc_b, matches,
            CAST(matches AS DOUBLE) / 8.0 AS est_jaccard,
            ROUND(j, 6) AS jaccard,
@@ -3109,44 +2878,24 @@ object SparkEntry {
            SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
              CAST(list_sum([CASE WHEN a.sig[i] = b.sig[i] THEN 1 ELSE 0 END
                FOR i IN range(1, 9)]) AS BIGINT) AS matches,
-             len(list_intersect(a.sh, b.sh))
-               / len(list_distinct(list_concat(a.sh, b.sh))) AS j
+             ${jaccard("a", "b")} AS j
            FROM sigs a JOIN sigs b ON a.doc_id < b.doc_id AND (
-             (a.sig[1] = b.sig[1] AND a.sig[2] = b.sig[2]) OR
-             (a.sig[3] = b.sig[3] AND a.sig[4] = b.sig[4]) OR
-             (a.sig[5] = b.sig[5] AND a.sig[6] = b.sig[6]) OR
-             (a.sig[7] = b.sig[7] AND a.sig[8] = b.sig[8])))""",
+             ${bandHit("a", "b")}))""",
     // qd23: the band stage as a retrieval system — deterministic 256-doc
     // hash sample, all pairs with exact Jaccard + the qd7 band predicate,
     // one row of integer counts and milli rates
     "qd23_lsh_eval" ->
-      """WITH hsel AS (
+      s"""WITH hsel AS (
            SELECT doc_id, text FROM documents
-           ORDER BY CAST('0x' || substr(md5('lsheval:' || CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT), doc_id
+           ORDER BY ${md5Hi("'lsheval:' || CAST(doc_id AS VARCHAR)")}, doc_id
            LIMIT 256),
-         w AS (
-           SELECT doc_id,
-             string_split_regex(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS words
-           FROM hsel),
-         sh AS (
-           SELECT doc_id, list_distinct(list_filter(
-             [list_aggregate(words[i:i+1], 'string_agg', ' ')
-              FOR i IN range(1, GREATEST(len(words)-1, 1)+1)], x -> x <> '')) AS sh
-           FROM w),
-         sigs AS (
-           SELECT doc_id, sh,
-             [list_min([(CAST('0x' || substr(md5(s),1,15) AS BIGINT)
-                + i * CAST('0x' || substr(md5(s),16,15) AS BIGINT)) % 2305843009213693951
-               FOR s IN sh]) FOR i IN range(0, 8)] AS sig
-           FROM sh WHERE len(sh) > 0),
+         w AS (SELECT doc_id, $lowerWords AS words FROM hsel),
+         sh AS (SELECT doc_id, ${shingleSet(2)} AS sh FROM w),
+         $sigsCte,
          p AS (
            SELECT
-             len(list_intersect(a.sh, b.sh))
-               / len(list_distinct(list_concat(a.sh, b.sh))) AS j,
-             CASE WHEN (a.sig[1] = b.sig[1] AND a.sig[2] = b.sig[2]) OR
-                       (a.sig[3] = b.sig[3] AND a.sig[4] = b.sig[4]) OR
-                       (a.sig[5] = b.sig[5] AND a.sig[6] = b.sig[6]) OR
-                       (a.sig[7] = b.sig[7] AND a.sig[8] = b.sig[8])
+             ${jaccard("a", "b")} AS j,
+             CASE WHEN ${bandHit("a", "b")}
                THEN 1 ELSE 0 END AS hit
            FROM sigs a JOIN sigs b ON a.doc_id < b.doc_id),
          s AS (
@@ -3169,101 +2918,25 @@ object SparkEntry {
     // (the qt8 doc_id % 29 eval slice), exact-Jaccard verify at 0.2; cap
     // warn-only like qd7 (buckets far under 4096 at the suite SFs)
     "qt41_near_contamination" ->
-      """WITH w AS (
-           SELECT doc_id,
-             string_split_regex(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS words
-           FROM documents),
-         sh AS (
-           SELECT doc_id, list_distinct(list_filter(
-             [list_aggregate(words[i:i+1], 'string_agg', ' ')
-              FOR i IN range(1, GREATEST(len(words)-1, 1)+1)], x -> x <> '')) AS sh
-           FROM w),
-         sigs AS (
-           SELECT doc_id, sh,
-             [list_min([(CAST('0x' || substr(md5(s),1,15) AS BIGINT)
-                + i * CAST('0x' || substr(md5(s),16,15) AS BIGINT)) % 2305843009213693951
-               FOR s IN sh]) FOR i IN range(0, 8)] AS sig
-           FROM sh WHERE len(sh) > 0),
+      s"""WITH $minhashSigCtes,
          tr AS (SELECT * FROM sigs WHERE doc_id % 29 <> 0),
          ev AS (SELECT * FROM sigs WHERE doc_id % 29 = 0)
          SELECT doc_id, eval_id, ROUND(j, 6) AS jaccard FROM (
            SELECT t.doc_id, e.doc_id AS eval_id,
-             len(list_intersect(t.sh, e.sh))
-               / len(list_distinct(list_concat(t.sh, e.sh))) AS j
+             ${jaccard("t", "e")} AS j
            FROM tr t JOIN ev e ON (
-             (t.sig[1] = e.sig[1] AND t.sig[2] = e.sig[2]) OR
-             (t.sig[3] = e.sig[3] AND t.sig[4] = e.sig[4]) OR
-             (t.sig[5] = e.sig[5] AND t.sig[6] = e.sig[6]) OR
-             (t.sig[7] = e.sig[7] AND t.sig[8] = e.sig[8])))
+             ${bandHit("t", "e")}))
          WHERE j >= 0.2""",
     // qd6's component CTE + qt2's quality score (rounded to 6 dp BEFORE the
     // rank so ordering is bit-stable), survivor = rank 1 per cluster
     "qd8_cluster_survivors" ->
-      """WITH RECURSIVE w AS (
-           SELECT doc_id, lang,
-             len(string_split_regex(trim(text), '\s+')) // 4 AS len_bucket,
-             string_split_regex(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS words
-           FROM documents),
-         sh0 AS (
-           SELECT doc_id, lang, len_bucket, list_distinct(list_filter(
-             [list_aggregate(words[i:i+1], 'string_agg', ' ')
-              FOR i IN range(1, GREATEST(len(words)-1, 1)+1)], x -> x <> '')) AS sh
-           FROM w),
-         bs AS (
-           SELECT lang, len_bucket, COUNT(*) AS n_in_block
-           FROM sh0 GROUP BY 1, 2),
-         sh AS (
-           SELECT sh0.* FROM sh0 JOIN bs USING (lang, len_bucket)
-           WHERE bs.n_in_block <= 4096),
-         pairs AS (
-           SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-           FROM sh a JOIN sh b
-             ON a.lang = b.lang AND a.len_bucket = b.len_bucket
-             AND a.doc_id < b.doc_id
-           WHERE len(list_intersect(a.sh, b.sh))
-             / len(list_distinct(list_concat(a.sh, b.sh))) >= 0.1),
-         edges AS (
-           SELECT doc_a AS src, doc_b AS dst FROM pairs
-           UNION ALL SELECT doc_b, doc_a FROM pairs),
-         reach(doc_id, r) AS (
-           SELECT src, src FROM edges
-           UNION
-           SELECT e.src, reach.r FROM edges e JOIN reach ON e.dst = reach.doc_id),
-         comp AS (
-           SELECT doc_id, MIN(r) AS cluster_id FROM reach GROUP BY doc_id),
-         sizes AS (
-           SELECT cluster_id, COUNT(*) AS cluster_size FROM comp GROUP BY cluster_id),
-         q AS (
-           SELECT doc_id,
-             ROUND(LEAST(len(string_split_regex(trim(text), '\s+')) / 100.0, 1.0)
-               * (1.0 - len(regexp_extract_all(text, '[\.,;:!\?]'))
-                  / CAST(length(text) AS DOUBLE)), 6) AS quality_score
-           FROM documents)
-         SELECT comp.doc_id, comp.cluster_id, sizes.cluster_size,
-           q.quality_score,
-           ROW_NUMBER() OVER (PARTITION BY comp.cluster_id
-             ORDER BY q.quality_score DESC, comp.doc_id ASC) = 1 AS survivor
-         FROM comp JOIN sizes USING (cluster_id) JOIN q USING (doc_id)""",
+      s"WITH RECURSIVE $ngramClusterCtes,\n         $survivorSql",
     // incremental dedup: batch split, fingerprint check, qd7's band
     // predicate + Jaccard verify — all replayed asymmetrically
     "qd9_incremental_dedup" ->
-      """WITH w AS (
-           SELECT doc_id,
-             string_split_regex(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS words
-           FROM documents),
-         sh AS (
-           SELECT doc_id, list_distinct(list_filter(
-             [list_aggregate(words[i:i+1], 'string_agg', ' ')
-              FOR i IN range(1, GREATEST(len(words)-1, 1)+1)], x -> x <> '')) AS sh
-           FROM w),
-         sigs AS (
-           SELECT doc_id, sh,
-             [list_min([(CAST('0x' || substr(md5(s),1,15) AS BIGINT)
-                + i * CAST('0x' || substr(md5(s),16,15) AS BIGINT)) % 2305843009213693951
-               FOR s IN sh]) FOR i IN range(0, 8)] AS sig
-           FROM sh WHERE len(sh) > 0),
+      s"""WITH $minhashSigCtes,
          fp AS (
-           SELECT doc_id, md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS fp
+           SELECT doc_id, md5($normText) AS fp
            FROM documents),
          exact AS (
            SELECT DISTINCT b.doc_id FROM fp b
@@ -3271,15 +2944,10 @@ object SparkEntry {
              SELECT 1 FROM fp c WHERE c.doc_id % 7 <> 0 AND c.fp = b.fp)),
          near AS (
            SELECT b.doc_id AS batch_id, COUNT(*) AS n_near,
-             ROUND(MAX(len(list_intersect(b.sh, c.sh))
-               / len(list_distinct(list_concat(b.sh, c.sh)))), 6) AS best_jaccard
+             ROUND(MAX(${jaccard("b", "c")}), 6) AS best_jaccard
            FROM sigs b JOIN sigs c ON b.doc_id % 7 = 0 AND c.doc_id % 7 <> 0 AND (
-             (b.sig[1] = c.sig[1] AND b.sig[2] = c.sig[2]) OR
-             (b.sig[3] = c.sig[3] AND b.sig[4] = c.sig[4]) OR
-             (b.sig[5] = c.sig[5] AND b.sig[6] = c.sig[6]) OR
-             (b.sig[7] = c.sig[7] AND b.sig[8] = c.sig[8]))
-           WHERE len(list_intersect(b.sh, c.sh))
-               / len(list_distinct(list_concat(b.sh, c.sh))) >= 0.2
+             ${bandHit("b", "c")})
+           WHERE ${jaccard("b", "c")} >= 0.2
            GROUP BY b.doc_id)
          SELECT d.doc_id,
            CASE WHEN e.doc_id IS NOT NULL THEN 1 ELSE 0 END AS exact_dup,
@@ -3291,20 +2959,7 @@ object SparkEntry {
     // the scale-path dedup composition under one oracle: qd7's band-predicate
     // pairs (md5-affine lanes, 4x2 bands, exact-Jaccard verify) -> qd6's
     // recursive reachability -> qd8's quality-rank survivorship
-    "qd10_lsh_dedup_closure" -> (lshCompCte + """,
-         sizes AS (
-           SELECT cluster_id, COUNT(*) AS cluster_size FROM comp GROUP BY cluster_id),
-         q AS (
-           SELECT doc_id,
-             ROUND(LEAST(len(string_split_regex(trim(text), '\s+')) / 100.0, 1.0)
-               * (1.0 - len(regexp_extract_all(text, '[\.,;:!\?]'))
-                  / CAST(length(text) AS DOUBLE)), 6) AS quality_score
-           FROM documents)
-         SELECT comp.doc_id, comp.cluster_id, sizes.cluster_size,
-           q.quality_score,
-           ROW_NUMBER() OVER (PARTITION BY comp.cluster_id
-             ORDER BY q.quality_score DESC, comp.doc_id ASC) = 1 AS survivor
-         FROM comp JOIN sizes USING (cluster_id) JOIN q USING (doc_id)"""),
+    "qd10_lsh_dedup_closure" -> (lshCompCte + s",\n         $clusterSizesCte,\n         $survivorSql"),
     // soft-dedup sampling weights: the qd10 component chain, singletons
     // represent themselves (the qd19 spine), weight = 1/|cluster| as exact
     // integer milli-weights plus one pinned double division
@@ -3324,7 +2979,7 @@ object SparkEntry {
          FROM rep JOIN sizes USING (cluster_rep)"""),
     // leakage-free split: the qd10 component chain, then the split hash on
     // the cluster representative (singletons represent themselves)
-    "qd19_cluster_split" -> (lshCompCte + """,
+    "qd19_cluster_split" -> (lshCompCte + s""",
          spine AS (SELECT doc_id FROM documents),
          rep AS (
            SELECT spine.doc_id,
@@ -3332,8 +2987,7 @@ object SparkEntry {
            FROM spine LEFT JOIN comp USING (doc_id)),
          b AS (
            SELECT doc_id, cluster_rep,
-             CAST('0x' || substr(md5(CAST(cluster_rep AS VARCHAR) || ':split'),
-               1, 15) AS BIGINT) % 100 AS bucket
+             ${md5Hi("CAST(cluster_rep AS VARCHAR) || ':split'")} % 100 AS bucket
            FROM rep)
          SELECT doc_id, cluster_rep, CAST(bucket AS BIGINT) AS bucket,
            CASE WHEN bucket < 80 THEN 'train'
@@ -3345,7 +2999,8 @@ object SparkEntry {
     // banding — the per-lane replay of the bkey string groups, the 4096
     // cap, star edges, recursive reachability, and the split hash, all
     // recomputed independently
-    "qd20_bucket_split" -> (minhashSigsCte + """,
+    "qd20_bucket_split" ->
+      s"""WITH RECURSIVE $minhashSigCtes,
          bk AS (
            SELECT doc_id, b, sig[4*b+1] AS s1, sig[4*b+2] AS s2,
              sig[4*b+3] AS s3, sig[4*b+4] AS s4
@@ -3376,28 +3031,20 @@ object SparkEntry {
            FROM spine LEFT JOIN comp2 USING (doc_id)),
          bq AS (
            SELECT doc_id, cluster_rep,
-             CAST('0x' || substr(md5(CAST(cluster_rep AS VARCHAR) || ':split'),
-               1, 15) AS BIGINT) % 100 AS bucket
+             ${md5Hi("CAST(cluster_rep AS VARCHAR) || ':split'")} % 100 AS bucket
            FROM rep)
          SELECT doc_id, cluster_rep, CAST(bucket AS BIGINT) AS bucket,
            CASE WHEN bucket < 80 THEN 'train'
                 WHEN bucket < 90 THEN 'val'
                 ELSE 'test' END AS split
-         FROM bq"""),
+         FROM bq""",
     // AllPairs/PPJoin exact similarity join: df-ordered prefixes, length +
     // positional filters, the 4096 token cap, and the exact-Jaccard verify —
     // all replayed. DOUBLE casts matter: DuckDB parses 0.8 as DECIMAL, whose
     // exact products diverge from Spark's f64 at the ceil/compare boundaries.
     "qd11_ppjoin_pairs" ->
-      """WITH w AS (
-           SELECT doc_id,
-             string_split_regex(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS words
-           FROM documents),
-         sh0 AS (
-           SELECT doc_id, list_sort(list_distinct(list_filter(
-             [list_aggregate(words[i:i+1], 'string_agg', ' ')
-              FOR i IN range(1, GREATEST(len(words)-1, 1)+1)], x -> x <> ''))) AS sh
-           FROM w),
+      s"""WITH w AS (SELECT doc_id, $lowerWords AS words FROM documents),
+         sh0 AS (SELECT doc_id, list_sort(${shingleSet(2)}) AS sh FROM w),
          shn AS (SELECT doc_id, sh, len(sh) AS n FROM sh0 WHERE len(sh) > 0),
          tok AS (SELECT doc_id, n, unnest(sh) AS tok FROM shn),
          dfreq AS (SELECT tok, COUNT(*) AS df FROM tok GROUP BY tok),
@@ -3462,32 +3109,16 @@ object SparkEntry {
     // KMV sketch content replayed exactly: the k smallest distinct 60-bit
     // md5-half hashes of the bigram vocabulary, ascending
     "qt12_kmv_distinct" ->
-      """WITH w AS (
-           SELECT doc_id,
-             string_split_regex(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS words
-           FROM documents),
-         sh AS (
-           SELECT doc_id, list_distinct(list_filter(
-             [list_aggregate(words[i:i+1], 'string_agg', ' ')
-              FOR i IN range(1, GREATEST(len(words)-1, 1)+1)], x -> x <> '')) AS sh
-           FROM w),
+      s"""WITH ${shingleCtes("sh", "sh", 2)},
          e AS (SELECT unnest(sh) AS g FROM sh),
-         h AS (SELECT DISTINCT CAST('0x' || substr(md5(g),1,15) AS BIGINT) AS h FROM e),
+         h AS (SELECT DISTINCT ${md5Hi("g")} AS h FROM e),
          topk AS (SELECT h FROM h ORDER BY h LIMIT 256)
          SELECT CAST(ROW_NUMBER() OVER (ORDER BY h) AS INT) AS rank, h FROM topk""",
     // identical to qt8's oracle: the bloom prefilter has no false negatives
     // and the exact verify join removes false positives, so the result is
     // bit-for-bit the same as the unfiltered contamination pass
     "qt13_bloom_contamination" ->
-      """WITH w AS (
-           SELECT doc_id,
-             string_split_regex(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS words
-           FROM documents),
-         sh AS (
-           SELECT doc_id, list_distinct(list_filter(
-             [list_aggregate(words[i:i+3], 'string_agg', ' ')
-              FOR i IN range(1, GREATEST(len(words)-3, 1)+1)], x -> x <> '')) AS sh
-           FROM w),
+      s"""WITH ${shingleCtes("sh", "sh", 4)},
          ev AS (SELECT doc_id AS eval_id, unnest(sh) AS g FROM sh WHERE doc_id % 29 = 0),
          co AS (SELECT doc_id, unnest(sh) AS g FROM sh WHERE doc_id % 29 <> 0)
          SELECT co.doc_id, ev.eval_id, COUNT(*) AS n_shared_grams
@@ -3495,15 +3126,7 @@ object SparkEntry {
          GROUP BY 1, 2""",
     // rare-gram novelty: integer counts + one division, exactly replayable
     "qt11_novelty" ->
-      """WITH w AS (
-           SELECT doc_id,
-             string_split_regex(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS words
-           FROM documents),
-         sh AS (
-           SELECT doc_id, list_distinct(list_filter(
-             [list_aggregate(words[i:i+1], 'string_agg', ' ')
-              FOR i IN range(1, GREATEST(len(words)-1, 1)+1)], x -> x <> '')) AS sh
-           FROM w),
+      s"""WITH ${shingleCtes("sh", "sh", 2)},
          e AS (SELECT doc_id, unnest(sh) AS g FROM sh),
          d AS (SELECT g, COUNT(*) AS df FROM e GROUP BY 1)
          SELECT doc_id, COUNT(*) AS n_grams,
@@ -3515,10 +3138,7 @@ object SparkEntry {
     // boilerplate strip: integer keep predicate (df*100 <= N*pct) and an
     // ORDER BY-pos string_agg replaying the order-preserving reconstruction
     "qt14_df_prune" ->
-      """WITH w AS (
-           SELECT doc_id,
-             string_split_regex(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS words
-           FROM documents),
+      s"""WITH w AS (SELECT doc_id, $lowerWords AS words FROM documents),
          pw AS (
            SELECT doc_id, unnest(words) AS word,
              unnest(range(1, len(words)+1)) AS pos
@@ -3564,20 +3184,18 @@ object SparkEntry {
     // shard manifest: md5-lane shard assignment + per-shard counts and an
     // order-independent mod-2^61-1 fingerprint sum (HUGEINT == DECIMAL)
     "qt32_shard_manifest" ->
-      """WITH d AS (
+      s"""WITH d AS (
            SELECT
-             CAST('0x' || substr(md5('shard:' || CAST(doc_id AS VARCHAR)),
-               1, 15) AS BIGINT) % 16 AS shard_id,
-             len(string_split_regex(trim(text), '\s+')) AS toks,
+             ${md5Hi("'shard:' || CAST(doc_id AS VARCHAR)")} % 16 AS shard_id,
+             len($wsWords) AS toks,
              length(text) AS chars,
-             CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':'
-               || CAST(length(text) AS VARCHAR)), 1, 15) AS BIGINT)
-               % 2305843009213693951 AS fp
+             ${md5Hi("CAST(doc_id AS VARCHAR) || ':' || CAST(length(text) AS VARCHAR)")}
+               % $mersenne61 AS fp
            FROM documents)
          SELECT shard_id, CAST(COUNT(*) AS BIGINT) AS n_docs,
            CAST(SUM(toks) AS BIGINT) AS token_sum,
            CAST(SUM(chars) AS BIGINT) AS char_sum,
-           CAST(SUM(CAST(fp AS HUGEINT)) % 2305843009213693951 AS BIGINT)
+           CAST(SUM(CAST(fp AS HUGEINT)) % $mersenne61 AS BIGINT)
              AS content_fp
          FROM d GROUP BY shard_id""",
     // sliding-window chunking: starts 0,48,96,... < n_tokens; chunk text
@@ -3588,8 +3206,8 @@ object SparkEntry {
     // PMI collocations: occurrence-count bigram/unigram tables, one ln of
     // the exact integer rational with pinned f64 association, round 9
     "qt35_pmi" ->
-      """WITH w AS (
-           SELECT string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS w
+      s"""WITH w AS (
+           SELECT string_split($normText, ' ') AS w
            FROM documents),
          uni AS (SELECT unnest(w) AS word FROM w),
          cu AS (SELECT word, CAST(COUNT(*) AS BIGINT) AS c FROM uni GROUP BY word),
@@ -3633,11 +3251,10 @@ object SparkEntry {
     // qt16 round-to-9 discipline on both sides of the division; global
     // top-50 by key with doc_id tie-break
     "qt34_weighted_sample" ->
-      """WITH d AS (
+      s"""WITH d AS (
            SELECT doc_id,
              CAST(1 + n_chars % 64 AS BIGINT) AS weight,
-             CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':wsamp'),
-               1, 15) AS BIGINT) AS h
+             ${md5Hi("CAST(doc_id AS VARCHAR) || ':wsamp'")} AS h
            FROM documents)
          SELECT doc_id, weight,
            ROUND(ROUND(ln((CAST(h AS DOUBLE) + 1.0)
@@ -3654,10 +3271,7 @@ object SparkEntry {
     // count table, the probability in the identical pinned f64 tree
     // (doubles forced via 0.75e0 / CASTs), logs order-pinned like qt16
     "qt30_kn_lm_score" ->
-      """WITH w AS (
-           SELECT doc_id,
-             string_split_regex(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS words
-           FROM documents),
+      s"""WITH w AS (SELECT doc_id, $lowerWords AS words FROM documents),
          bi AS (
            SELECT doc_id, unnest(
              [words[i] || ' ' || words[i+1]
@@ -3717,9 +3331,9 @@ object SparkEntry {
     // histogram-based exact quantiles over the deterministic hash sample:
     // integer rank math ((n-1)*p div 100 + 1, lower quantile) replays exactly
     "qt17_quantile_hist" ->
-      """WITH s AS (
+      s"""WITH s AS (
            SELECT lang, n_chars FROM documents
-           WHERE CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR) || '#quant'), 1, 15) AS BIGINT) % 1000 < 250),
+           WHERE ${md5Hi("CAST(doc_id AS VARCHAR) || '#quant'")} % 1000 < 250),
          h AS (SELECT lang, n_chars, COUNT(*) AS cnt FROM s GROUP BY 1, 2),
          c AS (
            SELECT lang, n_chars, cnt,
@@ -3739,9 +3353,9 @@ object SparkEntry {
     // the canonical doc_id order; the Spark side runs the two-phase sharded
     // prefix sum — equality of the two IS the correctness claim
     "qt18_pack_bins" ->
-      """WITH t AS (
+      s"""WITH t AS (
            SELECT doc_id,
-             CAST(len(string_split_regex(trim(text), '\s+')) AS BIGINT) AS n_tokens
+             CAST(len($wsWords) AS BIGINT) AS n_tokens
            FROM documents),
          c AS (
            SELECT doc_id, n_tokens,
@@ -3755,11 +3369,11 @@ object SparkEntry {
     // the Spark side runs the salted two-phase form — equality of the two IS
     // the correctness claim (any global top-k row is top-k in its bucket)
     "qt15_stratified_sample" ->
-      """SELECT lang, doc_id, h, rnk, n_chars FROM (
+      s"""SELECT lang, doc_id, h, rnk, n_chars FROM (
            SELECT lang, doc_id, n_chars,
-             CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR) || '#strat'), 1, 15) AS BIGINT) AS h,
+             ${md5Hi("CAST(doc_id AS VARCHAR) || '#strat'")} AS h,
              ROW_NUMBER() OVER (PARTITION BY lang
-               ORDER BY CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR) || '#strat'), 1, 15) AS BIGINT),
+               ORDER BY ${md5Hi("CAST(doc_id AS VARCHAR) || '#strat'")},
                  doc_id) AS rnk
            FROM documents)
          WHERE rnk <= 25""",
@@ -3867,16 +3481,16 @@ object SparkEntry {
     // Window sums come back HUGEINT in DuckDB, so every emitted number is
     // CAST to BIGINT (the qt31 pitfall).
     "qt43_token_budget" ->
-      """WITH t AS (
+      s"""WITH t AS (
            SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
-             CAST(SUM(len(string_split_regex(trim(text), '\s+'))) AS BIGINT)
+             CAST(SUM(len($wsWords)) AS BIGINT)
                AS tokens
            FROM documents GROUP BY 1),
          c AS (
            SELECT source, n_docs, tokens,
-             1 + CAST('0x' || substr(md5(source), 1, 15) AS BIGINT) % 4
+             1 + ${md5Hi("source")} % 4
                AS max_epochs,
-             tokens * (1 + CAST('0x' || substr(md5(source), 1, 15) AS BIGINT)
+             tokens * (1 + ${md5Hi("source")}
                % 4) AS capacity
            FROM t),
          r AS (
@@ -3923,7 +3537,7 @@ object SparkEntry {
     // Composed admission verdict: qd1 families + qt20-subset quality +
     // qt8 gram contamination + qt43 water-fill + qt7 hash-rate admission,
     // all replayed in one CTE chain; reason CASE mirrors the gate order
-    "qp1_curation_verdict" -> (curationChain + """
+    "qp1_curation_verdict" -> (curationChain + s"""
          SELECT gp.doc_id, gp.source, gp.lang, gp.tokens, gp.n_dups,
            ROUND(CAST(1 AS DOUBLE) / gp.n_dups, 6) AS weight,
            CASE WHEN is_eval THEN 'eval_holdout'
@@ -3931,41 +3545,38 @@ object SparkEntry {
                 WHEN NOT lang_ok THEN 'lang'
                 WHEN NOT quality_ok THEN 'quality'
                 WHEN contaminated THEN 'contaminated'
-                WHEN CAST('0x' || substr(md5(CAST(gp.doc_id AS VARCHAR) || '#curation'), 1, 15) AS BIGINT) % 1000 >= rr.rate_milli
+                WHEN ${md5Hi("CAST(gp.doc_id AS VARCHAR) || '#curation'")} % 1000 >= rr.rate_milli
                   THEN 'over_budget'
                 ELSE 'kept' END AS drop_reason,
-           CAST(CASE WHEN pass AND CAST('0x' || substr(md5(CAST(gp.doc_id AS VARCHAR) || '#curation'), 1, 15) AS BIGINT) % 1000 < rr.rate_milli
+           CAST(CASE WHEN pass AND ${md5Hi("CAST(gp.doc_id AS VARCHAR) || '#curation'")} % 1000 < rr.rate_milli
              THEN 1 ELSE 0 END AS INT) AS kept
          FROM gp LEFT JOIN rr USING (source)"""),
     // Release manifest over the kept set: qt32's salted shard hash, exact
     // integer micro-weights ((2e6 + n) DIV 2n = round(1e6 / n)), and the
     // order-independent affine content fingerprint mod 2^61-1
-    "qp2_release_manifest" -> (curationChain + """,
+    "qp2_release_manifest" -> (curationChain + s""",
          kk AS (
            SELECT gp.doc_id, gp.source, gp.tokens, gp.n_dups
            FROM gp LEFT JOIN rr USING (source)
-           WHERE gp.pass AND CAST('0x' || substr(md5(CAST(gp.doc_id AS VARCHAR) || '#curation'), 1, 15) AS BIGINT) % 1000 < rr.rate_milli),
+           WHERE gp.pass AND ${md5Hi("CAST(gp.doc_id AS VARCHAR) || '#curation'")} % 1000 < rr.rate_milli),
          m AS (
-           SELECT CAST('0x' || substr(md5('shard:' || CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT) % 16 AS shard_id,
+           SELECT ${md5Hi("'shard:' || CAST(doc_id AS VARCHAR)")} % 16 AS shard_id,
              doc_id, source, tokens,
              (2000000 + n_dups) // (2 * n_dups) AS w_micro,
-             CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':' || CAST(tokens AS VARCHAR)), 1, 15) AS BIGINT)
-               % 2305843009213693951 AS fp
+             ${md5Hi("CAST(doc_id AS VARCHAR) || ':' || CAST(tokens AS VARCHAR)")}
+               % $mersenne61 AS fp
            FROM kk)
          SELECT shard_id, CAST(COUNT(*) AS BIGINT) AS n_docs,
            CAST(SUM(tokens) AS BIGINT) AS token_sum,
            CAST(COUNT(DISTINCT source) AS BIGINT) AS n_sources,
            MIN(doc_id) AS min_doc, MAX(doc_id) AS max_doc,
            CAST(SUM(w_micro) AS BIGINT) AS w_micro_sum,
-           CAST(SUM(fp) % 2305843009213693951 AS BIGINT) AS content_fp
+           CAST(SUM(fp) % $mersenne61 AS BIGINT) AS content_fp
          FROM m GROUP BY 1"""),
     // Corpus health report: every value an exact BIGINT (counts, or
     // integer MILLI rates); contamination via qp1's 4-gram CTE fragments
     "qp3_health_report" ->
-      """WITH w AS (
-           SELECT doc_id, lang, source, text,
-             string_split_regex(trim(text), '\s+') AS words
-           FROM documents),
+      s"""WITH w AS (SELECT doc_id, lang, source, text, $wsWords AS words FROM documents),
          base AS (
            SELECT doc_id, lang, source,
              CAST(len(words) AS BIGINT) AS tokens,
@@ -3974,7 +3585,7 @@ object SparkEntry {
                / len(words), 4) AS mwl,
              round(len([x FOR x IN words IF regexp_matches(x, '[A-Za-z]')])
                / CAST(len(words) AS DOUBLE), 6) AS awr,
-             md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS fp
+             md5($normText) AS fp
            FROM w),
          b2 AS (
            SELECT base.*,
@@ -3982,15 +3593,7 @@ object SparkEntry {
                THEN 1 ELSE 0 END AS q,
              CASE WHEN doc_id % 29 = 0 THEN 1 ELSE 0 END AS ev
            FROM base),
-         shw AS (
-           SELECT doc_id,
-             string_split_regex(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS words
-           FROM documents),
-         sh AS (
-           SELECT doc_id, list_distinct(list_filter(
-             [list_aggregate(words[i:i+3], 'string_agg', ' ')
-              FOR i IN range(1, GREATEST(len(words)-3, 1)+1)], x -> x <> '')) AS sh
-           FROM shw),
+         $contaminationShingles,
          evg AS (SELECT DISTINCT unnest(sh) AS g FROM sh WHERE doc_id % 29 = 0),
          cont AS (
            SELECT DISTINCT co.doc_id
@@ -4025,15 +3628,7 @@ object SparkEntry {
     // Source-overlap matrix: distinct (source, 3-gram) sets, shingle-keyed
     // pair intersections, complete S x S skeleton with explicit zeros
     "qt47_source_overlap" ->
-      """WITH w AS (
-           SELECT source,
-             string_split_regex(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS words
-           FROM documents),
-         sh AS (
-           SELECT source, list_distinct(list_filter(
-             [list_aggregate(words[i:i+2], 'string_agg', ' ')
-              FOR i IN range(1, GREATEST(len(words)-2, 1)+1)], x -> x <> '')) AS sh
-           FROM w),
+      s"""WITH ${shingleCtes("sh", "sh", 3, "source")},
          ss AS (SELECT DISTINCT source, unnest(sh) AS g FROM sh),
          sizes AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n FROM ss GROUP BY 1),
          inter AS (
@@ -4083,8 +3678,8 @@ object SparkEntry {
     // Zipf head: count aggregate, ORDER/LIMIT head, rank window on the
     // 32-row head, pinned ln/ln exponent estimates
     "qt46_zipf_curve" ->
-      """WITH w AS (
-           SELECT unnest(string_split_regex(trim(lower(text)), '\s+')) AS term
+      s"""WITH w AS (
+           SELECT unnest($lowerWsWords) AS term
            FROM documents),
          c AS (SELECT term, COUNT(*) AS cnt FROM w GROUP BY 1),
          s AS (SELECT MAX(cnt) AS c1, CAST(SUM(cnt) AS BIGINT) AS tot FROM c),
@@ -4101,8 +3696,8 @@ object SparkEntry {
     // Heaps'-law vocabulary growth: first-bucket min-aggregate per term,
     // running sums over the B-row spine, ln/ln ratio pinned and rounded
     "qt45_heaps_curve" ->
-      """WITH w AS (
-           SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS words
+      s"""WITH w AS (
+           SELECT doc_id, $lowerWsWords AS words
            FROM documents),
          mi AS (SELECT MAX(doc_id) AS max_id FROM documents),
          tk AS (
@@ -4135,8 +3730,8 @@ object SparkEntry {
     // WINDOW-form ranking the Spark side's bounded top_k_rank aggregate
     // must equal (the q19 equivalence discipline)
     "qt44_bm25" ->
-      """WITH w AS (
-           SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS words
+      s"""WITH w AS (
+           SELECT doc_id, $lowerWsWords AS words
            FROM documents),
          tf AS (
            SELECT doc_id, term, COUNT(*) AS tf FROM (
@@ -4181,13 +3776,13 @@ object SparkEntry {
            CAST(rnk AS INT) AS rnk
          FROM r WHERE rnk <= 5""",
     "qt42_source_profile" ->
-      """WITH c AS (
+      s"""WITH c AS (
            SELECT source,
              CAST(length(text) AS BIGINT) AS c,
-             CAST(len(string_split_regex(trim(text), '\s+')) AS BIGINT) AS w,
-             CAST(len(regexp_extract_all(text, '[\.,;:!\?]')) AS BIGINT) AS p,
+             CAST(len($wsWords) AS BIGINT) AS w,
+             CAST(len(regexp_extract_all(text, '[\\.,;:!\\?]')) AS BIGINT) AS p,
              CAST(len(regexp_extract_all(text, '[0-9]')) AS BIGINT) AS d,
-             CAST(len(regexp_extract_all(text, '\b(the|a|and|of|to|in|is|for|on|with)\b')) AS BIGINT) AS s
+             CAST(len(regexp_extract_all(text, '\\b(the|a|and|of|to|in|is|for|on|with)\\b')) AS BIGINT) AS s
            FROM documents),
          g AS (
            SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -4202,20 +3797,19 @@ object SparkEntry {
            round(CAST(n_stop AS DOUBLE) / CAST(n_words AS DOUBLE), 6) AS stopword_ratio
          FROM g""",
     "qt1_token_count" ->
-      """SELECT doc_id,
-         len(string_split_regex(trim(text), '\s+')) AS ws_tokens,
-         len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]')) AS bpeish_tokens,
+      s"""SELECT doc_id,
+         len($wsWords) AS ws_tokens,
+         len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]')) AS bpeish_tokens,
          length(text) AS n_chars
          FROM documents""",
     "qt2_quality" ->
-      """SELECT doc_id, n_chars,
-         ROUND(length(text) / len(string_split_regex(trim(text), '\s+')), 4) AS mean_word_len,
-         ROUND(len(regexp_extract_all(text, '[\.,;:!\?]')) / CAST(length(text) AS DOUBLE), 6) AS punct_ratio,
+      s"""SELECT doc_id, n_chars,
+         ROUND(length(text) / len($wsWords), 4) AS mean_word_len,
+         ROUND(len(regexp_extract_all(text, '[\\.,;:!\\?]')) / CAST(length(text) AS DOUBLE), 6) AS punct_ratio,
          ROUND(len(regexp_extract_all(text, '[0-9]')) / CAST(length(text) AS DOUBLE), 6) AS digit_ratio,
-         ROUND(len(regexp_extract_all(text, '\b(the|a|and|of|to|in|is|for|on|with)\b'))
-           / CAST(len(string_split_regex(trim(text), '\s+')) AS DOUBLE), 6) AS stopword_ratio,
-         ROUND(LEAST(len(string_split_regex(trim(text), '\s+')) / 100.0, 1.0)
-           * (1.0 - len(regexp_extract_all(text, '[\.,;:!\?]')) / CAST(length(text) AS DOUBLE)), 6) AS quality_score
+         ROUND(len(regexp_extract_all(text, '\\b(the|a|and|of|to|in|is|for|on|with)\\b'))
+           / CAST(len($wsWords) AS DOUBLE), 6) AS stopword_ratio,
+         $qualityScore AS quality_score
          FROM documents""",
     "qt3_langid" ->
       """WITH h AS (
@@ -4607,8 +4201,8 @@ object SparkEntry {
            LEAST(CAST(trunc(GREATEST(y1 - y0, 1)) AS INT) + 10, 792) AS crop_height
          FROM b""",
     "qt4_fingerprint" ->
-      """SELECT doc_id,
-         md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS md5_fp
+      s"""SELECT doc_id,
+         md5($normText) AS md5_fp
          FROM documents""",
     // MIPS: brute-force inner-product ranking; dot_ff's left-to-right f64
     // fold == list_inner_product on the CAST DOUBLE[] arrays

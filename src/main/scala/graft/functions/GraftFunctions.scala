@@ -238,8 +238,8 @@ object GraftImpl {
   }
 
   /** [[md5Halves]]' first half alone: the md5_60 key
-    * conv(substring(md5(x), 1, 15), 16, 10) every positional-gram and
-    * line-break hash uses.
+    * (GraftFunctions.md5Hi60) every positional-gram and line-break hash
+    * uses.
     */
   def md5Hi60(dg: Array[Byte]): Long = {
     var hi7 = 0L
@@ -258,7 +258,7 @@ object GraftImpl {
 
   /** md5_60 of `doc_id:i` for each word index i < n: the qt26/qt29 line
     * break hash (word i ends a line iff it is 0 mod the mean line length),
-    * equal to conv(substring(md5(concat(doc_id, ':', i)), 1, 15), 16, 10).
+    * equal to GraftFunctions.md5Hi60(concat(doc_id, ':', i)).
     * Null for a null doc_id: callers break nowhere then, as that composed
     * form's null predicate does.
     */
@@ -405,7 +405,6 @@ object GraftImpl {
     * null; wrap in when(size > 0, ...)).
     */
   def minhashAffine(sh: ArrayData, lanes: Int): ArrayData = {
-    val mersenne61 = 2305843009213693951L
     val mins = Array.fill(lanes)(Long.MaxValue)
     val md = md5Local.get()
     val n = sh.numElements()
@@ -417,7 +416,7 @@ object GraftImpl {
         val (a, b) = md5Halves(md.digest(s.getBytes))
         var j = 0
         while (j < lanes) {
-          val v = (a + j.toLong * b) % mersenne61
+          val v = (a + j.toLong * b) % GraftFunctions.Mersenne61
           if (v < mins(j)) mins(j) = v
           j += 1
         }
@@ -1168,8 +1167,6 @@ case class CmsSketch(
   require(depth >= 1 && depth <= 7, s"depth must be 1..7, got $depth")
   require(width >= 1, s"width must be >= 1, got $width")
 
-  private val mersenne61 = 2305843009213693951L
-
   override def children: Seq[Expression] = Seq(child)
   override def nullable: Boolean = false
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
@@ -1187,7 +1184,7 @@ case class CmsSketch(
       val (a, b) = GraftImpl.md5Halves(dg)
       var d = 0
       while (d < depth) {
-        val cell = (((a + d.toLong * b) % mersenne61) % width).toInt
+        val cell = (((a + d.toLong * b) % GraftFunctions.Mersenne61) % width).toInt
         buffer(d * width + cell) += 1
         d += 1
       }
@@ -2307,6 +2304,22 @@ object GraftFunctions {
 
   /** Spark's `upper` without its class-init stall; graft code calls this. */
   def upper(s: Column): Column = { ensureRegistered(); call_function("graft_upper", s) }
+
+  /** 2^61-1: the modulus of the md5-affine lanes and content fingerprints. */
+  final val Mersenne61 = 2305843009213693951L
+
+  /** The portable 60-bit md5 key of `s`: the first 15 hex digits of md5(s)
+    * as a long, which DuckDB computes as
+    * CAST('0x' || substr(md5(s), 1, 15) AS BIGINT). */
+  def md5Hi60(s: Column): Column = md5Hex60(s, 1)
+
+  /** The second 60-bit md5 lane of `s`: hex digits 16 to 30 of md5(s). */
+  def md5Lo60(s: Column): Column = md5Hex60(s, 16)
+
+  private def md5Hex60(s: Column, from: Int): Column = {
+    import org.apache.spark.sql.functions.{conv, md5, substring}
+    conv(substring(md5(s), from, 15), 16, 10).cast("long")
+  }
 
   /** Per-partition-id sums and maxes of integral counters (an aggregate). */
   def partitionCounters(partitionId: Column, counters: Column*): Column = {

@@ -165,8 +165,8 @@ object Clustering {
       for (t <- 1 to r) {
         val d = assignToCands(c, cands)
         val phi = d.agg(sum(dec(col("dist"))).as("phi")).collect()(0).getDecimal(0)
-        val md5h = conv(substring(md5(concat(col("vec_id").cast("string"),
-          lit(":"), lit(t.toString))), 1, 15), 16, 10).cast("long")
+        val md5h = GraftFunctions.md5Hi60(concat(col("vec_id").cast("string"),
+          lit(":"), lit(t.toString)))
         val sel = d
           .filter(dec(md5h) * dec(lit(phi)) <
             dec(lit(l.toLong)) * dec(col("dist")) * dec(lit(1152921504606846976L)))

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.GraftFunctions
 
 /** Document-level curation verdict — the composed admission decision a
   * training-data pipeline renders per document, end to end, under one
@@ -142,8 +143,8 @@ object Curation {
       .select(col("source"), expr("alloc * 1000 DIV capacity").as("rate_milli"))
 
     // Admission draw: qt7's salted md5 bucket — map-only, zero shuffles.
-    val bucket = conv(substring(md5(concat(col("doc_id").cast("string"),
-      lit("#curation"))), 1, 15), 16, 10).cast("long") % 1000
+    val bucket = GraftFunctions.md5Hi60(
+      concat(col("doc_id").cast("string"), lit("#curation"))) % 1000
 
     gated.join(rates, Seq("source"), "left")
       .withColumn("bucket", bucket)
@@ -276,18 +277,16 @@ object Curation {
   def releaseManifest(spark: SparkSession, dir: String, shards: Int = 16,
       budgetPct: Int = 55, gramWords: Int = 4, evalMod: Int = 29): DataFrame = {
     require(shards >= 1, s"need shards >= 1, got $shards")
-    val mers = lit(2305843009213693951L) // 2^61 - 1
-    val h = (s: Column) =>
-      conv(substring(md5(s), 1, 15), 16, 10).cast("long")
+    val mers = lit(GraftFunctions.Mersenne61)
     val dec = (c: Column) => c.cast(org.apache.spark.sql.types.DecimalType(38, 0))
     curationVerdict(spark, dir, budgetPct, gramWords, evalMod)
       .filter(col("kept") === 1)
       .select(
-        (h(concat(lit("shard:"), col("doc_id").cast("string"))) % shards)
+        (GraftFunctions.md5Hi60(concat(lit("shard:"), col("doc_id").cast("string"))) % shards)
           .as("shard_id"),
         col("doc_id"), col("source"), col("tokens"),
         expr("(2000000 + n_dups) DIV (2 * n_dups)").as("w_micro"),
-        (h(concat(col("doc_id").cast("string"), lit(":"),
+        (GraftFunctions.md5Hi60(concat(col("doc_id").cast("string"), lit(":"),
           col("tokens").cast("string"))) % mers).as("fp"))
       .groupBy(col("shard_id"))
       .agg(

@@ -1243,8 +1243,7 @@ object Dedup {
       .select(col("doc_id"),
         coalesce(col("label"), col("doc_id")).as("cluster_rep"))
       .withColumn("bucket",
-        conv(substring(md5(concat(col("cluster_rep").cast("string"),
-          lit(":split"))), 1, 15), 16, 10).cast("long") % 100)
+        GraftFunctions.md5Hi60(concat(col("cluster_rep").cast("string"), lit(":split"))) % 100)
       .select(col("doc_id"), col("cluster_rep"), col("bucket"),
         when(col("bucket") < 80, "train")
           .when(col("bucket") < 90, "val")
@@ -1361,8 +1360,7 @@ object Dedup {
       threshold: Double = 0.2): DataFrame = {
     val lanes = bands * rowsPerBand
     require(lanes <= 8, s"portable affine lanes need i <= 7, got $lanes")
-    val hCol = conv(substring(md5(concat(lit("lsheval:"),
-      col("doc_id").cast("string"))), 1, 15), 16, 10).cast("long")
+    val hCol = GraftFunctions.md5Hi60(concat(lit("lsheval:"), col("doc_id").cast("string")))
     val base = Tables.docs(spark, dir)
       .withColumn("h", hCol)
       .orderBy(col("h"), col("doc_id")).limit(sampleK)

@@ -153,9 +153,8 @@ object TextAnalysis {
     */
   def hashSample(spark: SparkSession, dir: String, rate: Double = 0.1,
       salt: String = "graft"): DataFrame = {
-    val bucket = conv(substring(md5(
-      concat(col("doc_id").cast("string"), lit("#"), lit(salt))), 1, 15), 16, 10)
-      .cast("long") % 1000
+    val bucket = GraftFunctions.md5Hi60(
+      concat(col("doc_id").cast("string"), lit("#"), lit(salt))) % 1000
     Tables.docs(spark, dir)
       .filter(bucket < math.round(rate * 1000).toInt)
       .select(col("doc_id"), col("lang"), col("n_chars"))
@@ -207,7 +206,6 @@ object TextAnalysis {
   def bloomContamination(spark: SparkSession, dir: String, gramWords: Int = 4,
       evalMod: Int = 29, mBits: Int = 32768): DataFrame = {
     require(mBits % 64 == 0, s"mBits must be a multiple of 64, got $mBits")
-    val mersenne61 = 2305843009213693951L
     // materialized once per query (r6; eager per-invocation local checkpoint): the eval slice (bloom build + verify join) and the
     // train-side probe all read the gram table — 3 shingling scans before
     val grams = ScanLayout.ensureParallel(Tables.docs(spark, dir))
@@ -216,10 +214,10 @@ object TextAnalysis {
       .localCheckpoint(true)
     val evalGrams = grams.filter(col("doc_id") % evalMod === 0)
       .select(col("doc_id").as("eval_id"), col("g"))
-    val a = conv(substring(md5(col("g")), 1, 15), 16, 10).cast("long")
-    val b = conv(substring(md5(col("g")), 16, 15), 16, 10).cast("long")
+    val a = GraftFunctions.md5Hi60(col("g"))
+    val b = GraftFunctions.md5Lo60(col("g"))
     def pos(i: Int): Column =
-      ((a + lit(i.toLong) * b) % lit(mersenne61)) % lit(mBits.toLong)
+      ((a + lit(i.toLong) * b) % lit(GraftFunctions.Mersenne61)) % lit(mBits.toLong)
     val bitsRows = evalGrams
       .select(explode(array(pos(0), pos(1))).as("p"))
       .select((col("p") / 64).cast("int").as("w"),
@@ -550,9 +548,7 @@ object TextAnalysis {
   def stratifiedSample(spark: SparkSession, dir: String, k: Int = 25,
       buckets: Int = 8): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val h = conv(substring(md5(
-      concat(col("doc_id").cast("string"), lit("#strat"))), 1, 15), 16, 10)
-      .cast("long")
+    val h = GraftFunctions.md5Hi60(concat(col("doc_id").cast("string"), lit("#strat")))
     val w1 = Window.partitionBy(col("lang"), col("salt"))
       .orderBy(col("h"), col("doc_id"))
     val w2 = Window.partitionBy(col("lang")).orderBy(col("h"), col("doc_id"))
@@ -623,9 +619,8 @@ object TextAnalysis {
   def quantileHist(spark: SparkSession, dir: String, ratePerMille: Int = 250,
       salt: String = "quant"): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val bucket = conv(substring(md5(
-      concat(col("doc_id").cast("string"), lit("#"), lit(salt))), 1, 15), 16, 10)
-      .cast("long") % 1000
+    val bucket = GraftFunctions.md5Hi60(
+      concat(col("doc_id").cast("string"), lit("#"), lit(salt))) % 1000
     val sampled = Tables.docs(spark, dir)
       .filter(bucket < ratePerMille)
       .select(col("lang"), col("n_chars"))
@@ -807,7 +802,7 @@ object TextAnalysis {
     base
       .select(col("doc_id"), col("lang"), explode(concat(unis, bis)).as("f"))
       .withColumn("bucket",
-        conv(substring(md5(col("f")), 1, 15), 16, 10).cast("long") % buckets)
+        GraftFunctions.md5Hi60(col("f")) % buckets)
       // cached: qt21 reads the featurizer 3x (bucket counts, totals, the
       // scoring join) and qt24 up to 7x through the model-fit lineage; the
       // branches shuffle on different keys (bucket vs doc_id vs none), so
@@ -909,9 +904,7 @@ object TextAnalysis {
       .select(col("source"), col("n_docs"),
         floor(lit(k.toDouble) * sqrt(col("n_min").cast("double")) /
           sqrt(col("n_docs").cast("double"))).cast("long").as("keep_per_k"))
-    val h = conv(substring(md5(
-      concat(col("doc_id").cast("string"), lit("#mix"))), 1, 15), 16, 10)
-      .cast("long") % k
+    val h = GraftFunctions.md5Hi60(concat(col("doc_id").cast("string"), lit("#mix"))) % k
     d.withColumn("h", h)
       .join(rates, Seq("source"))
       .select(col("doc_id"), col("source"), col("n_docs").as("domain_docs"),
@@ -1294,17 +1287,15 @@ object TextAnalysis {
     */
   def shardManifest(spark: SparkSession, dir: String, shards: Int = 16): DataFrame = {
     require(shards >= 1, s"need shards >= 1, got $shards")
-    val mers = lit(2305843009213693951L) // 2^61 - 1
-    val h = (s: Column) =>
-      conv(substring(md5(s), 1, 15), 16, 10).cast("long")
+    val mers = lit(GraftFunctions.Mersenne61)
     val dec = (c: Column) => c.cast(DecimalType(38, 0))
     Tables.docs(spark, dir)
       .select(
-        (h(concat(lit("shard:"), col("doc_id").cast("string"))) % shards)
+        (GraftFunctions.md5Hi60(concat(lit("shard:"), col("doc_id").cast("string"))) % shards)
           .as("shard_id"),
         size(split(trim(col("text")), "\\s+")).cast("long").as("toks"),
         length(col("text")).cast("long").as("chars"),
-        (h(concat(col("doc_id").cast("string"), lit(":"),
+        (GraftFunctions.md5Hi60(concat(col("doc_id").cast("string"), lit(":"),
           length(col("text")).cast("string"))) % mers).as("fp"))
       .groupBy(col("shard_id"))
       .agg(
@@ -1484,8 +1475,7 @@ object TextAnalysis {
         .as("w"))
       .filter(col("w") =!= "")
     val cells = words.select(col("half"),
-      (conv(substring(md5(col("w")), 1, 15), 16, 10).cast("long")
-        % buckets).as("bucket"))
+      (GraftFunctions.md5Hi60(col("w")) % buckets).as("bucket"))
       .groupBy(col("half"), col("bucket"))
       .agg(count(lit(1)).as("c"))
     val spine = spark.range(buckets).select(col("id").as("bucket"))
@@ -1521,8 +1511,7 @@ object TextAnalysis {
       .select(explode(split(trim(regexp_replace(GraftFunctions.lower(col("text")), "\\s+", " ")),
         " ")).as("w"))
       .filter(col("w") =!= "")
-      .select((conv(substring(md5(col("w")), 1, 15), 16, 10).cast("long")
-        % buckets).as("bucket"))
+      .select((GraftFunctions.md5Hi60(col("w")) % buckets).as("bucket"))
       .groupBy(col("bucket")).agg(count(lit(1)).as("cnt"))
 
   /** One-row JSD of a batch histogram against a reference histogram (both
@@ -1700,8 +1689,6 @@ object TextAnalysis {
       stride: Int = 48): DataFrame = {
     require(win >= 1 && stride >= 1 && stride <= win,
       s"need 1 <= stride <= win, got win=$win stride=$stride")
-    val h = (s: Column) =>
-      conv(substring(md5(s), 1, 15), 16, 10).cast("long")
     Tables.docs(spark, dir)
       .select(col("doc_id"), split(trim(col("text")), "\\s+").as("words"))
       .select(col("doc_id"), col("words"),
@@ -1713,7 +1700,7 @@ object TextAnalysis {
         col("start").cast("long").as("start_tok"),
         least(lit(win), size(col("words")) - col("start")).cast("long")
           .as("n_toks"),
-        h(array_join(slice(col("words"), col("start") + 1, lit(win)), " "))
+        GraftFunctions.md5Hi60(array_join(slice(col("words"), col("start") + 1, lit(win)), " "))
           .as("chunk_fp"))
   }
 
@@ -1735,9 +1722,7 @@ object TextAnalysis {
     * (doc_id, text-length) columns.
     */
   def weightedSample(spark: SparkSession, dir: String, k: Int = 50): DataFrame = {
-    val h = conv(substring(md5(
-      concat(col("doc_id").cast("string"), lit(":wsamp"))), 1, 15), 16, 10)
-      .cast("long")
+    val h = GraftFunctions.md5Hi60(concat(col("doc_id").cast("string"), lit(":wsamp")))
     val u = (h.cast("double") + lit(1.0d)) / lit(1152921504606846976.0d) // 2^60
     val w = (lit(1) + col("n_chars") % 64).cast("long")
     Tables.docs(spark, dir)
@@ -1774,8 +1759,7 @@ object TextAnalysis {
       .agg(count(lit(1)).as("n_docs"),
         sum(size(split(trim(col("text")), "\\s+")).cast("long")).as("tokens"))
       .withColumn("max_epochs",
-        lit(1L) + conv(substring(md5(col("source")), 1, 15), 16, 10)
-          .cast("long") % 4)
+        lit(1L) + GraftFunctions.md5Hi60(col("source")) % 4)
       .withColumn("capacity", col("tokens") * col("max_epochs"))
     val byCap = Window.orderBy(col("capacity").asc, col("source").asc)
     val ranked = perSource
@@ -2186,7 +2170,6 @@ object TextAnalysis {
     */
   def heavyHitters(spark: SparkSession, dir: String, depth: Int = 4,
       width: Int = 4096, phiInv: Long = 1000): DataFrame = {
-    val mers = 2305843009213693951L
     // parallelize the scan feeding BOTH full passes (CMS build + exact
     // re-count) — each was one serial map task at the test layout
     val items = ScanLayout.ensureParallel(Tables.docs(spark, dir))
@@ -2200,12 +2183,12 @@ object TextAnalysis {
     val sk = pass1.getSeq[Long](0)
     val threshold = math.max(pass1.getLong(1) / phiInv, 1L)
     val skLit = typedlit(sk)
-    val a = conv(substring(md5(col("item")), 1, 15), 16, 10).cast("long")
-    val b = conv(substring(md5(col("item")), 16, 15), 16, 10).cast("long")
+    val a = GraftFunctions.md5Hi60(col("item"))
+    val b = GraftFunctions.md5Lo60(col("item"))
     val est = (0 until depth).map { d =>
       element_at(skLit,
         (lit(d.toLong * width) +
-          (a + lit(d.toLong) * b) % lit(mers) % lit(width.toLong))
+          (a + lit(d.toLong) * b) % lit(GraftFunctions.Mersenne61) % lit(width.toLong))
           .cast("int") + 1)
     }.reduce(least(_, _))
     items.filter(est >= threshold)

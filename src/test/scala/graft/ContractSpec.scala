@@ -31,7 +31,11 @@ class ContractSpec extends AnyFunSuite {
       // and DuckDB's `name AS MATERIALIZED (` (qg7's anti-inlining guard)
       val cteNames = ("(?i)(?:WITH(?:\\s+RECURSIVE)?|,)\\s+([a-z_][a-z0-9_]*)" +
         "\\s*(?:\\([^)]*\\))?\\s+AS\\s*(?:MATERIALIZED\\s*)?\\(").r
-        .findAllMatchIn(sql).map(_.group(1)).toSet
+        .findAllMatchIn(sql).map(_.group(1)).toList
+      // a shared fragment spliced into a host that already defines one of
+      // its CTE names (`w`, `sh`, ...) would otherwise fail only in DuckDB
+      val redefined = cteNames.groupBy(identity).collect { case (n, l) if l.size > 1 => n }
+      assert(redefined.isEmpty, s"$name defines CTEs more than once: $redefined")
       val refs = fromJoin.findAllMatchIn(sql).map(_.group(1)).toSet
       // UNNEST is a lateral table FUNCTION (qd11's prefix-position expansion),
       // not a base relation
