@@ -471,6 +471,70 @@ object SparkEntry {
     * bpe_merge expression runs. `dw`/`word` are carried through so the
     * qt23 encode tail can re-attach per-document.
     */
+  /** The ExactSubstr span rewrite (qd14, qt38): positional `w`-grams on
+    * md5_60 keys, the grams found in `hotCte` (a CTE named `hot` over `g`)
+    * chained into islands at gap <= `w`, spans of >= `minSpan` tokens cut,
+    * and each doc's text rebuilt from its surviving token indexes. `keep`
+    * (a predicate on `doc_id`) limits the rewritten docs and the output.
+    */
+  private def spanRewriteSql(w: Int, minSpan: Int, hotCte: String, hot: String,
+      keep: Option[String] = None): String = {
+    val where = keep.fold("")(k => s" WHERE $k")
+    s"""WITH base AS (
+           SELECT doc_id, string_split(text, ' ') AS w,
+             len(string_split(text, ' ')) AS n
+           FROM documents),
+         g AS (
+           SELECT doc_id, i AS pos,
+             ${md5Hi(s"array_to_string(w[(i+1):(i+$w)], ' ')")} AS gh
+           FROM (SELECT doc_id, w,
+                   unnest(generate_series(0, CAST(n - $w AS INT))) AS i
+                 FROM base WHERE n >= $w)),
+         $hotCte,
+         h AS (SELECT doc_id, pos FROM g JOIN $hot USING (gh)$where),
+         br AS (
+           SELECT doc_id, pos,
+             CASE WHEN pos - lag(pos) OVER
+                 (PARTITION BY doc_id ORDER BY pos) <= $w
+               THEN 0 ELSE 1 END AS brk
+           FROM h),
+         isl AS (
+           SELECT doc_id, pos,
+             SUM(brk) OVER (PARTITION BY doc_id ORDER BY pos) AS grp
+           FROM br),
+         sp AS (
+           SELECT doc_id, MIN(pos) AS s, MAX(pos) + $w AS e
+           FROM isl GROUP BY doc_id, grp
+           HAVING MAX(pos) + $w - MIN(pos) >= $minSpan),
+         agg AS (
+           SELECT doc_id, COUNT(*) AS n_spans, SUM(e - s) AS removed
+           FROM sp GROUP BY doc_id),
+         rem AS (
+           SELECT doc_id,
+             unnest(generate_series(CAST(s AS INT), CAST(e - 1 AS INT))) AS idx
+           FROM sp),
+         tok AS (
+           SELECT doc_id, i - 1 AS idx, w[i] AS tok
+           FROM (SELECT doc_id, w,
+                   unnest(generate_series(1, CAST(n AS INT))) AS i
+                 FROM base$where)),
+         kept AS (
+           SELECT t.doc_id, t.idx, t.tok
+           FROM tok t LEFT JOIN rem r
+             ON t.doc_id = r.doc_id AND t.idx = r.idx
+           WHERE r.idx IS NULL),
+         rebuilt AS (
+           SELECT doc_id, string_agg(tok, ' ' ORDER BY idx) AS clean_text
+           FROM kept GROUP BY doc_id)
+         SELECT b.doc_id, CAST(b.n AS BIGINT) AS n_tokens,
+           CAST(COALESCE(a.n_spans, 0) AS BIGINT) AS n_spans,
+           CAST(COALESCE(a.removed, 0) AS BIGINT) AS removed_tokens,
+           COALESCE(r.clean_text, '') AS clean_text
+         FROM base b
+         LEFT JOIN agg a USING (doc_id)
+         LEFT JOIN rebuilt r USING (doc_id)${keep.fold("")(k => s" WHERE b.$k")}"""
+  }
+
   private def bpeOracleBlocks(k: Int): String = {
     val head =
       s"""WITH dwords AS (SELECT doc_id, $lowerWords AS words FROM documents),
@@ -1849,62 +1913,10 @@ object SparkEntry {
     // merge (adjacency = gap <= w), spans >= 8 tokens cut, text rebuilt
     // from surviving token indexes. lag's NULL first row falls to ELSE 1 on
     // both engines (Spark's otherwise() and SQL CASE agree on NULL).
-    "qd14_exact_substr" ->
-      s"""WITH base AS (
-           SELECT doc_id, string_split(text, ' ') AS w,
-             len(string_split(text, ' ')) AS n
-           FROM documents),
-         g AS (
-           SELECT doc_id, i AS pos,
-             ${md5Hi("array_to_string(w[(i+1):(i+5)], ' ')")} AS gh
-           FROM (SELECT doc_id, w,
-                   unnest(generate_series(0, CAST(n - 5 AS INT))) AS i
-                 FROM base WHERE n >= 5)),
-         dup AS (
+    "qd14_exact_substr" -> spanRewriteSql(5, 8,
+      """dup AS (
            SELECT gh FROM (SELECT DISTINCT gh, doc_id FROM g)
-           GROUP BY gh HAVING COUNT(*) >= 2),
-         h AS (SELECT doc_id, pos FROM g JOIN dup USING (gh)),
-         br AS (
-           SELECT doc_id, pos,
-             CASE WHEN pos - lag(pos) OVER
-                 (PARTITION BY doc_id ORDER BY pos) <= 5
-               THEN 0 ELSE 1 END AS brk
-           FROM h),
-         isl AS (
-           SELECT doc_id, pos,
-             SUM(brk) OVER (PARTITION BY doc_id ORDER BY pos) AS grp
-           FROM br),
-         sp AS (
-           SELECT doc_id, MIN(pos) AS s, MAX(pos) + 5 AS e
-           FROM isl GROUP BY doc_id, grp
-           HAVING MAX(pos) + 5 - MIN(pos) >= 8),
-         agg AS (
-           SELECT doc_id, COUNT(*) AS n_spans, SUM(e - s) AS removed
-           FROM sp GROUP BY doc_id),
-         rem AS (
-           SELECT doc_id,
-             unnest(generate_series(CAST(s AS INT), CAST(e - 1 AS INT))) AS idx
-           FROM sp),
-         tok AS (
-           SELECT doc_id, i - 1 AS idx, w[i] AS tok
-           FROM (SELECT doc_id, w,
-                   unnest(generate_series(1, CAST(n AS INT))) AS i
-                 FROM base)),
-         kept AS (
-           SELECT t.doc_id, t.idx, t.tok
-           FROM tok t LEFT JOIN rem r
-             ON t.doc_id = r.doc_id AND t.idx = r.idx
-           WHERE r.idx IS NULL),
-         rebuilt AS (
-           SELECT doc_id, string_agg(tok, ' ' ORDER BY idx) AS clean_text
-           FROM kept GROUP BY doc_id)
-         SELECT b.doc_id, CAST(b.n AS BIGINT) AS n_tokens,
-           CAST(COALESCE(a.n_spans, 0) AS BIGINT) AS n_spans,
-           CAST(COALESCE(a.removed, 0) AS BIGINT) AS removed_tokens,
-           COALESCE(r.clean_text, '') AS clean_text
-         FROM base b
-         LEFT JOIN agg a USING (doc_id)
-         LEFT JOIN rebuilt r USING (doc_id)""",
+           GROUP BY gh HAVING COUNT(*) >= 2)""", "dup"),
     // winnowing SELECTION replayed exactly (shared CTE with qd16)
     "qd15_winnow_fps" -> (winnowCte +
       """
@@ -2283,63 +2295,9 @@ object SparkEntry {
         FROM t""",
     // decontamination rewrite: qd14's span replay pointed at the eval-gram
     // set — islands chain at gap <= 4, spans >= 6 tokens, rebuild included
-    "qt38_decontam_rewrite" ->
-      s"""WITH base AS (
-           SELECT doc_id, string_split(text, ' ') AS w,
-             len(string_split(text, ' ')) AS n
-           FROM documents),
-         g AS (
-           SELECT doc_id, i AS pos,
-             ${md5Hi("array_to_string(w[(i+1):(i+4)], ' ')")} AS gh
-           FROM (SELECT doc_id, w,
-                   unnest(generate_series(0, CAST(n - 4 AS INT))) AS i
-                 FROM base WHERE n >= 4)),
-         ev AS (SELECT DISTINCT gh FROM g WHERE doc_id % 29 = 0),
-         h AS (
-           SELECT doc_id, pos FROM g JOIN ev USING (gh)
-           WHERE doc_id % 29 <> 0),
-         br AS (
-           SELECT doc_id, pos,
-             CASE WHEN pos - lag(pos) OVER
-                 (PARTITION BY doc_id ORDER BY pos) <= 4
-               THEN 0 ELSE 1 END AS brk
-           FROM h),
-         isl AS (
-           SELECT doc_id, pos,
-             SUM(brk) OVER (PARTITION BY doc_id ORDER BY pos) AS grp
-           FROM br),
-         sp AS (
-           SELECT doc_id, MIN(pos) AS s, MAX(pos) + 4 AS e
-           FROM isl GROUP BY doc_id, grp
-           HAVING MAX(pos) + 4 - MIN(pos) >= 6),
-         agg AS (
-           SELECT doc_id, COUNT(*) AS n_spans, SUM(e - s) AS removed
-           FROM sp GROUP BY doc_id),
-         rem AS (
-           SELECT doc_id,
-             unnest(generate_series(CAST(s AS INT), CAST(e - 1 AS INT))) AS idx
-           FROM sp),
-         tok AS (
-           SELECT doc_id, i - 1 AS idx, w[i] AS tok
-           FROM (SELECT doc_id, w,
-                   unnest(generate_series(1, CAST(n AS INT))) AS i
-                 FROM base WHERE doc_id % 29 <> 0)),
-         kept AS (
-           SELECT t.doc_id, t.idx, t.tok
-           FROM tok t LEFT JOIN rem r
-             ON t.doc_id = r.doc_id AND t.idx = r.idx
-           WHERE r.idx IS NULL),
-         rebuilt AS (
-           SELECT doc_id, string_agg(tok, ' ' ORDER BY idx) AS clean_text
-           FROM kept GROUP BY doc_id)
-         SELECT b.doc_id, CAST(b.n AS BIGINT) AS n_tokens,
-           CAST(COALESCE(a.n_spans, 0) AS BIGINT) AS n_spans,
-           CAST(COALESCE(a.removed, 0) AS BIGINT) AS removed_tokens,
-           COALESCE(r.clean_text, '') AS clean_text
-         FROM base b
-         LEFT JOIN agg a USING (doc_id)
-         LEFT JOIN rebuilt r USING (doc_id)
-         WHERE b.doc_id % 29 <> 0""",
+    "qt38_decontam_rewrite" -> spanRewriteSql(4, 6,
+      "ev AS (SELECT DISTINCT gh FROM g WHERE doc_id % 29 = 0)", "ev",
+      keep = Some("doc_id % 29 <> 0")),
     // script profile: every bucket replayed from unicode(ch) BETWEEN tests
     // (ranges documented at GraftImpl.scriptProfile), dominant = the same
     // fixed-priority first-maximal CASE, confidence the same single

@@ -2240,6 +2240,24 @@ object GraftFunctions {
     ensureRegistered(); call_function("dot_i64", a, b)
   }
 
+  /** Exact int64 squared-L2 distances from `v` to literal centroids, as an
+    * array of (dist, `id`) structs, one per (id, centroid): dist =
+    * |v|^2 - 2 v.c + |c|^2 via dot_i64 against the centroid's array
+    * literal, with `v2` = |v|^2 (a column where the caller keeps one).
+    * `array_min` of it is the nearest centroid, ties to the smaller id
+    * (struct order); `array_sort` ranks them all.
+    */
+  def centroidDists(v: Column, v2: Column, cents: Seq[(Any, Array[Long])],
+      id: String = "cid"): Column = {
+    import org.apache.spark.sql.functions.{array, lit, struct, typedlit}
+    array(cents.map { case (cid, cv) =>
+      struct(
+        (v2 - lit(2L) * dotI64(v, typedlit(cv.toSeq))
+          + lit(cv.foldLeft(0L)((acc, x) => acc + x * x))).as("dist"),
+        lit(cid).as(id))
+    }: _*)
+  }
+
   def dotFF(a: Column, b: Column): Column = {
     ensureRegistered(); call_function("dot_ff", a, b)
   }

@@ -101,20 +101,18 @@ object Clustering {
     } finally c.unpersist()
   }
 
+  /** (cluster id, centroid) pairs for [[GraftFunctions.centroidDists]]. */
+  private def byIndex(cents: Array[Array[Long]]): Seq[(Int, Array[Long])] =
+    cents.indices.map(cid => cid -> cents(cid))
+
   /** Map-only E-step: dist(v, c) = |v|^2 - 2 v.c + |c|^2, all int64 via the
     * native dot_i64 against per-centroid array literals; argmin with
     * smallest-cid tie-break via lexicographic array_min over (dist, cid)
-    * structs.
+    * structs ([[GraftFunctions.centroidDists]]).
     */
   private def assignToCentroids(c: DataFrame, cents: Array[Array[Long]]): DataFrame = {
     val n2 = GraftFunctions.dotI64(col("qv"), col("qv"))
-    val candidates = array(cents.zipWithIndex.map { case (cv, cid) =>
-      val n2c = cv.foldLeft(0L)((acc, x) => acc + x * x)
-      struct(
-        (col("n2") - lit(2L) * GraftFunctions.dotI64(col("qv"), typedlit(cv.toSeq))
-          + lit(n2c)).as("dist"),
-        lit(cid).as("cid"))
-    }.toIndexedSeq: _*)
+    val candidates = GraftFunctions.centroidDists(col("qv"), col("n2"), byIndex(cents))
     c.withColumn("n2", n2)
       .withColumn("best", array_min(candidates))
       .select(col("vec_id"), col("best.cid").as("cluster"),
@@ -201,13 +199,7 @@ object Clustering {
   private def assignToCands(c: DataFrame,
       cands: Seq[(Long, Array[Long])]): DataFrame = {
     val n2 = GraftFunctions.dotI64(col("qv"), col("qv"))
-    val candidates = array(cands.map { case (cid, cv) =>
-      val n2c = cv.foldLeft(0L)((acc, x) => acc + x * x)
-      struct(
-        (col("n2") - lit(2L) * GraftFunctions.dotI64(col("qv"), typedlit(cv.toSeq))
-          + lit(n2c)).as("dist"),
-        lit(cid).as("cand"))
-    }.toIndexedSeq: _*)
+    val candidates = GraftFunctions.centroidDists(col("qv"), col("n2"), cands, "cand")
     c.withColumn("n2", n2)
       .withColumn("best", array_min(candidates))
       .select(col("vec_id"), col("best.cand").as("cand"),
@@ -393,13 +385,7 @@ object Clustering {
       rounds: Int = 4): DataFrame = {
     require(k >= 2, s"silhouette needs k >= 2, got $k")
     val (m, cents) = lloydChain(spark, dir, k, rounds)
-    val candidates = array(cents.zipWithIndex.map { case (cv, cid) =>
-      val n2c = cv.foldLeft(0L)((acc, x) => acc + x * x)
-      struct(
-        (col("n2") - lit(2L) * GraftFunctions.dotI64(col("qv"), typedlit(cv.toSeq))
-          + lit(n2c)).as("dist"),
-        lit(cid).as("cid"))
-    }.toIndexedSeq: _*)
+    val candidates = GraftFunctions.centroidDists(col("qv"), col("n2"), byIndex(cents))
     val aD = sqrt(col("dist_sq").cast("double"))
     val bD = sqrt(col("b2").cast("double"))
     m.withColumn("b2",

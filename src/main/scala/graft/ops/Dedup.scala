@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, GraftCheckpoint, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.GraftFunctions
 
@@ -708,7 +708,7 @@ object Dedup {
     * the convergence-rate specs).
     */
   private[graft] def ccWithRounds(edges: DataFrame, maxRounds: Int,
-      pointerJump: Boolean): (DataFrame, Int) = {
+      pointerJump: Boolean): (DataFrame, Int) =
     // materialize the PAIR LIST once before mirroring it: the two union
     // branches below would otherwise each evaluate the caller's edge feeder
     // (a banded-LSH or ngram-Jaccard subtree costing seconds at any scale)
@@ -721,20 +721,18 @@ object Dedup {
     // tables hold only the CLUSTERED docs, usually orders of magnitude under
     // the corpus, so the session's corpus-sized partition count was pure
     // scheduling latency per round)
-    val (e, eCount) = GraftCheckpoint.localCheckpointCounting(
-      edges.select(col("doc_a"), col("doc_b")), lit(true))
-    // coalesce the mirrored adjacency to the state-derived partition count
-    // BEFORE checkpointing: `e` inherits the feeder's layout (qd6's feeder
-    // pins a 32-wide repartition for its verify join, so the union carried
-    // 64 partitions), and every round's join stage would otherwise run one
-    // task per inherited partition regardless of state size (guide §2.2 —
-    // partitioning derived from measured input, not from the feeder's
-    // unrelated layout). coalesce is shuffle-free.
-    val adj = e.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .union(e.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      .coalesce(IterTuning.partitionsFor(e.sparkSession, eCount))
-      .localCheckpoint(true)
-    IterTuning.withStateSized(e.sparkSession, eCount) {
+    IterTuning.sized(edges.select(col("doc_a"), col("doc_b"))) { (loop, e) =>
+      // coalesce the mirrored adjacency to the state-derived partition count
+      // BEFORE checkpointing: `e` inherits the feeder's layout (qd6's feeder
+      // pins a 32-wide repartition for its verify join, so the union carried
+      // 64 partitions), and every round's join stage would otherwise run one
+      // task per inherited partition regardless of state size (guide §2.2 —
+      // partitioning derived from measured input, not from the feeder's
+      // unrelated layout). coalesce is shuffle-free.
+      val adj = loop.checkpoint(
+        e.select(col("doc_a").as("src"), col("doc_b").as("dst"))
+          .union(e.select(col("doc_b").as("src"), col("doc_a").as("dst")))
+          .coalesce(loop.partitions))
       // one neighbor-min step; `prev` rides along so convergence is counted
       // on the materialized result, not an extra join against the old labels
       def propagate(labels: DataFrame): DataFrame = {
@@ -744,51 +742,44 @@ object Dedup {
           .select(col("doc_id"), col("label").as("prev"),
             least(col("label"), coalesce(col("nbr_label"), col("label"))).as("label"))
       }
+      // the pointer jump, materialized: it reads the propagation result
+      // twice (a self-join)
+      def jump(prop: DataFrame): DataFrame =
+        if (!pointerJump) prop
+        else {
+          val links = prop.select(col("doc_id").as("j_id"), col("label").as("j_label"))
+          loop.checkpoint(prop.join(links, prop("label") === links("j_id"), "left")
+            .select(col("doc_id"), col("prev"),
+              least(col("label"), coalesce(col("j_label"), col("label"))).as("label")))
+        }
       // round 1 needs no label table: every node starts labelled by its own
       // id (adj is symmetric, so every node is a src), which makes the first
       // step a min over the adjacency alone — no initial-labels job, no join
-      var prop0 = adj.groupBy(col("src").as("doc_id")).agg(min(col("dst")).as("nbr"))
+      val prop1 = adj.groupBy(col("src").as("doc_id")).agg(min(col("dst")).as("nbr"))
         .select(col("doc_id"), col("doc_id").as("prev"),
           least(col("doc_id"), col("nbr")).as("label"))
-      var labels: DataFrame = null // set by every round; none throws below
-      // each round's checkpoint job also counts the labels it lowered:
+      // each propagation's checkpoint job also counts the labels it lowered:
       // labels are monotone non-increasing, so 0 changed is the fixpoint —
-      // no separate emptiness job per round
+      // no separate emptiness job per round. Convergence is decidable on the
+      // PRE-jump table: prop == prev means the neighbor-min step is at its
+      // fixpoint, which makes labels component-constant and the pointer jump
+      // the identity; and prop < prev anywhere implies next < prev there
+      // too. So the FINAL round skips the jump's join + checkpoint job
+      // entirely (r6 — round latency is the cost unit at small state;
+      // results identical at any state). `prop1` is round 1, so the driver's
+      // budget is the remaining maxRounds - 1.
       val changed = col("label") =!= col("prev")
-      var converged = false
-      var round = 0
-      while (!converged && round < maxRounds) {
-        // materialized before the pointer jump's self-join reads it twice
-        val (prop, nChanged) = GraftCheckpoint.localCheckpointCounting(prop0, changed)
-        converged = nChanged == 0
-        // convergence is decidable on the PRE-jump table: prop == prev means
-        // the neighbor-min step is at its fixpoint, which makes labels
-        // component-constant and the pointer jump the identity; and
-        // prop < prev anywhere implies next < prev there too. Equivalent to
-        // checking after the jump, but the FINAL round then skips the jump's
-        // join + checkpoint job entirely (r6 — round latency is the cost
-        // unit at small state; results identical at any state).
-        val labelsOut =
-          if (converged || !pointerJump) prop
-          else {
-            val links = prop.select(col("doc_id").as("j_id"), col("label").as("j_label"))
-            prop.join(links, prop("label") === links("j_id"), "left")
-              .select(col("doc_id"), col("prev"),
-                least(col("label"), coalesce(col("j_label"), col("label"))).as("label"))
-              .localCheckpoint(true)
-          }
-        labels = labelsOut.select(col("doc_id"), col("label"))
-        prop0 = propagate(labels)
-        round += 1
-      }
-      if (!converged) throw new IllegalStateException(
-        s"connectedComponents did not reach a fixpoint in $maxRounds rounds " +
-          "(labels would be silently under-merged); raise maxRounds — with " +
-          s"pointerJump=$pointerJump rounds grow as " +
-          (if (pointerJump) "log2(diameter)" else "diameter"))
-      (labels, round)
+      val (labels, more) = loop.untilStable(prop1, maxRounds - 1,
+          new IllegalStateException(
+            s"connectedComponents did not reach a fixpoint in $maxRounds rounds " +
+              "(labels would be silently under-merged); raise maxRounds — with " +
+              s"pointerJump=$pointerJump rounds grow as " +
+              (if (pointerJump) "log2(diameter)" else "diameter")),
+          initWatch = changed) { prop =>
+        (propagate(jump(prop).select(col("doc_id"), col("label"))), changed)
+      }((_, nChanged) => nChanged == 0)
+      (labels.select(col("doc_id"), col("label")), more + 1)
     }
-  }
 
   /** Near-duplicate CLUSTERS: connected components over the near-dup pair
     * graph. Pairs alone both over- and under-remove (near-dup is transitive

@@ -21,6 +21,11 @@ import org.apache.spark.sql.functions._
   */
 object LinkGraph {
 
+  /** What a LinkGraph fixpoint loop throws past its budget. */
+  private def notConverged(what: String, max: Int, unit: String = "rounds") =
+    new IllegalArgumentException(
+      s"requirement failed: $what did not converge in $max $unit")
+
   /** Observed-host table (host = doc_id % mod), materialized ONCE per op.
     * The only corpus-sized work in every qg operator is exactly this
     * scan + distinct; its result is bounded by `mod` rows. Before round 6,
@@ -66,18 +71,17 @@ object LinkGraph {
     */
   private def pagerank(spark: SparkSession, dir: String, k: Int,
       teleport: Column, initRank: Column): DataFrame =
-    IterTuning.sized(plantedEdges(spark, dir)) { edges =>
+    IterTuning.sized(plantedEdges(spark, dir)) { (loop, edges) =>
       // host-sized, so the rounds and the returned lazy join read it instead
       // of re-deriving it. Checkpointed, it also carries no small size
       // estimate: the round joins stay in-job shuffles, where the lazy
       // aggregate's estimate planned a separate broadcast job every round
-      val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("od"))
-        .localCheckpoint(true)
+      val deg = loop.checkpoint(edges.groupBy(col("src")).agg(count(lit(1)).as("od")))
       val nodes = deg.select(col("src").as("node"), col("od"))
       // degree-annotated edge list materialized ONCE (r6): leaving it lazy
       // re-ran the deg aggregate + join from the edges inside every round's
       // job
-      val withDeg = edges.join(deg, "src").localCheckpoint(true)
+      val withDeg = loop.checkpoint(edges.join(deg, "src"))
       def step(r: DataFrame): DataFrame = {
         val contrib = withDeg
           .join(r.withColumnRenamed("node", "src"), "src")
@@ -90,7 +94,7 @@ object LinkGraph {
       }
       // the rank table is read ONCE per step, so two steps chain per
       // checkpoint: half the per-round job overhead, lineage still O(1)
-      IterTuning.rounds(nodes.select(col("node"), initRank.as("r")), k, per = 2)(step)
+      loop.rounds(nodes.select(col("node"), initRank.as("r")), k, per = 2)(step)
         .last.join(nodes, "node")
     }
 
@@ -133,14 +137,14 @@ object LinkGraph {
     val both = e0.select(col("a").as("src"), col("b").as("dst"))
       .union(e0.select(col("b").as("src"), col("a").as("dst")))
       .distinct()
-    IterTuning.sized(both) { edges =>
+    IterTuning.sized(both) { (loop, edges) =>
       // ball(v, 0): the sketch of {v} itself — one single-row group per host
       val ball0 = edges.select(col("src").as("node")).distinct()
         .groupBy(col("node"))
         .agg(GraftFunctions.hllSketch(col("node").cast("string"), m).as("sk"))
       // a round reads the previous ball twice (kept, and shipped to the
       // neighbors), so every round materializes
-      IterTuning.rounds(ball0, rounds, per = 1) { ball =>
+      loop.rounds(ball0, rounds, per = 1) { ball =>
         ball.union(
           edges.join(ball.withColumnRenamed("node", "src"), "src")
             .select(col("dst").as("node"), col("sk")))
@@ -426,7 +430,7 @@ object LinkGraph {
       // never produced (the qg1 non-source-contribution discipline), so a
       // partial corpus can't mint phantom vote targets
       .join(hosts.withColumnRenamed("h", "dst"), Seq("dst"), "left_semi")
-    IterTuning.sized(edges) { edges =>
+    IterTuning.sized(edges) { (loop, edges) =>
       // one synchronous vote round as a lazy transform; the label table is
       // referenced exactly ONCE per round, so two rounds chain per
       // materialization with zero re-derivation (the qg1 rationale)
@@ -439,7 +443,7 @@ object LinkGraph {
           .as("vk"))
         .select(col("dst").as("node"),
           (lit(1048575L) - (col("vk") % lit(1048576L))).as("label"))
-      val labels = IterTuning.rounds(
+      val labels = loop.rounds(
         hosts.select(col("h").as("node"), col("h").cast("long").as("label")),
         k, per = 2)(vote).last
       val sizes = labels.groupBy(col("label"))
@@ -513,7 +517,7 @@ object LinkGraph {
     val eb = raw
       .union(raw.select(col("dst").as("src"), col("src").as("dst")))
       .distinct()
-    IterTuning.sized(eb) { eb =>
+    IterTuning.sized(eb) { (loop, eb) =>
       // one synchronous peel wave per materialization. (r6 note: chaining
       // two waves per checkpoint was tried and MEASURED SLOWER — the wave
       // references its input twice, so the batched plan pays a bounded 2x
@@ -524,9 +528,9 @@ object LinkGraph {
         .join(a.withColumnRenamed("v", "dst"), Seq("dst"), "left_semi")
         .groupBy(col("src").as("v")).agg(count(lit(1)).as("d"))
         .filter(col("d") >= k).select("v")
-      val alive = IterTuning.untilStable(hosts.select(col("h").as("v")),
-        maxRounds, "k-core peeling")(a => (wave(a), lit(true)))(
-        (before, after) => after == before)
+      val (alive, _) = loop.untilStable(hosts.select(col("h").as("v")),
+        maxRounds, notConverged("k-core peeling", maxRounds))(
+        a => (wave(a), lit(true)))((before, after) => after == before)
       // final core degrees, lazily over the last checkpoint
       eb.join(alive.withColumnRenamed("v", "src"), Seq("src"), "left_semi")
         .join(alive.withColumnRenamed("v", "dst"), Seq("dst"), "left_semi")
@@ -577,7 +581,7 @@ object LinkGraph {
     val edges = edges0
       .join(nodes.withColumnRenamed("node", "dst"), Seq("dst"), "left_semi")
       .select(col("src"), col("dst"))
-    IterTuning.sized(edges) { edges =>
+    IterTuning.sized(edges) { (loop, edges) =>
       // one half-update: sum `prevCol` of `prev` over edges joined on
       // `joinKey`, grouped to `groupKey`, re-attached to the full node
       // table (in-link-free hosts keep 0), then max-rescaled
@@ -589,18 +593,16 @@ object LinkGraph {
         // broadcast build, once under the crossJoin — guide §2.4). The
         // rescale itself stays lazy: it is a map-only projection over the
         // checkpoint, referenced once per round, so lineage stays O(1).
-        val raw = nodes.join(
+        val raw = loop.checkpoint(nodes.join(
           edges.join(prev.withColumnRenamed("node", joinKey), joinKey)
             .groupBy(col(groupKey).as("node")).agg(sum(col(prevCol)).as("raw")),
           Seq("node"), "left")
-          .select(col("node"), coalesce(col("raw"), lit(0L)).as("raw"))
-          .localCheckpoint(true)
+          .select(col("node"), coalesce(col("raw"), lit(0L)).as("raw")))
         val s = raw.agg(greatest(expr("max(raw) DIV 1000000"), lit(1L)).as("s"))
         raw.crossJoin(broadcast(s))
           .select(col("node"), expr("raw DIV s").as(outCol))
       }
-      var hub = nodes.select(col("node"), lit(1000000L).as("h"))
-        .localCheckpoint(true)
+      var hub = loop.checkpoint(nodes.select(col("node"), lit(1000000L).as("h")))
       var auth: DataFrame = null
       for (_ <- 1 to k) {
         auth = halfUpdate(hub, "h", "src", "dst", "a")
@@ -771,26 +773,26 @@ object LinkGraph {
     // role projection plans under the session conf. Measured: 325 jobs ->
     // 137 for the planted bow-tie (the AQE per-stage jobs and 32-way label
     // shuffles were pure scheduling latency at this state size).
-    IterTuning.sized(edges) { edges =>
+    IterTuning.sized(edges) { (loop, edges) =>
       val allNodes = edges.select(col("src").as("node"))
         .union(edges.select(col("dst").as("node"))).distinct()
       // each peel iteration's settled (host_id, scc_id) rows
       val settled = Vector.newBuilder[DataFrame]
-      IterTuning.untilStable(allNodes, maxIters, "SCC peeling",
-          unit = "iterations") { remaining =>
-        val live = edges
+      loop.untilStable(allNodes, maxIters,
+          notConverged("SCC peeling", maxIters, "iterations")) { remaining =>
+        val live = loop.checkpoint(edges
           .join(remaining.withColumnRenamed("node", "src"), "src")
           .join(remaining.withColumnRenamed("node", "dst"), "dst")
-          .select(col("src"), col("dst")).localCheckpoint(true)
+          .select(col("src"), col("dst")))
         // (1) forward max-label fixpoint, one propagation step per
         // materialization. (r6 note: two-step batching was tried and
         // measured slower here — see the qg7 wave note.) `prev` rides along
         // (the ccWithRounds discipline), so the changed count is a filter
         // on the checkpointed result, not an extra join against the old
         // colors
-        val c = IterTuning.untilStable(
+        val c = loop.untilStable(
             remaining.select(col("node"), col("node").as("c")),
-            maxRounds, "SCC coloring") { c =>
+            maxRounds, notConverged("SCC coloring", maxRounds)) { c =>
           val inMax = live
             .join(c.withColumnRenamed("node", "src"), "src")
             .groupBy(col("dst")).agg(max(col("c")).as("cin"))
@@ -798,16 +800,16 @@ object LinkGraph {
             .select(col("node"), col("c").as("prev"),
               greatest(col("c"), coalesce(col("cin"), col("c"))).as("c")),
             col("c") =!= col("prev"))
-        }((_, changed) => changed == 0).select(col("node"), col("c"))
+        }((_, changed) => changed == 0)._1.select(col("node"), col("c"))
         // (2) backward mark within color classes, from the pivots
-        val sameColor = live
+        val sameColor = loop.checkpoint(live
           .join(c.select(col("node").as("src"), col("c").as("cs")), "src")
           .join(c.select(col("node").as("dst"), col("c").as("cd")), "dst")
           .filter(col("cs") === col("cd"))
-          .select(col("src"), col("dst")).localCheckpoint(true)
-        val marked = IterTuning.untilStable(
+          .select(col("src"), col("dst")))
+        val (marked, _) = loop.untilStable(
             c.filter(col("node") === col("c")).select(col("node")),
-            maxRounds, "SCC backward mark") { marked =>
+            maxRounds, notConverged("SCC backward mark", maxRounds)) { marked =>
           val reached = sameColor
             .join(marked.withColumnRenamed("node", "dst"), "dst")
             .select(col("src").as("node"))
@@ -822,10 +824,9 @@ object LinkGraph {
       }((_, left) => left == 0)
       // starts empty (schema-typed) so an empty corpus yields an empty
       // result instead of an uninitialized accumulator
-      val assigned = settled.result()
+      val assigned = loop.checkpoint(settled.result()
         .foldLeft(allNodes.limit(0)
-          .select(col("node").as("host_id"), col("node").as("scc_id")))(_ union _)
-        .localCheckpoint(true)
+          .select(col("node").as("host_id"), col("node").as("scc_id")))(_ union _))
       val sizes = assigned.groupBy(col("scc_id"))
         .agg(count(lit(1)).as("scc_size"))
       val big = sizes.orderBy(col("scc_size").desc, col("scc_id").asc)
@@ -836,13 +837,13 @@ object LinkGraph {
       // role reachability: two boolean fixpoints over the FULL edge list
       def reachFix(backward: Boolean): DataFrame = {
         val (key, out) = if (backward) ("dst", "src") else ("src", "dst")
-        IterTuning.untilStable(coreNodes, maxRounds,
-            "role reachability") { m =>
+        loop.untilStable(coreNodes, maxRounds,
+            notConverged("role reachability", maxRounds)) { m =>
           val reached = edges
             .join(m.withColumnRenamed("host_id", key), key)
             .select(col(out).as("host_id"))
           (m.union(reached).distinct(), lit(true))
-        }((before, after) => after == before)
+        }((before, after) => after == before)._1
       }
       val toCore = reachFix(backward = true)
         .withColumn("to_core", lit(true))

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.functions.GraftFunctions
@@ -350,46 +350,16 @@ object Similarity {
   def annPq(spark: SparkSession, dir: String, nQueries: Int = 5, k: Int = 10,
       m: Int = 4, ks: Int = 8, rounds: Int = 2,
       sampleCap: Int = 4096): DataFrame = {
-    import org.apache.spark.sql.functions.{typedlit => tlit}
     val codes = embeddings(spark, dir).select(
       col("vec_id"),
       transform(col("embedding"),
         v => round(v.cast("double") * lit(1e6)).cast("long")).as("qv"))
     val books = pqCodebooks(codes, m, ks, rounds, sampleCap)
-    val dim = books.head.head.length * m
-    val subDim = dim / m
-    // map-only encoding: per subspace, exact-integer L2 argmin against the
-    // ks codebook literals (ties -> smallest code id, the qc1 rule)
-    def slice_(c: org.apache.spark.sql.Column, sub: Int) =
-      slice(c, sub * subDim + 1, subDim)
-    val codeCols = (0 until m).map { sub =>
-      val cands = array((0 until ks).map { cid =>
-        val cv = books(sub)(cid)
-        val n2c = cv.foldLeft(0L)((a, x) => a + x * x)
-        struct(
-          (GraftFunctions.dotI64(slice_(col("qv"), sub), slice_(col("qv"), sub))
-            - lit(2L) * GraftFunctions.dotI64(slice_(col("qv"), sub), tlit(cv.toSeq))
-            + lit(n2c)).as("dist"),
-          lit(cid).as("cid"))
-      }: _*)
-      array_min(cands).getField("cid").as(s"c$sub")
-    }
-    val encoded = codes.select(col("vec_id") +: codeCols: _*)
-    // ADC: query subvectors stay exact; per subspace the stored code picks
-    // its centroid OUT OF AN ARRAY LITERAL (element_at — O(1) plan depth,
-    // the CLAUDE.md column-tree rule) and contributes an exact int64 term
+    val encoded = codes.select(col("vec_id") +: pqCodes(col("qv"), books): _*)
     val queries = codes.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("qv").as("qqv"))
-    val adcTerms = (0 until m).map { sub =>
-      val bookLit = tlit(books(sub).map(_.toSeq).toSeq) // ARRAY<ARRAY<BIGINT>>
-      val cv = element_at(bookLit, col(s"c$sub") + 1)
-      val n2c = element_at(tlit(books(sub).map(c =>
-        c.foldLeft(0L)((a, x) => a + x * x)).toSeq), col(s"c$sub") + 1)
-      GraftFunctions.dotI64(slice_(col("qqv"), sub), slice_(col("qqv"), sub)) -
-        lit(2L) * GraftFunctions.dotI64(slice_(col("qqv"), sub), cv) + n2c
-    }
     val scored = encoded.join(broadcast(queries), col("vec_id") =!= col("query_id"))
-      .withColumn("adc_dist", adcTerms.reduce(_ + _))
+      .withColumn("adc_dist", adcDist(col("qqv"), books))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("adc_dist").asc, col("vec_id").asc)
     scored.withColumn("rnk", row_number().over(w))
@@ -434,42 +404,20 @@ object Similarity {
       transform(col("embedding"),
         v => round(v.cast("double") * lit(1e6)).cast("long")).as("qv"))
     val (coarse, books) = ivfPqModel(codes, kc, m, ks, rounds, sampleCap)
-    val dim = coarse.head.length
-    val subDim = dim / m
     val coarseLit = tlit(coarse.map(_.toSeq).toSeq)
-    def slice_(c: org.apache.spark.sql.Column, sub: Int) =
-      slice(c, sub * subDim + 1, subDim)
     // exact int64 L2 distances to the kc coarse centroids, as (dist, cid)
     // structs — array_min = nearest cell (ties -> smallest cid), array_sort
     // head = the probe list; both pure column math, no window
     def cellCands(v: org.apache.spark.sql.Column) =
-      array((0 until kc).map { cid =>
-        val cv = coarse(cid)
-        val n2c = cv.foldLeft(0L)((a, x) => a + x * x)
-        struct(
-          (GraftFunctions.dotI64(v, v)
-            - lit(2L) * GraftFunctions.dotI64(v, tlit(cv.toSeq))
-            + lit(n2c)).as("dist"),
-          lit(cid).as("cid"))
-      }: _*)
+      GraftFunctions.centroidDists(v, GraftFunctions.dotI64(v, v),
+        (0 until kc).map(cid => cid -> coarse(cid)))
     // corpus: cell + residual + per-subspace PQ codes, one map-only pass
     val withRes = codes
       .withColumn("cell", array_min(cellCands(col("qv"))).getField("cid"))
       .withColumn("rv", zip_with(col("qv"),
         element_at(coarseLit, col("cell") + 1), (a, b) => a - b))
-    val codeCols = (0 until m).map { sub =>
-      val cands = array((0 until ks).map { cid =>
-        val cv = books(sub)(cid)
-        val n2c = cv.foldLeft(0L)((a, x) => a + x * x)
-        struct(
-          (GraftFunctions.dotI64(slice_(col("rv"), sub), slice_(col("rv"), sub))
-            - lit(2L) * GraftFunctions.dotI64(slice_(col("rv"), sub), tlit(cv.toSeq))
-            + lit(n2c)).as("dist"),
-          lit(cid).as("cid"))
-      }: _*)
-      array_min(cands).getField("cid").as(s"c$sub")
-    }
-    val encoded = withRes.select(col("vec_id") +: col("cell") +: codeCols: _*)
+    val encoded = withRes.select(
+      col("vec_id") +: col("cell") +: pqCodes(col("rv"), books): _*)
     // query side: nprobe nearest cells via array_sort (map-only), then the
     // per-probed-cell query residual — (nQueries*nprobe) rows, broadcast
     val probes = codes.filter(col("vec_id") < nQueries)
@@ -479,17 +427,9 @@ object Similarity {
       .withColumn("qrv", zip_with(col("qv"),
         element_at(coarseLit, col("cell") + 1), (a, b) => a - b))
       .select(col("vec_id").as("query_id"), col("cell"), col("qrv"))
-    val adcTerms = (0 until m).map { sub =>
-      val bookLit = tlit(books(sub).map(_.toSeq).toSeq) // ARRAY<ARRAY<BIGINT>>
-      val cv = element_at(bookLit, col(s"c$sub") + 1)
-      val n2c = element_at(tlit(books(sub).map(c =>
-        c.foldLeft(0L)((a, x) => a + x * x)).toSeq), col(s"c$sub") + 1)
-      GraftFunctions.dotI64(slice_(col("qrv"), sub), slice_(col("qrv"), sub)) -
-        lit(2L) * GraftFunctions.dotI64(slice_(col("qrv"), sub), cv) + n2c
-    }
     val scored = encoded.join(broadcast(probes), Seq("cell"))
       .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("adc_dist", adcTerms.reduce(_ + _))
+      .withColumn("adc_dist", adcDist(col("qrv"), books))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("adc_dist").asc, col("vec_id").asc)
     scored.withColumn("rnk", row_number().over(w))
@@ -542,6 +482,37 @@ object Similarity {
     * oracle's unrolled CTE chain replays training bit-for-bit.
     * Returns books(sub)(cid) = centroid vector (subDim longs).
     */
+  /** One code column per PQ subspace, c0..c(m-1), map-only: the
+    * exact-integer L2 argmin of `v`'s subvector against that subspace's
+    * codebook literals (ties -> smallest code id, the qc1 rule).
+    */
+  private def pqCodes(v: Column, books: Array[Array[Array[Long]]]): Seq[Column] = {
+    val subDim = books.head.head.length
+    books.indices.map { sub =>
+      val vs = slice(v, sub * subDim + 1, subDim)
+      array_min(GraftFunctions.centroidDists(vs, GraftFunctions.dotI64(vs, vs),
+        books(sub).indices.map(cid => cid -> books(sub)(cid))))
+        .getField("cid").as(s"c$sub")
+    }
+  }
+
+  /** ADC distance of query column `q` to the stored codes c0..c(m-1): the
+    * query subvectors stay exact; per subspace the stored code picks its
+    * centroid OUT OF AN ARRAY LITERAL (element_at — O(1) plan depth, the
+    * CLAUDE.md column-tree rule) and contributes an exact int64 term.
+    */
+  private def adcDist(q: Column, books: Array[Array[Array[Long]]]): Column = {
+    val subDim = books.head.head.length
+    books.indices.map { sub =>
+      val qs = slice(q, sub * subDim + 1, subDim)
+      val code = col(s"c$sub") + 1
+      val cv = element_at(typedlit(books(sub).map(_.toSeq).toSeq), code) // ARRAY<ARRAY<BIGINT>>
+      val n2c = element_at(typedlit(books(sub).map(c =>
+        c.foldLeft(0L)((a, x) => a + x * x)).toSeq), code)
+      GraftFunctions.dotI64(qs, qs) - lit(2L) * GraftFunctions.dotI64(qs, cv) + n2c
+    }.reduce(_ + _)
+  }
+
   private[ops] def pqCodebooks(codes: DataFrame, m: Int, ks: Int,
       rounds: Int, sampleCap: Int): Array[Array[Array[Long]]] =
     lloydSubspaces(collectSample(codes, sampleCap), m, ks, rounds)

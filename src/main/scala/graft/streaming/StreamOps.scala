@@ -184,13 +184,8 @@ object StreamOps {
     def update(batch: DataFrame): DataFrame = {
       import graft.functions.GraftFunctions
       val n2 = GraftFunctions.dotI64(col("qv"), col("qv"))
-      val candidates = array(cents.zipWithIndex.map { case (cv, cid) =>
-        val n2c = cv.foldLeft(0L)((acc, x) => acc + x * x)
-        struct(
-          (col("n2") - lit(2L) * GraftFunctions.dotI64(col("qv"),
-            typedlit(cv.toSeq)) + lit(n2c)).as("dist"),
-          lit(cid).as("cid"))
-      }.toIndexedSeq: _*)
+      val candidates = GraftFunctions.centroidDists(col("qv"), col("n2"),
+        cents.indices.map(cid => cid -> cents(cid)))
       val assigned = batch
         .withColumn("n2", n2)
         .withColumn("best", array_min(candidates))

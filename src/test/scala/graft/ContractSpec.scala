@@ -13,6 +13,21 @@ class ContractSpec extends AnyFunSuite {
     assert(orphans.isEmpty, s"oracles without a query: $orphans")
   }
 
+  test("no graft.ops source writes session conf") {
+    // a fixpoint loop's settings live on its own session clone
+    // (IterTuning.sized); a conf write in an op would change every query
+    // that shares the session, and two such writers race on it
+    val ops = new java.io.File("src/main/scala/graft/ops")
+    val sources = Option(ops.listFiles()).toSeq.flatten.filter(_.getName.endsWith(".scala"))
+    assert(sources.nonEmpty, s"no sources under ${ops.getAbsolutePath}")
+    val write = "conf\\s*\\.\\s*set".r
+    val writers = sources.filter { f =>
+      val src = scala.io.Source.fromFile(f, "UTF-8")
+      try write.findFirstIn(src.mkString).isDefined finally src.close()
+    }
+    assert(writers.isEmpty, s"session conf written in ${writers.map(_.getName).mkString(", ")}")
+  }
+
   test("the no-oracle set is exactly the documented four") {
     val noOracle = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
     assert(noOracle == Set("qs3_ann_ivf",
