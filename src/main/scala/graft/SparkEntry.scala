@@ -972,28 +972,9 @@ object SparkEntry {
              [qv[i] FOR i IN range(CAST(t.m*$sd+1 AS BIGINT),
                                    CAST((t.m+1)*$sd+1 AS BIGINT))] AS sv
            FROM q, unnest(range(0, $m)) AS t(m)),
-         samp AS (SELECT * FROM sub WHERE vec_id < $sampleCap),
-         c0 AS (SELECT m, CAST(vec_id AS INTEGER) AS cid, sv AS cv
-                FROM samp WHERE vec_id < $ks)"""
-    // rounds-1 M-steps: assignment a_r over the SAMPLE, then centroid update
-    val train = (1 until rounds).map { r =>
-      s""",
-         ${subArgminCte(s"a$r", "samp", s"c${r - 1}", "cluster")},
-         s$r AS (
-           SELECT a.m, a.cluster, t.i, CAST(SUM(s.sv[t.i]) AS BIGINT) AS sm, COUNT(*) AS cnt
-           FROM a$r a JOIN samp s USING (vec_id, m),
-                unnest(range(1, len(s.sv)+1)) AS t(i)
-           GROUP BY a.m, a.cluster, t.i),
-         c$r AS (
-           SELECT c0.m, c0.cid, COALESCE(n.cv, p.cv) AS cv
-           FROM c0 LEFT JOIN (
-             SELECT m, cluster AS cid,
-               list(CAST(round(CAST(sm AS DOUBLE)/cnt) AS BIGINT) ORDER BY i) AS cv
-             FROM s$r GROUP BY m, cluster) n ON c0.m = n.m AND c0.cid = n.cid
-           JOIN c${r - 1} p ON c0.m = p.m AND c0.cid = p.cid)"""
-    }.mkString
+         samp AS (SELECT * FROM sub WHERE vec_id < $sampleCap)"""
     val fin = rounds - 1
-    head + train +
+    head + lloydChainSql("c", "samp", ks, rounds) +
       s""",
          ${subArgminCte("enc", "sub", s"c$fin", "code")},
          adc AS (
@@ -1012,10 +993,10 @@ object SparkEntry {
   }
 
   /** One unrolled Lloyd chain over a (vec_id, m, sv) table of int64
-    * subvectors — the pqOracleSql training loop, factored so qs7 can replay
-    * TWO trainings (coarse m=1 chain, then the residual PQ chain) in one
-    * statement. Emits CTEs `<pfx>0 .. <pfx>{rounds-1}` (codebooks per round)
-    * reading the sample table `$samp`; [[subArgminCte]] emits the full-corpus
+    * subvectors: qs6's training loop, and qs7's two trainings (coarse m=1
+    * chain, then the residual PQ chain) in one statement. Emits CTEs
+    * `<pfx>0 .. <pfx>{rounds-1}` (codebooks per round) reading the sample
+    * table `$samp`; [[subArgminCte]] emits the full-corpus
     * argmin assignment against the final books. Semantics replayed exactly:
     * init = first ks sample vectors, argmin ties -> smallest cid, half-away
     * M-step re-rounding, empty cells COALESCE to the previous centroid.

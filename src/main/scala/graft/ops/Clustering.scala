@@ -50,7 +50,7 @@ object Clustering {
     * DuckDB round() and Spark round() on the same double. (math.round would
     * differ on negative .5 ties: floor(x+0.5) rounds -2.5 to -2.)
     */
-  private def roundHalfAway(x: Double): Long =
+  private[ops] def roundHalfAway(x: Double): Long =
     if (x >= 0) math.floor(x + 0.5).toLong else math.ceil(x - 0.5).toLong
 
   /** `rounds` Lloyd iterations from a deterministic init (the first k

@@ -697,18 +697,15 @@ object Dedup {
     * fixpoint this throws IllegalStateException rather than returning
     * partially-propagated (silently under-merged) labels. With pointer
     * jumping the default budget of 16 rounds covers components of diameter
-    * ~2^15; `pointerJump = false` exposes the plain O(D) propagation for
-    * comparison tests.
+    * ~2^15.
     */
-  def connectedComponents(edges: DataFrame, maxRounds: Int = 16,
-      pointerJump: Boolean = true): DataFrame =
-    ccWithRounds(edges, maxRounds, pointerJump)._1
+  def connectedComponents(edges: DataFrame, maxRounds: Int = 16): DataFrame =
+    ccWithRounds(edges, maxRounds)._1
 
   /** [[connectedComponents]] plus the number of rounds it took (exposed for
     * the convergence-rate specs).
     */
-  private[graft] def ccWithRounds(edges: DataFrame, maxRounds: Int,
-      pointerJump: Boolean): (DataFrame, Int) =
+  private[graft] def ccWithRounds(edges: DataFrame, maxRounds: Int): (DataFrame, Int) =
     // materialize the PAIR LIST once before mirroring it: the two union
     // branches below would otherwise each evaluate the caller's edge feeder
     // (a banded-LSH or ngram-Jaccard subtree costing seconds at any scale)
@@ -744,14 +741,12 @@ object Dedup {
       }
       // the pointer jump, materialized: it reads the propagation result
       // twice (a self-join)
-      def jump(prop: DataFrame): DataFrame =
-        if (!pointerJump) prop
-        else {
-          val links = prop.select(col("doc_id").as("j_id"), col("label").as("j_label"))
-          loop.checkpoint(prop.join(links, prop("label") === links("j_id"), "left")
-            .select(col("doc_id"), col("prev"),
-              least(col("label"), coalesce(col("j_label"), col("label"))).as("label")))
-        }
+      def jump(prop: DataFrame): DataFrame = {
+        val links = prop.select(col("doc_id").as("j_id"), col("label").as("j_label"))
+        loop.checkpoint(prop.join(links, prop("label") === links("j_id"), "left")
+          .select(col("doc_id"), col("prev"),
+            least(col("label"), coalesce(col("j_label"), col("label"))).as("label")))
+      }
       // round 1 needs no label table: every node starts labelled by its own
       // id (adj is symmetric, so every node is a src), which makes the first
       // step a min over the adjacency alone — no initial-labels job, no join
@@ -772,9 +767,8 @@ object Dedup {
       val (labels, more) = loop.untilStable(prop1, maxRounds - 1,
           new IllegalStateException(
             s"connectedComponents did not reach a fixpoint in $maxRounds rounds " +
-              "(labels would be silently under-merged); raise maxRounds — with " +
-              s"pointerJump=$pointerJump rounds grow as " +
-              (if (pointerJump) "log2(diameter)" else "diameter")),
+              "(labels would be silently under-merged); raise maxRounds — " +
+              "rounds grow as log2(diameter)"),
           initWatch = changed) { prop =>
         (propagate(jump(prop).select(col("doc_id"), col("label"))), changed)
       }((_, nChanged) => nChanged == 0)

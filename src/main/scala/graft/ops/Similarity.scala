@@ -530,8 +530,6 @@ object Similarity {
     val dim = sample.head.length
     require(dim % m == 0, s"dim $dim not divisible by m=$m")
     val subDim = dim / m
-    def roundHalfAway(x: Double): Long =
-      if (x >= 0) math.floor(x + 0.5).toLong else math.ceil(x - 0.5).toLong
     Array.tabulate(m) { sub =>
       val slices = sample.map(v => v.slice(sub * subDim, (sub + 1) * subDim))
       var cents = Array.tabulate(ks)(cid => slices(cid).clone()) // init: first ks by vec_id
@@ -563,7 +561,8 @@ object Similarity {
           }
           cents = Array.tabulate(ks) { c =>
             if (counts(c) == 0) cents(c)
-            else Array.tabulate(subDim)(j => roundHalfAway(sums(c)(j).toDouble / counts(c)))
+            else Array.tabulate(subDim)(j =>
+              Clustering.roundHalfAway(sums(c)(j).toDouble / counts(c)))
           }
         }
       }

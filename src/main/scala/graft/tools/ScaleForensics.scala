@@ -1,13 +1,12 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 import graft.Bench
+import graft.obs.RunTally
 import graft.spark.{ExtractJob, PagesTable}
 
 /** Per-stage forensics for the cluster-mode scaling cross-check: runs the
   * same extraction legs as `graft.Bench` (SPARK_GRAFT_SCALE_MODE=cluster,
-  * local-cluster[1,4] vs [4,4]) with a stage listener attached and prints,
+  * local-cluster[1,4] vs [4,4]) under a [[RunTally]] and prints,
   * per timed stage: wall, summed executor run/cpu/GC time, shuffle
   * write/fetch-wait, task count — the evidence base for the cluster-vs-jvm
   * efficiency gap note in BASELINE.md ("Measured results").
@@ -15,35 +14,6 @@ import graft.spark.{ExtractJob, PagesTable}
   * Usage: `sbt "runMain graft.tools.ScaleForensics [docs] [reps]"`.
   */
 object ScaleForensics {
-
-  private final case class StageLine(id: Int, name: String, tasks: Int,
-      wallMs: Long, runMs: Long, cpuMs: Long, gcMs: Long,
-      shWriteMs: Long, fetchWaitMs: Long, deserMs: Long, bytesRead: Long)
-
-  private def attach(s: SparkSession): java.util.concurrent.ConcurrentLinkedQueue[StageLine] = {
-    val q = new java.util.concurrent.ConcurrentLinkedQueue[StageLine]()
-    s.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(ev: SparkListenerStageCompleted): Unit = {
-        val i = ev.stageInfo
-        val m = i.taskMetrics
-        q.add(StageLine(
-          i.stageId, i.name.linesIterator.next().take(60), i.numTasks,
-          (for (c <- i.completionTime; s0 <- i.submissionTime) yield c - s0).getOrElse(-1L),
-          m.executorRunTime, m.executorCpuTime / 1000000L, m.jvmGCTime,
-          m.shuffleWriteMetrics.writeTime / 1000000L,
-          m.shuffleReadMetrics.fetchWaitTime,
-          m.executorDeserializeTime, m.inputMetrics.bytesRead))
-      }
-    })
-    q
-  }
-
-  private def stolen(): Double = {
-    val line = scala.io.Source.fromFile("/proc/stat").getLines()
-      .find(_.startsWith("cpu ")).getOrElse("")
-    val cols = line.trim.split("\\s+").drop(1)
-    if (cols.length >= 8) cols(7).toDouble / 100.0 else 0.0
-  }
 
   def main(args: Array[String]): Unit = {
     val docs = args.headOption.map(_.toInt).getOrElse(48000)
@@ -77,17 +47,12 @@ object ScaleForensics {
           .toDF("parse_status")
           .filter(org.apache.spark.sql.functions.col("parse_status") === "ok")
         extracted.count() // warm-up (JIT, codegen, shuffle files)
-        val q = attach(s)
-        val st0 = stolen()
-        val t0 = System.nanoTime()
-        val n = extracted.count()
-        val dt = (System.nanoTime() - t0) / 1e9
-        val st = stolen() - st0
-        println(f"LEG $tag nExec=$nExec rate=${n / dt}%.0f docs/s wall=${dt}%.2fs steal=${st}%.1f cpu-s")
-        q.forEach { l =>
+        val (n, t) = RunTally(s)(extracted.count())
+        println(f"LEG $tag nExec=$nExec rate=${n / t.wallS}%.0f docs/s wall=${t.wallS}%.2fs steal=${t.stealS}%.1f cpu-s")
+        t.stages.foreach { l =>
           println(f"  stage ${l.id}%3d ${l.name}%-60s tasks=${l.tasks}%3d wall=${l.wallMs}%6dms " +
-            f"run=${l.runMs}%7dms cpu=${l.cpuMs}%7dms gc=${l.gcMs}%5dms shW=${l.shWriteMs}%5dms " +
-            f"fetchWait=${l.fetchWaitMs}%5dms deser=${l.deserMs}%5dms read=${l.bytesRead / 1048576}%4dMB")
+            f"run=${l.runMs}%7dms cpu=${l.cpuMs}%7dms gc=${l.gcMs}%5dms shW=${l.shuffleWriteMs}%5dms " +
+            f"fetchWait=${l.fetchWaitMs}%5dms deser=${l.deserializeMs}%5dms read=${l.bytesRead / 1048576}%4dMB")
         }
       } finally s.stop()
     }

@@ -1,9 +1,9 @@
 package org.apache.spark
 
 /** Blocks until the listener bus has delivered every event posted so far,
-  * so a spec reads listener-collected jobs or plans only after the last
-  * action's events arrived (`listenerBus` is package-private to Spark).
+  * so a reader of listener-collected jobs, stages or plans sees the last
+  * action's events (`listenerBus` is package-private to Spark).
   */
-object ListenerBusTestDrain {
+object GraftBusDrain {
   def apply(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }

@@ -28,6 +28,29 @@ class ContractSpec extends AnyFunSuite {
     assert(writers.isEmpty, s"session conf written in ${writers.map(_.getName).mkString(", ")}")
   }
 
+  test("only RunTally attaches listeners, and only the drain shim drains the bus") {
+    // a hand-rolled listener that reads its counters without draining the
+    // asynchronous bus counts late events in the next action's numbers
+    val owners = Seq(
+      "addSparkListener\\s*\\(" -> "src/main/scala/graft/obs/RunTally.scala",
+      "listenerManager\\s*\\.\\s*register\\s*\\(" -> "src/main/scala/graft/obs/RunTally.scala",
+      "waitUntilEmpty\\s*\\(" -> "src/main/scala/org/apache/spark/GraftBusDrain.scala")
+    def sources(dir: java.io.File): Seq[java.io.File] =
+      Option(dir.listFiles()).toSeq.flatten.flatMap { f =>
+        if (f.isDirectory) sources(f) else Seq(f).filter(_.getName.endsWith(".scala"))
+      }
+    val all = Seq("src/main", "src/test").flatMap(d => sources(new java.io.File(d)))
+    assert(all.nonEmpty, s"no sources under ${new java.io.File(".").getAbsolutePath}")
+    val text = all.map { f =>
+      val src = scala.io.Source.fromFile(f, "UTF-8")
+      try f.getPath -> src.mkString finally src.close()
+    }
+    for ((pattern, owner) <- owners) {
+      val users = text.collect { case (p, s) if pattern.r.findFirstIn(s).isDefined => p }
+      assert(users == Seq(owner), s"$pattern in ${users.mkString(", ")}")
+    }
+  }
+
   test("the no-oracle set is exactly the documented four") {
     val noOracle = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
     assert(noOracle == Set("qs3_ann_ivf",

@@ -527,35 +527,17 @@ class LinkGraphSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(e.getMessage.contains("SCC coloring did not converge"), e.getMessage)
   }
 
-  /** `body`'s value and the number of Spark jobs it started. */
-  private def withJobCount[T](body: => T): (T, Int) = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    org.apache.spark.ListenerBusTestDrain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val r = body
-      org.apache.spark.ListenerBusTestDrain(spark.sparkContext)
-      (r, jobs.get())
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
-
   test("qg7 and qg12: one job per materialization in every loop") {
     // each peel wave, coloring, mark and reachability round checkpoints its
     // state and counts what the loop watches in ONE job; a separate
     // count() per round (and per edge list) would add a job each
-    val (core, kJobs) = withJobCount(LinkGraph.hostKcore(spark, dir, k = 2).collect())
+    val (core, kTally) = graft.obs.RunTally(spark)(LinkGraph.hostKcore(spark, dir, k = 2).collect())
     assert(core.length == 15, core.mkString(","))
-    val (scc, sJobs) = withJobCount(LinkGraph.hostScc(spark, dir).collect())
+    val (scc, sTally) = graft.obs.RunTally(spark)(LinkGraph.hostScc(spark, dir).collect())
     assert(scc.length == 32, scc.mkString(","))
     // measured 63 and 89; a count() beside every checkpoint ran 82 and 137
-    assert(kJobs <= 63, s"$kJobs jobs for a qg7 call")
-    assert(sJobs <= 89, s"$sJobs jobs for a qg12 call")
+    assert(kTally.jobs <= 63, s"${kTally.jobs} jobs for a qg7 call")
+    assert(sTally.jobs <= 89, s"${sTally.jobs} jobs for a qg12 call")
   }
 
   test("qg12: re-running produces the identical decomposition") {

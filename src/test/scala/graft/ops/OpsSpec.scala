@@ -851,26 +851,17 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val ss = spark; import ss.implicits._
     // path graph 0-1-2-...-40: diameter 40, all one component
     val chain = (0L until 40L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    val (labels, rounds) = Dedup.ccWithRounds(chain, maxRounds = 16, pointerJump = true)
+    val (labels, rounds) = Dedup.ccWithRounds(chain, maxRounds = 16)
     val got = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got.size == 41 && got.values.forall(_ == 0L), got.toString)
     // log2(41) ~ 5.4; one extra round detects the fixpoint
     assert(rounds <= 7, s"pointer jumping took $rounds rounds on a 41-chain")
-    // plain min-label propagation needs diameter=40 rounds — the guard must
-    // throw at maxRounds=16 instead of returning under-merged labels
+    // a budget cut below that must throw instead of returning under-merged
+    // labels
     val e = intercept[IllegalStateException] {
-      Dedup.ccWithRounds(chain, maxRounds = 16, pointerJump = false)
+      Dedup.ccWithRounds(chain, maxRounds = 2)
     }
     assert(e.getMessage.contains("fixpoint"), e.getMessage)
-    // the guard also protects the pointer-jumping path when the budget is cut
-    intercept[IllegalStateException] {
-      Dedup.ccWithRounds(chain, maxRounds = 2, pointerJump = true)
-    }
-    // sanity: plain propagation with enough budget agrees exactly
-    val (plain, plainRounds) =
-      Dedup.ccWithRounds(chain, maxRounds = 64, pointerJump = false)
-    assert(plain.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap == got)
-    assert(plainRounds > 16, s"plain propagation took only $plainRounds rounds")
   }
 
   test("connected components match an in-memory union-find on random graphs") {
@@ -919,26 +910,14 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val pairs = Seq((3L, 4L), (4L, 5L), (10L, 11L), (10L, 12L), (10L, 13L),
       (20L, 21L))
     val edges = pairs.toDF("doc_a", "doc_b")
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    org.apache.spark.ListenerBusTestDrain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    val (labels, rounds) = try {
-      val r = Dedup.ccWithRounds(edges, maxRounds = 16, pointerJump = true)
-      org.apache.spark.ListenerBusTestDrain(spark.sparkContext)
-      r
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val ((labels, rounds), tally) =
+      graft.obs.RunTally(spark)(Dedup.ccWithRounds(edges, maxRounds = 16))
     assert(rounds == 2, s"$rounds rounds")
     // edge checkpoint (+ its count), adjacency, round 1's propagate (+ its
     // convergence count) and jump, round 2's propagate, plus the label
     // joins' broadcasts: 8 jobs here. The separate edge count (2 jobs), the
     // initial-labels checkpoint and the per-round emptiness checks are gone.
-    assert(jobs.get() <= 8, s"${jobs.get()} jobs for a 2-round CC call")
+    assert(tally.jobs <= 8, s"${tally.jobs} jobs for a 2-round CC call")
     // union-find differential (min-id root per component)
     val parent = scala.collection.mutable.Map[Long, Long]()
     def find(x: Long): Long = {
@@ -954,7 +933,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap == expected)
     // a budget of one round cannot reach the fixpoint: the guard throws
     val e = intercept[IllegalStateException] {
-      Dedup.ccWithRounds(edges, maxRounds = 1, pointerJump = true)
+      Dedup.ccWithRounds(edges, maxRounds = 1)
     }
     assert(e.getMessage.contains("fixpoint"), e.getMessage)
   }
@@ -1129,18 +1108,16 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(root == (h == c))
     }
     // the widest chain has diameter 24: pointer jumping must fold it in
-    // ~log2 rounds, while plain min-label propagation walks one hop per
-    // round and MUST throw at maxRounds = 8 (the qd6 convergence guard)
+    // ~log2 rounds, and a budget of 2 rounds must throw (the qd6
+    // convergence guard)
     val edges = spark.read.parquet(s"$sf/documents.parquet")
       .selectExpr("doc_id % 64 AS doc_a",
         "CASE WHEN doc_id % 64 IN (8, 19, 44, 63) THEN doc_id % 64 " +
           "ELSE doc_id % 64 + 1 END AS doc_b")
       .distinct()
-    val (_, rounds) = Dedup.ccWithRounds(edges, maxRounds = 16, pointerJump = true)
+    val (_, rounds) = Dedup.ccWithRounds(edges, maxRounds = 16)
     assert(rounds <= 7, s"pointer jumping took $rounds rounds on diameter 24")
-    assertThrows[IllegalStateException] {
-      Dedup.ccWithRounds(edges, maxRounds = 8, pointerJump = false)
-    }
+    assertThrows[IllegalStateException](Dedup.ccWithRounds(edges, maxRounds = 2))
   }
 
   test("ccnet buckets: per-language thirds by LM score, ties closed upward") {

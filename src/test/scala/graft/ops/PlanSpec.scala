@@ -183,17 +183,6 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
         val here = above + (if (shingles(p.expressions)) 1 else 0)
         children(p).flatMap(shingledScans(_, here))
     }
-    // every plan the call and its consumer execute, the base checkpoint's
-    // included
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(f: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
-        plans.add(qe.executedPlan)
-      override def onFailure(f: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
-    }
-    import scala.jdk.CollectionConverters._
     val inputs = Seq[(String, () => DataFrame)](
       "minhashLshPairs" -> (() =>
         Dedup.minhashLshPairs(spark, sf, shingleSize = 3, threshold = 0.5)),
@@ -204,24 +193,22 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
       "incrementalDedup" -> (() => Dedup.incrementalDedup(spark, sf)),
       "nearContamination" -> (() => TextAnalysis.nearContamination(spark, sf)))
     inputs.foreach { case (name, run) =>
-      plans.clear()
-      spark.listenerManager.register(listener)
-      try {
-        run().write.format("noop").mode("overwrite").save()
-        org.apache.spark.ListenerBusTestDrain(spark.sparkContext)
-      } finally spark.listenerManager.unregister(listener)
-      val scans = plans.asScala.toSeq.flatMap(shingledScans(_, 0))
+      // every plan the call and its consumer execute, the base checkpoint's
+      // included
+      val plans = graft.obs.RunTally(spark)(
+        run().write.format("noop").mode("overwrite").save())._2.plans
+      val scans = plans.flatMap(shingledScans(_, 0))
       // a branch is a parquet scan under an operator that shingles; by
       // identity: the scans of one file in different branches are equal
       val branches = scans.map(_._1).foldLeft(Vector.empty[SparkPlan])((acc, s) =>
         if (acc.exists(_ eq s)) acc else acc :+ s)
       assert(branches.size == 1,
-        s"$name: ${branches.size} shingling scan branches:\n${plans.asScala.mkString("\n")}")
+        s"$name: ${branches.size} shingling scan branches:\n${plans.mkString("\n")}")
       // a filter pushed into the scan (and evaluated above it) shingles a
       // second time
       assert(scans.forall(_._2 == 1),
         s"$name: shingling operators per scan ${scans.map(_._2)}:\n" +
-          plans.asScala.mkString("\n"))
+          plans.mkString("\n"))
     }
   }
 

@@ -64,22 +64,7 @@ class TablesSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("building a frame through the reader runs no Spark job") {
     val pages = pagesTable()
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    def jobsOf(body: => Unit): Int = {
-      org.apache.spark.ListenerBusTestDrain(spark.sparkContext)
-      jobs.set(0)
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        body
-        org.apache.spark.ListenerBusTestDrain(spark.sparkContext)
-      } finally spark.sparkContext.removeSparkListener(listener)
-      jobs.get()
-    }
+    def jobsOf(body: => Unit): Int = graft.obs.RunTally(spark)(body)._2.jobs
     val tables = sfTables :+ pages
     assert(jobsOf(tables.foreach(Tables.parquet(spark, _))) == 0)
     // Spark's own inference runs one job per table

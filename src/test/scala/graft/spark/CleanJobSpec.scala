@@ -77,24 +77,12 @@ class CleanJobSpec extends AnyFunSuite with BeforeAndAfterAll {
     val n = 500L
     CleanJob.DocCorpus.generate(spark, n, partitions = 4)
       .write.mode("overwrite").parquet(s"$out/corpus/documents.parquet")
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    org.apache.spark.ListenerBusTestDrain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    val stats = try {
-      val r = CleanJob.run(spark, s"$out/corpus", out)
-      org.apache.spark.ListenerBusTestDrain(spark.sparkContext)
-      r
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (stats, tally) = graft.obs.RunTally(spark)(CleanJob.run(spark, s"$out/corpus", out))
     // no schema-inference job per table read, and the rewrite and gate
     // stages run one write each, their tallies observed on it: 85 jobs
     // here when each read inferred its schema and those stages persisted a
     // profile, tallied it in separate jobs and joined it back
-    assert(jobs.get() <= JOBPIN, s"${jobs.get()} jobs for CleanJob.run at n = $n")
+    assert(tally.jobs <= JOBPIN, s"${tally.jobs} jobs for CleanJob.run at n = $n")
 
     // every lineage number, pinned: the seeded corpus is a pure function of
     // the row index, so any drift here is a changed stage result

@@ -334,23 +334,12 @@ class ExtractJobSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("ExtractJob.run on a fresh store runs at most 3 jobs") {
     val pages = PagesTable.generate(spark, N, partitions = 2)
     val store = new SnapshotStore(Files.createTempDirectory("graft-jobs").toString)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    org.apache.spark.ListenerBusTestDrain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    val n = try {
-      val r = ExtractJob.run(spark, pages, store, "jobs", partitions = 4)
-      org.apache.spark.ListenerBusTestDrain(spark.sparkContext)
-      r
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (n, tally) =
+      graft.obs.RunTally(spark)(ExtractJob.run(spark, pages, store, "jobs", partitions = 4))
     assert(n == N)
     // the exchange, the write and the lineage append; a re-scan of the
     // commit for its lineage adds a schema job and two aggregate jobs
-    assert(jobs.get() <= 3, s"${jobs.get()} jobs")
+    assert(tally.jobs <= 3, s"${tally.jobs} jobs")
   }
 
   test("extraction input: no exchange carries text; rows match the oracle") {
